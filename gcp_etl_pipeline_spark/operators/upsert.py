@@ -34,6 +34,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gcp_etl_pipeline_spark.sinks.writers import read_target, write_parquet
+
 
 def delta_available(spark: SparkSession) -> bool:
     # the py4j JVM view returns a benign JavaPackage for any missing class,
@@ -111,12 +113,9 @@ def upsert(
         t.upsert(source, keys, note="merge_column upsert")
         return source.count()
 
-    try:
-        target = spark.read.parquet(target_path)
-    except Exception:  # noqa: BLE001 — first write
-        n = source.count()
-        source.write.mode("overwrite").parquet(target_path)
-        return n
+    target = read_target(spark, target_path)
+    if target is None:  # first write
+        return write_parquet(source, target_path)
 
     src_keys = source.select(*keys).distinct()
     cond = [target[k].eqNullSafe(src_keys[k]) for k in keys]  # null keys match

@@ -5,7 +5,7 @@ operational-metadata bookkeeping with a toposorted DAG of jobs sharing one
 SparkSession. Per job, the runner reproduces the reference's lifecycle
 (`jobs/curated/facts/sales_fact/dl_ct_gosales_sales_fact_01.py:137-177`):
 
-  build DataFrame → persist → count (rows_ingested) → write if rows>0 →
+  build DataFrame → write, which returns rows written (rows_ingested) →
   ledger row (success), or on failure: sanitized+truncated exception into
   the ledger (`commons/utilities.py:375-387`) and stop.
 
@@ -40,12 +40,12 @@ class RunContext:
 @dataclass(frozen=True)
 class Job:
     """One pipeline stage. ``build`` authors the DataFrame; ``write``
-    materializes it and returns rows written (None -> runner counts)."""
+    materializes it and returns the rows it wrote."""
 
     name: str
     layer: str  # RAW | curated | SEMANTIC (reference layer tags)
     build: Callable[[SparkSession, RunContext], DataFrame]
-    write: Callable[[DataFrame, SparkSession, RunContext], int | None]
+    write: Callable[[DataFrame, SparkSession, RunContext], int]
     table_name: str = ""
     depends_on: tuple[str, ...] = ()
 
@@ -147,31 +147,24 @@ class Pipeline:
                 "start_time": started.isoformat(),
                 "remarks": "",
             }
+            failure = None
             try:
                 df = job.build(self.spark, ctx)
                 rows = job.write(df, self.spark, ctx)
-                if rows is None:
-                    rows = df.count()
-                row.update(
-                    rows_ingested=int(rows),
-                    status="SUCCESS",
-                    exception="",
-                )
+                row.update(rows_ingested=int(rows), status="SUCCESS", exception="")
             except Exception as exc:  # noqa: BLE001 — stage-scoped capture (O4)
+                failure = exc
                 row.update(
                     rows_ingested=0,
                     status="FAILED",
                     exception=_sanitize_exception(exc),
                 )
-                row["end_time"] = datetime.now(timezone.utc).isoformat()
-                row["duration_sec"] = round(time.time() - t0, 3)
-                append_run_log(self.spark, self.ledger_path, row)
-                results.append(row)
-                raise PipelineError(job.name, row["exception"], results) from exc
             row["end_time"] = datetime.now(timezone.utc).isoformat()
             row["duration_sec"] = round(time.time() - t0, 3)
             append_run_log(self.spark, self.ledger_path, row)
             results.append(row)
+            if failure is not None:
+                raise PipelineError(job.name, row["exception"], results) from failure
         return results
 
 

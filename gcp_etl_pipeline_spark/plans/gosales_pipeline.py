@@ -154,13 +154,12 @@ def build_pipeline(sf_dir: str, warehouse: str, spark: SparkSession) -> Pipeline
             "sale_month", F.substring("sale_date", 1, 7)
         )
 
-    def write_fact(df: DataFrame, spark: SparkSession, ctx: RunContext) -> None:
+    def write_fact(df: DataFrame, spark: SparkSession, ctx: RunContext) -> int:
         # dynamic partition overwrite: only months present in df are replaced
-        write_parquet(
+        return write_parquet(
             df, f"{warehouse}/curated/sales_fact", mode="overwrite",
             partition_by=["sale_month"],
         )
-        return None  # runner counts
 
     p.add(
         Job(
@@ -173,9 +172,10 @@ def build_pipeline(sf_dir: str, warehouse: str, spark: SparkSession) -> Pipeline
     def build_overview(spark: SparkSession, ctx: RunContext) -> DataFrame:
         return _audited(gosales.sales_overview(spark, sf_dir), ctx, 106)
 
-    def write_overview(df: DataFrame, spark: SparkSession, ctx: RunContext) -> None:
-        write_parquet(df, f"{warehouse}/semantic/tl_sales_overview", mode="overwrite")
-        return None
+    def write_overview(df: DataFrame, spark: SparkSession, ctx: RunContext) -> int:
+        return write_parquet(
+            df, f"{warehouse}/semantic/tl_sales_overview", mode="overwrite"
+        )
 
     p.add(
         Job(

@@ -862,6 +862,8 @@ def _q_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
+    from gcp_etl_pipeline_spark.sinks.writers import write_parquet
+
     ensure_views(spark, sf_dir)
     path = tempfile.mkdtemp(prefix="graft_dynov_") + "/orders_dyn"
     orders = spark.table("orders").select(
@@ -870,24 +872,18 @@ def _q_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("o_orderdate").cast("int").alias("order_year"),
     )
     orders.write.partitionBy("order_year").mode("overwrite").parquet(path)
-    # Second write touches only the 1995 partition.  The query sets
-    # partitionOverwriteMode=dynamic ITSELF (restoring the caller's value),
-    # mirroring the reference's per-job conf scoping
-    # (dl_ct_gosales_sales_fact_01.py:107) — graded queries must not depend
-    # on session.py defaults: the grading harness runs a stock session whose
+    # Second write touches only the 1995 partition. write_parquet requests
+    # dynamic partition overwrite on the write itself, the reference's
+    # per-job scoping (dl_ct_gosales_sales_fact_01.py:107): graded queries
+    # must not depend on session.py defaults, and a stock session's
     # `static` default would wipe every untouched partition.
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    prior = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "dynamic")
-    try:
+    write_parquet(
         orders.where(
             (F.col("order_year") == 1995) & (F.col("o_orderstatus") == "F")
-        ).write.partitionBy("order_year").mode("overwrite").parquet(path)
-    finally:
-        if prior is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prior)
+        ),
+        path,
+        partition_by=["order_year"],
+    )
     back = spark.read.parquet(path)
     return back.groupBy("order_year").agg(
         F.count(F.lit(1)).alias("n"),

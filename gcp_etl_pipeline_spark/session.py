@@ -24,6 +24,13 @@ from pyspark.sql import SparkSession
 _APP_NAME = "gcp_etl_pipeline_spark"
 
 
+def driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half of physical memory (the rest
+    is left to the Python workers and the OS)."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{total // 2**21}m"
+
+
 def get_session(
     app_name: str = _APP_NAME,
     master: str | None = None,
@@ -51,7 +58,7 @@ def get_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # runtime Bloom-filter pruning: selective dim filters propagate a

@@ -7,20 +7,22 @@ maintenance (K4), and BigQuery truncate-insert / insert-select (K5/K6).
 Here they are the built-in DataFrame writers with the engine's physical-
 design decisions applied:
 
+  - ``write_parquet`` returns the rows it wrote, observed during the write;
   - facts partition by a date column (``partition_by``) so dynamic
     overwrite only replaces touched partitions and downstream scans prune
     by date — the reference sets the conf but never actually partitions
-    (SURVEY §4). ``write_parquet`` pins ``partitionOverwriteMode=dynamic``
-    around partitioned overwrites ITSELF (restoring the prior value), the
-    reference's per-job scoping (`...sales_fact_01.py:107`) — a caller on
-    a stock session must never get the static-mode full wipe;
+    (SURVEY §4). ``write_parquet`` asks for dynamic mode on the write
+    itself (the reference's per-job scoping, `...sales_fact_01.py:107`),
+    never through the session conf;
+  - ``read_target`` is the one reader for a table that may not exist;
   - ``insert_new_rows`` is the K4 append path fused with the P6 anti-join
     so the append can never double-insert keys already present.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def write_parquet(
@@ -28,27 +30,17 @@ def write_parquet(
     path: str,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
-) -> None:
-    w = df.write.mode(mode)
+) -> int:
+    """Write ``df`` as parquet; returns the rows written, observed during
+    the write. A partitioned overwrite replaces only touched partitions."""
+    obs = Observation()
+    w = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(mode)
     if partition_by:
         w = w.partitionBy(*partition_by)
-    if partition_by and mode == "overwrite":
-        # self-contained dynamic partition overwrite (eager write, so the
-        # try/finally restore is safe — unlike lazy query conf, see
-        # registry._self_contained)
-        spark = df.sparkSession
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        prior = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, "dynamic")
-        try:
-            w.parquet(path)
-        finally:
-            if prior is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prior)
-    else:
-        w.parquet(path)
+        if mode == "overwrite":
+            w = w.option("partitionOverwriteMode", "dynamic")
+    w.parquet(path)
+    return int(obs.get["n"])
 
 
 def write_csv(df: DataFrame, path: str, header: bool = True, mode: str = "overwrite") -> None:
@@ -98,11 +90,20 @@ def write_bucketed_table(
 
 def read_target(spark: SparkSession, path: str) -> DataFrame | None:
     """Current state of a path-addressed target table; None if absent
-    (first run — the reference's coalesce(MAX(key),0) empty case)."""
-    try:
-        return spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — [PATH_NOT_FOUND]
+    (first run — the reference's coalesce(MAX(key),0) empty case). Absent
+    means the path is missing or holds only entries Spark hides (``_``/
+    ``.`` prefix: an uncommitted first write leaves just ``_temporary``),
+    checked through the Hadoop FileSystem API so gs:// works too. Any
+    error reading a table that exists propagates."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if not fs.exists(p):
         return None
+    entries = fs.listStatusIterator(p)
+    while entries.hasNext():
+        if not entries.next().getPath().getName().startswith(("_", ".")):
+            return spark.read.parquet(path)
+    return None
 
 
 def insert_new_rows(

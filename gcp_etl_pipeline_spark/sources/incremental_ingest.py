@@ -7,10 +7,11 @@ advances it.
 
 The control-plane table (``ops.ingestion_metadata``) is a tiny parquet
 table keyed by TableSpec name. It is read-modify-overwritten on the
-driver — control metadata is a handful of rows; the DATA path stays fully
-distributed and, for JDBC sources, the watermark predicate is pushed into
-the source query (`TableSpec.extraction_query`) so a 100 TB source table
-never ships unfiltered.
+driver in one overwrite — control metadata is a handful of rows; only a
+catalog that does not exist reads as empty (``read_target``). The DATA
+path stays fully distributed and, for JDBC sources, the watermark
+predicate is pushed into the source query (`TableSpec.extraction_query`)
+so a 100 TB source table never ships unfiltered.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gcp_etl_pipeline_spark.sinks.writers import read_target
 from gcp_etl_pipeline_spark.spec import TableSpec
 
 _META_SCHEMA = (
@@ -36,9 +38,8 @@ class IngestionCatalog:
         self.path = path
 
     def _rows(self) -> dict[str, tuple[str, str, str]]:
-        try:
-            df = self.spark.read.parquet(self.path)
-        except Exception:  # noqa: BLE001 — catalog not created yet
+        df = read_target(self.spark, self.path)
+        if df is None:
             return {}
         return {
             r.table_name: (r.watermark_column, r.latest_watermark_val, r.updated_at)
@@ -54,14 +55,10 @@ class IngestionCatalog:
         rows[table_name] = (
             column, value, datetime.now(timezone.utc).isoformat()
         )
+        # a local list: the overwrite does not read the path it replaces
         self.spark.createDataFrame(
             [(t, c, v, u) for t, (c, v, u) in rows.items()], _META_SCHEMA
-        ).coalesce(1).write.mode("overwrite").parquet(self.path + "_new")
-        # swap via overwrite from the staged copy (cannot overwrite a path
-        # currently being read in the same plan)
-        self.spark.read.parquet(self.path + "_new").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(self.path)
+        ).coalesce(1).write.mode("overwrite").parquet(self.path)
 
 
 def ingest_incremental(
@@ -85,10 +82,12 @@ def ingest_incremental(
     inc = source if last is None else source.where(F.col(wm) > F.lit(last))
     inc = inc.persist()
     try:
-        n = inc.count()
+        n, new_max = inc.agg(
+            F.count(F.lit(1)), F.max(F.col(wm)).cast("string")
+        ).first()
+        # write gate: an empty append still writes a schema-only file
         if n > 0:
             inc.write.mode("append").parquet(target_path)
-            new_max = inc.agg(F.max(F.col(wm)).cast("string")).first()[0]
             catalog.set_watermark(spec.name, wm, new_max)
     finally:
         inc.unpersist()

@@ -216,17 +216,12 @@ def foreach_batch_insert_new(
     """Streaming insert-new-only maintenance: every micro-batch anti-joins
     the current target state and appends only unseen keys — the streaming
     form of the reference's hlp/lkp/dim maintenance (I2). Idempotent per
-    key across batches; with Delta in the sink this would be MERGE INTO."""
-    from gcp_etl_pipeline_spark.operators.incremental import insert_new_only
+    key across batches, and a batch that admits no new key writes no
+    file; with Delta in the sink this would be MERGE INTO."""
+    from gcp_etl_pipeline_spark.sinks.writers import insert_new_rows
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            target = spark.read.parquet(target_path)
-        except Exception:  # noqa: BLE001 — first batch: target doesn't exist
-            target = None
-        new = insert_new_only(batch_df, target, keys, normalize=False)
-        new.write.mode("append").parquet(target_path)
+        insert_new_rows(batch_df, target_path, keys, normalize=False)
 
     return (
         stream_df.writeStream.foreachBatch(upsert)

@@ -42,6 +42,12 @@ def test_ledger_written(spark, warehouse):
     ledger = spark.read.parquet(f"{wh}/ops/run_log")
     assert ledger.count() == len(rows)
     assert ledger.filter("status = 'SUCCESS'").count() == len(rows)
+    # the sinks count what they write: the ledger matches the tables
+    ingested = {r["job_name"]: r["rows_ingested"] for r in rows}
+    assert ingested["sales_fact"] == spark.read.parquet(
+        f"{wh}/curated/sales_fact").count()
+    assert ingested["tl_sales_overview"] == spark.read.parquet(
+        f"{wh}/semantic/tl_sales_overview").count()
 
 
 def test_fact_partitioned_by_month(spark, warehouse):

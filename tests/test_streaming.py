@@ -3,6 +3,7 @@ availableNow triggers, checked against batch results over the same data."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -84,16 +85,22 @@ def test_dedup_within_watermark_removes_replayed_file(spark, events_path, tmp_pa
 def test_foreach_batch_insert_new_idempotent(spark, events_path, tmp_path):
     src = tmp_path / "upsert_in"
     src.mkdir()
-    shutil.copy(events_path, src / "a.parquet")
-    shutil.copy(events_path, src / "b.parquet")  # replay -> must not double
+    target = tmp_path / "target"
 
-    target = str(tmp_path / "target")
-    stream = core.read_events_stream(spark, str(src)).select(
-        "event_id", "user_id", "event_type"
-    )
-    q = core.foreach_batch_insert_new(
-        stream, target, keys=["event_id"], checkpoint=str(tmp_path / "ckpt_up")
-    )
-    q.awaitTermination()
-    out = spark.read.parquet(target)
+    def drain() -> list[str]:
+        stream = core.read_events_stream(spark, str(src)).select(
+            "event_id", "user_id", "event_type"
+        )
+        core.foreach_batch_insert_new(
+            stream, str(target), keys=["event_id"],
+            checkpoint=str(tmp_path / "ckpt_up"),
+        ).awaitTermination()
+        return sorted(f for f in os.listdir(target) if not f.startswith(("_", ".")))
+
+    shutil.copy(events_path, src / "a.parquet")
+    first = drain()
+    shutil.copy(events_path, src / "b.parquet")  # replay -> must not double
+    # the replayed batch admits no key, so it writes no (empty) data file
+    assert drain() == first
+    out = spark.read.parquet(str(target))
     assert out.count() == read_parquet(spark, events_path).count()

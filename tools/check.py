@@ -78,13 +78,14 @@ def main() -> int:
 
         from pyspark.sql import SparkSession
 
+        from gcp_etl_pipeline_spark.session import driver_memory
+
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         spark = (
             SparkSession.builder.appName("graft-check-stock")
             .master(f"local[{cpus}]")
             .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory",
-                    os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+            .config("spark.driver.memory", driver_memory())
             .getOrCreate()
         )
     con = duckdb.connect()
