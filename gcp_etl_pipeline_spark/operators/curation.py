@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gcp_etl_pipeline_spark.operators.text import tokens
+from gcp_etl_pipeline_spark.sinks.writers import local_frame
 
 # Patterns are kept to the syntax subset where Java regex (Spark) and RE2
 # (DuckDB oracle) agree character-for-character.
@@ -915,7 +916,7 @@ def shard_assign(
     for i in range(n_buckets):
         offs.append((i, run))
         run += sub.get(i, 0)
-    off_df = spark.createDataFrame(offs, "__b BIGINT, __off BIGINT")
+    off_df = local_frame(spark, offs, "__b BIGINT, __off BIGINT")
     w = (
         Window.partitionBy("__b")
         .orderBy(id_col)

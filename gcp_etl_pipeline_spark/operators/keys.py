@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gcp_etl_pipeline_spark.sinks.writers import local_frame
+
 # Above this many new rows the single-partition window path refuses to run.
 # ~5M rows of a slim dim delta is comfortably one-executor territory;
 # beyond it the caller must choose the parallel path explicitly.
@@ -154,7 +156,7 @@ def _surrogate_keys_offsets(
     for b in range(num_partitions):
         offsets.append((b, acc))
         acc += int(counts.get(b, 0))
-    offset_df = spark.createDataFrame(offsets, "__bucket int, __offset long")
+    offset_df = local_frame(spark, offsets, "__bucket int, __offset long")
 
     w = Window.partitionBy("__bucket").orderBy(
         *[F.col(c).asc_nulls_last() for c in order_by]

@@ -15,6 +15,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gcp_etl_pipeline_spark.sinks.writers import local_frame
+
 
 def profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """One row per column: counts, nulls, exact distincts, min/max.
@@ -274,9 +276,7 @@ def ks_drift(
         sa, sb = sub.get(i, (0, 0))
         run_a += sa
         run_b += sb
-    off_df = spark.createDataFrame(
-        offs, "bucket BIGINT, off_a BIGINT, off_b BIGINT"
-    )
+    off_df = local_frame(spark, offs, "bucket BIGINT, off_a BIGINT, off_b BIGINT")
     w = (
         Window.partitionBy("bucket")
         .orderBy("v")

@@ -1795,30 +1795,6 @@ def ivfpq_adc_topk(
     ).where(F.col("rn") <= k)
 
 
-def knn_ivfpq(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_lists: int = 8,
-    n_probe: int = 2,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-) -> DataFrame:
-    """IVFADC end to end: build the residual-PQ index, probe, ADC-scan
-    member codes. Returns (query_id, neighbor_id, adc, rn)."""
-    index = ivfpq_index(
-        corpus, n_lists, m, ksub, iters, id_col, vec_col
-    )
-    probes = ivfpq_probes(
-        queries, index.cent, n_probe, qid_col, vec_col, dim=index.dim
-    )
-    return ivfpq_adc_topk(index, probes, k, m, qid_col, id_col)
-
-
 def ivfpq_rerank(
     index: IvfPqIndex,
     probes: DataFrame,

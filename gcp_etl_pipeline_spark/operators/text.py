@@ -37,11 +37,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def char_count(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.length(c)
-
-
 def lang_id(text: Column | str) -> Column:
     """Heuristic language ID: the language whose marker-stopword hit count
     is highest (ties broken by language code order); 'und' when no marker

@@ -27,6 +27,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gcp_etl_pipeline_spark.sinks.writers import local_frame
+
 
 @dataclass(frozen=True)
 class RunContext:
@@ -62,14 +64,16 @@ LEDGER_COLUMNS = [
     "batch_id", "job_name", "table_name", "layer", "rows_ingested",
     "start_time", "end_time", "duration_sec", "status", "exception", "remarks",
 ]
+LEDGER_SCHEMA = (
+    "batch_id STRING, job_name STRING, table_name STRING, layer STRING, "
+    "rows_ingested BIGINT, start_time STRING, end_time STRING, "
+    "duration_sec DOUBLE, status STRING, exception STRING, remarks STRING"
+)
 
 
 def append_run_log(spark: SparkSession, ledger_path: str, row: dict) -> None:
-    spark.createDataFrame(
-        [tuple(row.get(c) for c in LEDGER_COLUMNS)],
-        "batch_id STRING, job_name STRING, table_name STRING, layer STRING, "
-        "rows_ingested BIGINT, start_time STRING, end_time STRING, "
-        "duration_sec DOUBLE, status STRING, exception STRING, remarks STRING",
+    local_frame(
+        spark, [tuple(row.get(c) for c in LEDGER_COLUMNS)], LEDGER_SCHEMA
     ).coalesce(1).write.mode("append").parquet(ledger_path)
 
 

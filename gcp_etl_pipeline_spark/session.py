@@ -31,6 +31,11 @@ def driver_memory() -> str:
     return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{total // 2**21}m"
 
 
+def default_shuffle_partitions() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_session(
     app_name: str = _APP_NAME,
     master: str | None = None,
@@ -46,7 +51,7 @@ def get_session(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = default_shuffle_partitions()
 
     builder = (
         SparkSession.builder.appName(app_name)

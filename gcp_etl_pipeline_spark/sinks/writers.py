@@ -15,14 +15,32 @@ design decisions applied:
     itself (the reference's per-job scoping, `...sales_fact_01.py:107`),
     never through the session conf;
   - ``read_target`` is the one reader for a table that may not exist;
+  - ``local_frame`` is the one way driver-side rows become a DataFrame;
   - ``insert_new_rows`` is the K4 append path fused with the P6 anti-join
     so the append can never double-insert keys already present.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-side ``rows`` typed by the DDL ``schema`` (declared, never
+    inferred), as a JVM-owned local relation: it plans as a
+    ``LocalTableScan``, so no Python RDD or Python worker serves it. A
+    column that is null in every row keeps its declared type."""
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    table = pa.table(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def write_parquet(

@@ -21,7 +21,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gcp_etl_pipeline_spark.sinks.writers import read_target
+from gcp_etl_pipeline_spark.sinks.writers import local_frame, read_target
 from gcp_etl_pipeline_spark.spec import TableSpec
 
 _META_SCHEMA = (
@@ -56,8 +56,8 @@ class IngestionCatalog:
             column, value, datetime.now(timezone.utc).isoformat()
         )
         # a local list: the overwrite does not read the path it replaces
-        self.spark.createDataFrame(
-            [(t, c, v, u) for t, (c, v, u) in rows.items()], _META_SCHEMA
+        local_frame(
+            self.spark, [(t, c, v, u) for t, (c, v, u) in rows.items()], _META_SCHEMA
         ).coalesce(1).write.mode("overwrite").parquet(self.path)
 
 

@@ -89,10 +89,3 @@ def run_sql(
 ) -> DataFrame:
     """Execute templated/translated SQL (reference EP3, in-session)."""
     return spark.sql(translate(sql, params))
-
-
-def run_sql_file(
-    spark: SparkSession, path: str, params: dict[str, str] | None = None
-) -> DataFrame:
-    with open(path, encoding="utf-8") as f:
-        return run_sql(spark, f.read(), params)

@@ -131,36 +131,6 @@ def dedup_within_watermark(events: DataFrame, watermark: str = "2 hours") -> Dat
     )
 
 
-def run_available_now(stream_df: DataFrame, name: str, checkpoint: str) -> DataFrame:
-    """Drain everything currently available through the streaming engine
-    into an in-memory table and return it as a DataFrame. Used for tests
-    and for oracle-checking streaming semantics against batch SQL."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append" if not stream_df.isStreaming else _mode_for(stream_df))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(name)
-
-
-def _mode_for(stream_df: DataFrame) -> str:
-    # aggregated streams need complete/update to surface rows without
-    # waiting for the watermark to close windows; plain streams append
-    return "complete" if _has_aggregate(stream_df) else "append"
-
-
-def _has_aggregate(stream_df: DataFrame) -> bool:
-    try:
-        plan = stream_df._jdf.queryExecution().analyzed().toString()
-    except Exception:  # noqa: BLE001
-        return False
-    return "Aggregate" in plan
-
-
 def foreach_batch_versioned(
     stream_df: DataFrame,
     table_path: str,

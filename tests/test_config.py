@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from gcp_etl_pipeline_spark.config import EnvConfig
@@ -40,3 +42,12 @@ def test_sql_params_feed_templating():
         cfg.sql_params(),
     )
     assert out == "INSERT INTO `proj9.dp_semantic.t` SELECT 'b-7'"
+
+
+def test_shuffle_partitions_default_to_usable_cores(monkeypatch):
+    from gcp_etl_pipeline_spark.session import default_shuffle_partitions
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_shuffle_partitions() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_shuffle_partitions() == 3
