@@ -25,6 +25,7 @@ in_range, one_of, matches (regex), custom SQL predicate.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame
@@ -127,8 +128,10 @@ def unique_key_violations(df: DataFrame, keys: list[str]) -> DataFrame:
 # split, if still unconsumed, falls back to recomputation — a slowdown,
 # never a wrong answer), so a caller that forgets the release hook can't
 # grow executor storage without limit.
+# Guarded by _QUARANTINE_LOCK: pipeline jobs call in from concurrent threads.
 _QUARANTINE_CACHE: list[tuple[str, DataFrame]] = []
 _QUARANTINE_CACHE_MAX = 16
+_QUARANTINE_LOCK = threading.Lock()
 
 
 def release_quarantine_caches(spark=None) -> None:
@@ -137,15 +140,16 @@ def release_quarantine_caches(spark=None) -> None:
     entries)."""
     app = spark.sparkContext.applicationId if spark is not None else None
     keep = []
-    for app_id, df in _QUARANTINE_CACHE:
-        if app is not None and app_id != app:
-            keep.append((app_id, df))
-            continue
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 — session may be gone
-            pass
-    _QUARANTINE_CACHE[:] = keep
+    with _QUARANTINE_LOCK:
+        for app_id, df in _QUARANTINE_CACHE:
+            if app is not None and app_id != app:
+                keep.append((app_id, df))
+                continue
+            try:
+                df.unpersist()
+            except Exception:  # noqa: BLE001 — session may be gone
+                pass
+        _QUARANTINE_CACHE[:] = keep
 
 
 def enforce_to_quarantine(
@@ -166,8 +170,9 @@ def enforce_to_quarantine(
     the input source (a JDBC extraction in the gosales ingest wiring) is
     scanned exactly once across both writes. This is the reference's own
     R1 persist-before-dual-actions pattern (`...sales_fact_01.py:156`).
-    The bad write is unconditional (an empty append is one no-op task;
-    the old isEmpty probe was itself an extra action over the source).
+    The bad write is unconditional: a clean batch appends one empty part
+    file (Spark writes a file even for an empty result), which costs no
+    extra action over the source the way an isEmpty probe would.
     Callers release the retained cache after their main write via
     ``release_quarantine_caches()`` (pipeline runners: wire it into the
     finish hook). ``persist=False`` opts out — two source scans, zero
@@ -178,15 +183,16 @@ def enforce_to_quarantine(
     tagged = _tag(df, expectations)
     if persist:
         tagged = tagged.persist()
-        while len(_QUARANTINE_CACHE) >= _QUARANTINE_CACHE_MAX:
-            _, oldest = _QUARANTINE_CACHE.pop(0)
-            try:
-                oldest.unpersist()
-            except Exception:  # noqa: BLE001 — session may be gone
-                pass
-        _QUARANTINE_CACHE.append(
-            (df.sparkSession.sparkContext.applicationId, tagged)
-        )
+        with _QUARANTINE_LOCK:
+            while len(_QUARANTINE_CACHE) >= _QUARANTINE_CACHE_MAX:
+                _, oldest = _QUARANTINE_CACHE.pop(0)
+                try:
+                    oldest.unpersist()
+                except Exception:  # noqa: BLE001 — session may be gone
+                    pass
+            _QUARANTINE_CACHE.append(
+                (df.sparkSession.sparkContext.applicationId, tagged)
+            )
     bad = tagged.where(F.size("failed_rules") > 0)
     if batch_id is not None:
         bad = bad.withColumn("batch_id", F.lit(batch_id))

@@ -25,6 +25,8 @@ the lineitem⋈orders co-key join is left to AQE (sort-merge w/ skew split).
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,23 +47,28 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 # Bounded: entries beyond _DIM_CACHE_MAX evict (and unpersist) oldest-
 # first, and `clear_dim_cache()` releases everything — a long-lived
 # service calls it between batches (pipeline.py runner hook).
+# Pipeline jobs run on concurrent threads, so every access holds
+# _DIM_LOCK; it is re-entrant because a stage build (retailer_dim) takes
+# another stage from the cache.
 _DIM_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _DIM_CACHE_MAX = 64
+_DIM_LOCK = threading.RLock()
 
 
 def _cached(name: str, fn, spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _DIM_CACHE.get(key)
-    if df is None:
-        while len(_DIM_CACHE) >= _DIM_CACHE_MAX:
-            oldest = next(iter(_DIM_CACHE))
-            try:
-                _DIM_CACHE.pop(oldest).unpersist()
-            except Exception:  # noqa: BLE001 — session may be gone
-                pass
-        df = fn(spark, sf_dir).persist()
-        _DIM_CACHE[key] = df
-    return df
+    with _DIM_LOCK:
+        df = _DIM_CACHE.get(key)
+        if df is None:
+            while len(_DIM_CACHE) >= _DIM_CACHE_MAX:
+                oldest = next(iter(_DIM_CACHE))
+                try:
+                    _DIM_CACHE.pop(oldest).unpersist()
+                except Exception:  # noqa: BLE001 — session may be gone
+                    pass
+            df = fn(spark, sf_dir).persist()
+            _DIM_CACHE[key] = df
+        return df
 
 
 def cached_stage(name: str, spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,14 +94,15 @@ def clear_dim_cache(spark: SparkSession | None = None) -> None:
     entries are evicted — concurrent pipelines in other sessions keep
     their persisted dims."""
     app = spark.sparkContext.applicationId if spark is not None else None
-    for key in list(_DIM_CACHE):
-        if app is not None and key[0] != app:
-            continue
-        df = _DIM_CACHE.pop(key)
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001
-            pass
+    with _DIM_LOCK:
+        for key in list(_DIM_CACHE):
+            if app is not None and key[0] != app:
+                continue
+            df = _DIM_CACHE.pop(key)
+            try:
+                df.unpersist()
+            except Exception:  # noqa: BLE001
+                pass
 
 
 # ---------------------------------------------------------------- raw layer

@@ -105,7 +105,7 @@ def test_enforce_to_quarantine_routes_bad_rows(spark, tmp_path):
     assert rows[4] == (["price_cap", "flag_known"], "b-7")
     assert len(rows) == 3
     # an all-clean batch adds no rows (the unconditional append of an
-    # empty split writes no part files)
+    # empty split adds one empty part file)
     clean = spark.createDataFrame([(9, 1.0, "A")], "id INT, price DOUBLE, flag STRING")
     ex.enforce_to_quarantine(clean, RULES(), qpath, batch_id="b-8")
     assert spark.read.parquet(qpath).count() == 3

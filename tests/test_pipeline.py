@@ -4,6 +4,10 @@ capture."""
 
 from __future__ import annotations
 
+import sys
+import threading
+import time
+
 import pytest
 
 from gcp_etl_pipeline_spark.pipeline import (
@@ -11,34 +15,183 @@ from gcp_etl_pipeline_spark.pipeline import (
     Pipeline,
     PipelineError,
     RunContext,
+    job_tag,
 )
 from gcp_etl_pipeline_spark.plans.gosales_pipeline import build_pipeline
+
+CALLER_GROUP = "test-pipeline-caller"
 
 
 @pytest.fixture(scope="module")
 def warehouse(spark, sf_dir, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("warehouse"))
     p = build_pipeline(sf_dir, wh, spark)
-    rows = p.run(RunContext(batch_id="b-1", params={"batch_ts": "2026-01-01 00:00:00"}))
-    return wh, rows
+    sc = spark.sparkContext
+    sc.setJobGroup(CALLER_GROUP, "pipeline under test")
+    try:
+        rows = p.run(RunContext(batch_id="b-1", params={"batch_ts": "2026-01-01 00:00:00"}))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return wh, rows, p.jobs
 
 
-def test_pipeline_runs_all_jobs_in_dependency_order(warehouse):
-    _, rows = warehouse
+def _job_ids_for_tag(spark, tag: str) -> set[int]:
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return set(jsc.statusTracker().getJobIdsForTag(tag))
+
+
+def test_jobs_tag_their_spark_work_inside_the_caller_group(spark, warehouse):
+    """Every job's Spark jobs carry its own tag (a non-empty set, disjoint
+    from every other job's) and still run under the caller's job group."""
+    _, rows, jobs = warehouse
+    ctx = RunContext(batch_id="b-1")
+    by_job = {name: _job_ids_for_tag(spark, job_tag(ctx, job))
+              for name, job in jobs.items()}
+    assert all(by_job.values()), by_job
+    tagged = [i for ids in by_job.values() for i in ids]
+    assert len(tagged) == len(set(tagged))
+    group = set(spark.sparkContext.statusTracker().getJobIdsForGroup(CALLER_GROUP))
+    assert set(tagged) <= group
+
+
+def test_pipeline_runs_all_jobs_in_dependency_order(spark, warehouse):
+    wh, rows, jobs = warehouse
     names = [r["job_name"] for r in rows]
     assert set(names) == {
         "raw_go_daily_sales",
         "method_hlp", "retailer_hlp", "product_lkp", "retailer_dim",
         "sales_fact", "tl_sales_overview",
     }
-    assert names.index("sales_fact") > names.index("retailer_hlp")
-    assert names.index("tl_sales_overview") > names.index("sales_fact")
+    for name, job in jobs.items():
+        assert all(names.index(dep) < names.index(name) for dep in job.depends_on)
     assert all(r["status"] == "SUCCESS" for r in rows)
     assert all(r["rows_ingested"] > 0 for r in rows)
+    # the ledger agrees: a job starts only after its dependencies ended
+    ledger = {r.job_name: r for r in spark.read.parquet(f"{wh}/ops/run_log").collect()}
+    for name, job in jobs.items():
+        assert all(ledger[dep].end_time <= ledger[name].start_time
+                   for dep in job.depends_on)
+
+
+def _local_job(name, build, depends_on=()):
+    return Job(name=name, layer="RAW", build=build,
+               write=lambda df, spark, ctx: df.count(), depends_on=depends_on)
+
+
+def test_independent_jobs_overlap(spark, tmp_path):
+    """Two jobs with no dependency between them run at the same time:
+    each waits at the barrier for the other."""
+    meet = threading.Barrier(2, timeout=30)
+
+    def build(spark, ctx):
+        meet.wait()
+        return spark.range(2)
+
+    p = Pipeline(spark, ledger_path=str(tmp_path / "run_log"))
+    p.add(_local_job("left", build)).add(_local_job("right", build))
+    rows = p.run(RunContext(batch_id="b-overlap"))
+    assert {(r["job_name"], r["status"], r["rows_ingested"]) for r in rows} == {
+        ("left", "SUCCESS", 2), ("right", "SUCCESS", 2)}
+    assert spark.read.parquet(str(tmp_path / "run_log")).count() == 2
+
+
+def test_failure_stops_new_jobs_and_ledgers_running_ones(spark, tmp_path):
+    """After a failure no new job starts (its dependent never runs and
+    gets no ledger row), while an independent job already running
+    finishes and is ledgered."""
+    running, failing = threading.Event(), threading.Event()
+    started = []
+
+    def slow(spark, ctx):
+        running.set()
+        assert failing.wait(30)
+        return spark.range(3)
+
+    def bad(spark, ctx):
+        assert running.wait(30)
+        failing.set()
+        raise ValueError("bad input")
+
+    def child(spark, ctx):
+        started.append("child")
+        return spark.range(1)
+
+    ledger = str(tmp_path / "run_log")
+    p = Pipeline(spark, ledger_path=ledger)
+    p.add(_local_job("slow", slow)).add(_local_job("bad", bad))
+    p.add(_local_job("child", child, depends_on=("bad",)))
+    with pytest.raises(PipelineError) as ei:
+        p.run(RunContext(batch_id="b-stop"))
+    assert ei.value.job_name == "bad"
+    assert started == []
+    written = {r.job_name: (r.status, r.rows_ingested)
+               for r in spark.read.parquet(ledger).collect()}
+    assert written == {"slow": ("SUCCESS", 3), "bad": ("FAILED", 0)}
+    assert {r["job_name"] for r in ei.value.ledger_rows} == {"slow", "bad"}
+
+
+def test_pipeline_error_names_the_first_failure(spark, tmp_path):
+    first_failed = threading.Event()
+
+    def first(spark, ctx):
+        try:
+            raise ValueError("first")
+        finally:
+            first_failed.set()
+
+    def second(spark, ctx):
+        assert first_failed.wait(30)
+        time.sleep(2)  # the first failure reaches the runner first
+        raise ValueError("second")
+
+    ledger = str(tmp_path / "run_log")
+    p = Pipeline(spark, ledger_path=ledger)
+    p.add(_local_job("first", first)).add(_local_job("second", second))
+    with pytest.raises(PipelineError, match="job first failed") as ei:
+        p.run(RunContext(batch_id="b-first"))
+    assert ei.value.job_name == "first"
+    assert [r["job_name"] for r in ei.value.ledger_rows] == ["first", "second"]
+    assert {r.status for r in spark.read.parquet(ledger).collect()} == {"FAILED"}
+
+
+def test_dim_cache_builds_once_under_concurrent_callers(spark, sf_dir):
+    """Eight threads asking for one cached stage at once all get the same
+    DataFrame, and the cache holds exactly one entry for it."""
+    from gcp_etl_pipeline_spark.plans import gosales
+
+    gosales.clear_dim_cache(spark)
+    go = threading.Barrier(8, timeout=30)
+    got = [None] * 8
+
+    def call(i):
+        go.wait()
+        got[i] = gosales.cached_stage("retailer_hlp", spark, sf_dir)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=call, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(interval)
+    try:
+        assert not any(t.is_alive() for t in threads)
+        assert got[0] is not None and all(df is got[0] for df in got)
+        app = spark.sparkContext.applicationId
+        assert [k for k in gosales._DIM_CACHE
+                if k[0] == app and k[2] == "retailer_hlp"] == [
+            (app, sf_dir, "retailer_hlp")]
+    finally:
+        gosales.clear_dim_cache(spark)
 
 
 def test_ledger_written(spark, warehouse):
-    wh, rows = warehouse
+    wh, rows, _ = warehouse
     ledger = spark.read.parquet(f"{wh}/ops/run_log")
     assert ledger.count() == len(rows)
     assert ledger.filter("status = 'SUCCESS'").count() == len(rows)
@@ -51,7 +204,7 @@ def test_ledger_written(spark, warehouse):
 
 
 def test_fact_partitioned_by_month(spark, warehouse):
-    wh, _ = warehouse
+    wh, _, _ = warehouse
     fact = spark.read.parquet(f"{wh}/curated/sales_fact")
     assert "sale_month" in fact.columns
     # partition pruning: a one-month filter reads only that partition
@@ -61,7 +214,7 @@ def test_fact_partitioned_by_month(spark, warehouse):
 
 
 def test_rerun_is_idempotent_for_dims(spark, sf_dir, warehouse):
-    wh, _ = warehouse
+    wh, _, _ = warehouse
     before = {
         t: spark.read.parquet(f"{wh}/curated/{t}").count()
         for t in ["method_hlp", "retailer_hlp", "product_lkp", "retailer_dim"]
@@ -83,7 +236,7 @@ def test_rerun_is_idempotent_for_dims(spark, sf_dir, warehouse):
 
 
 def test_raw_layer_masked_and_typed(spark, sf_dir, warehouse):
-    wh, _ = warehouse
+    wh, _, _ = warehouse
     from gcp_etl_pipeline_spark.operators.masking import unmask_columns
     from gcp_etl_pipeline_spark.plans.gosales import go_daily_sales
 
@@ -103,7 +256,7 @@ def test_raw_layer_masked_and_typed(spark, sf_dir, warehouse):
 
 
 def test_overview_matches_registry_query(spark, sf_dir, warehouse):
-    wh, _ = warehouse
+    wh, _, _ = warehouse
     from gcp_etl_pipeline_spark.plans.gosales import sales_overview
     from gcp_etl_pipeline_spark.operators.audit import drop_audit_columns
 
