@@ -46,10 +46,11 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 # and on a cluster this is exactly the table you'd broadcast anyway.
 # Bounded: entries beyond _DIM_CACHE_MAX evict (and unpersist) oldest-
 # first, and `clear_dim_cache()` releases everything — a long-lived
-# service calls it between batches (pipeline.py runner hook).
-# Pipeline jobs run on concurrent threads, so every access holds
-# _DIM_LOCK; it is re-entrant because a stage build (retailer_dim) takes
-# another stage from the cache.
+# service calls it between batches. The materialized pipeline never fills
+# it: its jobs read the tables their dependencies wrote. Callers may share
+# the cache across threads, so every access holds _DIM_LOCK; it is
+# re-entrant because a stage build (retailer_dim) takes another stage
+# from the cache.
 _DIM_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _DIM_CACHE_MAX = 64
 _DIM_LOCK = threading.RLock()
@@ -170,64 +171,75 @@ def go_products(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------ curated layer
 
-def method_hlp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DISTINCT method names → dense surrogate keys
-    (`...method_hlp_01.py:50-65`; empty target → keys from 1)."""
-    src = go_methods(spark, sf_dir).select(
+def method_names(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct method names: the candidates of the method registry."""
+    return go_methods(spark, sf_dir).select(
         F.col("order_method_type").alias("method_name")
     ).distinct()
-    return surrogate_keys(src, None, "method_key", ["method_name"]).select(
-        "method_key", "method_name"
-    )
+
+
+def retailer_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct retailer codes: the candidates of the retailer registry."""
+    return go_retailers(spark, sf_dir).select("retailer_code").distinct()
+
+
+# The surrogate-key registries: name -> (key column, natural key, candidate
+# rows). A registry is its candidates keyed densely by natural key; the
+# materialized pipeline keys only the candidates its written registry
+# lacks, continuing from the registry's max key.
+REGISTRIES = {
+    "method_hlp": ("method_key", "method_name", method_names),
+    "retailer_hlp": ("retailer_key", "retailer_code", retailer_codes),
+    "product_lkp": ("product_key", "product_number", go_products),
+}
+
+
+def _registry(name: str, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Empty target -> keys from 1 (`...retailer_hlp_01.py:50-65`)."""
+    key_col, natural, candidates = REGISTRIES[name]
+    src = candidates(spark, sf_dir)
+    return surrogate_keys(src, None, key_col, [natural]).select(key_col, *src.columns)
+
+
+def method_hlp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DISTINCT method names -> dense surrogate keys
+    (`...method_hlp_01.py:50-65`)."""
+    return _registry("method_hlp", spark, sf_dir)
 
 
 def retailer_hlp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(`...retailer_hlp_01.py:50-65`)."""
-    src = go_retailers(spark, sf_dir).select("retailer_code").distinct()
-    return surrogate_keys(src, None, "retailer_key", ["retailer_code"]).select(
-        "retailer_key", "retailer_code"
-    )
+    return _registry("retailer_hlp", spark, sf_dir)
 
 
 def product_lkp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key + full attribute payload (`...product_lkp_01.py:59-81`)."""
-    src = go_products(spark, sf_dir)
-    return surrogate_keys(src, None, "product_key", ["product_number"]).select(
-        "product_key",
-        "product_number",
-        "product_line",
-        "product_type",
-        "product",
-        "product_brand",
-        "product_color",
-        "unit_cost",
-        "unit_price",
-    )
+    return _registry("product_lkp", spark, sf_dir)
 
 
-def retailer_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
+def retailer_dim_from(r: DataFrame, rh: DataFrame) -> DataFrame:
     """raw retailers ⋈ retailer_hlp on lower(retailer_code)
     (`...retailer_dim_01.py:51-64`)."""
-    r = go_retailers(spark, sf_dir)
-    rh = _cached("retailer_hlp", retailer_hlp, spark, sf_dir)
     return r.join(
         F.broadcast(rh), norm_key(r.retailer_code) == norm_key(rh.retailer_code)
     ).select("retailer_key", "retailer_name", "retailer_type", "country")
 
 
-def sales_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
+def retailer_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return retailer_dim_from(
+        go_retailers(spark, sf_dir),
+        _cached("retailer_hlp", retailer_hlp, spark, sf_dir),
+    )
+
+
+def fact_from(
+    src: DataFrame, rh: DataFrame, pl: DataFrame, mt: DataFrame, mh: DataFrame
+) -> DataFrame:
     """4-way lower()-normalized left star join + casts
-    (`...sales_fact_01.py:55-73`). Dim sides broadcast: the fact side (the
-    100 TB table) is never shuffled by these joins. Deliberately NOT
-    persisted: an A/B at sf0.1 showed caching the full fact costs more to
-    materialize (~2 s) than its one recompute inside sales_overview
-    (~1.6 s); at 100 TB the semantic layer would read the WRITTEN curated
-    table instead (see plans/gosales_pipeline.py)."""
-    src = go_daily_sales(spark, sf_dir)
-    rh = _cached("retailer_hlp", retailer_hlp, spark, sf_dir)
-    pl = _cached("product_lkp", product_lkp, spark, sf_dir)
-    mt = _cached("go_methods", go_methods, spark, sf_dir)
-    mh = _cached("method_hlp", method_hlp, spark, sf_dir)
+    (`...sales_fact_01.py:55-73`) of the daily sales ``src`` with the
+    retailer/method registries, the product lookup and the method source
+    ``mt``. Dim sides broadcast: the fact side (the 100 TB table) is never
+    shuffled by these joins."""
     return (
         src.join(
             F.broadcast(rh),
@@ -262,6 +274,22 @@ def sales_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def sales_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``fact_from`` over the sources and the session-cached dims.
+    Deliberately NOT persisted: an A/B at sf0.1 showed caching the full
+    fact costs more to materialize (~2 s) than its one recompute inside
+    sales_overview (~1.6 s). The materialized pipeline does not recompute
+    it at all: its semantic layer reads the WRITTEN curated fact
+    (plans/gosales_pipeline.py)."""
+    return fact_from(
+        go_daily_sales(spark, sf_dir),
+        _cached("retailer_hlp", retailer_hlp, spark, sf_dir),
+        _cached("product_lkp", product_lkp, spark, sf_dir),
+        _cached("go_methods", go_methods, spark, sf_dir),
+        _cached("method_hlp", method_hlp, spark, sf_dir),
+    )
+
+
 def sales_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic thin layer (`tl_sm_gosales_overview_01.sql:5-26`): parse the
     stringified date, 3-way surrogate-key star join, 4 aggregates, GROUP BY
@@ -288,9 +316,10 @@ def overview_from_tables(
     sf: DataFrame, rd: DataFrame, pl: DataFrame, mh: DataFrame
 ) -> DataFrame:
     """The overview rollup over ALREADY-BUILT fact/dim tables — shared by
-    the inline batch plan (above), the streaming warehouse rollup
-    (`plans/gosales_streaming.py`), and the catalog-table vertical
-    (`sinks/catalog.py`). Same physical shape and µ-unit exactness as
+    the inline batch plan (above), the materialized pipeline's semantic
+    job over the written star (`plans/gosales_pipeline.py`), the streaming
+    warehouse rollup (`plans/gosales_streaming.py`), and the catalog-table
+    vertical (`sinks/catalog.py`). Same physical shape and µ-unit exactness as
     documented on ``sales_overview``."""
     rd = rd.alias("rd")
     pl = pl.alias("pl")

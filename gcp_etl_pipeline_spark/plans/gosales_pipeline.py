@@ -2,9 +2,20 @@
 build order (`composer/goSalesPipeline.py:23-29`) writing real tables into
 a warehouse directory through the engine's Pipeline runner + run ledger.
 
+Layered reads: each job reads what its declared dependencies WROTE, so no
+job re-derives an upstream layer from the sources. ``retailer_dim`` joins
+the retailer source with the written ``curated/retailer_hlp``;
+``sales_fact`` joins the daily sales and the method source (its 2 raw
+inputs) with the written ``method_hlp``, ``retailer_hlp`` and
+``product_lkp`` (its 3 curated deps, reference EP2
+`dl_ct_gosales_sales_fact_01.py:139-143`); ``tl_sales_overview`` rolls up
+the written star only (reference EP3 `tl_sm_gosales_overview_01.sql:22-25`).
+
 Physical design (the decisions the reference left latent, SURVEY §4):
   - helpings/lookup/dim maintenance is insert-new-only against the WRITTEN
     target (idempotent re-runs; reference `mode("append")` + anti-join);
+    a registry's new natural keys get surrogate keys continued from the
+    written registry's max key, so keys are never reused;
   - the fact is a full-refresh overwrite PARTITIONED BY sale month, so
     dynamic partition overwrite replaces only touched months and every
     downstream date-filtered scan prunes partitions;
@@ -15,6 +26,9 @@ ctx.params pins timestamps for deterministic tests.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,31 +120,38 @@ def build_pipeline(sf_dir: str, warehouse: str, spark: SparkSession) -> Pipeline
         )
     )
 
+    def curated(name: str) -> str:
+        return f"{warehouse}/curated/{name}"
+
     def maintenance_job(
-        name: str, table_id: int, stage_fn, keys: list[str], deps: tuple[str, ...] = ()
+        name: str, table_id: int, candidates: Callable[[SparkSession], DataFrame],
+        natural: str, key_col: str | None = None, deps: tuple[str, ...] = (),
     ) -> Job:
         def build(spark: SparkSession, ctx: RunContext) -> DataFrame:
-            return _audited(stage_fn(spark, sf_dir), ctx, table_id)
+            return _audited(candidates(spark), ctx, table_id)
 
         def write(df: DataFrame, spark: SparkSession, ctx: RunContext) -> int:
-            return insert_new_rows(df, f"{warehouse}/curated/{name}", keys)
+            return insert_new_rows(df, curated(name), [natural], key_col=key_col)
 
         return Job(name=name, layer=LAYER_CURATED, build=build, write=write,
                    table_name=name, depends_on=deps)
 
-    p.add(maintenance_job("method_hlp", 101, gosales.method_hlp, ["method_name"]))
-    p.add(maintenance_job("retailer_hlp", 102, gosales.retailer_hlp, ["retailer_code"]))
-    p.add(
-        maintenance_job(
-            "product_lkp", 103, gosales.product_lkp, ["product_number"]
+    # registries: unkeyed candidates, keyed by insert_new_rows from the
+    # written registry's max key
+    for name, table_id in (("method_hlp", 101), ("retailer_hlp", 102),
+                           ("product_lkp", 103)):
+        key_col, natural, candidates = gosales.REGISTRIES[name]
+        p.add(maintenance_job(name, table_id, partial(candidates, sf_dir=sf_dir),
+                              natural, key_col))
+
+    def retailer_dim(spark: SparkSession) -> DataFrame:
+        return gosales.retailer_dim_from(
+            gosales.go_retailers(spark, sf_dir),
+            spark.read.parquet(curated("retailer_hlp")),
         )
-    )
-    p.add(
-        maintenance_job(
-            "retailer_dim", 104, gosales.retailer_dim, ["retailer_key"],
-            deps=("retailer_hlp",),
-        )
-    )
+
+    p.add(maintenance_job("retailer_dim", 104, retailer_dim, "retailer_key",
+                          deps=("retailer_hlp",)))
 
     def build_fact(spark: SparkSession, ctx: RunContext) -> DataFrame:
         # Backfill support (reference argv parity: optional start_date /
@@ -142,7 +163,13 @@ def build_pipeline(sf_dir: str, warehouse: str, spark: SparkSession) -> Pipeline
         # rewritten. Untouched months keep their rows and original batch
         # stamps. sale_date is the reference's stringified yyyy-MM-dd, so
         # string prefix comparison IS month comparison.
-        df = gosales.sales_fact(spark, sf_dir)
+        df = gosales.fact_from(
+            gosales.go_daily_sales(spark, sf_dir),
+            spark.read.parquet(curated("retailer_hlp")),
+            spark.read.parquet(curated("product_lkp")),
+            gosales.go_methods(spark, sf_dir),
+            spark.read.parquet(curated("method_hlp")),
+        )
         start = ctx.params.get("start_date")
         end = ctx.params.get("end_date")
         month = F.substring("sale_date", 1, 7)
@@ -157,7 +184,7 @@ def build_pipeline(sf_dir: str, warehouse: str, spark: SparkSession) -> Pipeline
     def write_fact(df: DataFrame, spark: SparkSession, ctx: RunContext) -> int:
         # dynamic partition overwrite: only months present in df are replaced
         return write_parquet(
-            df, f"{warehouse}/curated/sales_fact", mode="overwrite",
+            df, curated("sales_fact"), mode="overwrite",
             partition_by=["sale_month"],
         )
 
@@ -170,7 +197,11 @@ def build_pipeline(sf_dir: str, warehouse: str, spark: SparkSession) -> Pipeline
     )
 
     def build_overview(spark: SparkSession, ctx: RunContext) -> DataFrame:
-        return _audited(gosales.sales_overview(spark, sf_dir), ctx, 106)
+        overview = gosales.overview_from_tables(
+            *(spark.read.parquet(curated(t))
+              for t in ("sales_fact", "retailer_dim", "product_lkp", "method_hlp"))
+        )
+        return _audited(overview, ctx, 106)
 
     def write_overview(df: DataFrame, spark: SparkSession, ctx: RunContext) -> int:
         return write_parquet(
@@ -181,19 +212,17 @@ def build_pipeline(sf_dir: str, warehouse: str, spark: SparkSession) -> Pipeline
         Job(
             name="tl_sales_overview", layer=LAYER_SEMANTIC, build=build_overview,
             write=write_overview, table_name="tl_sales_overview",
-            depends_on=("sales_fact", "retailer_dim"),
+            depends_on=("sales_fact", "retailer_dim", "product_lkp", "method_hlp"),
         )
     )
-    # plan-owned cleanup: release THIS app's persisted dims and the
-    # quarantine gate's flagged-projection cache after each run (the good
-    # split reads that cache through the raw write, so release must wait
-    # for the run to finish)
+    # plan-owned cleanup: release the quarantine gate's flagged-projection
+    # cache after each run (the good split reads that cache through the
+    # raw write, so release must wait for the run to finish)
     def _cleanup(spark: SparkSession) -> None:
         from gcp_etl_pipeline_spark.operators.expectations import (
             release_quarantine_caches,
         )
 
-        gosales.clear_dim_cache(spark)
         release_quarantine_caches(spark)
 
     p.on_finish(_cleanup)

@@ -198,8 +198,5 @@ def overview_from_warehouse(spark: SparkSession, sf_dir: str, warehouse: str) ->
     rh = read_target(spark, f"{warehouse}/retailer_hlp")
     pl = read_target(spark, f"{warehouse}/product_lkp")
     mh = read_target(spark, f"{warehouse}/method_hlp")
-    r = gosales.go_retailers(spark, sf_dir)
-    rd = r.join(
-        F.broadcast(rh), norm_key(r.retailer_code) == norm_key(rh.retailer_code)
-    ).select("retailer_key", "retailer_name", "retailer_type", "country")
+    rd = gosales.retailer_dim_from(gosales.go_retailers(spark, sf_dir), rh)
     return gosales.overview_from_tables(fact, rd, pl, mh)

@@ -17,7 +17,9 @@ design decisions applied:
   - ``read_target`` is the one reader for a table that may not exist;
   - ``local_frame`` is the one way driver-side rows become a DataFrame;
   - ``insert_new_rows`` is the K4 append path fused with the P6 anti-join
-    so the append can never double-insert keys already present.
+    so the append can never double-insert keys already present; for a
+    surrogate-key registry it also keys the admitted rows from the
+    target's max key, in the same pass.
 """
 
 from __future__ import annotations
@@ -129,13 +131,22 @@ def insert_new_rows(
     path: str,
     keys: list[str],
     normalize: bool = True,
+    key_col: str | None = None,
 ) -> int:
     """Append only rows whose natural key is absent from the target
-    (reference K4 + P6 as one idempotent operation). Returns rows written."""
+    (reference K4 + P6 as one idempotent operation). Returns rows written.
+
+    With ``key_col``, ``df`` holds unkeyed candidates of a surrogate-key
+    registry: the admitted rows get dense keys max(target)+1..+n ordered
+    by ``keys``, so a registry that grows never reuses a key (a fresh
+    target gets keys from 1), and ``key_col`` is written first."""
     from gcp_etl_pipeline_spark.operators.incremental import insert_new_only
+    from gcp_etl_pipeline_spark.operators.keys import surrogate_keys
 
     target = read_target(df.sparkSession, path)
     new = insert_new_only(df, target, keys, normalize=normalize)
+    if key_col is not None:
+        new = surrogate_keys(new, target, key_col, keys).select(key_col, *df.columns)
     new = new.persist()
     try:
         n = new.count()

@@ -268,6 +268,72 @@ def test_overview_matches_registry_query(spark, sf_dir, warehouse):
     assert written.exceptAll(expected).count() == 0
 
 
+def test_each_job_reads_the_layer_below(spark, sf_dir, warehouse):
+    """Jobs read what their dependencies wrote: the overview reads only the
+    written curated star, the fact and the dim read the written
+    registries, and none of them re-derives a registry from the sources."""
+    wh, _, jobs = warehouse
+    ctx = RunContext(batch_id="b-probe")
+
+    def inputs(name):
+        return jobs[name].build(spark, ctx).inputFiles()
+
+    def reads(files, table):
+        return any(f"{wh}/curated/{table}/" in f for f in files)
+
+    overview = inputs("tl_sales_overview")
+    assert overview and all(f"{wh}/curated/" in f for f in overview), overview
+    assert not any(sf_dir in f for f in overview)
+    fact = inputs("sales_fact")
+    assert all(reads(fact, t) for t in ("method_hlp", "retailer_hlp", "product_lkp"))
+    assert reads(inputs("retailer_dim"), "retailer_hlp")
+
+
+def test_registry_keys_continue_from_the_written_registry(spark, sf_dir, tmp_path):
+    """A load over sources that lack the lowest retailer code, then a run
+    over the full sources: the late retailer gets a fresh key, so registry
+    keys stay unique, every fact key resolves, and the overview equals the
+    one derived from the full sources."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from gcp_etl_pipeline_spark.operators.audit import drop_audit_columns
+    from gcp_etl_pipeline_spark.plans.gosales import sales_overview
+
+    partial = tmp_path / "partial"
+    partial.mkdir()
+    for name in os.listdir(sf_dir):
+        if name != "supplier.parquet":
+            os.symlink(os.path.join(sf_dir, name), partial / name)
+    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    [first] = supplier.agg(F.min(F.col("s_suppkey").cast("string"))).first()
+    supplier.where(F.col("s_suppkey").cast("string") != first).write.parquet(
+        str(partial / "supplier.parquet"))
+
+    wh = str(tmp_path / "wh_late")
+    build_pipeline(str(partial), wh, spark).run(RunContext(
+        batch_id="b-partial", params={"batch_ts": "2026-01-01 00:00:00"}))
+    build_pipeline(sf_dir, wh, spark).run(RunContext(
+        batch_id="b-full", params={"batch_ts": "2026-01-02 00:00:00"}))
+
+    def table(layer, name):
+        return spark.read.parquet(f"{wh}/{layer}/{name}")
+
+    fact = table("curated", "sales_fact")
+    for registry, key in (("method_hlp", "method_key"),
+                          ("retailer_hlp", "retailer_key"),
+                          ("product_lkp", "product_key")):
+        reg = table("curated", registry)
+        assert reg.count() == reg.select(key).distinct().count(), registry
+        assert fact.where(F.col(key).isNotNull()).join(
+            reg, key, "left_anti").count() == 0, registry
+    written = drop_audit_columns(table("semantic", "tl_sales_overview"))
+    expected = sales_overview(spark, sf_dir)
+    assert written.exceptAll(expected).count() == 0
+    assert expected.exceptAll(written).count() == 0
+
+
 def test_failure_is_ledgered_and_raises(spark, tmp_path):
     wh = str(tmp_path / "whf")
     p = Pipeline(spark, ledger_path=f"{wh}/ops/run_log")

@@ -59,6 +59,14 @@ echo "== per-query evidence ledger =="
 # query silently dropped from the sweeps can no longer hide
 python tools/evidence.py --check
 
+echo "== medallion benchmark workloads (seed 1, one iteration) =="
+# each run checks the warehouse it wrote with DuckDB (dim counts, the run
+# ledger's SUCCESS rows, the overview against its oracle) and exits
+# non-zero when a check fails
+for w in medallion_batch stream_catalog; do
+  python3 perfbench/run.py --workload "$w" --seed 1 --seconds 0 --trace 0
+done
+
 echo "== plan-profile drift check =="
 # a lost broadcast or a new cartesian changes a query's join/exchange
 # census; deliberate plan changes land with a regenerated baseline in
