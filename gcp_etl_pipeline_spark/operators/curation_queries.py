@@ -683,15 +683,11 @@ def _q_binaryfile_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions of the file index, so grouped sums are closed-form for
     the oracle — any corruption across stage→read→decode breaks it."""
     import os
-    import tempfile
 
     from gcp_etl_pipeline_spark.operators import codecs, multimodal
 
     n = 120
-    root = (
-        f"{tempfile.gettempdir()}/graft_binf_"
-        f"{spark.sparkContext.applicationId}"
-    )
+    root = session_root(spark, "binf")
     media_dir = f"{root}/media"
     if not os.path.exists(f"{root}/_done"):
         os.makedirs(media_dir, exist_ok=True)
@@ -1458,26 +1454,23 @@ _CACHE_LOCK = _threading.RLock()
 
 def _session_cached_path(spark, tag: str, build, validate):
     """THE generate-once-per-session fixture-cache discipline, shared by
-    every cached fixture: ``build(root)`` materializes into a fresh tmp
-    ``root`` and returns the data path; ``validate(path)`` returns the
+    every cached fixture: ``build(root)`` materializes into a fresh
+    ``root`` from `session.scratch_dir` (removed at interpreter exit, like
+    all scratch) and returns the data path; ``validate(path)`` returns the
     caller's handle (a DataFrame, the path, ...) or raises to force ONE
     regeneration. Thread-safe (module-level RLock around the
-    check-and-generate), cleaned up at interpreter exit, resilient to a
-    tmp cleaner deleting the directory between validation and read
-    (ADVICE r9)."""
-    import atexit
+    check-and-generate), resilient to a tmp cleaner deleting the
+    directory between validation and read (ADVICE r9)."""
     import os
-    import shutil
-    import tempfile
+
+    from gcp_etl_pipeline_spark.session import scratch_dir
 
     key = (spark.sparkContext.applicationId, tag)
     for _attempt in range(2):
         with _CACHE_LOCK:
             path = _SESSION_PARQUET_CACHE.get(key)
             if path is None or not os.path.isdir(path):
-                root = tempfile.mkdtemp(prefix=f"graft_{tag}_")
-                atexit.register(shutil.rmtree, root, ignore_errors=True)
-                path = build(root)
+                path = build(scratch_dir(tag))
                 _SESSION_PARQUET_CACHE[key] = path
         try:
             return validate(path)
@@ -1486,6 +1479,14 @@ def _session_cached_path(spark, tag: str, build, validate):
                 if _SESSION_PARQUET_CACHE.get(key) == path:
                     del _SESSION_PARQUET_CACHE[key]
     raise RuntimeError(f"session fixture cache for {tag!r} unreadable")
+
+
+def session_root(spark, tag: str) -> str:
+    """A scratch directory that stays the same for the whole session
+    (``_session_cached_path`` with nothing to build): for fixtures that
+    check for their own files, and roots a first call pins (catalog
+    database locations)."""
+    return _session_cached_path(spark, tag, lambda root: root, lambda path: path)
 
 
 def _session_cached_parquet(spark, tag: str, build) -> DataFrame:
@@ -1515,12 +1516,11 @@ def _q_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     'unique' images — so a ledger leak, a self-read, or an
     attempt-partition slip changes the accept set and breaks the
     hash."""
-    import tempfile
-
     from gcp_etl_pipeline_spark.operators.dedup import phash_incremental
+    from gcp_etl_pipeline_spark.session import scratch_dir
 
     media = phash_ledger_corpus(spark)
-    store = tempfile.mkdtemp(prefix="graft_phledger_") + "/bands"
+    store = scratch_dir("phledger") + "/bands"
     acc1 = phash_incremental(
         media.where("media_id % 2 = 0"), store, attempt_id="i1"
     ).localCheckpoint(eager=True)
@@ -1844,36 +1844,11 @@ def html_intake_stream_src(spark: SparkSession, sf_dir: str) -> str:
     pure function of the corpus, so the twin's repeated bench passes
     re-run the STREAMING LIFECYCLE (readStream -> foreachBatch chain ->
     ledger) against one fixed source instead of re-materializing two
-    coalesce(1) splits per pass. Same ``_session_cached_path``
-    discipline as every cached fixture (one implementation, not a
-    copy)."""
-    import glob as _glob
-    import os
-    import re as _re
-    import shutil
-
-    tag = "htmlsrc_" + _re.sub(r"\W+", "_", sf_dir).strip("_")
-
-    def _build(root: str) -> str:
-        src = root + "/in"
-        os.makedirs(src)
-        html = html_intake_corpus(spark, sf_dir)
-        t = html.agg(F.floor(F.max("doc_id") / 2)).collect()[0][0]
-        for i, pred in enumerate((f"doc_id <= {t}", f"doc_id > {t}")):
-            tmp = f"{root}/tmp{i}"
-            html.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = sorted(_glob.glob(f"{tmp}/part-*.parquet"))[0]
-            dst = f"{src}/b{i}.parquet"
-            shutil.copy(part, dst)
-            os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
-        return src
-
-    def _validate(path: str) -> str:
-        if sorted(os.listdir(path)) != ["b0.parquet", "b1.parquet"]:
-            raise RuntimeError("stream source files missing")
-        return path
-
-    return _session_cached_path(spark, tag, _build, _validate)
+    coalesce(1) splits per pass."""
+    return _two_file_stream_src(
+        spark, "htmlsrc", sf_dir,
+        lambda: _key_halves(html_intake_corpus(spark, sf_dir), "doc_id"),
+    )
 
 
 _HTML_SQL = " || ".join(
@@ -3727,18 +3702,10 @@ def frontier_stream_src(spark: SparkSession, sf_dir: str) -> str:
     mtime-ordered parquet files (the html_intake_stream_src
     discipline — id-ordered batches are what make the min-key ledger
     rule converge to the batch chain's global min)."""
-    import glob as _glob
-    import os
-    import re as _re
-    import shutil
 
-    tag = "frontsrc_" + _re.sub(r"\W+", "_", sf_dir).strip("_")
-
-    def _build(root: str) -> str:
-        src = root + "/in"
-        os.makedirs(src)
+    def halves() -> list[DataFrame]:
         # plain read, NOT _scan (the dataset_split carve-out, ADVICE
-        # r13): the builder lands each half via coalesce(1) — one task
+        # r13): the stager lands each half via coalesce(1) — one task
         # regardless — so a spread exchange buys nothing and breaks the
         # key-ordered file layout this docstring promises
         orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
@@ -3746,24 +3713,9 @@ def frontier_stream_src(spark: SparkSession, sf_dir: str) -> str:
             "o_orderkey",
             F.expr(_FRONTIER_URL.format(V="STRING")).alias("raw_url"),
         )
-        t = raw.agg(F.floor(F.max("o_orderkey") / 2)).collect()[0][0]
-        for i, pred in enumerate(
-            (f"o_orderkey <= {t}", f"o_orderkey > {t}")
-        ):
-            tmp = f"{root}/tmp{i}"
-            raw.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = sorted(_glob.glob(f"{tmp}/part-*.parquet"))[0]
-            dst = f"{src}/b{i}.parquet"
-            shutil.copy(part, dst)
-            os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
-        return src
+        return _key_halves(raw, "o_orderkey")
 
-    def _validate(path: str) -> str:
-        if sorted(os.listdir(path)) != ["b0.parquet", "b1.parquet"]:
-            raise RuntimeError("frontier stream source files missing")
-        return path
-
-    return _session_cached_path(spark, tag, _build, _validate)
+    return _two_file_stream_src(spark, "frontsrc", sf_dir, halves)
 
 
 # ----------------- HTTP response-envelope parsing (fetch-store intake)
@@ -4877,35 +4829,10 @@ def warcgz_stream_src(spark: SparkSession, sf_dir: str) -> str:
     blob_id-ordered, mtime-ordered parquet files — compressed crawl
     chunks landing in object storage one at a time. Mirrors
     ``warc_stream_src``."""
-    import glob as _glob
-    import os
-    import re as _re
-    import shutil
-
-    tag = "warcgzsrc_" + _re.sub(r"\W+", "_", sf_dir).strip("_")
-
-    def _build(root: str) -> str:
-        src = root + "/in"
-        os.makedirs(src)
-        blobs = _warcgz_blobs(spark, sf_dir).localCheckpoint(eager=True)
-        t = blobs.agg(F.floor(F.max("blob_id") / 2)).collect()[0][0]
-        for i, pred in enumerate((f"blob_id <= {t}", f"blob_id > {t}")):
-            tmp = f"{root}/tmp{i}"
-            blobs.where(pred).coalesce(1).write.mode("overwrite").parquet(
-                tmp
-            )
-            part = sorted(_glob.glob(f"{tmp}/part-*.parquet"))[0]
-            dst = f"{src}/b{i}.parquet"
-            shutil.copy(part, dst)
-            os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
-        return src
-
-    def _validate(path: str) -> str:
-        if sorted(os.listdir(path)) != ["b0.parquet", "b1.parquet"]:
-            raise RuntimeError("warcgz stream source files missing")
-        return path
-
-    return _session_cached_path(spark, tag, _build, _validate)
+    return _two_file_stream_src(
+        spark, "warcgzsrc", sf_dir,
+        lambda: _key_halves(_warcgz_blobs(spark, sf_dir), "blob_id"),
+    )
 
 
 # ----------------- PDF text extraction (the application/pdf branch)
@@ -5323,40 +5250,11 @@ def warc_stream_src(spark: SparkSession, sf_dir: str) -> str:
     """Session-cached SOURCE DIRECTORY for the streaming fetch-store
     twin: the WARC blob fixture split into two blob_id-ordered,
     mtime-ordered parquet files — the shape of a crawl store landing
-    in object storage one chunk at a time. Same ``_session_cached_path``
-    discipline as every cached fixture."""
-    import glob as _glob
-    import os
-    import re as _re
-    import shutil
-
-    tag = "warcsrc_" + _re.sub(r"\W+", "_", sf_dir).strip("_")
-
-    def _build(root: str) -> str:
-        src = root + "/in"
-        os.makedirs(src)
-        # pin once: the median collect + the two filtered writes below
-        # would otherwise each recompute the full scan->concat->groupBy
-        # fixture (three Spark jobs on every cold cache)
-        blobs = _warc_blobs(spark, sf_dir).localCheckpoint(eager=True)
-        t = blobs.agg(F.floor(F.max("blob_id") / 2)).collect()[0][0]
-        for i, pred in enumerate((f"blob_id <= {t}", f"blob_id > {t}")):
-            tmp = f"{root}/tmp{i}"
-            blobs.where(pred).coalesce(1).write.mode("overwrite").parquet(
-                tmp
-            )
-            part = sorted(_glob.glob(f"{tmp}/part-*.parquet"))[0]
-            dst = f"{src}/b{i}.parquet"
-            shutil.copy(part, dst)
-            os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
-        return src
-
-    def _validate(path: str) -> str:
-        if sorted(os.listdir(path)) != ["b0.parquet", "b1.parquet"]:
-            raise RuntimeError("warc stream source files missing")
-        return path
-
-    return _session_cached_path(spark, tag, _build, _validate)
+    in object storage one chunk at a time."""
+    return _two_file_stream_src(
+        spark, "warcsrc", sf_dir,
+        lambda: _key_halves(_warc_blobs(spark, sf_dir), "blob_id"),
+    )
 
 
 # ------------ robots.txt PARSING -> rule table -> verdicts (end to end)
@@ -5772,12 +5670,12 @@ def feed_stream_src(spark: SparkSession, sf_dir: str) -> str:
     """Session-cached SOURCE DIRECTORY for the streaming feed twin:
     the per-host feed documents split into two host_id-ordered,
     mtime-ordered parquet files."""
-    import re as _re
-
-    tag = "feedsrc_" + _re.sub(r"\W+", "_", sf_dir).strip("_")
     return _two_file_stream_src(
-        spark, tag, lambda: _feed_docs(spark, sf_dir), "host_id"
+        spark, "feedsrc", sf_dir,
+        lambda: _key_halves(_feed_docs(spark, sf_dir), "host_id"),
     )
+
+
 def _feed_disc_ctes() -> str:
     """The feed-discovery oracle chain ending in `fd` (host_id,
     entry_no, kind, url, published_s) — factored so the recrawl
@@ -6086,16 +5984,8 @@ def recrawl_stream_src(spark: SparkSession, sf_dir: str) -> str:
     parquet files at the epoch midpoint (b0: us <= mid, b1: us > mid —
     a strict time split, so the state merge's boundary comparison sees
     true consecutive fetches and converges to the batch chain)."""
-    import glob as _glob
-    import os
-    import re as _re
-    import shutil
 
-    tag = "recrawlsrc_" + _re.sub(r"\W+", "_", sf_dir).strip("_")
-
-    def _build(root: str) -> str:
-        src = root + "/in"
-        os.makedirs(src)
+    def halves() -> list[DataFrame]:
         # plain read, NOT _scan: single-task coalesce(1) landing — see
         # frontier_stream_src's carve-out comment (ADVICE r13)
         ev = read_parquet(spark, f"{sf_dir}/events.parquet")
@@ -6116,23 +6006,12 @@ def recrawl_stream_src(spark: SparkSession, sf_dir: str) -> str:
             F.min("__us").alias("lo"), F.max("__us").alias("hi")
         ).collect()[0]
         mid = (lohi["lo"] + lohi["hi"]) // 2
-        for i, pred in enumerate((f"__us <= {mid}", f"__us > {mid}")):
-            tmp = f"{root}/tmp{i}"
-            fetches.where(pred).drop("__us").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = sorted(_glob.glob(f"{tmp}/part-*.parquet"))[0]
-            dst = f"{src}/b{i}.parquet"
-            shutil.copy(part, dst)
-            os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
-        return src
+        return [
+            fetches.where(pred).drop("__us")
+            for pred in (f"__us <= {mid}", f"__us > {mid}")
+        ]
 
-    def _validate(path: str) -> str:
-        if sorted(os.listdir(path)) != ["b0.parquet", "b1.parquet"]:
-            raise RuntimeError("recrawl stream source files missing")
-        return path
-
-    return _session_cached_path(spark, tag, _build, _validate)
+    return _two_file_stream_src(spark, "recrawlsrc", sf_dir, halves)
 
 
 # ------------- sentence segmentation + cross-document sentence dedup
@@ -7261,61 +7140,50 @@ def sitemap_discovery_stage(
 
 
 def _two_file_stream_src(
-    spark: SparkSession,
-    tag: str,
-    build_frame,
-    split_col: str,
+    spark: SparkSession, name: str, sf_dir: str, build_halves
 ) -> str:
-    """Shared builder for the two-file streaming source fixtures: a
-    frame split at its ``split_col`` midpoint into two ordered,
-    mtime-ordered parquet files (the object-storage
-    one-chunk-at-a-time arrival shape). One definition for every
-    per-key-split twin (r13 review: three near-identical builders)."""
-    import glob as _glob
+    """Shared builder for the two-file streaming source fixtures: the two
+    ordered frames ``build_halves()`` returns, landed by
+    `core.stage_ordered_files` as mtime-ordered one-file micro-batches
+    (the object-storage one-chunk-at-a-time arrival shape), cached per
+    (session, ``name``, ``sf_dir``) by ``_session_cached_path``."""
     import os
-    import shutil
+    import re as _re
 
-    def _build(root: str) -> str:
-        src = root + "/in"
-        os.makedirs(src)
-        frame = build_frame().localCheckpoint(eager=True)
-        t = frame.agg(F.floor(F.max(split_col) / 2)).collect()[0][0]
-        preds = (f"{split_col} <= {t}", f"{split_col} > {t}")
-        for i, pred in enumerate(preds):
-            tmp = f"{root}/tmp{i}"
-            frame.where(pred).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = sorted(_glob.glob(f"{tmp}/part-*.parquet"))[0]
-            dst = f"{src}/b{i}.parquet"
-            shutil.copy(part, dst)
-            os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
-        return src
+    from gcp_etl_pipeline_spark.streaming.core import stage_ordered_files
 
     def _validate(path: str) -> str:
-        import os
-
         if sorted(os.listdir(path)) != ["b0.parquet", "b1.parquet"]:
-            raise RuntimeError(f"{tag}: stream source files missing")
+            raise RuntimeError(f"{name}: stream source files missing")
         return path
 
-    return _session_cached_path(spark, tag, _build, _validate)
+    tag = f"{name}_" + _re.sub(r"\W+", "_", sf_dir).strip("_")
+    return _session_cached_path(
+        spark, tag, lambda root: stage_ordered_files(root, build_halves()),
+        _validate,
+    )
+
+
+def _key_halves(frame: DataFrame, key: str) -> list[DataFrame]:
+    """``frame`` split at half its max ``key``: ``key <= t`` then
+    ``key > t`` (pinned once: the split point and both halves read it)."""
+    frame = frame.localCheckpoint(eager=True)
+    t = frame.agg(F.floor(F.max(key) / 2)).collect()[0][0]
+    return [frame.where(f"{key} <= {t}"), frame.where(f"{key} > {t}")]
 
 
 def sitemap_disc_stream_src(spark: SparkSession, sf_dir: str) -> str:
     """Session-cached SOURCE DIRECTORY for the streaming discovery
     twin: per-host discovery bundles (robots.txt + that host's sitemap
     document at its canonical URL)."""
-    import re as _re
-
-    tag = "sitemapdiscsrc_" + _re.sub(r"\W+", "_", sf_dir).strip("_")
     return _two_file_stream_src(
-        spark,
-        tag,
-        lambda: _disc_robots(spark, sf_dir).join(
-            _disc_sitemaps(spark, sf_dir), "host_id", "left"
+        spark, "sitemapdiscsrc", sf_dir,
+        lambda: _key_halves(
+            _disc_robots(spark, sf_dir).join(
+                _disc_sitemaps(spark, sf_dir), "host_id", "left"
+            ),
+            "host_id",
         ),
-        "host_id",
     )
 
 

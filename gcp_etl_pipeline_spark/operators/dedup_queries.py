@@ -13,6 +13,7 @@ from gcp_etl_pipeline_spark.operators.parallel import spread_scan
 from gcp_etl_pipeline_spark.queries_relational import ensure_views
 from gcp_etl_pipeline_spark.registry import register
 from gcp_etl_pipeline_spark.sources.files import read_parquet
+from gcp_etl_pipeline_spark.session import scratch_dir
 
 # Shared DuckDB CTEs: tokens and 3-gram shingles over documents
 def _tok_cte(cols: str = "doc_id, text") -> str:
@@ -205,9 +206,7 @@ def _q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes both increments' accept sets from scratch, so a
     leaked fingerprint (store append missing a row) or an over-drop
     (anti-join matching too much) breaks the hash."""
-    import tempfile
-
-    store = tempfile.mkdtemp(prefix="graft_fpledger_") + "/fp"
+    store = scratch_dir("fpledger") + "/fp"
     docs = _docs(spark, sf_dir)
     acc1 = dedup.dedup_incremental(docs.where("doc_id % 2 = 0"), store)
     acc2 = dedup.dedup_incremental(docs.where("doc_id % 2 = 1"), store)
@@ -251,9 +250,7 @@ def _q_dedup_ledger_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes increment 3's accept set and breaks the hash. Accepted
     frames are pinned before compaction: their lazy plans read the
     pre-compaction file lists, which the staged-swap rewrite deletes."""
-    import tempfile
-
-    store = tempfile.mkdtemp(prefix="graft_fpcompact_") + "/fp"
+    store = scratch_dir("fpcompact") + "/fp"
     docs = _docs(spark, sf_dir)
     acc1 = dedup.dedup_incremental(
         docs.where("doc_id % 3 = 0"), store, attempt_id="i1"
@@ -394,9 +391,7 @@ def _q_excise_ledger_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a column — changes increment 3's excisions and breaks the hash.
     Results are checkpointed inside the operator's ledger guard, so
     their lazy plans survive the staged-swap file rewrite."""
-    import tempfile
-
-    store = tempfile.mkdtemp(prefix="graft_excompact_") + "/chunk_fps"
+    store = scratch_dir("excompact") + "/chunk_fps"
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     acc1 = dedup.substring_excise_incremental(
         docs.where("doc_id % 3 = 0"), store, attempt_id="i1"
@@ -516,9 +511,7 @@ def _q_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger, batch 2 (odd) dedups against itself and then the ledger —
     accepted doc_ids of both batches, batch-tagged. The oracle recomputes
     both accept sets from the signature arithmetic."""
-    import tempfile
-
-    store = tempfile.mkdtemp(prefix="graft_ndledger_") + "/bands"
+    store = scratch_dir("ndledger") + "/bands"
     docs = _docs(spark, sf_dir)
     acc1 = dedup.neardup_incremental(
         docs.where("doc_id % 2 = 0"), store,
@@ -1555,9 +1548,7 @@ def _q_neardup_ledger_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash. The accepted frames are compaction-safe by construction
     (they anti-join an eagerly checkpointed drop set, never the ledger
     files)."""
-    import tempfile
-
-    store = tempfile.mkdtemp(prefix="graft_ndcompact_") + "/bands"
+    store = scratch_dir("ndcompact") + "/bands"
     docs = _docs(spark, sf_dir)
 
     def inc(pred: str, attempt: str) -> DataFrame:

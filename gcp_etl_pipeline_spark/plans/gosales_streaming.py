@@ -36,11 +36,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gcp_etl_pipeline_spark.operators.incremental import insert_new_only
-from gcp_etl_pipeline_spark.operators.keys import surrogate_keys
 from gcp_etl_pipeline_spark.operators.normalize import norm_key
 from gcp_etl_pipeline_spark.plans import gosales
-from gcp_etl_pipeline_spark.sinks.writers import read_target
+from gcp_etl_pipeline_spark.sinks.writers import insert_new_rows, read_target
+from gcp_etl_pipeline_spark.streaming.core import drain, file_stream
 
 RAW_SCHEMA = (
     "retailer_code STRING, product_number STRING, order_method_code STRING, "
@@ -62,16 +61,12 @@ def stage_raw_stream(
 
 def _maintain_dim(
     cand: DataFrame, path: str, key_col: str, nat_keys: list[str]
-) -> None:
-    """Insert-new-only + surrogate continuation against the written dim:
-    anti-join the candidates, key ONLY the new rows from max(target)+1."""
-    spark = cand.sparkSession
-    target = read_target(spark, path)
-    new = insert_new_only(cand, target, nat_keys, normalize=False)
-    keyed = surrogate_keys(new, target, key_col, order_by=nat_keys)
-    keyed.select(key_col, *[c for c in cand.columns]).write.mode(
-        "append"
-    ).parquet(path)
+) -> int:
+    """Insert-new-only + surrogate continuation against the written dim
+    (`insert_new_rows` with ``key_col``): anti-join the candidates, key
+    ONLY the new rows from max(target)+1, append nothing when no row is
+    new. Returns rows written."""
+    return insert_new_rows(cand, path, nat_keys, normalize=False, key_col=key_col)
 
 
 def _process_batch(warehouse: str, retailers_static, products_static):
@@ -172,20 +167,11 @@ def run_streaming_gosales(
     same query with a processing-time trigger and it never stops)."""
     retailers = gosales.go_retailers(spark, sf_dir)
     products = gosales.go_products(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(raw_dir)
+    drain(
+        file_stream(spark, RAW_SCHEMA, raw_dir),
+        f"{warehouse}/_ckpt",  # stable: a re-drain resumes, processes nothing old
+        _process_batch(warehouse, retailers, products),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            _process_batch(warehouse, retailers, products)
-        )
-        .option("checkpointLocation", f"{warehouse}/_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def overview_from_warehouse(spark: SparkSession, sf_dir: str, warehouse: str) -> DataFrame:

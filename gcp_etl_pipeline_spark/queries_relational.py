@@ -32,6 +32,7 @@ from gcp_etl_pipeline_spark.functions.deterministic import (
     micro_sum_expr,
 )
 from gcp_etl_pipeline_spark.registry import register
+from gcp_etl_pipeline_spark.session import scratch_dir
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -526,8 +527,6 @@ def _q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Beam and reads it back in Spark with all-string inference, then re-casts
 # in SQL — the full shape reproduced here; oracle reads the parquet truth)
 def _q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from gcp_etl_pipeline_spark.sinks.writers import write_csv
     from gcp_etl_pipeline_spark.sources.files import read_csv
 
@@ -535,7 +534,7 @@ def _q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = spark.sql(
         "SELECT n_nationkey, n_name, n_regionkey FROM nation"
     )
-    path = tempfile.mkdtemp(prefix="graft_csv_") + "/nation"
+    path = scratch_dir("csv") + "/nation"
     write_csv(src, path)
     back = read_csv(spark, path)  # header, all-string columns (reference S4)
     return back.selectExpr(
@@ -557,14 +556,12 @@ register(
 # files, prove content identity against the parquet truth and that the
 # file count actually dropped.
 def _q_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from gcp_etl_pipeline_spark.operators.layout import compact_small_files
 
     ensure_views(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="graft_compact_") + "/orders"
+    path = scratch_dir("compact") + "/orders"
     spark.table("orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     ).repartition(64).write.parquet(path)
@@ -589,8 +586,6 @@ register(
 # pushdown/pruning behavior as Parquet); types including TIMESTAMP
 # survive the roundtrip unchanged, so the oracle reads the parquet truth.
 def _q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from gcp_etl_pipeline_spark.sinks.writers import write_orc
@@ -601,7 +596,7 @@ def _q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         """SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderdate
            FROM orders WHERE o_orderdate >= TIMESTAMP '1999-01-01 00:00:00'"""
     )
-    path = tempfile.mkdtemp(prefix="graft_orc_") + "/orders"
+    path = scratch_dir("orc") + "/orders"
     write_orc(src, path)
     back = read_orc(spark, path)
     return back.groupBy("o_orderstatus").agg(
@@ -629,8 +624,6 @@ register(
 # with full types, read back with an EXPLICIT schema (inference costs an
 # extra full pass at 100 TB — the helper's documented contract).
 def _q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -641,7 +634,7 @@ def _q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = spark.sql(
         "SELECT c_custkey, c_name, c_nationkey, c_acctbal FROM customer"
     )
-    path = tempfile.mkdtemp(prefix="graft_jsonl_") + "/customer"
+    path = scratch_dir("jsonl") + "/customer"
     write_json_lines(src, path)
     schema = T.StructType(
         [
@@ -734,13 +727,11 @@ shared_sql(
 # embedded Derby, read it back through the contract-driven JDBC source
 # (pushed projection + typed casts). Oracle reads the parquet truth.
 def _q_jdbc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from gcp_etl_pipeline_spark.sources.jdbc import read_jdbc
     from gcp_etl_pipeline_spark.spec import ColumnSpec, TableSpec
 
     ensure_views(spark, sf_dir)
-    url = f"jdbc:derby:{tempfile.mkdtemp(prefix='graft_jdbc_')}/db;create=true"
+    url = f"jdbc:derby:{scratch_dir('jdbc')}/db;create=true"
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
     (
         spark.sql(
@@ -817,14 +808,12 @@ shared_sql(
 # directory is touched). Oracle computes the same filter on the parquet
 # truth.
 def _q_partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from gcp_etl_pipeline_spark.sinks.writers import write_parquet
 
     ensure_views(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="graft_part_") + "/orders_by_year"
+    path = scratch_dir("part") + "/orders_by_year"
     orders = spark.table("orders").withColumn(
         "order_year", F.year("o_orderdate").cast("int")
     )
@@ -858,14 +847,12 @@ register(
 # filtered/transformed slice; untouched partitions must survive. Oracle
 # recomputes the expected post-overwrite state from the parquet truth.
 def _q_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from gcp_etl_pipeline_spark.sinks.writers import write_parquet
 
     ensure_views(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="graft_dynov_") + "/orders_dyn"
+    path = scratch_dir("dynov") + "/orders_dyn"
     orders = spark.table("orders").select(
         "o_orderkey",
         "o_orderstatus",
@@ -1708,10 +1695,8 @@ register(
 # the lakehouse "old files keep working" contract. Oracle recomputes the
 # union-with-nulls from the base table.
 def _q_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     ensure_views(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="graft_sev_") + "/orders_evo"
+    path = scratch_dir("sev") + "/orders_evo"
     orders = spark.table("orders")
     orders.where("o_orderkey % 2 = 0").select(
         "o_orderkey", "o_orderstatus"
@@ -1791,17 +1776,13 @@ def _q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join key), then joined WITHOUT an exchange (co-located sort-merge;
     plan-asserted in tests/test_bucketing.py) — the 100-TB answer when
     neither side broadcasts and per-query shuffles would dominate."""
-    import tempfile
-
+    from gcp_etl_pipeline_spark.operators.curation_queries import session_root
     from gcp_etl_pipeline_spark.sinks.writers import write_bucketed_table
     from gcp_etl_pipeline_spark.sources.files import read_parquet
 
     # session-stable root + overwrite tables: repeat invocations (bench
     # warm-up + timed passes) rewrite in place instead of colliding
-    root = (
-        f"{tempfile.gettempdir()}/graft_buck_"
-        f"{spark.sparkContext.applicationId}"
-    )
+    root = session_root(spark, "buck")
     li = read_parquet(spark, f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_linenumber"
     )
@@ -1849,13 +1830,11 @@ def _q_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the row index, so the oracle recomputes everything from range()
     without reading a file."""
     import os
-    import tempfile
+
+    from gcp_etl_pipeline_spark.operators.curation_queries import session_root
 
     n = 5000
-    root = (
-        f"{tempfile.gettempdir()}/graft_csvcorrupt_"
-        f"{spark.sparkContext.applicationId}"
-    )
+    root = session_root(spark, "csvcorrupt")
     path = f"{root}/feed.csv"
     if not os.path.exists(path):  # deterministic content: write-once is safe
         os.makedirs(root, exist_ok=True)
@@ -2117,13 +2096,11 @@ def _q_dpp_fact_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     every partition). The plan shape is pinned in
     tests/test_physical_plans.py; this query grades the ANSWER."""
     import os
-    import tempfile
+
+    from gcp_etl_pipeline_spark.operators.curation_queries import session_root
 
     ensure_views(spark, sf_dir)
-    root = (
-        f"{tempfile.gettempdir()}/graft_dpp_"
-        f"{spark.sparkContext.applicationId}"
-    )
+    root = session_root(spark, "dpp")
     fact_path = f"{root}/fact"
     if not os.path.exists(fact_path):
         (
@@ -2206,13 +2183,11 @@ def _q_modified_after(spark: SparkSession, sf_dir: str) -> DataFrame:
     controlled mtimes; ``modifiedAfter`` must admit exactly the newer
     one. Closed-form oracle from the staged split."""
     import os
-    import tempfile
+
+    from gcp_etl_pipeline_spark.operators.curation_queries import session_root
 
     ensure_views(spark, sf_dir)
-    root = (
-        f"{tempfile.gettempdir()}/graft_mtime_"
-        f"{spark.sparkContext.applicationId}"
-    )
+    root = session_root(spark, "mtime")
     if not os.path.exists(f"{root}/_done"):
         nat = spark.table("nation").select("n_nationkey", "n_name")
         for tag, pred, ts in (
@@ -2262,13 +2237,11 @@ def _q_ignore_corrupt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import os
     import shutil as _shutil
-    import tempfile
+
+    from gcp_etl_pipeline_spark.operators.curation_queries import session_root
 
     ensure_views(spark, sf_dir)
-    root = (
-        f"{tempfile.gettempdir()}/graft_corruptf_"
-        f"{spark.sparkContext.applicationId}"
-    )
+    root = session_root(spark, "corruptf")
     if not os.path.exists(f"{root}/_done"):
         nat = spark.table("nation").select("n_nationkey", "n_name")
         os.makedirs(f"{root}/in", exist_ok=True)

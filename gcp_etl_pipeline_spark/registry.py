@@ -12,6 +12,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gcp_etl_pipeline_spark.session import scratch_dir
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
@@ -113,11 +115,9 @@ def _load_all_inner() -> None:
     # drain through foreachBatch dims+fact maintenance, roll up from the
     # written tables — must match the BATCH overview oracle exactly
     def _q_stream_gosales(spark, sf_dir):
-        import tempfile
-
         from gcp_etl_pipeline_spark.plans import gosales_streaming as gs
 
-        root = tempfile.mkdtemp(prefix="graft_gsstream_")
+        root = scratch_dir("gsstream")
         gs.stage_raw_stream(spark, sf_dir, f"{root}/raw", n_files=4)
         gs.run_streaming_gosales(spark, sf_dir, f"{root}/raw", f"{root}/wh")
         return gs.overview_from_warehouse(spark, sf_dir, f"{root}/wh")
@@ -131,18 +131,14 @@ def _load_all_inner() -> None:
     # the reference's `{project}.{env}_curated.*` dataset addressing
     # (`tl_sm_gosales_overview_01.sql:22-25`) as catalog namespaces
     def _q_gosales_catalog(spark, sf_dir):
-        import tempfile
-
+        from gcp_etl_pipeline_spark.operators.curation_queries import session_root
         from gcp_etl_pipeline_spark.sinks.catalog import run_gosales_catalog
 
         # session-stable root: ensure_namespaces is first-call-wins on the
         # database LOCATION, so repeat runs (bench warm-up + timed passes)
         # must target the same root or they'd silently write under the
         # first call's abandoned tmpdir
-        root = (
-            f"{tempfile.gettempdir()}/graft_cat_"
-            f"{spark.sparkContext.applicationId}"
-        )
+        root = session_root(spark, "cat")
         return run_gosales_catalog(spark, sf_dir, root)
 
     register(
@@ -317,15 +313,13 @@ def _load_all_inner() -> None:
     # parquet truth, so a torn write, wrong pointer, or upsert leak
     # breaks the hash
     def _q_time_travel(spark, sf_dir):
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from gcp_etl_pipeline_spark.queries_relational import ensure_views
         from gcp_etl_pipeline_spark.sinks.versioned import VersionedTable
 
         ensure_views(spark, sf_dir)
-        t = VersionedTable(tempfile.mkdtemp(prefix="graft_vt_") + "/orders")
+        t = VersionedTable(scratch_dir("vt") + "/orders")
         orders = spark.table("orders").select(
             F.col("o_orderkey").alias("k"), F.col("o_orderstatus").alias("s")
         )
@@ -353,15 +347,13 @@ def _load_all_inner() -> None:
     # v1→v2 scenario, diffed — inserts are the appended key range,
     # updates the overwritten one, deletes empty (and must stay absent)
     def _q_versioned_changes(spark, sf_dir):
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from gcp_etl_pipeline_spark.queries_relational import ensure_views
         from gcp_etl_pipeline_spark.sinks.versioned import VersionedTable
 
         ensure_views(spark, sf_dir)
-        t = VersionedTable(tempfile.mkdtemp(prefix="graft_vcdf_") + "/orders")
+        t = VersionedTable(scratch_dir("vcdf") + "/orders")
         orders = spark.table("orders").select(
             F.col("o_orderkey").alias("k"), F.col("o_orderstatus").alias("s")
         )
@@ -402,15 +394,13 @@ def _load_all_inner() -> None:
     # verify BOTH the post-delete state and that pre-delete time travel
     # still works (erasure = delete + vacuum, per the operator contract)
     def _q_versioned_delete(spark, sf_dir):
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from gcp_etl_pipeline_spark.queries_relational import ensure_views
         from gcp_etl_pipeline_spark.sinks.versioned import VersionedTable
 
         ensure_views(spark, sf_dir)
-        t = VersionedTable(tempfile.mkdtemp(prefix="graft_vdel_") + "/orders")
+        t = VersionedTable(scratch_dir("vdel") + "/orders")
         orders = spark.table("orders").select(
             F.col("o_orderkey").alias("k"), F.col("o_orderstatus").alias("s")
         )
@@ -447,8 +437,6 @@ def _load_all_inner() -> None:
     # MATCHED UPDATE / NOT MATCHED INSERT path actually runs — the oracle
     # recomputes the merged state from the parquet truth
     def _q_merge_upsert(spark, sf_dir):
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from gcp_etl_pipeline_spark.operators.upsert import read_table, upsert
@@ -458,7 +446,7 @@ def _load_all_inner() -> None:
         orders = spark.table("orders").select(
             F.col("o_orderkey").alias("k"), F.col("o_orderstatus").alias("s")
         )
-        path = tempfile.mkdtemp(prefix="graft_merge_") + "/t"
+        path = scratch_dir("merge") + "/t"
         upsert(orders.where("k % 3 < 2"), path, keys=["k"])
         upsert(
             orders.where("k % 2 = 0").withColumn("s", F.lit("M")),
@@ -490,15 +478,13 @@ def _load_all_inner() -> None:
     # analogue): every commit's row count and latest-pointer flag after
     # a write→upsert→delete sequence, recomputed closed-form in SQL
     def _q_versioned_history(spark, sf_dir):
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from gcp_etl_pipeline_spark.queries_relational import ensure_views
         from gcp_etl_pipeline_spark.sinks.versioned import VersionedTable
 
         ensure_views(spark, sf_dir)
-        t = VersionedTable(tempfile.mkdtemp(prefix="graft_vh_") + "/orders")
+        t = VersionedTable(scratch_dir("vh") + "/orders")
         orders = spark.table("orders").select(
             F.col("o_orderkey").alias("k"), F.col("o_orderstatus").alias("s")
         )
@@ -536,15 +522,13 @@ def _load_all_inner() -> None:
     # source rows carry values, and v1 time travel still shows the old
     # schema's data. Oracle recomputes both versions' aggregates.
     def _q_versioned_evolve(spark, sf_dir):
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from gcp_etl_pipeline_spark.queries_relational import ensure_views
         from gcp_etl_pipeline_spark.sinks.versioned import VersionedTable
 
         ensure_views(spark, sf_dir)
-        t = VersionedTable(tempfile.mkdtemp(prefix="graft_vse_") + "/orders")
+        t = VersionedTable(scratch_dir("vse") + "/orders")
         orders = spark.table("orders").select(
             F.col("o_orderkey").alias("k"), F.col("o_orderstatus").alias("s")
         )
@@ -572,15 +556,13 @@ def _load_all_inner() -> None:
     # aggregates; a compaction that loses/duplicates rows breaks v3.
     def _q_versioned_optimize(spark, sf_dir):
         import glob as _glob
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from gcp_etl_pipeline_spark.queries_relational import ensure_views
         from gcp_etl_pipeline_spark.sinks.versioned import VersionedTable
 
         ensure_views(spark, sf_dir)
-        path = tempfile.mkdtemp(prefix="graft_vopt_") + "/orders"
+        path = scratch_dir("vopt") + "/orders"
         t = VersionedTable(path)
         orders = spark.table("orders").select(
             F.col("o_orderkey").alias("k"), F.col("o_orderstatus").alias("s")

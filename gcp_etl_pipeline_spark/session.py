@@ -17,11 +17,25 @@ which sets only `spark.sql.sources.partitionOverwriteMode=dynamic`.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
 _APP_NAME = "gcp_etl_pipeline_spark"
+
+
+def scratch_dir(tag: str) -> str:
+    """A fresh ``graft_<tag>_`` directory under the temp root, removed at
+    interpreter exit. The one way engine and catalog code get scratch
+    space (stream sources, checkpoints, ledgers, staged fixtures).
+    Removal cannot happen when a query returns: the DataFrame it returns
+    is a lazy read of its scratch files."""
+    root = tempfile.mkdtemp(prefix=f"graft_{tag}_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 def driver_memory() -> str:

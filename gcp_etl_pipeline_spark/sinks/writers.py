@@ -108,22 +108,27 @@ def write_bucketed_table(
     w.format("parquet").saveAsTable(name)
 
 
-def read_target(spark: SparkSession, path: str) -> DataFrame | None:
-    """Current state of a path-addressed target table; None if absent
-    (first run — the reference's coalesce(MAX(key),0) empty case). Absent
-    means the path is missing or holds only entries Spark hides (``_``/
-    ``.`` prefix: an uncommitted first write leaves just ``_temporary``),
-    checked through the Hadoop FileSystem API so gs:// works too. Any
-    error reading a table that exists propagates."""
+def is_absent(spark: SparkSession, path: str) -> bool:
+    """True when ``path`` is missing or holds only entries Spark hides
+    (``_``/``.`` prefix: an uncommitted first write leaves just
+    ``_temporary``), checked through the Hadoop FileSystem API so gs://
+    works too."""
     p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
     if not fs.exists(p):
-        return None
+        return True
     entries = fs.listStatusIterator(p)
     while entries.hasNext():
         if not entries.next().getPath().getName().startswith(("_", ".")):
-            return spark.read.parquet(path)
-    return None
+            return False
+    return True
+
+
+def read_target(spark: SparkSession, path: str) -> DataFrame | None:
+    """Current state of a path-addressed target table; None if absent
+    (`is_absent`: first run — the reference's coalesce(MAX(key),0) empty
+    case). Any error reading a table that exists propagates."""
+    return None if is_absent(spark, path) else spark.read.parquet(path)
 
 
 def insert_new_rows(

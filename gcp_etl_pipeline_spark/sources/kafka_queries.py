@@ -14,18 +14,15 @@ windowed — converges to a batch oracle over raw events.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_etl_pipeline_spark.functions.deterministic import det_sum_bigint_expr
 from gcp_etl_pipeline_spark.queries_relational import ensure_views
 from gcp_etl_pipeline_spark.registry import register
+from gcp_etl_pipeline_spark.session import scratch_dir
 from gcp_etl_pipeline_spark.sources import kafka
+from gcp_etl_pipeline_spark.streaming import core
 
 N_PARTS = 4
 
@@ -83,8 +80,7 @@ register(
 
 
 def _q_stream_kafka(spark: SparkSession, sf_dir: str) -> DataFrame:
-    root = tempfile.mkdtemp(prefix="graft_kafka_")
-    src = f"{root}/records"
+    src = scratch_dir("kafka") + "/records"
     # one staged file per Kafka partition — the real topic layout (a Spark
     # Kafka source maps one task per partition); also bounds the number of
     # availableNow micro-batches to N_PARTS/maxFilesPerTrigger instead of
@@ -109,21 +105,7 @@ def _q_stream_kafka(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"kq_{uuid.uuid4().hex[:10]}"
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # the memory-sink table is materialized; staging files can go
-    out = spark.table(name)
-    if os.environ.get("GRAFT_CLEAN_TMP"):
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    return spark.table(core.drain(counts, mode="complete").name)
 
 
 register(

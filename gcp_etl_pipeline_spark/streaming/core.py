@@ -16,8 +16,18 @@ Reference tie-in: the batch jobs' watermark contract
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import uuid
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
+
+from gcp_etl_pipeline_spark.session import scratch_dir
 
 _EVENTS_COLS = (
     "event_id BIGINT, {ts}, user_id BIGINT, event_type STRING, "
@@ -25,41 +35,82 @@ _EVENTS_COLS = (
 )
 
 
+def file_stream(
+    spark: SparkSession, schema: str | StructType, path: str
+) -> DataFrame:
+    """Parquet file stream over the DIRECTORY ``path`` (Spark's file source
+    rejects bare file paths), one file per micro-batch."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
+
+
+def drain(
+    stream_df: DataFrame,
+    checkpoint: str | None = None,
+    process: Callable[[DataFrame, int], None] | None = None,
+    mode: str = "append",
+) -> StreamingQuery:
+    """Run ``stream_df`` over everything available now and return the
+    terminated query. With ``process`` every micro-batch goes to
+    ``foreachBatch(process)``; without it rows go to the memory sink under
+    a fresh query name, read back as ``spark.table(q.name)``.
+    ``q.recentProgress`` keeps the per-batch durations. ``checkpoint``
+    defaults to a fresh scratch dir; pass a stable one to make a re-drain
+    resume where the last one stopped."""
+    w = stream_df.writeStream.outputMode(mode)
+    if process is not None:
+        w = w.foreachBatch(process)
+    else:
+        w = w.format("memory").queryName(f"q_{uuid.uuid4().hex[:10]}")
+    q = (
+        w.option("checkpointLocation", checkpoint or scratch_dir("ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+def stage_ordered_files(root: str, frames: list[DataFrame]) -> str:
+    """Land each frame as ONE parquet file ``{root}/in/b{i}.parquet`` with
+    mtimes in list order and return ``{root}/in``: a `file_stream` over it
+    reads frame i as micro-batch i (the file source orders by mtime)."""
+    src = f"{root}/in"
+    os.makedirs(src)
+    for i, frame in enumerate(frames):
+        tmp = f"{root}/tmp{i}"
+        frame.coalesce(1).write.mode("overwrite").parquet(tmp)
+        dst = f"{src}/b{i}.parquet"
+        os.replace(sorted(glob.glob(f"{tmp}/part-*.parquet"))[0], dst)
+        shutil.rmtree(tmp)
+        os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
+    return src
+
+
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream over events parquet. ``path`` must be a DIRECTORY
-    that files land in (Spark's file stream source rejects bare file paths).
+    """File-source stream over the events parquet files landing in the
+    directory ``path``.
 
     The stream schema is built from the Parquet footer's actual timestamp
     unit (`sources.files.timestamp_units` — the same sniffing the batch
     reader uses), so the reader is correct whether the fixture stores
     ``ts`` as INT64 TIMESTAMP(NANOS) (read as raw nanos + distributed
     divide) or µs/ms TIMESTAMP[_NTZ] (read directly as TIMESTAMP; with the
-    engine's UTC session timezone the NTZ wall-clock equals the instant)."""
+    engine's UTC session timezone the NTZ wall-clock equals the instant).
+    A directory with no data file yet has no footer to sniff: it gets the
+    µs/ms layout every current producer writes (an ns-fixture deployment
+    that starts empty should pre-seed one file). An unreadable footer
+    raises."""
+    from gcp_etl_pipeline_spark.sinks.writers import is_absent
     from gcp_etl_pipeline_spark.sources.files import timestamp_units
 
-    try:
-        unit = timestamp_units(path).get("ts")
-    except Exception:  # noqa: BLE001 — landing dir empty or not yet created
-        # no files to sniff: default to the µs/ms TIMESTAMP layout (what
-        # every current producer writes); an ns-fixture deployment that
-        # starts on an empty directory should pre-seed one file or pass
-        # through the batch reader once so the unit is observable
-        unit = None
+    unit = None if is_absent(spark, path) else timestamp_units(path).get("ts")
     if unit == "ns":
         # Spark's vectorized reader rejects TIMESTAMP(NANOS): read raw
         # int64 nanos, convert distributedly (integer div keeps precision)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = (
-            spark.readStream.schema(_EVENTS_COLS.format(ts="ts BIGINT"))
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
+        df = file_stream(spark, _EVENTS_COLS.format(ts="ts BIGINT"), path)
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return (
-        spark.readStream.schema(_EVENTS_COLS.format(ts="ts TIMESTAMP"))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    return file_stream(spark, _EVENTS_COLS.format(ts="ts TIMESTAMP"), path)
 
 
 def tumbling_counts(
@@ -136,13 +187,15 @@ def foreach_batch_versioned(
     table_path: str,
     keys: list[str],
     checkpoint: str,
-):
+) -> StreamingQuery:
     """Stream into a snapshot-versioned table: every non-empty micro-batch
     becomes one immutable snapshot via a keyed upsert (sinks/versioned.py)
     — the streaming history/time-travel pattern Delta's streaming sink
     provides, on plain parquet. Batch id goes into the snapshot note, so
     the table history doubles as a processing ledger; the atomic manifest
-    flip means readers never observe a half-written batch.
+    flip means readers never observe a half-written batch. Drains
+    everything available now (`drain`) and returns the terminated query;
+    ``checkpoint`` is the caller's, so a later call resumes.
 
     Replay idempotency: foreachBatch is at-least-once, so a crash between
     the upsert and the checkpoint commit replays the batch. The keyed
@@ -152,12 +205,7 @@ def foreach_batch_versioned(
     from gcp_etl_pipeline_spark.sinks.versioned import VersionedTable
 
     table = VersionedTable(table_path)
-    return (
-        stream_df.writeStream.foreachBatch(versioned_batch_writer(table, keys))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream_df, checkpoint, versioned_batch_writer(table, keys))
 
 
 def versioned_batch_writer(table, keys: list[str]):
@@ -182,20 +230,17 @@ def foreach_batch_insert_new(
     target_path: str,
     keys: list[str],
     checkpoint: str,
-):
+) -> StreamingQuery:
     """Streaming insert-new-only maintenance: every micro-batch anti-joins
     the current target state and appends only unseen keys — the streaming
     form of the reference's hlp/lkp/dim maintenance (I2). Idempotent per
     key across batches, and a batch that admits no new key writes no
-    file; with Delta in the sink this would be MERGE INTO."""
+    file; with Delta in the sink this would be MERGE INTO. Drains
+    everything available now (`drain`) and returns the terminated query;
+    ``checkpoint`` is the caller's, so a later call resumes."""
     from gcp_etl_pipeline_spark.sinks.writers import insert_new_rows
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         insert_new_rows(batch_df, target_path, keys, normalize=False)
 
-    return (
-        stream_df.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream_df, checkpoint, upsert)

@@ -1,24 +1,27 @@
 """Driver-contract queries that exercise the REAL streaming engine.
 
-Each callable stages the events table into a temp directory, runs a
-Structured Streaming query with an availableNow trigger (full streaming
-machinery: file source, state store, watermark, micro-batches), drains it
-into an in-memory table, and returns that as the result DataFrame. The
-oracles are batch SQL over the same data — streaming results must converge
-to the batch answer once all data is processed, so a DuckDB twin checks
-them exactly.
+Each callable lands its input as files in a scratch directory
+(`session.scratch_dir`): the events table as is, or a frame split into
+mtime-ordered one-file micro-batches (`core.stage_ordered_files`). It then
+runs a Structured Streaming query over those files to completion with
+`core.drain` (full streaming machinery: file source, state store,
+watermark, micro-batches), into the memory sink or through a foreachBatch
+body, and returns the drained rows as the result DataFrame. The oracles
+are batch SQL over the same data — streaming results must converge to the
+batch answer once all data is processed, so a DuckDB twin checks them
+exactly.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from gcp_etl_pipeline_spark.operators.parallel import spread
 from gcp_etl_pipeline_spark.registry import register
+from gcp_etl_pipeline_spark.session import scratch_dir
 from gcp_etl_pipeline_spark.streaming import core, stateful
 
 GAP_S = 1800
@@ -26,35 +29,19 @@ WM_S = 7200
 
 
 def _stage(sf_dir: str) -> tuple[str, str]:
-    root = tempfile.mkdtemp(prefix="graft_stream_")
+    root = scratch_dir("stream")
     src = f"{root}/in"
-    import os
-
     os.makedirs(src)
     shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
     return root, src
 
 
-def _drain(stream_df: DataFrame, root: str, mode: str) -> DataFrame:
-    name = f"q_{uuid.uuid4().hex[:10]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", f"{root}/ckpt_{name}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(name)
-
-
 def _q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    root, src = _stage(sf_dir)
+    _, src = _stage(sf_dir)
     stream = core.tumbling_counts(core.read_events_stream(spark, src)).select(
         "window_start", "event_type", "n_events"
     )
-    return _drain(stream, root, "complete")
+    return spark.table(core.drain(stream, mode="complete").name)
 
 
 register(
@@ -69,11 +56,11 @@ register(
 
 
 def _q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    root, src = _stage(sf_dir)
+    _, src = _stage(sf_dir)
     stream = core.sliding_counts(
         core.read_events_stream(spark, src), width="1 hour", slide="30 minutes"
     )
-    return _drain(stream, root, "complete")
+    return spark.table(core.drain(stream, mode="complete").name)
 
 
 # sliding window = each event in width/slide overlapping windows; the
@@ -93,9 +80,9 @@ register(
 
 
 def _q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    root, src = _stage(sf_dir)
+    _, src = _stage(sf_dir)
     stream = core.session_counts(core.read_events_stream(spark, src), gap="30 minutes")
-    return _drain(stream, root, "complete")
+    return spark.table(core.drain(stream, mode="complete").name)
 
 
 # built-in session_window: end = last event + gap
@@ -124,11 +111,11 @@ register(
 
 
 def _q_stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    root, src = _stage(sf_dir)
+    _, src = _stage(sf_dir)
     stream = stateful.sessionize(
         core.read_events_stream(spark, src), gap_seconds=GAP_S
     )
-    return _drain(stream, root, "append")
+    return spark.table(core.drain(stream).name)
 
 
 # custom applyInPandasWithState sessionizer: emits sessions closed by a
@@ -175,10 +162,9 @@ def _q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = core.read_events_stream(spark, src).select(
         "event_id", "user_id", "event_type"
     )
-    q = core.foreach_batch_insert_new(
+    core.foreach_batch_insert_new(
         stream, target, keys=["event_id"], checkpoint=f"{root}/ckpt_upsert"
     )
-    q.awaitTermination()
     return spark.read.parquet(target)
 
 
@@ -197,14 +183,13 @@ def _q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     Drained counts then aggregate batch-side to a compact graded shape."""
     from pyspark.sql import functions as F
 
-    root, src = _stage(sf_dir)
+    _, src = _stage(sf_dir)
     shutil.copy(f"{sf_dir}/events.parquet", f"{src}/replay.parquet")
     deduped = core.dedup_within_watermark(
         core.read_events_stream(spark, src), watermark="2 hours"
     )
-    drained = _drain(
-        deduped.select("event_id", "user_id", "event_type"), root, "append"
-    )
+    q = core.drain(deduped.select("event_id", "user_id", "event_type"))
+    drained = spark.table(q.name)
     return drained.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("event_id").alias("n_ids"),
@@ -231,7 +216,7 @@ def _q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark — the drain then aggregates batch-side to a compact result."""
     from pyspark.sql import functions as F
 
-    root, src = _stage(sf_dir)
+    _, src = _stage(sf_dir)
     clicks = (
         core.read_events_stream(spark, src)
         .where("event_type = 'click'")
@@ -259,9 +244,8 @@ def _q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (buys.p_ts <= clicks.c_ts + F.expr("INTERVAL 1 HOUR")),
         "inner",
     )
-    drained = _drain(
-        joined.select("user_id", "click_id", "purchase_id"), root, "append"
-    )
+    q = core.drain(joined.select("user_id", "click_id", "purchase_id"))
+    drained = spark.table(q.name)
     return drained.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.min("click_id").alias("first_click"),
@@ -297,28 +281,18 @@ def _q_stream_dedup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     appending only accepted rows to the output table. The oracle replays
     the same two batches sequentially in SQL, so a mis-ordered batch, a
     ledger leak, or an at-least-once duplicate breaks the hash."""
-    import glob as _glob
-    import os
-
     from pyspark.sql import functions as F
 
-    from gcp_etl_pipeline_spark.operators.dedup import dedup_incremental
     from gcp_etl_pipeline_spark.sources.files import read_parquet
 
-    root = tempfile.mkdtemp(prefix="graft_sledger_")
-    src = f"{root}/in"
-    os.makedirs(src)
+    root = scratch_dir("sledger")
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text", "lang", "n_chars"
     )
     t = docs.agg(F.floor(F.max("doc_id") / 2)).collect()[0][0]
-    for i, pred in enumerate((f"doc_id <= {t}", f"doc_id > {t}")):
-        tmp = f"{root}/tmp{i}"
-        docs.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = sorted(_glob.glob(f"{tmp}/part-*.parquet"))[0]
-        dst = f"{src}/b{i}.parquet"
-        shutil.copy(part, dst)
-        os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
+    src = core.stage_ordered_files(
+        root, [docs.where(f"doc_id <= {t}"), docs.where(f"doc_id > {t}")]
+    )
 
     store = f"{root}/fp_store"
     out_dir = f"{root}/accepted"
@@ -361,16 +335,7 @@ def _q_stream_dedup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{out_dir}/batch={batch_id}"
         )
 
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    core.drain(core.file_stream(spark, docs.schema, src), process=process)
     return spark.read.parquet(out_dir).select(
         F.when(F.col("doc_id") <= t, 1).otherwise(2).cast("int").alias("batch"),
         "doc_id", "lang", "n_chars",
@@ -413,7 +378,7 @@ def _q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from gcp_etl_pipeline_spark.sources.files import read_parquet
 
-    root, src = _stage(sf_dir)
+    _, src = _stage(sf_dir)
     cust = read_parquet(spark, f"{sf_dir}/customer.parquet").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
@@ -427,7 +392,7 @@ def _q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value_micro"),
         )
     )
-    return _drain(stream, root, "complete")
+    return spark.table(core.drain(stream, mode="complete").name)
 
 
 register(
@@ -455,27 +420,18 @@ def _q_stream_neardup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is `neardup_incremental_ledger`'s sequential band-
     arithmetic replay, shared verbatim: a mis-ordered batch, ledger
     leak, or at-least-once duplicate breaks the hash."""
-    import glob as _glob
-    import os
-
     from pyspark.sql import functions as F
 
     from gcp_etl_pipeline_spark.operators.dedup import neardup_incremental
     from gcp_etl_pipeline_spark.sources.files import read_parquet
 
-    root = tempfile.mkdtemp(prefix="graft_sndledger_")
-    src = f"{root}/in"
-    os.makedirs(src)
+    root = scratch_dir("sndledger")
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text", "lang"
     )
-    for i, pred in enumerate(("doc_id % 2 = 0", "doc_id % 2 = 1")):
-        tmp = f"{root}/tmp{i}"
-        docs.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = sorted(_glob.glob(f"{tmp}/part-*.parquet"))[0]
-        dst = f"{src}/b{i}.parquet"
-        shutil.copy(part, dst)
-        os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
+    src = core.stage_ordered_files(
+        root, [docs.where("doc_id % 2 = 0"), docs.where("doc_id % 2 = 1")]
+    )
 
     store = f"{root}/bands"
     out_dir = f"{root}/accepted"
@@ -492,16 +448,7 @@ def _q_stream_neardup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{out_dir}/batch={batch_id}"
         )
 
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    core.drain(core.file_stream(spark, docs.schema, src), process=process)
     return spark.read.parquet(out_dir).select(
         F.when(F.col("doc_id") % 2 == 0, 1).otherwise(2)
         .cast("int").alias("batch"),
@@ -540,29 +487,20 @@ def _q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     store generation and reads only its PREDECESSOR's — a retried
     micro-batch rewrites generation b rather than merging twice.
     """
-    import glob as _glob
-    import os
-
     from pyspark.sql import functions as F
 
     from gcp_etl_pipeline_spark.operators import dedup, sketches
     from gcp_etl_pipeline_spark.sources.files import read_parquet
 
     K = 256
-    root = tempfile.mkdtemp(prefix="graft_skmv_")
-    src = f"{root}/in"
-    os.makedirs(src)
+    root = scratch_dir("skmv")
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     t = docs.agg(F.floor(F.max("doc_id") / 2)).collect()[0][0]
-    for i, pred in enumerate((f"doc_id <= {t}", f"doc_id > {t}")):
-        tmp = f"{root}/tmp{i}"
-        docs.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = sorted(_glob.glob(f"{tmp}/part-*.parquet"))[0]
-        dst = f"{src}/b{i}.parquet"
-        shutil.copy(part, dst)
-        os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
+    src = core.stage_ordered_files(
+        root, [docs.where(f"doc_id <= {t}"), docs.where(f"doc_id > {t}")]
+    )
 
     store = f"{root}/kmv"
 
@@ -580,16 +518,7 @@ def _q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{store}/b{batch_id}"
         )
 
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    core.drain(core.file_stream(spark, docs.schema, src), process=process)
     final = spark.read.parquet(f"{store}/b1")
     exact = (
         dedup.shingle_sets(docs)
@@ -614,9 +543,6 @@ def _q_stream_substring_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     own first attempt). The oracle replays both batches sequentially —
     batch 2's excise set is its own in-batch duplicates UNION every
     chunk fingerprint batch 1 contributed."""
-    import glob as _glob
-    import os
-
     from pyspark.sql import functions as F
 
     from gcp_etl_pipeline_spark.operators.dedup import (
@@ -624,20 +550,14 @@ def _q_stream_substring_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gcp_etl_pipeline_spark.sources.files import read_parquet
 
-    root = tempfile.mkdtemp(prefix="graft_sexcise_")
-    src = f"{root}/in"
-    os.makedirs(src)
+    root = scratch_dir("sexcise")
     docs = read_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     t = docs.agg(F.floor(F.max("doc_id") / 2)).collect()[0][0]
-    for i, pred in enumerate((f"doc_id <= {t}", f"doc_id > {t}")):
-        tmp = f"{root}/tmp{i}"
-        docs.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = sorted(_glob.glob(f"{tmp}/part-*.parquet"))[0]
-        dst = f"{src}/b{i}.parquet"
-        shutil.copy(part, dst)
-        os.utime(dst, (1_000_000_000 + i * 1000,) * 2)
+    src = core.stage_ordered_files(
+        root, [docs.where(f"doc_id <= {t}"), docs.where(f"doc_id > {t}")]
+    )
 
     store = f"{root}/chunk_fps"
     out_dir = f"{root}/cleaned"
@@ -648,16 +568,7 @@ def _q_stream_substring_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    core.drain(core.file_stream(spark, docs.schema, src), process=process)
     return spark.read.parquet(out_dir).select(
         F.when(F.col("doc_id") <= t, 1).otherwise(2).cast("int").alias("batch"),
         "doc_id", "n_chunks", "excised_chunks", "kept_tokens", "clean_text",
@@ -700,9 +611,6 @@ def _q_stream_phash_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     attempt). Accepted ids land per batch; the oracle is the BATCH
     query's full band-set-algebra replay, shared verbatim — the
     streaming path must converge to exactly the batch semantics."""
-    import glob as _glob
-    import os
-
     from pyspark.sql import functions as F
 
     from gcp_etl_pipeline_spark.operators.curation_queries import (
@@ -710,18 +618,11 @@ def _q_stream_phash_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gcp_etl_pipeline_spark.operators.dedup import phash_incremental
 
-    root = tempfile.mkdtemp(prefix="graft_sphash_")
-    src = f"{root}/in"
-    os.makedirs(src)
-
+    root = scratch_dir("sphash")
     media = phash_ledger_corpus(spark)
-    for b, pred in enumerate(("media_id % 2 = 0", "media_id % 2 = 1")):
-        tmp = f"{root}/tmp{b}"
-        media.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = sorted(_glob.glob(f"{tmp}/part-*.parquet"))[0]
-        dst = f"{src}/b{b}.parquet"
-        shutil.copy(part, dst)
-        os.utime(dst, (1_000_000_000 + b * 1000,) * 2)
+    src = core.stage_ordered_files(
+        root, [media.where("media_id % 2 = 0"), media.where("media_id % 2 = 1")]
+    )
 
     store = f"{root}/bands"
     out_dir = f"{root}/accepted"
@@ -732,16 +633,8 @@ def _q_stream_phash_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{out_dir}/batch={batch_id}"
         )
 
-    q = (
-        spark.readStream.schema("media_id BIGINT, content BINARY")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = core.file_stream(spark, "media_id BIGINT, content BINARY", src)
+    core.drain(stream, process=process)
     return spark.read.parquet(out_dir).select(
         F.when(F.col("media_id") % 2 == 0, 1).otherwise(2)
         .cast("int").alias("batch"),
@@ -781,7 +674,7 @@ def _q_stream_html_intake(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gcp_etl_pipeline_spark.operators.dedup import dedup_incremental
 
-    root = tempfile.mkdtemp(prefix="graft_shtml_")
+    root = scratch_dir("shtml")
     # the session-cached pre-split dirty corpus shared with the batch
     # twin — one fixture generation per (session, sf_dir); each run
     # still gets ITS OWN checkpoint, ledger, and sink below
@@ -809,16 +702,8 @@ def _q_stream_html_intake(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(f"{out_dir}/batch={batch_id}")
 
-    q = (
-        spark.readStream.schema("doc_id BIGINT, source STRING, html STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = core.file_stream(spark, "doc_id BIGINT, source STRING, html STRING", src)
+    core.drain(stream, process=process)
     return spark.read.parquet(out_dir).select("doc_id", "source", "n_tokens")
 
 
@@ -853,7 +738,7 @@ def _q_stream_warc_intake(spark: SparkSession, sf_dir: str) -> DataFrame:
         warc_stream_src,
     )
 
-    root = tempfile.mkdtemp(prefix="graft_swarc_")
+    root = scratch_dir("swarc")
     src = warc_stream_src(spark, sf_dir)
     out_dir = f"{root}/parsed"
 
@@ -873,16 +758,8 @@ def _q_stream_warc_intake(spark: SparkSession, sf_dir: str) -> DataFrame:
             _text.token_count("body").cast("bigint").alias("n_tokens"),
         ).write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    q = (
-        spark.readStream.schema("blob_id BIGINT, blob STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = core.file_stream(spark, "blob_id BIGINT, blob STRING", src)
+    core.drain(stream, process=process)
     return spark.read.parquet(out_dir).select("url", "verdict", "n_tokens")
 
 
@@ -917,7 +794,7 @@ def _q_stream_warcgz_intake(spark: SparkSession, sf_dir: str) -> DataFrame:
         warcgz_stream_src,
     )
 
-    root = tempfile.mkdtemp(prefix="graft_swarcgz_")
+    root = scratch_dir("swarcgz")
     src = warcgz_stream_src(spark, sf_dir)
     out_dir = f"{root}/parsed"
 
@@ -937,16 +814,8 @@ def _q_stream_warcgz_intake(spark: SparkSession, sf_dir: str) -> DataFrame:
             _text.token_count("body").cast("bigint").alias("n_tokens"),
         ).write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    q = (
-        spark.readStream.schema("blob_id BIGINT, gz BINARY")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = core.file_stream(spark, "blob_id BIGINT, gz BINARY", src)
+    core.drain(stream, process=process)
     return spark.read.parquet(out_dir).select("url", "verdict", "n_tokens")
 
 
@@ -987,7 +856,7 @@ def _q_stream_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gcp_etl_pipeline_spark.operators.dedup import dedup_incremental
 
-    root = tempfile.mkdtemp(prefix="graft_sfront_")
+    root = scratch_dir("sfront")
     src = frontier_stream_src(spark, sf_dir)
     store = f"{root}/urlfps"
     out_dir = f"{root}/enqueued"
@@ -1024,16 +893,8 @@ def _q_stream_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "url", F.col("o_orderkey").alias("first_key")
         ).write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    q = (
-        spark.readStream.schema("o_orderkey BIGINT, raw_url STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = core.file_stream(spark, "o_orderkey BIGINT, raw_url STRING", src)
+    core.drain(stream, process=process)
     return spark.read.parquet(out_dir).select("url", "first_key")
 
 
@@ -1071,8 +932,6 @@ def _q_stream_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state is |URLs| rows keyed by url_id; each batch costs
     one groupBy over the increment + one url-keyed merge join — the
     fetch log itself is never re-scanned."""
-    import os
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -1083,7 +942,7 @@ def _q_stream_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
         recrawl_stream_src,
     )
 
-    root = tempfile.mkdtemp(prefix="graft_srecrawl_")
+    root = scratch_dir("srecrawl")
     src = recrawl_stream_src(spark, sf_dir)
     state_dir = f"{root}/state"
 
@@ -1147,18 +1006,10 @@ def _q_stream_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{state_dir}/batch={batch_id}"
         )
 
-    q = (
-        spark.readStream.schema(
-            "url_id BIGINT, ts TIMESTAMP, fetch_id BIGINT, content_fp STRING"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    stream = core.file_stream(
+        spark, "url_id BIGINT, ts TIMESTAMP, fetch_id BIGINT, content_fp STRING", src
     )
-    q.awaitTermination()
+    core.drain(stream, process=process)
     last = max(
         int(d.split("=")[1])
         for d in os.listdir(state_dir)
@@ -1208,7 +1059,7 @@ def _q_stream_sitemap_discovery(
         sitemap_discovery_stage,
     )
 
-    root = tempfile.mkdtemp(prefix="graft_ssitemap_")
+    root = scratch_dir("ssitemap")
     src = sitemap_disc_stream_src(spark, sf_dir)
     out_dir = f"{root}/parsed"
 
@@ -1229,19 +1080,13 @@ def _q_stream_sitemap_discovery(
             ).otherwise(F.lit(False)).alias("is_fresh"),
         ).write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    q = (
-        spark.readStream.schema(
-            "host_id BIGINT, host STRING, robots_txt STRING,"
-            " sitemap_url STRING, xml STRING"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    stream = core.file_stream(
+        spark,
+        "host_id BIGINT, host STRING, robots_txt STRING,"
+        " sitemap_url STRING, xml STRING",
+        src,
     )
-    q.awaitTermination()
+    core.drain(stream, process=process)
     return spark.read.parquet(out_dir).select(
         "host_id", "entry_no", "url", "is_fresh"
     )
@@ -1276,7 +1121,7 @@ def _q_stream_feed_discovery(
         feed_stream_src,
     )
 
-    root = tempfile.mkdtemp(prefix="graft_sfeed_")
+    root = scratch_dir("sfeed")
     src = feed_stream_src(spark, sf_dir)
     out_dir = f"{root}/parsed"
 
@@ -1285,16 +1130,8 @@ def _q_stream_feed_discovery(
             f"{out_dir}/batch={batch_id}"
         )
 
-    q = (
-        spark.readStream.schema("host_id BIGINT, xml STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = core.file_stream(spark, "host_id BIGINT, xml STRING", src)
+    core.drain(stream, process=process)
     return spark.read.parquet(out_dir).select(
         "host_id", "entry_no", "kind", "url", "published_s"
     )

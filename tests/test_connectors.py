@@ -69,11 +69,9 @@ def test_injected_fake_connector_overrides_placeholder(spark, sf_dir):
 
 
 def test_jdbc_scheme_routes_to_jdbc_reader(spark, tmp_path):
-    import tempfile
-
     from gcp_etl_pipeline_spark.spec import ColumnSpec, TableSpec
 
-    url = f"jdbc:derby:{tempfile.mkdtemp(prefix='graft_conn_')}/db;create=true"
+    url = f"jdbc:derby:{tmp_path}/db;create=true"
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
     src = spark.range(5).selectExpr("id AS K", "CAST(id * 10 AS INT) AS V")
     (

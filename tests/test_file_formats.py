@@ -3,11 +3,10 @@ roundtrip and, for ORC, the same pushdown/pruning guarantees as Parquet."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gcp_etl_pipeline_spark.session import scratch_dir
 from gcp_etl_pipeline_spark.sinks.writers import write_json_lines, write_orc
 from gcp_etl_pipeline_spark.sources.files import (
     read_json_lines,
@@ -18,7 +17,7 @@ from gcp_etl_pipeline_spark.sources.files import (
 
 def test_orc_roundtrip_preserves_types(spark, sf_dir):
     src = read_parquet(spark, f"{sf_dir}/orders.parquet")
-    path = tempfile.mkdtemp(prefix="fmt_orc_") + "/orders"
+    path = scratch_dir("fmt_orc") + "/orders"
     write_orc(src, path)
     back = read_orc(spark, path)
     assert back.schema == src.schema
@@ -27,7 +26,7 @@ def test_orc_roundtrip_preserves_types(spark, sf_dir):
 
 def test_orc_scan_pushes_filters_and_prunes_columns(spark, sf_dir):
     src = read_parquet(spark, f"{sf_dir}/orders.parquet")
-    path = tempfile.mkdtemp(prefix="fmt_orc_pd_") + "/orders"
+    path = scratch_dir("fmt_orc_pd") + "/orders"
     write_orc(src, path)
     df = read_orc(spark, path).where(F.col("o_orderkey") > 100).select(
         "o_orderkey", "o_totalprice"
@@ -40,7 +39,7 @@ def test_orc_scan_pushes_filters_and_prunes_columns(spark, sf_dir):
 
 def test_jsonl_roundtrip_with_explicit_schema(spark, sf_dir):
     src = read_parquet(spark, f"{sf_dir}/nation.parquet")
-    path = tempfile.mkdtemp(prefix="fmt_jsonl_") + "/nation"
+    path = scratch_dir("fmt_jsonl") + "/nation"
     write_json_lines(src, path)
     schema = T.StructType(
         [

@@ -4,6 +4,9 @@ incrementally and idempotent re-drains."""
 
 from __future__ import annotations
 
+import glob
+
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from gcp_etl_pipeline_spark.plans import gosales, gosales_streaming as gs
@@ -35,6 +38,12 @@ def test_streaming_gosales_converges_to_batch(spark, sf_dir, tmp_path):
     assert fact.count() == gosales.sales_fact(spark, sf_dir).count()
     # every fact row resolved its dims (left joins found matches)
     assert fact.where("retailer_key IS NULL OR product_key IS NULL").count() == 0
+
+    # an idle micro-batch (no new dim key) appends no part file
+    for dim in ("method_hlp", "retailer_hlp", "product_lkp"):
+        parts = glob.glob(f"{wh}/{dim}/part-*.parquet")
+        assert parts
+        assert all(pq.ParquetFile(p).metadata.num_rows > 0 for p in parts), dim
 
     # the semantic overview from streaming-built tables == batch overview
     got = gs.overview_from_warehouse(spark, sf_dir, wh)

@@ -4,11 +4,10 @@ substring-excise ledger compaction seam."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from gcp_etl_pipeline_spark.operators import codecs, curation, dedup, multimodal
+from gcp_etl_pipeline_spark.session import scratch_dir
 
 
 def _png_df(spark, pixel_fn, n, w=18, h=16):
@@ -114,7 +113,7 @@ def test_excise_compaction_preserves_ledger_semantics(spark):
         "doc_id BIGINT, text STRING",
     )
     for compact in (False, True):
-        store = tempfile.mkdtemp(prefix="graft_exc_t_") + "/fps"
+        store = scratch_dir("exc_t") + "/fps"
         dedup.substring_excise_incremental(docs1, store, attempt_id="i1").collect()
         if compact:
             before, after = dedup.compact_ledger(spark, store)

@@ -251,14 +251,13 @@ def test_ledger_sequential_equals_oneshot(spark, t1, t2):
     sequentially (batch-1 ids all lower) must accept exactly the rows a
     ONE-SHOT dedup_exact over the union keeps — for any text multisets,
     including empty batches and cross/within-batch duplicates."""
-    import tempfile
-
     from gcp_etl_pipeline_spark.operators.dedup import (
         dedup_exact,
         dedup_incremental,
     )
+    from gcp_etl_pipeline_spark.session import scratch_dir
 
-    store = tempfile.mkdtemp(prefix="graft_prop_fp_") + "/fp"
+    store = scratch_dir("prop_fp") + "/fp"
     schema = "doc_id BIGINT, text STRING"
     rows1 = [(i, t) for i, t in enumerate(t1)]
     rows2 = [(100 + i, t) for i, t in enumerate(t2)]

@@ -28,16 +28,8 @@ def events_dir(events_path, tmp_path) -> str:
 
 
 def _drain(stream_df, name, tmp_path, mode):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(name)
+    q = core.drain(stream_df, str(tmp_path / f"ckpt_{name}"), mode=mode)
+    return stream_df.sparkSession.table(q.name)
 
 
 def test_tumbling_stream_matches_batch(spark, events_path, events_dir, tmp_path):

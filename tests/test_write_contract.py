@@ -13,6 +13,7 @@ import ast
 import glob
 import os
 
+import pyarrow as pa
 import pytest
 from pyspark.sql.types import StructType
 
@@ -28,6 +29,7 @@ from gcp_etl_pipeline_spark.sinks.writers import (
     write_parquet,
 )
 from gcp_etl_pipeline_spark.sources.incremental_ingest import IngestionCatalog
+from gcp_etl_pipeline_spark.streaming.core import read_events_stream
 
 CORRUPT_PART = "part-00000-corrupt.snappy.parquet"
 
@@ -69,6 +71,18 @@ def test_insert_new_rows_raises_on_unreadable_target(spark, tmp_path):
     with pytest.raises(Exception, match="(?i)parquet"):
         insert_new_rows(df, path, ["code"])
     assert os.listdir(path) == [CORRUPT_PART]  # nothing appended
+
+
+def test_events_stream_empty_landing_dir_vs_unreadable_file(spark, tmp_path):
+    """A landing dir with no data file yet has no footer to sniff and gets
+    the default schema; a corrupt data file in it raises instead of
+    silently picking that schema."""
+    (tmp_path / "empty").mkdir()
+    assert read_events_stream(spark, str(tmp_path / "empty")).isStreaming
+    landing = str(tmp_path / "landing")
+    _corrupt_table(landing)
+    with pytest.raises(pa.ArrowInvalid):
+        read_events_stream(spark, landing)
 
 
 def test_get_watermark_raises_on_unreadable_catalog(spark, tmp_path):

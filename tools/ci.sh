@@ -18,8 +18,20 @@ open("/tmp/ci_q1.txt", "w").write("\n".join(names[:h]))
 open("/tmp/ci_q2.txt", "w").write("\n".join(names[h:]))
 print(f"{len(names)} queries -> two halves")
 PY
+# every query gets its scratch from session.scratch_dir, removed at
+# interpreter exit: sweep inside a fresh temp root and fail on anything
+# graft_* that outlives the two processes
+sweep_tmp="$(mktemp -d)"
+(
+export TMPDIR="$sweep_tmp"
 python tools/check.py /root/testdata/sf0.01 $(tr '\n' ' ' < /tmp/ci_q1.txt)
 python tools/check.py /root/testdata/sf0.01 $(tr '\n' ' ' < /tmp/ci_q2.txt)
+)
+leftover="$(find "$sweep_tmp" -maxdepth 1 -name 'graft_*')"
+if [ -n "$leftover" ]; then
+  echo "scratch left behind by the sweep:"; echo "$leftover"; exit 1
+fi
+rm -rf "$sweep_tmp"
 
 echo "== rotating sf0.1 differential subset (~50 queries) =="
 # sf0.01 verifies every query above; sf0.1 can still diverge, so each
