@@ -11,7 +11,11 @@ evaluates ALL expectations in one scan:
   - ``enforce(df, expectations)`` → (good, bad) split, where ``bad``
     carries a ``failed_rules`` array naming every rule the row broke —
     the quarantine-table pattern (bad rows route to a review sink
-    instead of poisoning the target).
+    instead of poisoning the target);
+  - ``with enforce_to_quarantine(df, expectations, path) as good:`` →
+    the bad split is appended to the quarantine table (only when it has
+    a row) and the block writes the good split; the input is persisted
+    for the block only, so nothing it caches outlives the write.
 
 Scale notes: everything is JVM-side boolean algebra fused into the scan
 (one WholeStageCodegen span over the batch); ``enforce`` evaluates the
@@ -25,8 +29,8 @@ in_range, one_of, matches (regex), custom SQL predicate.
 
 from __future__ import annotations
 
-import threading
-from collections.abc import Mapping
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -118,86 +122,40 @@ def unique_key_violations(df: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-# Persisted flagged projections awaiting release (keyed by application id
-# so concurrent sessions don't evict each other) — the same bounded-cache-
-# plus-finish-hook pattern as plans/gosales.py's dim cache. The GOOD split
-# returned to the caller reads from this cache, so it can only be
-# unpersisted after the caller's main write — pipeline wiring calls
-# release_quarantine_caches() from its on_finish hook. Bounded: beyond
-# _QUARANTINE_CACHE_MAX the oldest entry is force-unpersisted (its good
-# split, if still unconsumed, falls back to recomputation — a slowdown,
-# never a wrong answer), so a caller that forgets the release hook can't
-# grow executor storage without limit.
-# Guarded by _QUARANTINE_LOCK: pipeline jobs call in from concurrent threads.
-_QUARANTINE_CACHE: list[tuple[str, DataFrame]] = []
-_QUARANTINE_CACHE_MAX = 16
-_QUARANTINE_LOCK = threading.Lock()
-
-
-def release_quarantine_caches(spark=None) -> None:
-    """Unpersist flagged projections retained by ``enforce_to_quarantine``
-    (between-batch hygiene; with ``spark`` given, only that application's
-    entries)."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    keep = []
-    with _QUARANTINE_LOCK:
-        for app_id, df in _QUARANTINE_CACHE:
-            if app is not None and app_id != app:
-                keep.append((app_id, df))
-                continue
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 — session may be gone
-                pass
-        _QUARANTINE_CACHE[:] = keep
-
-
+@contextmanager
 def enforce_to_quarantine(
     df: DataFrame,
     expectations: Expectations,
     quarantine_path: str,
     batch_id: str | None = None,
-    persist: bool = True,
-) -> DataFrame:
-    """Pipeline form of ``enforce``: bad rows (with their ``failed_rules``
-    provenance, plus ``batch_id`` when given) are APPENDED to the
-    quarantine table at ``quarantine_path`` — the review sink pattern —
-    and only the good split is returned for the main write.
+) -> Iterator[DataFrame]:
+    """Pipeline form of ``enforce``, as a context manager: bad rows (with
+    their ``failed_rules`` provenance, plus ``batch_id`` when given) are
+    APPENDED to the quarantine table at ``quarantine_path`` — the review
+    sink pattern — and the ``with`` block receives the good split for the
+    main write.
 
-    Single-scan contract (``persist=True``, default): the flagged
-    projection is persisted (memory-and-disk), so the quarantine write
-    materializes it ONCE and the returned good split reads the cache —
-    the input source (a JDBC extraction in the gosales ingest wiring) is
-    scanned exactly once across both writes. This is the reference's own
-    R1 persist-before-dual-actions pattern (`...sales_fact_01.py:156`).
-    The bad write is unconditional: a clean batch appends one empty part
-    file (Spark writes a file even for an empty result), which costs no
-    extra action over the source the way an isEmpty probe would.
-    Callers release the retained cache after their main write via
-    ``release_quarantine_caches()`` (pipeline runners: wire it into the
-    finish hook). ``persist=False`` opts out — two source scans, zero
-    executor storage — for inputs too large to cache but cheap to
-    re-read."""
+    Single-scan contract: the flagged projection is persisted for the
+    block, so the input source (a JDBC extraction in the gosales ingest
+    wiring) is scanned once across the quarantine check, the quarantine
+    write and the main write — the reference's R1 persist-before-dual-
+    actions pattern (`...sales_fact_01.py:156`). Whether the bad split
+    has a row is one job over the persisted frame; a clean batch appends
+    nothing (Spark writes an empty part file for an empty append), so a
+    fresh path stays absent. The persisted frame is released when the
+    block exits, raised or not: consume the good split inside it."""
     if not expectations:
         raise ValueError("enforce_to_quarantine() needs at least one expectation")
-    tagged = _tag(df, expectations)
-    if persist:
-        tagged = tagged.persist()
-        with _QUARANTINE_LOCK:
-            while len(_QUARANTINE_CACHE) >= _QUARANTINE_CACHE_MAX:
-                _, oldest = _QUARANTINE_CACHE.pop(0)
-                try:
-                    oldest.unpersist()
-                except Exception:  # noqa: BLE001 — session may be gone
-                    pass
-            _QUARANTINE_CACHE.append(
-                (df.sparkSession.sparkContext.applicationId, tagged)
-            )
-    bad = tagged.where(F.size("failed_rules") > 0)
-    if batch_id is not None:
-        bad = bad.withColumn("batch_id", F.lit(batch_id))
-    bad.write.mode("append").parquet(quarantine_path)
-    return tagged.where(F.size("failed_rules") == 0).drop("failed_rules")
+    tagged = _tag(df, expectations).persist()
+    try:
+        bad = tagged.where(F.size("failed_rules") > 0)
+        if not bad.isEmpty():
+            if batch_id is not None:
+                bad = bad.withColumn("batch_id", F.lit(batch_id))
+            bad.write.mode("append").parquet(quarantine_path)
+        yield tagged.where(F.size("failed_rules") == 0).drop("failed_rules")
+    finally:
+        tagged.unpersist()
 
 
 def _tag(df: DataFrame, expectations: Expectations) -> DataFrame:

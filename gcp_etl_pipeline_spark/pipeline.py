@@ -27,7 +27,8 @@ wall time, which under overlap includes time shared with other jobs. Batch
 IDs are minted by the pipeline and threaded to every job (reference XCom
 propagation, `composer/goSalesPipeline.py:68-77`). Each job's Spark work
 carries the job tag ``pipeline:<batch_id>:<job name>`` (see ``job_tag``),
-so its Spark jobs can be attributed while jobs overlap.
+so its Spark jobs can be attributed while jobs overlap. A job releases
+whatever it persists before its write returns.
 """
 
 from __future__ import annotations
@@ -111,7 +112,6 @@ class Pipeline:
         self.spark = spark
         self.ledger_path = ledger_path
         self.jobs: dict[str, Job] = {}
-        self._finish_hooks: list = []
 
     def add(self, job: Job) -> "Pipeline":
         if job.name in self.jobs:
@@ -142,28 +142,9 @@ class Pipeline:
             visit(name)
         return order
 
-    def on_finish(self, hook) -> "Pipeline":
-        """Register a cleanup callback ``hook(spark)`` invoked (success or
-        failure) after every run — plan modules register their own cache
-        releases here instead of the runner knowing about any plan."""
-        self._finish_hooks.append(hook)
-        return self
-
     def run(self, ctx: RunContext) -> list[dict]:
         """Execute the DAG; returns the ledger rows written this run, in
-        completion order. Finish hooks fire after every started job has
-        returned, so a long-lived service doesn't pin executor storage
-        between batches."""
-        try:
-            return self._run(ctx)
-        finally:
-            for hook in getattr(self, "_finish_hooks", []):
-                try:
-                    hook(self.spark)
-                except Exception:  # noqa: BLE001 — cleanup is best-effort
-                    pass
-
-    def _run(self, ctx: RunContext) -> list[dict]:
+        completion order."""
         waiting = self._topo_order()
         done: queue.SimpleQueue = queue.SimpleQueue()
         succeeded: set[str] = set()
@@ -196,7 +177,8 @@ class Pipeline:
                     failed = (row, exc)
         finally:
             # on an error (a ledger write, an interrupt) jobs may still be
-            # running: the finish hooks must not run before they return
+            # running: the run returns only after every started job has
+            # reported, so no job outlives the call
             for _ in range(running):
                 done.get()
         if failed is not None:

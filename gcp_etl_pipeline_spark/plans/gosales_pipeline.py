@@ -12,6 +12,10 @@ inputs) with the written ``method_hlp``, ``retailer_hlp`` and
 the written star only (reference EP3 `tl_sm_gosales_overview_01.sql:22-25`).
 
 Physical design (the decisions the reference left latent, SURVEY §4):
+  - the raw job's build only normalizes and casts; its write runs the
+    quarantine gate (``enforce_to_quarantine``), masking, audit stamps
+    and the watermark ingest inside the gate's ``with`` block, so the
+    persisted raw input is released when the write returns;
   - helpings/lookup/dim maintenance is insert-new-only against the WRITTEN
     target (idempotent re-runs; reference `mode("append")` + anti-join);
     a registry's new natural keys get surrogate keys continued from the
@@ -77,41 +81,43 @@ def build_pipeline(sf_dir: str, warehouse: str, spark: SparkSession) -> Pipeline
     p = Pipeline(spark, ledger_path=f"{warehouse}/ops/run_log")
 
     # ---------------------------------------------------------- raw layer
-    # EP1: contract-driven ingest — string hygiene, spec casts, masked
-    # column, audit stamps, watermark-incremental append + metadata update.
+    # EP1: contract-driven ingest — string hygiene, spec casts, then in the
+    # write: the quarantine gate, the masked column, audit stamps and the
+    # watermark-incremental append + metadata update.
     def build_raw(spark: SparkSession, ctx: RunContext) -> DataFrame:
-        from gcp_etl_pipeline_spark.operators import expectations as ex
-        from gcp_etl_pipeline_spark.operators.masking import mask_columns
         from gcp_etl_pipeline_spark.operators.normalize import (
             cast_to_spec,
             normalize_strings,
         )
 
         df = gosales.go_daily_sales(spark, sf_dir)
-        df = cast_to_spec(normalize_strings(df), DAILY_SALES_SPEC)
-        # contract gate BEFORE masking: rows violating the TableSpec's
-        # implied rules route to the quarantine sink with provenance;
-        # only the clean split continues into the raw table
-        df = ex.enforce_to_quarantine(
-            df,
-            ex.from_spec(DAILY_SALES_SPEC),
-            f"{warehouse}/quarantine/go_daily_sales",
-            batch_id=ctx.batch_id,
-        )
-        key = ctx.params.get("mask_key", "0123456789abcdef")
-        df = mask_columns(df, list(DAILY_SALES_SPEC.masking_columns), key)
-        return _audited(df, ctx, 100)
+        return cast_to_spec(normalize_strings(df), DAILY_SALES_SPEC)
 
     def write_raw(df: DataFrame, spark: SparkSession, ctx: RunContext) -> int:
+        from gcp_etl_pipeline_spark.operators import expectations as ex
+        from gcp_etl_pipeline_spark.operators.masking import mask_columns
         from gcp_etl_pipeline_spark.sources.incremental_ingest import (
             IngestionCatalog,
             ingest_incremental,
         )
 
         cat = IngestionCatalog(spark, f"{warehouse}/ops/ingestion_metadata")
-        return ingest_incremental(
-            DAILY_SALES_SPEC, df, f"{warehouse}/raw/go_daily_sales", cat
-        )
+        key = ctx.params.get("mask_key", "0123456789abcdef")
+        # contract gate BEFORE masking: rows violating the TableSpec's
+        # implied rules route to the quarantine sink with provenance;
+        # only the clean split continues into the raw table, written
+        # while the gate holds its persisted input
+        with ex.enforce_to_quarantine(
+            df,
+            ex.from_spec(DAILY_SALES_SPEC),
+            f"{warehouse}/quarantine/go_daily_sales",
+            batch_id=ctx.batch_id,
+        ) as good:
+            masked = mask_columns(good, list(DAILY_SALES_SPEC.masking_columns), key)
+            return ingest_incremental(
+                DAILY_SALES_SPEC, _audited(masked, ctx, 100),
+                f"{warehouse}/raw/go_daily_sales", cat,
+            )
 
     p.add(
         Job(
@@ -215,15 +221,4 @@ def build_pipeline(sf_dir: str, warehouse: str, spark: SparkSession) -> Pipeline
             depends_on=("sales_fact", "retailer_dim", "product_lkp", "method_hlp"),
         )
     )
-    # plan-owned cleanup: release the quarantine gate's flagged-projection
-    # cache after each run (the good split reads that cache through the
-    # raw write, so release must wait for the run to finish)
-    def _cleanup(spark: SparkSession) -> None:
-        from gcp_etl_pipeline_spark.operators.expectations import (
-            release_quarantine_caches,
-        )
-
-        release_quarantine_caches(spark)
-
-    p.on_finish(_cleanup)
     return p

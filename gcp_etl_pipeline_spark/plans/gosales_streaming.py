@@ -169,8 +169,8 @@ def run_streaming_gosales(
     products = gosales.go_products(spark, sf_dir)
     drain(
         file_stream(spark, RAW_SCHEMA, raw_dir),
-        f"{warehouse}/_ckpt",  # stable: a re-drain resumes, processes nothing old
         _process_batch(warehouse, retailers, products),
+        f"{warehouse}/_ckpt",  # stable: a re-drain resumes, processes nothing old
     )
 
 

@@ -432,8 +432,8 @@ def _load_all_inner() -> None:
 
     # the reference's declared merge_column contract EXECUTED end-to-end
     # (`commons/utilities.py:193`, `commons/dictionary_check.py:11`):
-    # operators/upsert.py's auto tier routes to the engine-native
-    # VersionedTable merge in this container (Delta absent), so the WHEN
+    # without Delta, operators/upsert.py runs the engine-native
+    # VersionedTable merge, so the WHEN
     # MATCHED UPDATE / NOT MATCHED INSERT path actually runs — the oracle
     # recomputes the merged state from the parquet truth
     def _q_merge_upsert(spark, sf_dir):

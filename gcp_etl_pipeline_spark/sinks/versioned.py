@@ -57,10 +57,14 @@ class VersionedTable:
         return f"{self.path}/_manifest.json"
 
     def _read_manifest(self) -> dict[str, Any]:
+        """The committed manifest; a missing one is a fresh table. Any
+        other error (a truncated or corrupt manifest, a permission error)
+        propagates: read as fresh, it would drop the table's history and
+        let ``vacuum`` remove every snapshot."""
         try:
             with open(self._manifest_path) as fh:
                 return json.load(fh)
-        except (OSError, json.JSONDecodeError):
+        except FileNotFoundError:
             return {"latest": 0, "versions": []}
 
     def _flip_manifest(self, manifest: dict[str, Any]) -> None:

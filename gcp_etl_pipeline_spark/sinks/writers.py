@@ -31,12 +31,15 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 
-def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
-    """Driver-side ``rows`` typed by the DDL ``schema`` (declared, never
-    inferred), as a JVM-owned local relation: it plans as a
-    ``LocalTableScan``, so no Python RDD or Python worker serves it. A
-    column that is null in every row keeps its declared type."""
-    struct = StructType.fromDDL(schema)
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
+) -> DataFrame:
+    """Driver-side ``rows`` typed by ``schema`` (a DDL string or a
+    StructType: declared, never inferred), as a JVM-owned local relation:
+    it plans as a ``LocalTableScan``, so no Python RDD or Python worker
+    serves it. A column that is null in every row keeps its declared
+    type."""
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
     arrow = to_arrow_schema(struct)
     table = pa.table(
         [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],

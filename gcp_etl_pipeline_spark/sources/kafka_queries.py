@@ -105,7 +105,7 @@ def _q_stream_kafka(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return spark.table(core.drain(counts, mode="complete").name)
+    return core.drain_rows(counts, mode="complete")
 
 
 register(

@@ -12,6 +12,11 @@ Reference tie-in: the batch jobs' watermark contract
 (`commons/utilities.py:162`) and insert-new-only maintenance
 (`...retailer_hlp_01.py:57-63`) are realized here as `withWatermark` and a
 `foreachBatch` anti-join upsert respectively.
+
+Every stream drains through ``drain`` (availableNow, each micro-batch to a
+``foreachBatch`` body). A query that returns the stream's own rows uses
+``drain_rows``: the batches are kept as local checkpoints that live as
+long as the returned frame, so no drain leaves a session view behind.
 """
 
 from __future__ import annotations
@@ -19,8 +24,8 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import uuid
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +33,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from gcp_etl_pipeline_spark.session import scratch_dir
+from gcp_etl_pipeline_spark.sinks.writers import local_frame
 
 _EVENTS_COLS = (
     "event_id BIGINT, {ts}, user_id BIGINT, event_type STRING, "
@@ -45,29 +51,43 @@ def file_stream(
 
 def drain(
     stream_df: DataFrame,
+    process: Callable[[DataFrame, int], None],
     checkpoint: str | None = None,
-    process: Callable[[DataFrame, int], None] | None = None,
     mode: str = "append",
 ) -> StreamingQuery:
-    """Run ``stream_df`` over everything available now and return the
-    terminated query. With ``process`` every micro-batch goes to
-    ``foreachBatch(process)``; without it rows go to the memory sink under
-    a fresh query name, read back as ``spark.table(q.name)``.
-    ``q.recentProgress`` keeps the per-batch durations. ``checkpoint``
+    """Run ``stream_df`` over everything available now, every micro-batch
+    through ``foreachBatch(process)``, and return the terminated query
+    (``q.recentProgress`` keeps the per-batch durations). ``checkpoint``
     defaults to a fresh scratch dir; pass a stable one to make a re-drain
     resume where the last one stopped."""
-    w = stream_df.writeStream.outputMode(mode)
-    if process is not None:
-        w = w.foreachBatch(process)
-    else:
-        w = w.format("memory").queryName(f"q_{uuid.uuid4().hex[:10]}")
     q = (
-        w.option("checkpointLocation", checkpoint or scratch_dir("ckpt"))
+        stream_df.writeStream.outputMode(mode)
+        .foreachBatch(process)
+        .option("checkpointLocation", checkpoint or scratch_dir("ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
     return q
+
+
+def drain_rows(stream_df: DataFrame, mode: str = "append") -> DataFrame:
+    """Drain ``stream_df`` and return the rows it output: every
+    micro-batch's rows in ``append`` mode, the last batch's (the whole
+    result table) in ``complete`` mode. Each kept batch is a local
+    checkpoint, released with the returned frame, so the drain registers
+    nothing in the session."""
+    kept: list[DataFrame] = []
+
+    def keep(batch: DataFrame, _: int) -> None:
+        if mode == "complete":
+            kept.clear()
+        kept.append(batch.localCheckpoint())
+
+    drain(stream_df, keep, mode=mode)
+    if not kept:
+        return local_frame(stream_df.sparkSession, [], stream_df.schema)
+    return reduce(DataFrame.union, kept)
 
 
 def stage_ordered_files(root: str, frames: list[DataFrame]) -> str:
@@ -205,7 +225,7 @@ def foreach_batch_versioned(
     from gcp_etl_pipeline_spark.sinks.versioned import VersionedTable
 
     table = VersionedTable(table_path)
-    return drain(stream_df, checkpoint, versioned_batch_writer(table, keys))
+    return drain(stream_df, versioned_batch_writer(table, keys), checkpoint)
 
 
 def versioned_batch_writer(table, keys: list[str]):
@@ -243,4 +263,4 @@ def foreach_batch_insert_new(
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         insert_new_rows(batch_df, target_path, keys, normalize=False)
 
-    return drain(stream_df, checkpoint, upsert)
+    return drain(stream_df, upsert, checkpoint)

@@ -5,8 +5,9 @@ Each callable lands its input as files in a scratch directory
 mtime-ordered one-file micro-batches (`core.stage_ordered_files`). It then
 runs a Structured Streaming query over those files to completion with
 `core.drain` (full streaming machinery: file source, state store,
-watermark, micro-batches), into the memory sink or through a foreachBatch
-body, and returns the drained rows as the result DataFrame. The oracles
+watermark, micro-batches), through a foreachBatch body, and returns the
+result DataFrame: what the body wrote, or the drained rows themselves
+(`core.drain_rows`, which registers nothing in the session). The oracles
 are batch SQL over the same data — streaming results must converge to the
 batch answer once all data is processed, so a DuckDB twin checks them
 exactly.
@@ -41,7 +42,7 @@ def _q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = core.tumbling_counts(core.read_events_stream(spark, src)).select(
         "window_start", "event_type", "n_events"
     )
-    return spark.table(core.drain(stream, mode="complete").name)
+    return core.drain_rows(stream, mode="complete")
 
 
 register(
@@ -60,7 +61,7 @@ def _q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = core.sliding_counts(
         core.read_events_stream(spark, src), width="1 hour", slide="30 minutes"
     )
-    return spark.table(core.drain(stream, mode="complete").name)
+    return core.drain_rows(stream, mode="complete")
 
 
 # sliding window = each event in width/slide overlapping windows; the
@@ -82,7 +83,7 @@ register(
 def _q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, src = _stage(sf_dir)
     stream = core.session_counts(core.read_events_stream(spark, src), gap="30 minutes")
-    return spark.table(core.drain(stream, mode="complete").name)
+    return core.drain_rows(stream, mode="complete")
 
 
 # built-in session_window: end = last event + gap
@@ -115,7 +116,7 @@ def _q_stream_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame
     stream = stateful.sessionize(
         core.read_events_stream(spark, src), gap_seconds=GAP_S
     )
-    return spark.table(core.drain(stream).name)
+    return core.drain_rows(stream)
 
 
 # custom applyInPandasWithState sessionizer: emits sessions closed by a
@@ -188,8 +189,7 @@ def _q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = core.dedup_within_watermark(
         core.read_events_stream(spark, src), watermark="2 hours"
     )
-    q = core.drain(deduped.select("event_id", "user_id", "event_type"))
-    drained = spark.table(q.name)
+    drained = core.drain_rows(deduped.select("event_id", "user_id", "event_type"))
     return drained.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("event_id").alias("n_ids"),
@@ -244,8 +244,7 @@ def _q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (buys.p_ts <= clicks.c_ts + F.expr("INTERVAL 1 HOUR")),
         "inner",
     )
-    q = core.drain(joined.select("user_id", "click_id", "purchase_id"))
-    drained = spark.table(q.name)
+    drained = core.drain_rows(joined.select("user_id", "click_id", "purchase_id"))
     return drained.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.min("click_id").alias("first_click"),
@@ -392,7 +391,7 @@ def _q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value_micro"),
         )
     )
-    return spark.table(core.drain(stream, mode="complete").name)
+    return core.drain_rows(stream, mode="complete")
 
 
 register(

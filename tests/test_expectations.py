@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from gcp_etl_pipeline_spark.operators import expectations as ex
 
 
@@ -95,28 +99,62 @@ def test_from_spec_contract_rules(spark):
     assert out == {"id_not_null": 1, "d_not_null": 1, "d_date_parseable": 1}
 
 
+def _part_files(path):
+    return sorted(f for f in os.listdir(path) if f.startswith("part-"))
+
+
 def test_enforce_to_quarantine_routes_bad_rows(spark, tmp_path):
     qpath = str(tmp_path / "quarantine")
     df = _df(spark)
-    good = ex.enforce_to_quarantine(df, RULES(), qpath, batch_id="b-7")
-    assert {r.id for r in good.collect()} == {1}
+    with ex.enforce_to_quarantine(df, RULES(), qpath, batch_id="b-7") as good:
+        assert {r.id for r in good.collect()} == {1}
     quar = spark.read.parquet(qpath)
     rows = {r.id: (list(r.failed_rules), r.batch_id) for r in quar.collect()}
     assert rows[4] == (["price_cap", "flag_known"], "b-7")
     assert len(rows) == 3
-    # an all-clean batch adds no rows (the unconditional append of an
-    # empty split adds one empty part file)
+
+
+def test_enforce_to_quarantine_clean_batch_writes_nothing(spark, tmp_path):
+    """A clean batch appends no part file to an existing quarantine table
+    and creates no directory on a fresh path."""
+    qpath = str(tmp_path / "quarantine")
+    with ex.enforce_to_quarantine(_df(spark), RULES(), qpath, batch_id="b-7"):
+        pass
+    before = _part_files(qpath)
     clean = spark.createDataFrame([(9, 1.0, "A")], "id INT, price DOUBLE, flag STRING")
-    ex.enforce_to_quarantine(clean, RULES(), qpath, batch_id="b-8")
+    with ex.enforce_to_quarantine(clean, RULES(), qpath, batch_id="b-8") as good:
+        assert good.count() == 1
+    assert _part_files(qpath) == before
     assert spark.read.parquet(qpath).count() == 3
-    ex.release_quarantine_caches(spark)
+
+    fresh = tmp_path / "fresh_quarantine"
+    with ex.enforce_to_quarantine(clean, RULES(), str(fresh)) as good:
+        assert good.count() == 1
+    assert not fresh.exists()
+
+
+def test_enforce_to_quarantine_releases_its_cache(spark, tmp_path):
+    """The persisted flagged projection lives only as long as the block,
+    also when the block raises."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    prior = persistent().size()
+    with ex.enforce_to_quarantine(_df(spark), RULES(), str(tmp_path / "q1")) as good:
+        good.collect()
+        assert persistent().size() > prior
+    assert persistent().size() == prior
+
+    with pytest.raises(RuntimeError, match="write failed"):
+        with ex.enforce_to_quarantine(_df(spark), RULES(), str(tmp_path / "q2")) as good:
+            good.collect()
+            raise RuntimeError("write failed")
+    assert persistent().size() == prior
 
 
 def test_enforce_to_quarantine_scans_source_once(spark, tmp_path):
-    """The single-scan contract: quarantine write + main (good) write
-    together read the input source exactly once. The source is an
-    instrumented mapInPandas stage counting every row it emits via an
-    accumulator — a second scan would double the count."""
+    """The single-scan contract: the quarantine check and write plus the
+    main (good) write together read the input source exactly once. The
+    source is an instrumented mapInPandas stage counting every row it
+    emits via an accumulator — a second scan would double the count."""
     scanned = spark.sparkContext.accumulator(0)
 
     def gen(batches):
@@ -130,36 +168,15 @@ def test_enforce_to_quarantine_scans_source_once(spark, tmp_path):
 
     n = 1000
     src = spark.range(n).mapInPandas(gen, "id BIGINT, price DOUBLE")
-    good = ex.enforce_to_quarantine(
+    with ex.enforce_to_quarantine(
         src, {"price_cap": ex.predicate("price <= 4.0")},
         str(tmp_path / "quarantine"),
-    )
-    good.write.mode("overwrite").parquet(str(tmp_path / "main"))
+    ) as good:
+        good.write.mode("overwrite").parquet(str(tmp_path / "main"))
     assert scanned.value == n, f"source scanned {scanned.value / n:.1f}x"
     n_good = spark.read.parquet(str(tmp_path / "main")).count()
     n_bad = spark.read.parquet(str(tmp_path / "quarantine")).count()
     assert n_good + n_bad == n and n_good == 715  # residues 0..4 of 7 pass
-    ex.release_quarantine_caches(spark)
-
-    # persist=False opts out: two scans, nothing cached
-    scanned2 = spark.sparkContext.accumulator(0)
-
-    def gen2(batches):
-        import pandas as _pd
-
-        for pdf in batches:
-            scanned2.add(len(pdf))
-            yield _pd.DataFrame(
-                {"id": pdf["id"], "price": [float(i % 7) for i in pdf["id"]]}
-            )
-
-    src2 = spark.range(n).mapInPandas(gen2, "id BIGINT, price DOUBLE")
-    good2 = ex.enforce_to_quarantine(
-        src2, {"price_cap": ex.predicate("price <= 4.0")},
-        str(tmp_path / "q2"), persist=False,
-    )
-    good2.write.mode("overwrite").parquet(str(tmp_path / "main2"))
-    assert scanned2.value == 2 * n
 
 
 def test_distribution_drift_clamps_and_zero_on_identical(spark):

@@ -1,6 +1,7 @@
 """One mechanism for each recurring streaming job: scratch space comes
 from ``session.scratch_dir`` (removed at interpreter exit), and a stream
-is drained only by ``streaming.core.drain``."""
+is drained only by ``streaming.core.drain``, through ``foreachBatch``
+(no memory sink, whose named view would outlive the drain)."""
 
 from __future__ import annotations
 
@@ -15,14 +16,18 @@ import gcp_etl_pipeline_spark
 ROOT = os.path.dirname(gcp_etl_pipeline_spark.__file__)
 
 
+def _modules():
+    """(path relative to the package, parsed module) for every package file."""
+    for path in glob.glob(os.path.join(ROOT, "**", "*.py"), recursive=True):
+        with open(path, encoding="utf-8") as fh:
+            yield os.path.relpath(path, ROOT), ast.parse(fh.read())
+
+
 def _calls_outside(attrs: set[str], owner_file: str, owner_fn: str) -> list[str]:
     """Package call sites of ``x.<attr>(...)`` for ``attrs`` that are not
     inside the function ``owner_fn`` of ``owner_file``."""
     offenders = []
-    for path in glob.glob(os.path.join(ROOT, "**", "*.py"), recursive=True):
-        rel = os.path.relpath(path, ROOT)
-        with open(path, encoding="utf-8") as fh:
-            tree = ast.parse(fh.read())
+    for rel, tree in _modules():
         allowed = {
             id(n)
             for f in ast.walk(tree)
@@ -50,6 +55,27 @@ def test_streams_drain_only_through_drain():
     offenders = _calls_outside(
         {"trigger", "awaitTermination"}, os.path.join("streaming", "core.py"), "drain"
     )
+    assert offenders == []
+
+
+def test_no_memory_sink_in_the_package():
+    """No ``format("memory")`` or ``queryName(`` anywhere in the package."""
+
+    def memory_sink(call: ast.Call) -> bool:
+        attr = call.func.attr
+        return attr == "queryName" or (
+            attr == "format"
+            and any(isinstance(a, ast.Constant) and a.value == "memory" for a in call.args)
+        )
+
+    offenders = [
+        f"{rel}:{n.lineno} {n.func.attr}"
+        for rel, tree in _modules()
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and memory_sink(n)
+    ]
     assert offenders == []
 
 

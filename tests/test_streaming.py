@@ -27,14 +27,13 @@ def events_dir(events_path, tmp_path) -> str:
     return str(d)
 
 
-def _drain(stream_df, name, tmp_path, mode):
-    q = core.drain(stream_df, str(tmp_path / f"ckpt_{name}"), mode=mode)
-    return stream_df.sparkSession.table(q.name)
+def _drain(stream_df, mode):
+    return core.drain_rows(stream_df, mode=mode)
 
 
-def test_tumbling_stream_matches_batch(spark, events_path, events_dir, tmp_path):
+def test_tumbling_stream_matches_batch(spark, events_path, events_dir):
     stream = core.tumbling_counts(core.read_events_stream(spark, events_dir))
-    got = _drain(stream, "t_tumbling", tmp_path, "complete")
+    got = _drain(stream, "complete")
 
     batch = read_parquet(spark, events_path).groupBy(
         (F.floor(F.unix_timestamp("ts") / 3600) * 3600).alias("window_start"),
@@ -46,9 +45,9 @@ def test_tumbling_stream_matches_batch(spark, events_path, events_dir, tmp_path)
     assert g == b
 
 
-def test_session_stream_total_events_conserved(spark, events_path, events_dir, tmp_path):
+def test_session_stream_total_events_conserved(spark, events_path, events_dir):
     stream = core.session_counts(core.read_events_stream(spark, events_dir))
-    got = _drain(stream, "t_sessions", tmp_path, "complete")
+    got = _drain(stream, "complete")
     total = got.agg(F.sum("n_events")).first()[0]
     assert total == read_parquet(spark, events_path).count()
     # session windows for one user never overlap
@@ -68,10 +67,33 @@ def test_dedup_within_watermark_removes_replayed_file(spark, events_path, tmp_pa
     shutil.copy(events_path, src / "b.parquet")
 
     deduped = core.dedup_within_watermark(core.read_events_stream(spark, str(src)))
-    got = _drain(deduped, "t_dedup", tmp_path, "append")
+    got = _drain(deduped, "append")
     n_unique = read_parquet(spark, events_path).count()
     assert got.count() == n_unique
     assert got.select("event_id").distinct().count() == n_unique
+
+
+def test_stream_rows_leave_no_session_view(spark, sf_dir):
+    """A query that returns its drained rows registers nothing in the
+    session: three stream_tumbling calls leave the table list as it was."""
+    import __spark_entry__
+
+    tumbling = __spark_entry__.queries()["stream_tumbling"]
+    before = {t.name for t in spark.catalog.listTables()}
+    for _ in range(3):
+        assert tumbling(spark, sf_dir).count() > 0
+    assert {t.name for t in spark.catalog.listTables()} == before
+
+
+def test_drain_rows_of_an_idle_stream_is_empty(spark, tmp_path):
+    """No micro-batch ran: the result is empty and has the stream's
+    schema."""
+    src = tmp_path / "idle_in"
+    src.mkdir()
+    stream = core.file_stream(spark, "id BIGINT, v STRING", str(src))
+    got = core.drain_rows(stream)
+    assert got.schema == stream.schema
+    assert got.count() == 0
 
 
 def test_foreach_batch_insert_new_idempotent(spark, events_path, tmp_path):

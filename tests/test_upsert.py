@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import sys
 import types
 
@@ -131,22 +132,25 @@ def test_auto_engine_is_versioned_with_history(spark, tmp_path):
 
 
 def test_auto_engine_respects_existing_flat_parquet(spark, tmp_path):
-    """A pre-existing plain parquet directory keeps its flat layout
-    (legacy tier) — auto must not silently convert it to snapshots."""
+    """A pre-existing plain parquet directory is not converted to
+    snapshots and not rewritten in place: without Delta, the upsert
+    raises and the flat table stays as it was."""
     path = str(tmp_path / "flat")
     spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"]).write.parquet(path)
-    upsert(spark.createDataFrame([(2, "B"), (3, "c")], ["id", "v"]), path, ["id"])
+    files = sorted(os.listdir(path))
+    with pytest.raises(ValueError, match="not a versioned table"):
+        upsert(spark.createDataFrame([(2, "B"), (3, "c")], ["id", "v"]), path, ["id"])
+    with pytest.raises(ValueError, match="not a versioned table"):
+        read_table(spark, path)
+    assert sorted(os.listdir(path)) == files
     got = {r.id: r.v for r in spark.read.parquet(path).collect()}
-    assert got == {1: "a", 2: "B", 3: "c"}
+    assert got == {1: "a", 2: "b"}
 
 
 def test_auto_engine_object_store_uri_uses_parquet_tier(spark):
-    """A non-file URI target must not resolve to the POSIX-only
-    versioned tier when Delta is absent."""
-    from gcp_etl_pipeline_spark.operators.upsert import _resolve_engine
-
-    assert _resolve_engine(spark, "s3://bucket/tbl", "auto") == "parquet"
-    assert _resolve_engine(spark, "gs://b/t/", "auto") == "parquet"
-    assert _resolve_engine(spark, "/tmp/definitely_missing_x9", "auto") == (
-        "versioned"
-    )
+    """A non-file URI target cannot use the POSIX-only versioned tier:
+    without Delta, the upsert raises before touching the store."""
+    src = spark.createDataFrame([(1, "a")], ["id", "v"])
+    for uri in ("s3://bucket/tbl", "gs://b/t/"):
+        with pytest.raises(ValueError, match="needs Delta Lake"):
+            upsert(src, uri, ["id"])

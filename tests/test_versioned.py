@@ -45,6 +45,27 @@ def test_rollback_and_vacuum(spark, tmp_path):
     assert t.read(spark).count() == 5
 
 
+def test_unreadable_manifest_raises_instead_of_reading_fresh(spark, tmp_path):
+    """Only a missing manifest means a fresh table: after the manifest is
+    truncated, an upsert and a vacuum raise, and neither creates nor
+    removes a snapshot dir (read as fresh, the upsert would write a
+    10-row 'initial' snapshot and the vacuum would remove the history)."""
+    import json
+    import os
+
+    t = VersionedTable(str(tmp_path / "vt_torn_manifest"))
+    t.write(spark.range(100).selectExpr("id", "'a' AS v"))
+    t.upsert(spark.range(50, 150).selectExpr("id", "'b' AS v"), ["id"])
+    assert t.read(spark).count() == 150
+    open(f"{t.path}/_manifest.json", "w").close()
+    dirs = sorted(d for d in os.listdir(t.path) if d.startswith("v="))
+    with pytest.raises(json.JSONDecodeError):
+        t.upsert(spark.range(10).selectExpr("id", "'c' AS v"), ["id"])
+    with pytest.raises(json.JSONDecodeError):
+        t.vacuum(keep_last=0, grace_seconds=0)
+    assert sorted(d for d in os.listdir(t.path) if d.startswith("v=")) == dirs
+
+
 def test_failed_write_leaves_pointer_untouched(spark, tmp_path):
     t = VersionedTable(str(tmp_path / "vt4"))
     t.write(spark.range(7).selectExpr("id"))

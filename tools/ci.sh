@@ -63,7 +63,14 @@ if [ -n "${SEED:-}" ]; then
 fi
 
 echo "== unit + e2e + plan-assertion tests =="
-python -m pytest tests/ -q
+# same scratch check as the sweep: a test's scratch must not outlive it
+test_tmp="$(mktemp -d)"
+TMPDIR="$test_tmp" python -m pytest tests/ -q
+leftover="$(find "$test_tmp" -maxdepth 1 -name 'graft_*')"
+if [ -n "$leftover" ]; then
+  echo "scratch left behind by the tests:"; echo "$leftover"; exit 1
+fi
+rm -rf "$test_tmp"
 
 echo "== per-query evidence ledger =="
 # the sweeps above stamped EVIDENCE.json; regenerate the table and fail
@@ -74,9 +81,12 @@ python tools/evidence.py --check
 echo "== medallion benchmark workloads (seed 1, one iteration) =="
 # each run checks the warehouse it wrote with DuckDB (dim counts, the run
 # ledger's SUCCESS rows, the overview against its oracle) and exits
-# non-zero when a check fails
+# non-zero when a check fails; the traced run also patches the engine
+# calls the tracer spans, so a renamed or reshaped one fails here
 for w in medallion_batch stream_catalog; do
-  python3 perfbench/run.py --workload "$w" --seed 1 --seconds 0 --trace 0
+  for trace in 0 1; do
+    python3 perfbench/run.py --workload "$w" --seed 1 --seconds 0 --trace "$trace"
+  done
 done
 
 echo "== plan-profile drift check =="
