@@ -258,7 +258,7 @@ def main() -> None:
             # executor blocks via the ContextCleaner only after the
             # Python wrapper is GC'd — without this, blocks from ~100
             # invocations accumulate across the run and squeeze the
-            # storage pool the persisted dims live in
+            # executor storage pool
             del df
             gc.collect()
 

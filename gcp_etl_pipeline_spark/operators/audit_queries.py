@@ -1,4 +1,4 @@
-"""Round-6 corpus-audit queries: gradable cardinality sketching, weighted
+"""Corpus-audit queries: gradable cardinality sketching, weighted
 priority sampling, mutual-kNN graph edges, source-overlap and novelty
 audits. Every oracle replays the engine's md5-derived integer arithmetic
 bit-for-bit (the dedup_queries convention); hex→int folding uses a
@@ -817,7 +817,7 @@ register("bpe_train_merges_k8", _q_bpe_train_k8, _bpe_train_oracle(8))
 
 
 # --------------------------------- bucketed-ANN mutual kNN graph + triangles
-# The at-scale kNN-graph feed, now GRADED (r6 judge watch item): the oracle
+# The at-scale kNN-graph feed, GRADED: the oracle
 # replays the identical Lloyd/auto-lists/probe arithmetic as
 # similarity_bucketed_recall, then the mutualization join and the
 # oriented-edge triangle closure.
@@ -883,7 +883,7 @@ register(
 
 
 # ------------------------------------- winnow spans with the hot-fp cap
-# The max_fp_df guard GRADED (r6 judge #3 follow-through): fingerprints
+# The max_fp_df guard, GRADED: fingerprints
 # selected in more than 3 distinct documents are dropped before the
 # self-join. The oracle replays the cap as a distinct-doc-count filter
 # over the same fps table.

@@ -6,8 +6,7 @@ Spark loop runs (neighbor-min + hash-to-min pointer jump) as a fixed
 chain of linear CTE rounds — each round is one edges⋈labels join plus
 one labels⋈labels jump and a GROUP BY min, so the oracle scales like
 the engine (O(rounds·E)) instead of enumerating the quadratic
-(node, reachable-label) closure a RECURSIVE walk produces (the r5
-exclusion: at sf0.1 the small-vocabulary simhash graph has 3.5M pairs
+(node, reachable-label) closure a RECURSIVE walk produces (at sf0.1 the small-vocabulary simhash graph has 3.5M pairs
 and a half-corpus component; the walk ran for tens of minutes while the
 unrolled chain takes seconds).
 

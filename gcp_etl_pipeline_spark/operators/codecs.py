@@ -348,8 +348,8 @@ def _pdf_streams(data: bytes) -> list[bytes]:
     # non-stream dict and span across it to the next 'stream' keyword.
     # The scan resumes PAST each Length-driven payload (pos), never
     # inside it — stream bytes that happen to contain '<< /Length n >>
-    # stream' must not hijack framing (found by round-12 code review:
-    # the finditer form failed on the writer's own output when a page's
+    # stream' must not hijack framing (a finditer form
+    # of this scan failed on the writer's own output when a page's
     # text mentioned PDF dict syntax).
     pat = re.compile(rb"<<([^<>]*)>>\s*stream(\r\n|\n)")
     pos = 0
@@ -386,11 +386,11 @@ def _pdf_streams(data: bytes) -> list[bytes]:
     # the FLAT-dict pattern cannot match a stream whose dictionary
     # nests another dict (/DecodeParms << ... >>); without this check
     # such a stream would be SILENTLY skipped, against the module's
-    # loud-rejection contract (ADVICE r12). The detector looks for the
+    # loud-rejection contract. The detector looks for the
     # FRAMING SIGNATURE '>> stream<EOL>' outside matched frames — not
     # bare 'stream' tokens, which are legal content anywhere (a title
-    # string '(live stream)' must not abort a valid document; r13
-    # review caught the token form false-rejecting exactly that).
+    # string '(live stream)' must not abort a valid document; a
+    # token form false-rejected exactly that).
     for t in re.finditer(rb">>\s*stream(\r\n|\n)", data):
         o = t.start()
         if not any(s <= o < e for s, e in spans):

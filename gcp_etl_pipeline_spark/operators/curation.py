@@ -1237,7 +1237,7 @@ def robots_filter(
     # In prefix mode two DISTINCT same-length prefixes can never both
     # match one path, so the third key is inert there; under wildcards
     # two distinct same-length patterns CAN both match ('/a*' and
-    # '/*a' on '/aa' — r13 review), and without the total order the
+    # '/*a' on '/aa'), and without the total order the
     # matched_prefix pick would be nondeterministic. max_by skips the
     # null no-match row, so an unmatched URL aggregates to NULL and
     # coalesces to the default-allow verdict.

@@ -31,8 +31,8 @@ def _scan(spark: SparkSession, path: str) -> DataFrame:
 def _sql_lit(s: str) -> str:
     """A DuckDB single-quoted string literal: the ONE escape path every
     pattern and literal interpolated into oracle SQL goes through
-    (ADVICE r9 — a hand-interpolated pattern with a quote would silently
-    corrupt an oracle)."""
+    (a hand-interpolated pattern with a quote would silently corrupt an
+    oracle)."""
     return "'" + s.replace("'", "''") + "'"
 
 
@@ -1432,7 +1432,7 @@ def phash_ledger_corpus(spark: SparkSession) -> DataFrame:
     streaming band-ledger twins — generated once per session and cached
     as parquet, so repeated runs (bench warm-up + timed passes, and the
     two twins inside one sweep) measure the ENGINE lifecycles, not
-    repeated in-query PNG generation (r8 judged the streaming twin's
+    repeated in-query PNG generation (which made the streaming twin's
     bench slot fixture-dominated at 13.2s)."""
     return _session_cached_parquet(
         spark,
@@ -1460,7 +1460,7 @@ def _session_cached_path(spark, tag: str, build, validate):
     caller's handle (a DataFrame, the path, ...) or raises to force ONE
     regeneration. Thread-safe (module-level RLock around the
     check-and-generate), resilient to a tmp cleaner deleting the
-    directory between validation and read (ADVICE r9)."""
+    directory between validation and read."""
     import os
 
     from gcp_etl_pipeline_spark.session import scratch_dir
@@ -1827,7 +1827,7 @@ def html_intake_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     twins, generated once per (session, sf_dir) and cached as parquet —
     the phash_ledger_corpus economics: bench warm-up + timed passes and
     the two twins inside one sweep measure the intake CHAIN, not
-    repeated page wrapping (r9 judged the streaming twin's bench slot
+    repeated page wrapping (which made the streaming twin's bench slot
     fixture-heavy at ~10s)."""
     import re as _re
 
@@ -3704,8 +3704,8 @@ def frontier_stream_src(spark: SparkSession, sf_dir: str) -> str:
     rule converge to the batch chain's global min)."""
 
     def halves() -> list[DataFrame]:
-        # plain read, NOT _scan (the dataset_split carve-out, ADVICE
-        # r13): the stager lands each half via coalesce(1) — one task
+        # plain read, NOT _scan (the dataset_split carve-out): the
+        # stager lands each half via coalesce(1) — one task
         # regardless — so a spread exchange buys nothing and breaks the
         # key-ordered file layout this docstring promises
         orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
@@ -3927,7 +3927,7 @@ _CACHE_HDR = (
 def _cache_responses(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared (url_id, headers) fixture both cache queries grade
     against — ONE construction, so a header-class edit can never
-    silently diverge the two (r13 review)."""
+    silently diverge the two."""
     ev = _scan(spark, f"{sf_dir}/events.parquet")
     es = "(unix_micros(CAST(ts AS TIMESTAMP)) DIV 1000000)"
     fmt = (
@@ -4178,10 +4178,10 @@ def _warc_record_rows(
     """(blob_id, doc_id, record) rows for the WARC fixtures — the one
     payload->framed-record builder every store fixture (plaintext,
     pdf-branch, digest-dedup, compressed) derives from, mirroring the
-    oracle side's payload_expr parameter on _warc_walk_ctes (round-12
-    review: three hand-copied twins of this block could drift)."""
+    oracle side's payload_expr parameter on _warc_walk_ctes (three
+    hand-copied twins of this block could drift)."""
     nl = "chr(13) || chr(10)"
-    # plain read, NOT _scan (r14 A/B, the r13-judge flagged row): the
+    # plain read, NOT _scan (A/B): the
     # sentence explode + md5 shrink rows before the df-count shuffle,
     # and the spread exchange shuffled full document payloads for less
     # map work than the exchange cost (2.26 -> 0.99 s warm)
@@ -4635,7 +4635,7 @@ def _warcgz_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Build shape: per-RECORD compression in one Arrow-batched
     mapInPandas pass, then a JVM binary-concat aggregate per blob —
     measured 40x faster than applyInPandas-per-blob (8-row pandas
-    groups drown in per-group overhead; SCALE.md round 12)."""
+    groups drown in per-group overhead; SCALE.md)."""
     from gcp_etl_pipeline_spark.operators.text import gzip_member
 
     rec = _warc_record_rows(spark, sf_dir, _WARCGZ_PAYLOAD)
@@ -5987,7 +5987,7 @@ def recrawl_stream_src(spark: SparkSession, sf_dir: str) -> str:
 
     def halves() -> list[DataFrame]:
         # plain read, NOT _scan: single-task coalesce(1) landing — see
-        # frontier_stream_src's carve-out comment (ADVICE r13)
+        # frontier_stream_src's carve-out comment
         ev = read_parquet(spark, f"{sf_dir}/events.parquet")
         fetches = ev.select(
             F.expr(_FETCH_URL_ID).alias("url_id"),
@@ -6039,7 +6039,7 @@ def _q_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     slogan signal. Only 32-byte sentence fingerprints shuffle."""
     from gcp_etl_pipeline_spark.operators import text as _text
 
-    # plain read, NOT _scan (r14 A/B, the r13-judge flagged row): the
+    # plain read, NOT _scan (A/B): the
     # sentence explode + md5 shrink rows before the df-count shuffle,
     # and the spread exchange shuffled full document payloads for less
     # map work than the exchange cost (2.26 -> 0.99 s warm)
@@ -6133,7 +6133,7 @@ def _q_fetch_due_queue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from gcp_etl_pipeline_spark.operators import curation as _cur
 
-    # plain read, NOT _scan (r14 A/B, flagged row): thin projection
+    # plain read, NOT _scan (A/B): thin projection
     # straight into window/join exchanges — spread was pure overhead
     # (2.38 -> 1.48 s warm)
     ev = read_parquet(spark, f"{sf_dir}/events.parquet")
@@ -6267,7 +6267,7 @@ def _q_host_latency_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate."""
     from pyspark.sql import Window
 
-    # plain read, NOT _scan (r14 A/B, ADVICE thin-aggregate item): the
+    # plain read, NOT _scan (A/B, a thin aggregate): the
     # one light projection lands in a host-window shuffle anyway
     # (0.87 -> 0.55 s warm)
     ev = read_parquet(spark, f"{sf_dir}/events.parquet")
@@ -7324,7 +7324,7 @@ register(
 
 def _q_recrawl_sitemap_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discovery-freshness composed into the recrawl scheduler (the
-    r12 judge's integration gap): the robots->sitemap->page-URL
+    integration of the two intake chains): the robots->sitemap->page-URL
     pipeline's <lastmod> hints join the fetch-log change model, and a
     URL whose sitemap declares a modification AFTER our last observed
     fetch jumps the due queue (next_due = last fetch, i.e. due now)

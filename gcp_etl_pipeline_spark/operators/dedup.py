@@ -369,8 +369,8 @@ def neardup_incremental(
         # "stacked minus ALL dropped ids" — deriving it from the cached
         # band table and the just-checkpointed ids lets the append
         # compute it in one anti-join instead of paying a second
-        # window+store-read materialization (r13 "ledger second
-        # checkpoint" item): the write below executes INSIDE the guard,
+        # window+store-read materialization (a second ledger
+        # checkpoint): the write below executes INSIDE the guard,
         # its only ledger input is the checkpointed id set, and its own
         # output goes to a path the pinned listing excludes.
         dropped = dropped.localCheckpoint(eager=True)

@@ -327,8 +327,8 @@ CDC_CHUNK_CTES = """
 def excise_replay_oracle(split_preds: list[str], extra_cte: str = "") -> str:
     """The ONE DuckDB replay oracle for ``substring_excise_incremental``
     lifecycles, shared by the batch-compaction and streaming graded
-    queries so the two can never desynchronize (the BPE-helper lesson,
-    ADVICE r7). Replays N sequential increments: increment i's excise
+    queries so the two can never desynchronize (as the shared BPE
+    helpers do). Replays N sequential increments: increment i's excise
     set is its own in-batch hot chunks (doc-freq ≥ 2) UNION every chunk
     fingerprint any PRIOR increment contributed (the ledger writes each
     batch's complete distinct fp set, kept and excised alike).
@@ -1270,8 +1270,8 @@ def _q_vector_ops_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     no Python at all: quantize with transform, dot products with
     zip_with + aggregate, norms and a cosine from the same exact int64
     recipe the Arrow path uses. The per-element expression interpretation
-    makes this ~30x the Arrow matmul's cost at corpus scale (measured in
-    round 2 — which is WHY the hot paths use mapInPandas), but it is the
+    makes this ~30x the Arrow matmul's cost at corpus scale (measured —
+    which is WHY the hot paths use mapInPandas), but it is the
     right tool for a handful of ad-hoc rows and proves the HOF surface.
     Each vector is scored against the lowest-id corpus vector."""
     embs = _embs(spark, sf_dir)
@@ -2189,7 +2189,7 @@ register(
 
 # ---------------- IVF+PQ composition (IVFADC — coarse lists + residual PQ)
 
-# Geometry from the r13 sweep (numpy simulation cross-checked against
+# Geometry from a parameter sweep (numpy simulation cross-checked against
 # the DuckDB oracle at sf0.01): kmeans coarse, 16 lists / 6 probes,
 # m=32 x ksub=64 residual PQ -> recall 32/50 at 39% of codes scanned,
 # vs the flat knn_pq scan's 26/50 at 100% (same k). Lowest-id coarse
@@ -2206,7 +2206,7 @@ _IVFPQ_DSUB = _IVFPQ_DIM // _IVFPQ_M
 def _guard_fixture_dim(sf_dir: str) -> None:
     """Fail LOUDLY if the fixture's embedding width drifts from the
     ``_IVFPQ_DIM`` both the static ``_l2q_n`` unrolls and the SQL
-    oracles hardcode (ADVICE r13): with a wider fixture, element_at
+    oracles hardcode: with a wider fixture, element_at
     past the constant would silently sum only the first ``_IVFPQ_DIM``
     components on BOTH engines and the differential gate would pass on
     a wrong ground truth. One pyarrow metadata+first-row read per

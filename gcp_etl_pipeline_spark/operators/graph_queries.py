@@ -106,7 +106,7 @@ register("graph_pagerank", _q_pagerank, _oracle())
 _INC_HI = "46"  # base graph < '40'; the full graph adds the 40..45 slice
 _INC_MAX = 4
 # the tolerance is a DIAL; this fixture value deliberately lands the
-# gate differently per scale factor (measured at round-12 build): at
+# gate differently per scale factor (measured): at
 # sf0.001 it never fires (all 4 rounds live), at sf0.01 it fires on
 # the final round, at sf0.1 it fires after round 1 — so the sweeps
 # exercise the no-fire, fire-at-last, and fire-early + carry-forward
@@ -522,8 +522,8 @@ def _hits_inc_oracle() -> str:
     # seed must coalesce over the full BASE node table first (0 for
     # base nodes missing from the sparse bh{{N}} frame), and only
     # nodes absent from the base graph entirely seed at HITS_SCALE
-    # (ADVICE r12: seeding straight off sparse bh{{N}} silently gave
-    # base sinks 1,000,000 instead of the engine's 0).
+    # (seeding straight off sparse bh{{N}} would silently give base
+    # sinks 1,000,000 instead of the engine's 0).
     parts.append(
         f"""
     bprev AS MATERIALIZED (

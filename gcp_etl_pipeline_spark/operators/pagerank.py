@@ -132,7 +132,7 @@ def pagerank_warm(
     per round — by round ~20 bare analysis of the 2^20-node tree would
     dwarf the actual jobs (the plan-census caught the warm query at
     17k operators in persist form). The checkpoint is LAZY
-    (``eager=False``, r14): the logical plan is truncated at creation
+    (``eager=False``): the logical plan is truncated at creation
     either way (LogicalRDD), but laziness lets each round's GATE
     aggregate materialize the generation's blocks in the SAME action —
     one driver round trip per iteration instead of two (A/B:

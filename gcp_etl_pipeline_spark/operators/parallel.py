@@ -37,8 +37,7 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
 # scan yields), not data — fixtures are immutable for a process
 # lifetime, so re-deriving it for every query construction over the
 # same path only re-pays the logical→physical planning round the probe
-# forces (ADVICE r13: avoidable driver latency × hundreds of
-# constructions).
+# forces (avoidable driver latency × hundreds of constructions).
 _SCAN_DECISIONS: dict[tuple[str, int], bool] = {}
 
 

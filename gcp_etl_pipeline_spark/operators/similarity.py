@@ -85,7 +85,7 @@ def _release_on_gc(out: DataFrame, *cached: DataFrame) -> DataFrame:
     no safe point before the caller's action. Why not an eager/lazy
     ``localCheckpoint`` of the reused leg: the block-manager round trip
     of the full vector frame cost the similarity family ~0.3–0.5 s per
-    query at sf0.1 in round 4 (measured: lazy-checkpoint 1.17/1.35 s vs
+    query at sf0.1 (measured: lazy-checkpoint 1.17/1.35 s vs
     persist 0.91/0.87 s for neardup_lsh/semantic_dedup). The finalizer
     keeps persist-level speed and releases exactly when the result can
     no longer re-execute its lineage. Callers that hold the result
@@ -334,7 +334,7 @@ def kmeans_centroids(
     Physical shape per iteration: ONE fused assignment+partial-sums
     matmul pass (mapInPandas — each batch emits k×dim (list, dim,
     partial sum, count) rows) + a tiny k×dim final aggregate that
-    collects to the driver. The r13 shape shuffled n×dim posexploded
+    collects to the driver. A join shape would shuffle n×dim posexploded
     (list, dim, value) rows per iteration to compute those same sums;
     integer addition is associative, so per-batch partials are exact
     and partitioning-independent (guide §2.3 "aggregate before you
@@ -882,7 +882,7 @@ def knn_triangles_bucketed(
 
     The list count is resolved HERE (one ``corpus.count()`` at most,
     none when ``n_lists``/``n_vectors`` is given) and passed down
-    concrete, so the edge build never re-derives it (ADVICE r7)."""
+    concrete, so the edge build never re-derives it."""
     if n_lists is None:
         n_lists = auto_n_lists(
             n_vectors if n_vectors is not None else corpus.count()
@@ -1333,7 +1333,7 @@ def pq_codebook(
     per-(sub, code, dim) sums — ``_lloyd_stats_rows``) feeding an
     m*ksub*dsub integer-sum aggregate that collects to the driver
     (1k rows at the defaults). No corpus-sized shuffle per round: the
-    r13 join form shuffled every (vec_id, sub, sv) row per iteration
+    join form would shuffle every (vec_id, sub, sv) row per iteration
     to compute an argmin nothing downstream needed per id. The
     returned codebook is m*ksub literal rows — broadcast scale at any
     corpus size."""
@@ -1347,7 +1347,7 @@ def pq_codebook(
         .limit(ksub)
         .collect()
     )
-    # misconfiguration fails loudly (ADVICE r12): a non-divisible dim
+    # misconfiguration fails loudly: a non-divisible dim
     # would silently exclude the trailing dim - m*dsub components from
     # every code and every distance; an undersized corpus would seed a
     # degenerate codebook (or IndexError on empty).
@@ -1420,8 +1420,8 @@ def pq_codes(
     subspace — guide §4.2); nothing corpus-sized shuffles or joins.
     The codebook is m*ksub literal rows by contract (``pq_codebook``'s
     output) — it is pulled to the driver and closed over, replacing
-    the broadcast join + (vec_id, sub) min-struct shuffle the r13 form
-    paid per encode. ``carry`` columns pass through unchanged (lets
+    the broadcast join + (vec_id, sub) min-struct shuffle a join form
+    pays per encode. ``carry`` columns pass through unchanged (lets
     ``ivfpq_index`` keep list_id on the code rows without a
     corpus-sized re-join on vec_id)."""
     import pyarrow as pa
@@ -1497,7 +1497,7 @@ def knn_pq(
     shape) — self-matches are excluded by comparing neighbor ids
     against query ids, so a disjoint query-id space that happens to
     collide with corpus ids would silently drop an unrelated neighbor
-    (ADVICE r12)."""
+    """
     from pyspark.sql import Window
 
     dim = len(corpus.select(vec_col).first()[0])
@@ -1556,7 +1556,7 @@ class IvfPqIndex:
     code identity per vector; ``assigned`` (vec_id, list_id) is the
     membership map (kept for scanned-candidate accounting). ``dim``
     and ``dsub`` are recorded at build time so search calls never pay
-    a Spark action just to re-learn geometry (r13 review)."""
+    a Spark action just to re-learn geometry."""
 
     def __init__(self, cent, codebook, assigned, codes, dim, dsub):
         self.cent = cent
@@ -1616,13 +1616,13 @@ def ivfpq_index(
     m=1 subspace and ksub=n_lists codes, so the coarse and fine
     quantizers share one exactness discipline and one oracle unroll.
     Density-following lists more than double pruned-recall over
-    lowest-id seeding (geometry sweep, SCALE.md r13);
+    lowest-id seeding (geometry sweep, SCALE.md);
     ``coarse="lowest_id"`` keeps the seeded placement for A/B.
 
     Plan shape: coarse assignment + residual subtraction fuse into ONE
     Arrow pass over the corpus (vectorized exact-int64 argmin, the
-    ``_ivf_assign`` matmul shape — no join, no corpus shuffle; the r13
-    form shuffled every (vec_id, d2, list_id, __qv) row through a
+    ``_ivf_assign`` matmul shape — no join, no corpus shuffle; a join
+    form would shuffle every (vec_id, d2, list_id, __qv) row through a
     min-struct aggregate); training/encoding is pq_codebook's
     bounded-collect Lloyd loop, and the encode CARRIES list_id through
     the Arrow pass instead of re-joining the corpus-sized codes frame
@@ -1645,7 +1645,7 @@ def ivfpq_index(
     else:
         # loud misconfiguration (the robots_filter scope contract): a
         # typo'd coarse mode silently falling back to lowest-id seeding
-        # would roughly halve pruned recall per the r13 sweep
+        # would roughly halve pruned recall per the geometry sweep
         raise ValueError(
             f"ivfpq_index: coarse must be 'kmeans' or 'lowest_id', "
             f"got {coarse!r}"

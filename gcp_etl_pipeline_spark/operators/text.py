@@ -261,7 +261,7 @@ def content_defined_chunks(
 
 # Shared BPE building blocks — ONE definition used by both the trainer and
 # the apply-side stats so a tie-break or fold change can never desynchronize
-# them (ADVICE r7). Greedy left-to-right merge fold over a token's symbol
+# them. Greedy left-to-right merge fold over a token's symbol
 # array, referencing the broadcast pair columns x/y; NULL x/y (empty top
 # pair) falls through to the append branch, i.e. a no-op merge.
 _BPE_MERGE_FOLD = (
@@ -325,7 +325,7 @@ def _bpe_apply_top(vocab: DataFrame, top: DataFrame) -> DataFrame:
 
 # lineage truncation pays only once the O(rounds^2) re-unroll tax
 # exceeds the per-generation block-manager round trip: at k<=3 the lazy
-# unroll benched 1.31s vs 1.9s checkpointed (round-12 close), at k=8
+# unroll benched 1.31s vs 1.9s checkpointed, at k=8
 # the checkpointed form is 4.8x FASTER (10.8s -> 2.3s, SCALE.md) — so
 # generations are pinned only above this round count
 _BPE_CHECKPOINT_MIN_ROUNDS = 3
@@ -355,9 +355,9 @@ def bpe_train_merges(
     Ties break deterministically (count desc, x asc, y asc). Each
     generation's vocab is ``localCheckpoint(eager=True)``-pinned:
     lineage truncation WITHOUT an InMemoryRelation leg. Measured
-    same-session at sf0.1/k=8 (SCALE.md round-12): lazy unroll 10.8s
+    same-session at sf0.1/k=8 (SCALE.md): lazy unroll 10.8s
     median (the O(rounds²) re-unroll tax), persist-per-generation 26.6s
-    (r11 A/B — InMemoryRelation blocks codegen fusion), localCheckpoint
+    (A/B — InMemoryRelation blocks codegen fusion), localCheckpoint
     2.3s — 4.8x faster than lazy. The vocab table is MBs (distinct
     tokens), so the checkpointed blocks are tiny, and ContextCleaner
     frees RDD blocks on GC (unlike SQL-layer cache entries), so nothing
@@ -514,7 +514,7 @@ def normalize_url(url: Column | str) -> Column:
     # scheme-less / relative input has no authority to normalize — the
     # generic path would mint '://' + a lowercased prefix as a fake
     # authority, silently MERGING distinct malformed frontier entries.
-    # Pass such rows through untouched instead (ADVICE r9).
+    # Pass such rows through untouched instead.
     #
     # The scheme leg is locate/substring, not URL_SCHEME_RE: scheme
     # chars exclude ':' and '/', so the FIRST '://' occurrence decides
@@ -522,7 +522,7 @@ def normalize_url(url: Column | str) -> Column:
     # then runs over the few-char prefix only. The earlier form ran the
     # full scheme regex three times per row (rlike guard + extract +
     # replace; CASE branches get no common-subexpression elimination)
-    # and benched 1.2x of this one (r11 5x-warm A/B; equivalence
+    # and benched 1.2x of this one (5x-warm A/B; equivalence
     # checked over proto-relative, embedded-'://', mailto and empty
     # adversarial forms in tests).
     c = F.col(url) if isinstance(url, str) else url
@@ -1586,7 +1586,7 @@ FEED_LINK_TAG_RE = "(?is)<link\\b([^>]*)>"
 # the (?:^|[^-\w]) guard (an explicit boundary class — RE2 has no
 # lookbehind, so the oracle twin shares the consumed-char form) stops
 # 'rel' matching inside 'data-rel', 'href' inside 'data-href' etc.
-# (r13 review: a data-rel="nofollow" attribute shadowed the real rel)
+# (a data-rel="nofollow" attribute used to shadow the real rel)
 _ATTR_DQ = "(?is)(?:^|[^-\\w]){name}\\s*=\\s*\"([^\"]*)\""
 _ATTR_SQ = "(?is)(?:^|[^-\\w]){name}\\s*=\\s*'([^']*)'"
 FEED_MIME_KIND = {

@@ -21,11 +21,14 @@ Every stage function takes (spark, sf_dir) and returns an unmaterialized
 DataFrame; `oracle()` returns the equivalent DuckDB SQL so the pair can be
 differentially tested. Scale: dims/helpings are broadcast into the fact;
 the lineitem⋈orders co-key join is left to AQE (sort-merge w/ skew split).
+
+The star is built one way: every materialization (the stages below, the
+pipeline and catalog verticals over the layers they wrote, the stream per
+micro-batch) composes the ``REGISTRIES`` candidates, ``retailer_dim_from``,
+``fact_from`` and ``overview_from_tables``. Nothing here is persisted.
 """
 
 from __future__ import annotations
-
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,73 +40,6 @@ from gcp_etl_pipeline_spark.operators.normalize import norm_key
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
-
-
-# Reference R1: every curated job persists its reused inputs
-# (`...sales_fact_01.py:156`). The star queries reuse the small helpings/
-# lookups several times within one tree (fact build + overview joins), so
-# they are persisted once per (session, sf_dir) — dims are KB-to-MB sized,
-# and on a cluster this is exactly the table you'd broadcast anyway.
-# Bounded: entries beyond _DIM_CACHE_MAX evict (and unpersist) oldest-
-# first, and `clear_dim_cache()` releases everything — a long-lived
-# service calls it between batches. The materialized pipeline never fills
-# it: its jobs read the tables their dependencies wrote. Callers may share
-# the cache across threads, so every access holds _DIM_LOCK; it is
-# re-entrant because a stage build (retailer_dim) takes another stage
-# from the cache.
-_DIM_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_DIM_CACHE_MAX = 64
-_DIM_LOCK = threading.RLock()
-
-
-def _cached(name: str, fn, spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    with _DIM_LOCK:
-        df = _DIM_CACHE.get(key)
-        if df is None:
-            while len(_DIM_CACHE) >= _DIM_CACHE_MAX:
-                oldest = next(iter(_DIM_CACHE))
-                try:
-                    _DIM_CACHE.pop(oldest).unpersist()
-                except Exception:  # noqa: BLE001 — session may be gone
-                    pass
-            df = fn(spark, sf_dir).persist()
-            _DIM_CACHE[key] = df
-        return df
-
-
-def cached_stage(name: str, spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Public handle on the bounded dim cache for OTHER materialization
-    paths of the same vertical (e.g. the catalog writer): a caller that
-    needs ``method_hlp`` et al. as a DataFrame gets the session-persisted
-    build instead of re-running the stage the path-vertical already built.
-    Only the dimension-sized stages are cacheable — the fact is the
-    100-TB table and must stream, never persist."""
-    fns = {
-        "method_hlp": method_hlp,
-        "retailer_hlp": retailer_hlp,
-        "product_lkp": product_lkp,
-        "retailer_dim": retailer_dim,
-        "go_methods": go_methods,
-    }
-    return _cached(name, fns[name], spark, sf_dir)
-
-
-def clear_dim_cache(spark: SparkSession | None = None) -> None:
-    """Unpersist and drop cached dims (between-batch hygiene for
-    long-lived sessions). With ``spark`` given, only THAT application's
-    entries are evicted — concurrent pipelines in other sessions keep
-    their persisted dims."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    with _DIM_LOCK:
-        for key in list(_DIM_CACHE):
-            if app is not None and key[0] != app:
-                continue
-            df = _DIM_CACHE.pop(key)
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001
-                pass
 
 
 # ---------------------------------------------------------------- raw layer
@@ -226,10 +162,7 @@ def retailer_dim_from(r: DataFrame, rh: DataFrame) -> DataFrame:
 
 
 def retailer_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return retailer_dim_from(
-        go_retailers(spark, sf_dir),
-        _cached("retailer_hlp", retailer_hlp, spark, sf_dir),
-    )
+    return retailer_dim_from(go_retailers(spark, sf_dir), retailer_hlp(spark, sf_dir))
 
 
 def fact_from(
@@ -275,18 +208,16 @@ def fact_from(
 
 
 def sales_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``fact_from`` over the sources and the session-cached dims.
-    Deliberately NOT persisted: an A/B at sf0.1 showed caching the full
-    fact costs more to materialize (~2 s) than its one recompute inside
-    sales_overview (~1.6 s). The materialized pipeline does not recompute
-    it at all: its semantic layer reads the WRITTEN curated fact
-    (plans/gosales_pipeline.py)."""
+    """``fact_from`` over the sources and the registries built from them.
+    Nothing is persisted: every call reads the sources as they are now.
+    The materialized pipeline does not rebuild the registries: its fact
+    joins the WRITTEN ones (plans/gosales_pipeline.py)."""
     return fact_from(
         go_daily_sales(spark, sf_dir),
-        _cached("retailer_hlp", retailer_hlp, spark, sf_dir),
-        _cached("product_lkp", product_lkp, spark, sf_dir),
-        _cached("go_methods", go_methods, spark, sf_dir),
-        _cached("method_hlp", method_hlp, spark, sf_dir),
+        retailer_hlp(spark, sf_dir),
+        product_lkp(spark, sf_dir),
+        go_methods(spark, sf_dir),
+        method_hlp(spark, sf_dir),
     )
 
 
@@ -295,6 +226,8 @@ def sales_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
     stringified date, 3-way surrogate-key star join, 4 aggregates, GROUP BY
     the 8 dimensions. Float sums via exact µ-unit integers (deterministic
     at any parallelism).
+
+    Each registry is built once and feeds both the fact and the rollup.
 
     Physical shape: the fact is PRE-aggregated on its narrow integer keys
     (+ date string) BEFORE the dim joins — the big shuffle carries 4 ints
@@ -305,10 +238,11 @@ def sales_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single-level grouping (dim keys → attributes is functional, and
     attribute collisions merge in the outer aggregate exactly as they
     would have in a direct GROUP BY)."""
-    sf = sales_fact(spark, sf_dir)
-    rd = _cached("retailer_dim", retailer_dim, spark, sf_dir)
-    pl = _cached("product_lkp", product_lkp, spark, sf_dir)
-    mh = _cached("method_hlp", method_hlp, spark, sf_dir)
+    rh = retailer_hlp(spark, sf_dir)
+    pl = product_lkp(spark, sf_dir)
+    mh = method_hlp(spark, sf_dir)
+    sf = fact_from(go_daily_sales(spark, sf_dir), rh, pl, go_methods(spark, sf_dir), mh)
+    rd = retailer_dim_from(go_retailers(spark, sf_dir), rh)
     return overview_from_tables(sf, rd, pl, mh)
 
 

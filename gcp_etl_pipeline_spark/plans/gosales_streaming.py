@@ -20,10 +20,11 @@ Design notes (the at-scale contracts):
     maintenance anti-joins the already-written keys, and the fact write
     OVERWRITES its own batch=<id> partition, so a crash-and-replay never
     duplicates rows; key assignment is deterministic given arrival order;
-  - the method registry (`go_methods`) is folded into a projection
-    (``method_name = split_part(code, '-', 2)``) because the mapping is
-    functional on the code — one less maintained table in the hot path,
-    same final semantics (verified against the batch build in tests);
+  - each batch's facts are enriched by ``gosales.fact_from``, the batch
+    fact's own recipe, against the written registries and the static
+    ``go_methods`` master, so the stream fact cannot drift from the batch
+    fact; new method names are discovered with the master's own
+    ``split_part(code, '-', 2)`` projection;
   - final-state equality: surrogate KEY VALUES depend on arrival order,
     but the key→attribute mapping is functional, so the semantic overview
     (grouped by display attributes) from streaming-built tables equals
@@ -69,7 +70,7 @@ def _maintain_dim(
     return insert_new_rows(cand, path, nat_keys, normalize=False, key_col=key_col)
 
 
-def _process_batch(warehouse: str, retailers_static, products_static):
+def _process_batch(warehouse: str, products_static, methods_static):
     """foreachBatch body builder. The static masters arrive pre-built so
     every batch reuses the same (broadcastable) DataFrames."""
 
@@ -108,40 +109,12 @@ def _process_batch(warehouse: str, retailers_static, products_static):
             )
 
             # --- enrich THIS batch's facts against the updated dims
-            rh = read_target(spark, f"{warehouse}/retailer_hlp")
-            pl = read_target(spark, f"{warehouse}/product_lkp")
-            mh = read_target(spark, f"{warehouse}/method_hlp")
-            src = batch.withColumn(
-                "method_name", F.expr("split_part(order_method_code, '-', 2)")
-            )
-            fact = (
-                src.join(
-                    F.broadcast(rh),
-                    norm_key(src.retailer_code) == norm_key(rh.retailer_code),
-                    "left",
-                )
-                .join(
-                    F.broadcast(pl),
-                    norm_key(src.product_number) == norm_key(pl.product_number),
-                    "left",
-                )
-                .join(
-                    F.broadcast(mh),
-                    norm_key(src.method_name) == norm_key(mh.method_name),
-                    "left",
-                )
-                .select(
-                    "retailer_key",
-                    "product_key",
-                    "method_key",
-                    "sale_date",
-                    F.col("quantity").cast("int").alias("sell_quantity"),
-                    pl.unit_price.cast("float").alias("buying_unit_price"),
-                    src.unit_price.cast("float").alias("ask_selling_unit_price"),
-                    F.col("unit_sale_price").cast("float").alias(
-                        "selling_unit_price"
-                    ),
-                )
+            fact = gosales.fact_from(
+                batch,
+                read_target(spark, f"{warehouse}/retailer_hlp"),
+                read_target(spark, f"{warehouse}/product_lkp"),
+                methods_static,
+                read_target(spark, f"{warehouse}/method_hlp"),
             )
             # batch-id-keyed directory, OVERWRITTEN on write: foreachBatch
             # is at-least-once, so a plain append would duplicate this
@@ -165,11 +138,11 @@ def run_streaming_gosales(
     """Drain everything currently staged in ``raw_dir`` through the
     continuous pipeline (availableNow; a production deployment runs the
     same query with a processing-time trigger and it never stops)."""
-    retailers = gosales.go_retailers(spark, sf_dir)
     products = gosales.go_products(spark, sf_dir)
+    methods = gosales.go_methods(spark, sf_dir)
     drain(
         file_stream(spark, RAW_SCHEMA, raw_dir),
-        _process_batch(warehouse, retailers, products),
+        _process_batch(warehouse, products, methods),
         f"{warehouse}/_ckpt",  # stable: a re-drain resumes, processes nothing old
     )
 

@@ -1688,7 +1688,7 @@ register(
 
 
 # --------------------------------------------------------------------------
-# §2.7/§1.2 extras (round 3).
+# §2.7/§1.2 extras.
 
 # Schema evolution on read: two parquet drops with overlapping-but-
 # different schemas (a column added later), merged with mergeSchema=true —

@@ -8,7 +8,9 @@ The reference addresses layers by bucket prefix (`jobs/raw/dl_rw_job.py:103`,
 catalog names here). This module gives the engine the same abstraction:
 jobs write ``saveAsTable("curated.sales_fact")`` and downstream SQL reads
 ``spark.table("curated.sales_fact")`` — location, format, and schema come
-from the catalog, not the caller.
+from the catalog, not the caller. ``run_gosales_catalog`` builds every
+GoSales layer from the catalog tables the layer below it wrote, with the
+same recipes as the path-addressed pipeline, and persists nothing.
 
 Scale notes: a catalog table is the same parquet directory underneath —
 partition pruning, pushdown, and dynamic partition overwrite behave
@@ -62,7 +64,7 @@ def sized_for_write(
 ) -> DataFrame:
     """Coalesce ``df`` to ≈ceil(source_bytes / target) partitions before
     a ``saveAsTable``: AQE's partition coalescing does not reach the V1
-    CTAS path and a REBALANCE hint is ignored there (measured, r13), so
+    CTAS path and a REBALANCE hint is ignored there (measured), so
     without this a narrow semantic table lands as one near-empty file
     per task of its final stage — the small-files tax (guide §6) on
     every catalog write. ``coalesce`` never ADDS an exchange and never
@@ -102,30 +104,28 @@ def register_external(spark: SparkSession, name: str, path: str) -> None:
 
 def run_gosales_catalog(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """The GoSales vertical THROUGH the catalog: every curated table is
-    written with ``saveAsTable`` and every downstream read goes through
-    ``spark.table`` — no path strings below this function. Returns the
-    semantic overview read back from ``semantic.tl_sales_overview``
+    written with ``saveAsTable`` and each layer is built from the catalog
+    tables the layer below wrote (reference EP2/EP3, as
+    `plans/gosales_pipeline.py` does over paths). Returns the semantic
+    overview read back from ``semantic.tl_sales_overview``
     (result-identical to the inline `plans/gosales.py` build; differential
     oracle `gosales.oracle('sales_overview')`)."""
     from gcp_etl_pipeline_spark.plans import gosales
 
     ensure_namespaces(spark, root)
-    # dim/helping/lookup builds come from the session dim cache
-    # (plans/gosales.py): when the path-vertical already built them this
-    # session — the bench and any mixed path+catalog deployment — the
-    # catalog writes re-read the persisted build instead of re-running
-    # surrogate-key windows and joins. The fact is NOT cached (it is the
-    # at-scale table); its build reuses the same cached dims internally.
-    for t in ("method_hlp", "retailer_hlp", "product_lkp", "retailer_dim"):
-        save_table(gosales.cached_stage(t, spark, sf_dir), f"curated.{t}")
-    save_table(gosales.sales_fact(spark, sf_dir), "curated.sales_fact")
+    for name in gosales.REGISTRIES:
+        save_table(gosales.STAGES[name](spark, sf_dir), f"curated.{name}")
+    mh, rh, pl = (spark.table(f"curated.{t}")
+                  for t in ("method_hlp", "retailer_hlp", "product_lkp"))
+    save_table(gosales.retailer_dim_from(gosales.go_retailers(spark, sf_dir), rh),
+               "curated.retailer_dim")
+    save_table(gosales.fact_from(gosales.go_daily_sales(spark, sf_dir), rh, pl,
+                                 gosales.go_methods(spark, sf_dir), mh),
+               "curated.sales_fact")
 
     fact = spark.table("curated.sales_fact")
     overview = gosales.overview_from_tables(
-        fact,
-        spark.table("curated.retailer_dim"),
-        spark.table("curated.product_lkp"),
-        spark.table("curated.method_hlp"),
+        fact, spark.table("curated.retailer_dim"), pl, mh
     )
     # the overview is row-for-row the fact with broadcast-joined dims,
     # so the fact scan's on-disk bytes are the right (upper) size proxy

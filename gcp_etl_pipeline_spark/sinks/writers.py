@@ -32,20 +32,22 @@ from pyspark.sql.types import StructType
 
 
 def local_frame(
-    spark: SparkSession, rows: list[tuple], schema: str | StructType
+    spark: SparkSession, rows: list[tuple] | pa.Table, schema: str | StructType
 ) -> DataFrame:
-    """Driver-side ``rows`` typed by ``schema`` (a DDL string or a
-    StructType: declared, never inferred), as a JVM-owned local relation:
-    it plans as a ``LocalTableScan``, so no Python RDD or Python worker
-    serves it. A column that is null in every row keeps its declared
-    type."""
+    """Driver-side ``rows`` (tuples, or an Arrow table such as the one
+    ``DataFrame.toArrow`` returns) typed by ``schema`` (a DDL string or a
+    StructType: declared, never inferred), as a JVM-owned local relation
+    on ``spark``: it plans as a ``LocalTableScan``, so no Python RDD or
+    Python worker serves it. A column that is null in every row keeps its
+    declared type."""
     struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
     arrow = to_arrow_schema(struct)
-    table = pa.table(
-        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
-        schema=arrow,
-    )
-    return spark.createDataFrame(table, struct)
+    if not isinstance(rows, pa.Table):
+        rows = pa.table(
+            [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+            schema=arrow,
+        )
+    return spark.createDataFrame(rows.cast(arrow), struct)
 
 
 def write_parquet(

@@ -15,8 +15,9 @@ Reference tie-in: the batch jobs' watermark contract
 
 Every stream drains through ``drain`` (availableNow, each micro-batch to a
 ``foreachBatch`` body). A query that returns the stream's own rows uses
-``drain_rows``: the batches are kept as local checkpoints that live as
-long as the returned frame, so no drain leaves a session view behind.
+``drain_rows``: the batches are collected to the driver as Arrow and
+returned as one local relation on the caller's session, so no drain
+leaves a session view behind.
 """
 
 from __future__ import annotations
@@ -25,8 +26,8 @@ import glob
 import os
 import shutil
 from collections.abc import Callable
-from functools import reduce
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -74,20 +75,21 @@ def drain(
 def drain_rows(stream_df: DataFrame, mode: str = "append") -> DataFrame:
     """Drain ``stream_df`` and return the rows it output: every
     micro-batch's rows in ``append`` mode, the last batch's (the whole
-    result table) in ``complete`` mode. Each kept batch is a local
-    checkpoint, released with the returned frame, so the drain registers
-    nothing in the session."""
-    kept: list[DataFrame] = []
+    result table) in ``complete`` mode. Each kept batch is collected as
+    Arrow on the driver and the result is a `local_frame` on the
+    caller's session, not on the stream's clone of it (for a stateful
+    stream that clone runs with AQE off), so the drain registers nothing
+    in the session and later queries over the rows plan like any other."""
+    kept: list[pa.Table] = []
 
     def keep(batch: DataFrame, _: int) -> None:
         if mode == "complete":
             kept.clear()
-        kept.append(batch.localCheckpoint())
+        kept.append(batch.toArrow())
 
     drain(stream_df, keep, mode=mode)
-    if not kept:
-        return local_frame(stream_df.sparkSession, [], stream_df.schema)
-    return reduce(DataFrame.union, kept)
+    rows = pa.concat_tables(kept) if kept else []
+    return local_frame(stream_df.sparkSession, rows, stream_df.schema)
 
 
 def stage_ordered_files(root: str, frames: list[DataFrame]) -> str:

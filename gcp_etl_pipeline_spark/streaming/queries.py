@@ -1043,7 +1043,7 @@ def _q_stream_sitemap_discovery(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Streaming twin of the robots->sitemap->page-URL discovery
-    pipeline (the one intake chain without one until r13): per-host
+    pipeline: per-host
     discovery bundles (robots.txt + the host's sitemap document) land
     one file per micro-batch; each foreachBatch invocation runs the
     SHARED ``sitemap_discovery_stage`` (directive extraction ->

@@ -4,7 +4,6 @@ capture."""
 
 from __future__ import annotations
 
-import sys
 import threading
 import time
 
@@ -154,40 +153,6 @@ def test_pipeline_error_names_the_first_failure(spark, tmp_path):
     assert ei.value.job_name == "first"
     assert [r["job_name"] for r in ei.value.ledger_rows] == ["first", "second"]
     assert {r.status for r in spark.read.parquet(ledger).collect()} == {"FAILED"}
-
-
-def test_dim_cache_builds_once_under_concurrent_callers(spark, sf_dir):
-    """Eight threads asking for one cached stage at once all get the same
-    DataFrame, and the cache holds exactly one entry for it."""
-    from gcp_etl_pipeline_spark.plans import gosales
-
-    gosales.clear_dim_cache(spark)
-    go = threading.Barrier(8, timeout=30)
-    got = [None] * 8
-
-    def call(i):
-        go.wait()
-        got[i] = gosales.cached_stage("retailer_hlp", spark, sf_dir)
-
-    interval = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        threads = [threading.Thread(target=call, args=(i,)) for i in range(8)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(60)
-    finally:
-        sys.setswitchinterval(interval)
-    try:
-        assert not any(t.is_alive() for t in threads)
-        assert got[0] is not None and all(df is got[0] for df in got)
-        app = spark.sparkContext.applicationId
-        assert [k for k in gosales._DIM_CACHE
-                if k[0] == app and k[2] == "retailer_hlp"] == [
-            (app, sf_dir, "retailer_hlp")]
-    finally:
-        gosales.clear_dim_cache(spark)
 
 
 def test_ledger_written(spark, warehouse):

@@ -73,6 +73,18 @@ def test_dedup_within_watermark_removes_replayed_file(spark, events_path, tmp_pa
     assert got.select("event_id").distinct().count() == n_unique
 
 
+def test_drained_rows_plan_on_the_callers_session(spark, events_dir):
+    """A stateful stream runs on a clone of the session with AQE off; its
+    drained rows come back on the caller's session, so a query over them
+    plans adaptively."""
+    deduped = core.dedup_within_watermark(core.read_events_stream(spark, events_dir))
+    got = core.drain_rows(deduped)
+    assert got.sparkSession is spark
+    agg = got.groupBy("event_type").count()
+    agg.collect()
+    assert "AdaptiveSparkPlan" in agg._jdf.queryExecution().executedPlan().toString()
+
+
 def test_stream_rows_leave_no_session_view(spark, sf_dir):
     """A query that returns its drained rows registers nothing in the
     session: three stream_tumbling calls leave the table list as it was."""
