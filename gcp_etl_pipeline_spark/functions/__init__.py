@@ -1,9 +1,1 @@
 """Scalar/aggregate function helpers shared by engine operators."""
-
-from gcp_etl_pipeline_spark.functions.deterministic import (
-    det_avg_expr,
-    det_sum_expr,
-    micro_sum_expr,
-)
-
-__all__ = ["det_sum_expr", "det_avg_expr", "micro_sum_expr"]

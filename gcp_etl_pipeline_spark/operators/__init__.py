@@ -1,18 +1,3 @@
 """Operator library — the reference's recurring semantics as composable,
 Catalyst-friendly DataFrame transforms, plus the large-scale training-data
 operators (dedup / similarity / text / multimodal)."""
-
-from gcp_etl_pipeline_spark.operators.audit import add_audit_columns
-from gcp_etl_pipeline_spark.operators.incremental import insert_new_only
-from gcp_etl_pipeline_spark.operators.keys import surrogate_keys
-from gcp_etl_pipeline_spark.operators.normalize import norm_key, normalize_strings
-from gcp_etl_pipeline_spark.operators.star import star_join
-
-__all__ = [
-    "add_audit_columns",
-    "insert_new_only",
-    "surrogate_keys",
-    "norm_key",
-    "normalize_strings",
-    "star_join",
-]

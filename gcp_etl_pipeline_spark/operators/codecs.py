@@ -5,11 +5,11 @@ open in any image viewer / audio player, and the decoder rejects
 corrupt bytes exactly the way PIL raises on a truncated file.
 
 ``stdlib_codec`` sniffs the magic and dispatches PNG → WAV → the
-engine's synthetic GRFT format, so a single ``set_codec(stdlib_codec)``
-upgrades the whole multimodal pipeline (operators/multimodal.py) from
-the documented stub to real decoding, while staying dependency-free.
-Real deployments with PIL/libav replace only this function; the Spark
-plumbing (binary columns, Arrow batches, error-row capture) is shared.
+engine's synthetic GRFT format; it is the multimodal pipeline's decoder
+(operators/multimodal.py), so real formats decode out of the box while
+staying dependency-free. Real deployments with PIL/libav extend only
+this function; the Spark plumbing (binary columns, Arrow batches,
+error-row capture) is shared.
 
 PNG subset: 8-bit grayscale, no interlace, filter 0 — enough for
 decode/resize/feature plumbing; a partial or re-filtered file raises
@@ -181,8 +181,8 @@ def clip_wav(data: bytes, start_ms: int, dur_ms: int) -> bytes:
 
 
 def stdlib_codec(content: bytes) -> dict[str, Any]:
-    """Magic-sniffing dispatcher: PNG → WAV → GRFT synthetic. The drop-in
-    argument for ``multimodal.set_codec``."""
+    """Magic-sniffing dispatcher: PNG → WAV → GRFT synthetic. The
+    multimodal pipeline's decoder."""
     if content[:8] == PNG_SIG:
         return decode_png(content)
     if content[:4] == b"RIFF" and content[8:12] == b"WAVE":

@@ -110,9 +110,9 @@ def dedup_incremental(
     ``store/attempt=<id>/`` whose anti-join reads every ledger file
     EXCEPT that attempt's own partition — a retried batch rewrites its
     partition instead of double-appending and never anti-joins against
-    its first attempt's output (the same exactly-once-over-at-least-once
-    recipe the streaming wrapper in streaming/queries.py uses with
-    batch_id partitions). Either mode adds one small file per increment;
+    its first attempt's output (the exactly-once-over-at-least-once
+    recipe the foreachBatch streams in streaming/queries.py use, with
+    ``attempt_id=f"b{batch_id}"``). Either mode adds one small file per increment;
     reclaim the file count with ``compact_ledger`` between increments.
 
     Scale shape: one shuffle on the md5 fingerprint for the in-batch
@@ -484,15 +484,6 @@ def _minhash_expr(k: int) -> Column:
     return F.min(F.substring(F.md5(F.concat(F.lit(f"{k}|"), F.col("shingle"))), 1, 16))
 
 
-def minhash_signatures(
-    shingles: DataFrame, id_col: str = "doc_id", num_hashes: int = 12
-) -> DataFrame:
-    """MinHash signature per document — one groupBy computing all K mins."""
-    return shingles.groupBy(id_col).agg(
-        *[_minhash_expr(k).alias(f"mh{k}") for k in range(num_hashes)]
-    )
-
-
 def _minhash_batch_fn(num_hashes: int):
     def run(sh_series: _pd.Series) -> _pd.Series:
         import hashlib
@@ -520,10 +511,10 @@ def minhash_signatures_from_arrays(
     arrays: DataFrame, id_col: str = "doc_id", num_hashes: int = 12
 ) -> DataFrame:
     """MinHash signatures computed per document in one Arrow batch from
-    the per-doc shingle array — identical values to minhash_signatures
-    (same md5(k|shingle) 16-hex-min; lowercase-hex string order ==
-    lexicographic in both engines) without the K-aggregate groupBy
-    shuffle. Empty-shingle docs are dropped (groupBy parity)."""
+    the per-doc shingle array — identical values to a groupBy over
+    ``_minhash_expr`` (same md5(k|shingle) 16-hex-min; lowercase-hex
+    string order == lexicographic in both engines) without the
+    K-aggregate groupBy shuffle. Empty-shingle docs are dropped (groupBy parity)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, StringType
 

@@ -9,10 +9,10 @@ interprets them, and all decode/transform work runs as Arrow-batched
 The DEFAULT codec is real: spec-valid PNG (zlib/CRC, filter 0) and WAV
 (stdlib ``wave``) encode/decode in ``operators/codecs.py`` — no external
 image/audio libraries needed. The engine's synthetic GRFT header format
-(below) remains as a second dispatch target for structure-only tests, and
-``set_codec`` swaps in PIL/libav decoders in production. Everything around
-the codec — schemas, batch iteration, partitioning, fan-out row yields —
-is format-agnostic.
+(below) remains as a second dispatch target for structure-only tests;
+further formats (PIL, libav) join ``codecs.stdlib_codec``'s dispatch.
+Everything around the codec — schemas, batch iteration, partitioning,
+fan-out row yields — is format-agnostic.
 
 Synthetic media format (``make_fake_media``): a 16-byte header
 ``b"GRFT" | kind(1B) | width(2B) | height(2B) | sample_rate(3B) |
@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
@@ -84,7 +84,7 @@ def make_fake_media(spark: SparkSession, n: int = 64) -> DataFrame:
 
 def _fake_decode(content: bytes) -> dict[str, Any]:
     """Deterministic stand-in for a real codec. Raises on bad magic the way
-    PIL raises on a corrupt file. Replace via ``set_codec``."""
+    PIL raises on a corrupt file."""
     if content[:4] != MAGIC:
         raise ValueError("not a GRFT blob")
     kind_id, w, h, sr, frames = struct.unpack(_HEADER_FMT, content[4:15])
@@ -109,16 +109,6 @@ def _default_codec(content: bytes) -> dict[str, Any]:
     return stdlib_codec(content)
 
 
-_CODEC: Callable[[bytes], dict[str, Any]] = _default_codec
-
-
-def set_codec(fn: Callable[[bytes], dict[str, Any]]) -> None:
-    """Inject a richer decoder (e.g. PIL/libav) for formats beyond the
-    stdlib PNG/WAV/GRFT set the default already handles."""
-    global _CODEC
-    _CODEC = fn
-
-
 # -------------------------------------------------------- decode / features
 
 DECODED_SCHEMA = (
@@ -137,7 +127,7 @@ def decode_media(df: DataFrame) -> DataFrame:
             out = []
             for mid, content in zip(pdf["media_id"], pdf["content"]):
                 try:
-                    d = _CODEC(bytes(content))
+                    d = _default_codec(bytes(content))
                     out.append(
                         (mid, d["kind"], d["width"], d["height"],
                          d["sample_rate"], d["n_frames"], d["mean_byte"], None)
@@ -200,7 +190,7 @@ def sample_frames(df: DataFrame, every_n: int = 2, fps: int = 10) -> DataFrame:
             for mid, content in zip(pdf["media_id"], pdf["content"]):
                 b = bytes(content)
                 try:
-                    d = _CODEC(b)
+                    d = _default_codec(b)
                 except Exception:  # noqa: BLE001
                     continue
                 if d["kind"] != "video":
@@ -238,7 +228,7 @@ def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
                         blobs.append(codecs.resize_png(b, width, height))
                         ids.append(mid)
                         continue
-                    d = _CODEC(b)
+                    d = _default_codec(b)
                 except Exception:  # noqa: BLE001
                     blobs.append(b)
                     ids.append(mid)

@@ -1,18 +1,18 @@
-"""Mergeable distinct-count sketches (HyperLogLog, Datasketches-backed).
+"""Mergeable distinct-count sketches: K-Minimum-Values (KMV).
 
 The 100 TB pattern for COUNT(DISTINCT): exact distinct aggregation
-shuffles every distinct value; a per-partition/per-batch HLL sketch is a
-few KB regardless of cardinality, merges associatively, and answers with
-~1-2% relative error. Spark 4 ships the Apache DataSketches HLL family
-as built-ins (`hll_sketch_agg` / `hll_union_agg` /
-`hll_sketch_estimate`), so the whole path is JVM-side — no UDFs.
+shuffles every distinct value; a k-row sketch of the smallest hashes is
+bounded regardless of cardinality, merges associatively, and answers
+with a ~1/sqrt(k) relative error. Spark 4's Datasketches built-ins
+(`hll_sketch_agg`, `kll_sketch_agg_double`, `theta_sketch_agg`) give the same
+shape JVM-side; the KMV sketch here is md5-derived integer arithmetic,
+so a DuckDB oracle reproduces the estimate and its error bit-for-bit.
 
 Two-level usage mirrors `operators/ivm.py`'s mergeable-partials contract:
-build partials per batch/partition-slice, store them (binary column, a
-few KB per group), and merge partials across batches to answer — the
-merged estimate is IDENTICAL to sketching the union directly (HLL
-register-wise max is exact w.r.t. the sketch), which makes incremental
-maintenance of distinct counts lossless at the sketch level.
+build partials per batch/partition-slice, store them, and merge partials
+across batches to answer — the merged sketch is IDENTICAL to sketching
+the union directly, which makes incremental maintenance of distinct
+counts lossless at the sketch level.
 
 The reference has no approximate aggregates (SURVEY §2.5 — "Catalyst's
 hash-agg covers A1-A4 outright"); this is a scale extension in the same
@@ -24,157 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# log2m=14 → 16384 registers ≈ 1.04/sqrt(2^14) ≈ 0.8% standard error,
-# ~12 KB per sketch: the classic accuracy/size tradeoff point.
-DEFAULT_LGK = 14
-
-
-def hll_partials(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    lgk: int = DEFAULT_LGK,
-    sketch_col: str = "hll_sketch",
-) -> DataFrame:
-    """Per-group HLL sketch of ``value_col`` (binary, mergeable)."""
-    agg = F.expr(f"hll_sketch_agg({value_col}, {lgk})").alias(sketch_col)
-    return df.groupBy(*group_cols).agg(agg)
-
-
-def hll_merge(
-    partials: DataFrame,
-    group_cols: list[str],
-    sketch_col: str = "hll_sketch",
-    out_col: str = "approx_distinct",
-) -> DataFrame:
-    """Merge per-batch sketches and estimate the distinct count."""
-    return partials.groupBy(*group_cols).agg(
-        F.expr(f"hll_sketch_estimate(hll_union_agg({sketch_col}))")
-        .cast("bigint")
-        .alias(out_col)
-    )
-
-
-def hll_estimate(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    lgk: int = DEFAULT_LGK,
-    out_col: str = "approx_distinct",
-) -> DataFrame:
-    """One-shot grouped approximate distinct count (sketch + estimate)."""
-    return df.groupBy(*group_cols).agg(
-        F.expr(f"hll_sketch_estimate(hll_sketch_agg({value_col}, {lgk}))")
-        .cast("bigint")
-        .alias(out_col)
-    )
-
-
-# ---------------------------------------------------------------- quantiles
-
-# KLL k=200 ≈ 1.65% normalized rank error, ~KB-sized sketches.
-DEFAULT_KLL_K = 200
-
-
-def kll_partials(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    k: int = DEFAULT_KLL_K,
-    sketch_col: str = "kll_sketch",
-) -> DataFrame:
-    """Per-group KLL quantile sketch of a DOUBLE column (mergeable).
-
-    The 100 TB pattern for percentiles: exact quantiles need a full sort
-    (or exact `percentile`, which shuffles every value); a KLL sketch is
-    KBs per group, merges associatively across batches/partitions, and
-    answers any quantile with bounded RANK error. Note KLL compaction is
-    randomized — merged partials answer within the same rank-error bound
-    as a direct sketch, not bit-identically (unlike HLL/Theta union)."""
-    return df.groupBy(*group_cols).agg(
-        F.expr(f"kll_sketch_agg_double({value_col}, {k})").alias(sketch_col)
-    )
-
-
-def kll_quantiles(
-    partials: DataFrame,
-    group_cols: list[str],
-    quantiles: list[float],
-    sketch_col: str = "kll_sketch",
-) -> DataFrame:
-    """Merge per-batch KLL sketches and read off quantile estimates."""
-    merged = partials.groupBy(*group_cols).agg(
-        F.expr(f"kll_merge_agg_double({sketch_col})").alias(sketch_col)
-    )
-    return merged.select(
-        *group_cols,
-        *[
-            F.expr(f"kll_sketch_get_quantile_double({sketch_col}, {q})")
-            .alias(f"q{int(round(q * 100)):02d}")
-            for q in quantiles
-        ],
-    )
-
-
-# --------------------------------------------------------- set expressions
-
-def theta_partials(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    sketch_col: str = "theta_sketch",
-) -> DataFrame:
-    """Per-group Theta sketch (mergeable; supports set EXPRESSIONS).
-
-    Unlike HLL, Theta sketches compose under intersection and difference
-    too — "distinct users in segment A AND B (or A\\B)" without joining
-    the raw 100 TB segments: sketch each segment once, combine KB-sized
-    sketches. Union is set-deterministic (k smallest hashes of the union
-    are a subset of the per-side retained hashes), so per-batch partials
-    merged with theta_union_agg estimate identically to a direct sketch;
-    below the sketch's k (4096 default) estimates are exact."""
-    return df.groupBy(*group_cols).agg(
-        F.expr(f"theta_sketch_agg({value_col})").alias(sketch_col)
-    )
-
-
-def theta_union_estimate(
-    partials: DataFrame,
-    group_cols: list[str],
-    sketch_col: str = "theta_sketch",
-    out_col: str = "approx_distinct",
-) -> DataFrame:
-    """Merge per-batch Theta sketches and estimate the distinct count."""
-    return partials.groupBy(*group_cols).agg(
-        F.expr(f"theta_sketch_estimate(theta_union_agg({sketch_col}))")
-        .cast("bigint")
-        .alias(out_col)
-    )
-
-
-def theta_set_estimates(
-    left: DataFrame,
-    right: DataFrame,
-    join_cols: list[str],
-    sketch_col: str = "theta_sketch",
-) -> DataFrame:
-    """Join two per-group sketch tables and estimate |A∪B|, |A∩B|, |A\\B|
-    per group — three set cardinalities from two KB-sized columns, no
-    scan of the underlying data."""
-    l = left.select(*join_cols, F.col(sketch_col).alias("_sk_l"))
-    r = right.select(*join_cols, F.col(sketch_col).alias("_sk_r"))
-    est = "CAST(theta_sketch_estimate({e}) AS BIGINT)"
-    return l.join(r, join_cols).select(
-        *join_cols,
-        F.expr(est.format(e="theta_union(_sk_l, _sk_r)")).alias("union_distinct"),
-        F.expr(est.format(e="theta_intersection(_sk_l, _sk_r)")).alias(
-            "intersect_distinct"
-        ),
-        F.expr(est.format(e="theta_difference(_sk_l, _sk_r)")).alias(
-            "diff_distinct"
-        ),
-    )
-
 
 def kmv_distinct(
     values: DataFrame,
@@ -182,8 +31,8 @@ def kmv_distinct(
     k: int = 256,
     salt: str = "kmv",
 ) -> DataFrame:
-    """K-Minimum-Values distinct-count estimate — the GRADABLE twin of the
-    Datasketches Theta wrappers above (Bar-Yossef et al. 2002; Theta is
+    """K-Minimum-Values distinct-count estimate — the GRADABLE twin of
+    Spark's Datasketches Theta built-ins (Bar-Yossef et al. 2002; Theta is
     KMV + theta thresholding). The k smallest 48-bit hashes of a column
     determine the estimate ``(k-1) * 2^48 / kth_min``; everything is
     md5-derived integer arithmetic, so a DuckDB oracle reproduces the
@@ -221,7 +70,7 @@ def kmv_sketch(
     48-bit hashes. Union is SET-DETERMINISTIC — the k smallest of a
     union are a subset of the per-side retained sets, so
     ``kmv_merge(sketch(A), sketch(B)) ≡ sketch(A ∪ B)`` exactly (the
-    theta_partials merge contract, here over gradable integers). Store
+    Theta-sketch union contract, here over gradable integers). Store
     the k rows per batch/partition-slice and merge across batches; the
     raw corpus is never re-scanned.
 
@@ -286,7 +135,7 @@ def kmv_group_set_estimates(
     salt: str = "kmv",
 ) -> DataFrame:
     """KMV set ALGEBRA per group pair — the gradable twin of
-    theta_set_estimates: one k-min sketch per group, then for every
+    Theta-sketch set expressions: one k-min sketch per group, then for every
     group pair the union estimate comes from the MERGED sketch (k
     smallest of the union — set-deterministic) and the intersection by
     inclusion-exclusion ``max(0, estA + estB − estU)``. Exact

@@ -489,14 +489,6 @@ def html_to_text(html: Column | str) -> Column:
     return F.trim(c)
 
 
-def extract_html_text(
-    df: DataFrame, html_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
-    """Dataframe form of ``html_to_text``: (id, text) with every other
-    column dropped — the shape the gate -> dedup intake chain consumes."""
-    return df.select(F.col(id_col), html_to_text(html_col).alias("text"))
-
-
 # --------------------------- URL normalization (crawl frontier dedup)
 #
 # The canonical-URL transform every crawler applies before URL-level

@@ -1,6 +1,1 @@
 """Source readers (SURVEY §2.1 S1-S6)."""
-
-from gcp_etl_pipeline_spark.sources.files import read_csv, read_parquet
-from gcp_etl_pipeline_spark.sources.jdbc import read_jdbc
-
-__all__ = ["read_parquet", "read_csv", "read_jdbc"]

@@ -282,6 +282,7 @@ def _q_stream_dedup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger leak, or an at-least-once duplicate breaks the hash."""
     from pyspark.sql import functions as F
 
+    from gcp_etl_pipeline_spark.operators.dedup import dedup_incremental
     from gcp_etl_pipeline_spark.sources.files import read_parquet
 
     root = scratch_dir("sledger")
@@ -297,42 +298,13 @@ def _q_stream_dedup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = f"{root}/accepted"
 
     # REPLAY-IDEMPOTENT batch body (exactly-once over an at-least-once
-    # trigger, the same property versioned_batch_writer carries): both
-    # the fingerprint-ledger write and the accepted-rows write go to
-    # batch_id-scoped partitions with OVERWRITE, and the anti-join reads
-    # every OTHER batch's ledger partition — a retried micro-batch
-    # rewrites its own partitions instead of double-appending, and never
-    # anti-joins against its own first attempt's fingerprints (the
-    # plain dedup_incremental append would lose the whole batch on a
-    # retry that crashed between ledger append and output write).
+    # trigger): `dedup_incremental` with a batch-scoped attempt_id
+    # overwrites its own ledger partition and anti-joins every OTHER
+    # one, and the accepted rows overwrite their own batch partition —
+    # a retried micro-batch rewrites instead of double-appending.
     def process(batch: DataFrame, batch_id: int) -> None:
-        import glob as _glob
-
-        from pyspark.sql import functions as _F
-
-        from gcp_etl_pipeline_spark.operators.dedup import dedup_exact
-        from gcp_etl_pipeline_spark.operators.text import fingerprint
-
-        spark_b = batch.sparkSession
-        tagged = dedup_exact(batch).withColumn("__fp", fingerprint("text"))
-        prior = [
-            f for f in _glob.glob(f"{store}/batch=*/part-*.parquet")
-            if f"/batch={batch_id}/" not in f
-        ]
-        kept = (
-            tagged.join(
-                spark_b.read.parquet(*sorted(prior)), "__fp", "left_anti"
-            )
-            if prior
-            else tagged
-        )
-        kept = kept.localCheckpoint(eager=True)  # one computation, two writes
-        kept.select("__fp").write.mode("overwrite").parquet(
-            f"{store}/batch={batch_id}"
-        )
-        kept.drop("__fp").write.mode("overwrite").parquet(
-            f"{out_dir}/batch={batch_id}"
-        )
+        acc = dedup_incremental(batch, store, attempt_id=f"b{batch_id}")
+        acc.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
     core.drain(core.file_stream(spark, docs.schema, src), process=process)
     return spark.read.parquet(out_dir).select(

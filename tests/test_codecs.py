@@ -1,5 +1,5 @@
 """Stdlib PNG/WAV codecs: real-format roundtrips, corrupt rejection, and
-the set_codec upgrade path through the Spark multimodal pipeline."""
+the default decoder through the Spark multimodal pipeline."""
 
 from __future__ import annotations
 
@@ -37,9 +37,9 @@ def test_wav_roundtrip():
 
 
 def test_set_codec_upgrades_spark_pipeline(spark):
-    """Real PNG and WAV blobs flow through decode_media once the stdlib
-    codec is injected; GRFT blobs keep decoding; garbage becomes an
-    error row, not a stage failure."""
+    """Real PNG and WAV blobs flow through decode_media with the default
+    (stdlib) decoder; GRFT blobs keep decoding; garbage becomes an error
+    row, not a stage failure."""
     rows = [
         (1, "image", codecs.encode_png(16, 8, bytes(range(128))), None),
         (2, "audio", codecs.encode_wav(8000, bytes(500)), None),
@@ -49,12 +49,7 @@ def test_set_codec_upgrades_spark_pipeline(spark):
     df = spark.createDataFrame(
         rows, "media_id BIGINT, kind STRING, content BINARY, pad STRING"
     )
-    old = multimodal._CODEC
-    try:
-        multimodal.set_codec(codecs.stdlib_codec)
-        out = {r.media_id: r for r in multimodal.decode_media(df).collect()}
-    finally:
-        multimodal.set_codec(old)
+    out = {r.media_id: r for r in multimodal.decode_media(df).collect()}
     assert (out[1].width, out[1].height, out[1].kind) == (16, 8, "image")
     assert (out[2].sample_rate, out[2].n_frames) == (8000, 500)
     assert out[3].width == 32 and out[3].decode_error is None

@@ -10,7 +10,7 @@ from gcp_etl_pipeline_spark.operators import text
 
 def _extract(spark, html: str) -> str:
     df = spark.createDataFrame([(0, html)], "doc_id BIGINT, html STRING")
-    return text.extract_html_text(df).collect()[0]["text"]
+    return df.select(text.html_to_text("html").alias("text")).collect()[0]["text"]
 
 
 def test_html_strip_blocks_and_inline(spark):
@@ -80,7 +80,8 @@ def test_html_oracle_sql_matches_spark(spark):
         [(i, s) for i, s in enumerate(snippets)], "doc_id BIGINT, html STRING"
     )
     got_spark = {
-        r["doc_id"]: r["text"] for r in text.extract_html_text(df).collect()
+        r["doc_id"]: r["text"]
+        for r in df.select("doc_id", text.html_to_text("html").alias("text")).collect()
     }
     con = duckdb.connect()
     for i, s in enumerate(snippets):
