@@ -75,7 +75,7 @@ def _maintain_dim(
 
 
 def _process_batch(warehouse: str, products_static, methods_static):
-    """foreachBatch body builder. The static masters arrive as local
+    """The foreachBatch body. The static masters arrive as local
     relations built once per drain, so every batch reuses the same
     (broadcastable) rows."""
 
