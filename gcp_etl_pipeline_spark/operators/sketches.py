@@ -3,10 +3,11 @@
 The 100 TB pattern for COUNT(DISTINCT): exact distinct aggregation
 shuffles every distinct value; a k-row sketch of the smallest hashes is
 bounded regardless of cardinality, merges associatively, and answers
-with a ~1/sqrt(k) relative error. Spark 4's Datasketches built-ins
-(`hll_sketch_agg`, `kll_sketch_agg_double`, `theta_sketch_agg`) give the same
-shape JVM-side; the KMV sketch here is md5-derived integer arithmetic,
-so a DuckDB oracle reproduces the estimate and its error bit-for-bit.
+with a ~1/sqrt(k) relative error. KMV is the only sketch in the
+package: nothing here wraps or calls Spark 4's Datasketches built-ins
+(`hll_sketch_agg`, `kll_sketch_agg_double`, `theta_sketch_agg`). The KMV
+sketch is md5-derived integer arithmetic, so a DuckDB oracle reproduces
+the estimate and its error bit-for-bit.
 
 Two-level usage mirrors `operators/ivm.py`'s mergeable-partials contract:
 build partials per batch/partition-slice, store them, and merge partials

@@ -39,11 +39,7 @@ from pyspark.sql import functions as F
 
 from gcp_etl_pipeline_spark.operators.normalize import norm_key
 from gcp_etl_pipeline_spark.plans import gosales
-from gcp_etl_pipeline_spark.sinks.writers import (
-    insert_new_rows,
-    local_frame,
-    read_target,
-)
+from gcp_etl_pipeline_spark.sinks.writers import insert_new_rows, read_target
 from gcp_etl_pipeline_spark.streaming.core import drain, file_stream
 
 RAW_SCHEMA = (
@@ -75,9 +71,8 @@ def _maintain_dim(
 
 
 def _process_batch(warehouse: str, products_static, methods_static):
-    """The foreachBatch body. The static masters arrive as local
-    relations built once per drain, so every batch reuses the same
-    (broadcastable) rows."""
+    """foreachBatch body builder. The static masters arrive pre-built so
+    every batch reuses the same (broadcastable) DataFrames."""
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -143,15 +138,8 @@ def run_streaming_gosales(
     """Drain everything currently staged in ``raw_dir`` through the
     continuous pipeline (availableNow; a production deployment runs the
     same query with a processing-time trigger and it never stops)."""
-    # dim-sized masters, collected once per drain: a lazy master would
-    # rescan its source files in every micro-batch
-    products, methods = (
-        local_frame(spark, df.toArrow(), df.schema)
-        for df in (
-            gosales.go_products(spark, sf_dir),
-            gosales.go_methods(spark, sf_dir),
-        )
-    )
+    products = gosales.go_products(spark, sf_dir)
+    methods = gosales.go_methods(spark, sf_dir)
     drain(
         file_stream(spark, RAW_SCHEMA, raw_dir),
         _process_batch(warehouse, products, methods),
