@@ -2,12 +2,11 @@
 native form of (engine extension, SURVEY §2.4 note: "Not present in the
 reference: theta/range/as-of joins").
 
-Semantics (backward, the default): for every left row, attach the payload
-of the single right row with the same key and the greatest ``right_ts <=
-left_ts`` (inclusive). ``direction="forward"`` takes the smallest
-``right_ts >= left_ts`` instead. Rows with no qualifying match keep NULL
-payloads (left-outer semantics), optionally bounded by ``tolerance``
-(seconds): matches farther than the tolerance are nulled out.
+Semantics (backward): for every left row, attach the payload of the
+single right row with the same key and the greatest ``right_ts <=
+left_ts`` (inclusive). Rows with no qualifying match keep NULL payloads
+(left-outer semantics), optionally bounded by ``tolerance_s`` (seconds):
+matches farther than the tolerance are nulled out.
 
 Physical design (the 100 TB shape): a sort-merge-style *tagged union*
 rather than a range join —
@@ -44,56 +43,40 @@ def asof_join(
     right: DataFrame,
     on: list[str],
     left_ts: str,
-    right_ts: str | None = None,
-    direction: str = "backward",
     tolerance_s: float | None = None,
-    suffix: str = "",
 ) -> DataFrame:
-    """Left-outer as-of join of ``right`` payload columns onto ``left``.
+    """Left-outer as-of join of ``right`` payload columns onto ``left``;
+    ``right`` carries its timestamp under the same name ``left_ts``.
 
-    Payload columns = every right column except ``on`` + ``right_ts``;
-    they keep their names (plus ``suffix`` on collision with left names).
+    Payload columns = every right column except ``on`` + ``left_ts``;
+    they keep their names.
     """
     from pyspark.sql import Window
 
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    right_ts = right_ts or left_ts
-    pay_cols = [c for c in right.columns if c not in set(on) | {right_ts}]
-    out_names = {
-        c: (c + suffix if c in left.columns else c) for c in pay_cols
-    }
+    pay_cols = [c for c in right.columns if c not in set(on) | {left_ts}]
 
     # Tagged union. The payload (and the matched right timestamp, kept for
     # the tolerance bound) rides in ONE struct so a single window
     # expression fills it for any payload width.
     pay = F.struct(
-        F.col(right_ts).cast("timestamp").alias(_TS),
+        F.col(left_ts).cast("timestamp").alias(_TS),
         *[F.col(c) for c in pay_cols],
     )
     r = right.select(
         *[F.col(c) for c in on],
-        F.col(right_ts).cast("timestamp").alias(left_ts),
+        F.col(left_ts).cast("timestamp").alias(left_ts),
         pay.alias(_PAY),
-    ).withColumn(_TAG, F.lit(0 if direction == "backward" else 1))
-    l = left.withColumn(_TAG, F.lit(1 if direction == "backward" else 0))
+    ).withColumn(_TAG, F.lit(0))
+    l = left.withColumn(_TAG, F.lit(1))
     u = l.unionByName(r, allowMissingColumns=True)
 
-    # backward: right(tag 0) sorts before left(tag 1) at equal ts, frame
-    # looks back; forward: left(tag 0) before right(tag 1), frame looks
-    # ahead. Both keep ts-equality matches inclusive.
+    # right (tag 0) sorts before left (tag 1) at equal ts and the frame
+    # looks back, so ts-equality matches are inclusive
     w = Window.partitionBy(*on).orderBy(F.col(left_ts).asc(), F.col(_TAG).asc())
-    if direction == "backward":
-        filled = F.last(_PAY, ignorenulls=True).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-    else:
-        filled = F.first(_PAY, ignorenulls=True).over(
-            w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        )
-    matched = u.withColumn(_PAY, filled).where(
-        F.col(_TAG) == (1 if direction == "backward" else 0)
+    filled = F.last(_PAY, ignorenulls=True).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    matched = u.withColumn(_PAY, filled).where(F.col(_TAG) == 1)
 
     keep: Column = F.lit(True)
     if tolerance_s is not None:
@@ -103,11 +86,7 @@ def asof_join(
         )
         keep = gap <= F.lit(int(tolerance_s * 1_000_000))
 
-    out = matched.select(
+    return matched.select(
         *[F.col(c) for c in left.columns],
-        *[
-            F.when(keep, F.col(_PAY)[c]).alias(out_names[c])
-            for c in pay_cols
-        ],
+        *[F.when(keep, F.col(_PAY)[c]).alias(c) for c in pay_cols],
     )
-    return out

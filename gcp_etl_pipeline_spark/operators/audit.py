@@ -24,7 +24,6 @@ def add_audit_columns(
     batch_id: str,
     source: str,
     table_id: int,
-    oper: str = "I",
     batch_ts: str | None = None,
 ) -> DataFrame:
     """Append the six audit columns. ``batch_ts`` (ISO string) pins the
@@ -32,7 +31,7 @@ def add_audit_columns(
     ts = F.to_timestamp(F.lit(batch_ts)) if batch_ts else F.current_timestamp()
     return (
         df.withColumn("source", F.lit(source))
-        .withColumn("oper", F.lit(oper))
+        .withColumn("oper", F.lit("I"))
         .withColumn("table_id", F.lit(table_id))
         .withColumn("ins_tmstmp", ts)
         .withColumn("upd_tmstmp", ts)

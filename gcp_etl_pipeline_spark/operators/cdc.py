@@ -26,12 +26,11 @@ def apply_changes(
     changes: DataFrame,
     keys: Sequence[str],
     seq_cols: Sequence[str],
-    op_col: str = "op",
 ) -> DataFrame:
     """Apply a change stream to a snapshot; returns the new snapshot with
     the snapshot's columns.
 
-    ``changes`` must carry the snapshot's columns plus ``op_col`` and the
+    ``changes`` must carry the snapshot's columns plus ``op`` and the
     ``seq_cols`` ordering columns (monotone per key; ties broken by the
     full seq_cols list, so include a unique id for determinism).
     """
@@ -42,5 +41,5 @@ def apply_changes(
         .drop("__cdc_rn")
     )
     untouched = snapshot.join(latest.select(*keys), list(keys), "left_anti")
-    applied = latest.where(F.col(op_col) != "D").select(*snapshot.columns)
+    applied = latest.where(F.col("op") != "D").select(*snapshot.columns)
     return untouched.unionByName(applied)

@@ -28,27 +28,21 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    node_col: str = "node",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Return (node, component): component = min node id reachable.
 
     ``nodes`` must contain every vertex (isolated ones become singleton
     components). Node ids must be orderable (int/string).
     """
+    max_iter = 25
     sym = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .union(edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d")))
+        edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
+        .union(edges.select(F.col("dst").alias("s"), F.col("src").alias("d")))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     labels = nodes.select(
-        F.col(node_col).alias("node"), F.col(node_col).alias("label")
+        F.col("node"), F.col("node").alias("label")
     ).localCheckpoint()
 
     converged = False

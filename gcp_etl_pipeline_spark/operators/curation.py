@@ -62,17 +62,12 @@ def pii_counts(text: Column | str) -> list[Column]:
     ]
 
 
-def tfidf(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    scale: int = 1_000_000,
-) -> DataFrame:
+def tfidf(docs: DataFrame) -> DataFrame:
     """Per-(doc, term) TF-IDF, µ-unit quantized for determinism.
 
     tf = term_count / doc_tokens; idf = ln(N / df). The two counts are
     exact integers under any partitioning; the float product is quantized
-    to `score_u = round(tf * idf * scale)` so results hash-match the
+    to `score_u = round(tf * idf * 1e6)` so results hash-match the
     DuckDB oracle (one ln + one multiply + one round per output row).
 
     Plan shape: one (doc_id, term) count shuffle; the document-frequency
@@ -80,29 +75,29 @@ def tfidf(
     back onto the counts (plan-asserted in tests/test_curation.py).
     """
     toks = docs.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("term")
+        F.col("doc_id"), F.explode(tokens("text")).alias("term")
     )
-    term_counts = toks.groupBy(id_col, "term").agg(
+    term_counts = toks.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    doc_lens = term_counts.groupBy(id_col).agg(F.sum("cnt").alias("n_toks"))
+    doc_lens = term_counts.groupBy("doc_id").agg(F.sum("cnt").alias("n_toks"))
     df_counts = term_counts.groupBy("term").agg(
         F.count(F.lit(1)).alias("df")
     )
     n_docs = docs.select(
-        F.countDistinct(id_col).alias("n_docs")
+        F.countDistinct("doc_id").alias("n_docs")
     )
     return (
-        term_counts.join(doc_lens, id_col)
+        term_counts.join(doc_lens, "doc_id")
         .join(F.broadcast(df_counts), "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
-            id_col,
+            "doc_id",
             "term",
             F.round(
                 (F.col("cnt") / F.col("n_toks"))
                 * F.log(F.col("n_docs") / F.col("df"))
-                * scale
+                * 1_000_000
             )
             .cast("bigint")
             .alias("score_u"),
@@ -110,13 +105,13 @@ def tfidf(
     )
 
 
-def top_terms(scored: DataFrame, k: int, id_col: str = "doc_id") -> DataFrame:
+def top_terms(scored: DataFrame, k: int) -> DataFrame:
     """Top-k terms per document by (score desc, term asc) — the
     deterministic tie-break makes the result differential-testable."""
     from pyspark.sql import Window
 
     w = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy(F.desc("score_u"), F.asc("term"))
     )
     return (
@@ -125,12 +120,7 @@ def top_terms(scored: DataFrame, k: int, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def bigram_collocations(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_count: int = 20,
-    scale: int = 1_000_000,
-) -> DataFrame:
+def bigram_collocations(docs: DataFrame, min_count: int = 20) -> DataFrame:
     """Corpus-level bigram mining with a PMI association score.
 
     pmi = ln(n_bigram * total_bigrams / (n_first_any * n_any_second))
@@ -139,7 +129,7 @@ def bigram_collocations(
     quantized. Aggregations are on the bigram/unigram key itself, so
     map-side partial aggregation bounds the shuffle by vocabulary size.
     """
-    toks = docs.select(tokens(text_col).alias("toks")).filter(
+    toks = docs.select(tokens("text").alias("toks")).filter(
         F.size("toks") >= 2
     )
     bigrams = toks.select(
@@ -171,7 +161,7 @@ def bigram_collocations(
                     * F.col("n_total")
                     / (F.col("n_head") * F.col("n_tail"))
                 )
-                * scale
+                * 1_000_000
             )
             .cast("bigint")
             .alias("pmi_u"),
@@ -184,8 +174,6 @@ def decontaminate_overlap(
     benchmark: DataFrame,
     n: int = 3,
     min_overlap: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Training-set decontamination: flag docs sharing at least
     ``min_overlap`` distinct word n-gram shingles with ANY benchmark
@@ -199,15 +187,15 @@ def decontaminate_overlap(
     """
     from gcp_etl_pipeline_spark.operators.dedup import shingle_sets
 
-    d_sh = shingle_sets(docs, text_col=text_col, id_col=id_col, n=n)
+    d_sh = shingle_sets(docs, n=n)
     b_sh = (
-        shingle_sets(benchmark, text_col=text_col, id_col=id_col, n=n)
+        shingle_sets(benchmark, n=n)
         .select("shingle")
         .distinct()
     )
     return (
         d_sh.join(b_sh, "shingle")  # bench side tiny: AQE broadcasts
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))  # shingles distinct per doc
         .where(F.col("n_hits") >= min_overlap)
     )
@@ -218,7 +206,6 @@ def mixture_sample(
     stratum_col: str,
     rates: dict[str, float],
     key_col: str,
-    default_rate: float = 0.0,
 ) -> DataFrame:
     """Deterministic corpus-mixture downsampling: keep each stratum at its
     target ``rates[stratum]`` fraction (the data-mixture step of a
@@ -234,7 +221,7 @@ def mixture_sample(
     maps to the sentinel "g" (lexicographically above every hex string),
     so a full-keep stratum really keeps all rows.
     """
-    expr = F.lit(_hex_threshold(default_rate))
+    expr = F.lit(_hex_threshold(0.0))
     for stratum, rate in sorted(rates.items()):
         expr = (
             F.when(F.col(stratum_col) == stratum, F.lit(_hex_threshold(rate)))
@@ -455,16 +442,14 @@ def dataset_split(
     key_col: str,
     val_pct: float = 2.0,
     test_pct: float = 2.0,
-    salt: str = "split",
-    out_col: str = "split",
 ) -> DataFrame:
     """Deterministic train/val/test assignment — the split every training
     pipeline needs to be REPRODUCIBLE and LEAK-FREE: the split is a pure
-    function of (salt, key), so it is stable across runs, engines, and
-    physical layouts, and JOINABLE — the same key lands in the same split
-    in every table that carries it (sample-consistent features/labels).
-    Spark's randomSplit is none of these (per-partition RNG: re-shuffling
-    the input reassigns rows).
+    function of the key (md5 of ``'split|' || key``), so it is stable
+    across runs, engines, and physical layouts, and JOINABLE — the same
+    key lands in the same split in every table that carries it
+    (sample-consistent features/labels). Spark's randomSplit is none of
+    these (per-partition RNG: re-shuffling the input reassigns rows).
 
     Mechanism: the first 4 hex chars of md5(salt|key) give a uniform
     bucket in [0, 2^16); 'test' takes buckets below floor(test_pct·2^16/
@@ -496,7 +481,7 @@ def dataset_split(
         ).cast("string"),
     )
     h = F.substring(
-        F.md5(F.concat_ws("|", F.lit(salt), key_checked)),
+        F.md5(F.concat_ws("|", F.lit("split"), key_checked)),
         1,
         4,
     )
@@ -510,7 +495,7 @@ def dataset_split(
     t_test = thr(test_pct)
     t_val = thr(test_pct + val_pct)
     return df.withColumn(
-        out_col,
+        "split",
         F.when(h < F.lit(t_test), F.lit("test"))
         .when(h < F.lit(t_val), F.lit("val"))
         .otherwise(F.lit("train")),
@@ -521,7 +506,6 @@ def dataset_split_case_sql(
     id_expr: str,
     val_pct: float = 2.0,
     test_pct: float = 2.0,
-    salt: str = "split",
 ) -> str:
     """The DuckDB CASE expression that is the bit-exact twin of
     ``dataset_split`` — the ONE definition oracles interpolate, so a
@@ -532,7 +516,7 @@ def dataset_split_case_sql(
         n = int(pct * 65536 / 100)
         return "g" if n >= 65536 else format(n, "04x")
 
-    h = f"substring(md5('{salt}|' || CAST({id_expr} AS VARCHAR)), 1, 4)"
+    h = f"substring(md5('split|' || CAST({id_expr} AS VARCHAR)), 1, 4)"
     return (
         f"CASE WHEN {h} < '{thr(test_pct)}' THEN 'test'"
         f" WHEN {h} < '{thr(test_pct + val_pct)}' THEN 'val'"
@@ -542,8 +526,6 @@ def dataset_split_case_sql(
 
 def gopher_gates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_tokens: int = 8,
     max_tokens: int = 2000,
     max_dup_pct: int = 30,
@@ -575,19 +557,19 @@ def gopher_gates(
     an anti-join-on-rejects pipeline."""
     from gcp_etl_pipeline_spark.operators.text import tokens
 
-    tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("t"))
-    per = tok.groupBy(id_col, "t").agg(F.count(F.lit(1)).alias("c"))
-    agg = per.groupBy(id_col).agg(
+    tok = df.select(F.col("doc_id"), F.explode(tokens("text")).alias("t"))
+    per = tok.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("c"))
+    agg = per.groupBy("doc_id").agg(
         F.sum("c").cast("bigint").alias("n_tokens"),
         F.count(F.lit(1)).cast("bigint").alias("n_distinct"),
         F.max("c").cast("bigint").alias("top_count"),
     )
     zero = F.lit(0).cast("bigint")
     agg = (
-        df.select(id_col).distinct()
-        .join(agg, id_col, "left")
+        df.select("doc_id").distinct()
+        .join(agg, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_tokens", zero).alias("n_tokens"),
             F.coalesce("n_distinct", zero).alias("n_distinct"),
             F.coalesce("top_count", zero).alias("top_count"),
@@ -601,7 +583,7 @@ def gopher_gates(
     )
     g_top = F.col("top_count") * 100 <= F.lit(max_top_pct) * F.col("n_tokens")
     return agg.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "n_distinct",
         "top_count",
@@ -612,10 +594,7 @@ def gopher_gates(
     )
 
 
-def token_rarity(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    scale: int = 1_000_000,
-) -> DataFrame:
+def token_rarity(df: DataFrame) -> DataFrame:
     """Per-document token-rarity score — the log-free quality proxy for
     "is this document made of normal words or junk": over a document's
     DISTINCT tokens, the corpus document-frequency of its rarest token
@@ -632,22 +611,22 @@ def token_rarity(
     from gcp_etl_pipeline_spark.operators.text import tokens
 
     tok = df.select(
-        F.col(id_col), F.explode(F.array_distinct(tokens(text_col))).alias("t")
+        F.col("doc_id"), F.explode(F.array_distinct(tokens("text"))).alias("t")
     )
     dfreq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("__df"))
     return (
         tok.join(dfreq, "t")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_distinct_tokens"),
             F.min("__df").cast("bigint").alias("min_df"),
             F.sum("__df").cast("bigint").alias("__sum_df"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_distinct_tokens",
             "min_df",
-            F.expr(f"__sum_df * {scale} DIV n_distinct_tokens")
+            F.expr("__sum_df * 1000000 DIV n_distinct_tokens")
             .alias("mean_df_u"),
         )
     )
@@ -659,25 +638,22 @@ def weighted_priority_sample(
     key_col: str,
     weight_col: str,
     k: int = 25,
-    weight_lcm: int = 840,
-    salt: str = "wps",
 ) -> DataFrame:
     """Deterministic weighted sampling — priority sampling (Duffield,
     Lund & Thorup 2007): each row gets priority ``q = w / u`` with
     ``u = h/2^48`` a uniform hash of the key; per stratum the k LARGEST
     priorities win. Keeping the k largest ``w/h`` is keeping the k
     smallest ``h/w``, and with integer weights that all divide
-    ``weight_lcm`` the ranking key is the EXACT integer
-    ``h * (weight_lcm / w)`` — no float ratio ever materialized, so a SQL
+    840 = lcm(1..8) the ranking key is the EXACT integer
+    ``h * (840 / w)`` — no float ratio ever materialized, so a SQL
     twin reproduces the draw bit-for-bit (the dataset_split reproducibility
     contract extended to weighted draws). Heavier rows are
     proportionally likelier to be picked; the draw is a pure function of
-    (salt, key, weight): stable across runs, engines, and layouts —
+    (key, weight): stable across runs, engines, and layouts —
     everything Spark's ``sample()``/``randomSplit`` is not.
 
-    ``weight_lcm`` defaults to 840 = lcm(1..8); weights outside 1..lcm or
-    not dividing it raise at plan level (a non-divisor would silently
-    floor the multiplier and bias the draw).
+    Weights outside 1..840 or not dividing 840 raise at plan level (a
+    non-divisor would silently floor the multiplier and bias the draw).
 
     Scale shape: the hash + multiply is a zero-shuffle projection; the
     per-stratum top-k is one window over the stratum key. For extreme
@@ -686,6 +662,8 @@ def weighted_priority_sample(
     either way.
     """
     from pyspark.sql import Window
+
+    weight_lcm = 840
 
     # NULL weight must fail fast too (dataset_split's NULL-key contract):
     # a NULL here would make every guard comparison NULL → the otherwise
@@ -709,7 +687,7 @@ def weighted_priority_sample(
         ).cast("bigint"),
     ).otherwise(F.col(weight_col).cast("bigint"))
     h = F.expr(
-        f"CAST(conv(substring(md5(concat('{salt}|', CAST({key_col} AS STRING))),"
+        f"CAST(conv(substring(md5(concat('wps|', CAST({key_col} AS STRING))),"
         f" 1, 12), 16, 10) AS BIGINT)"
     )
     ranked = df.withColumn("__w", guard).withColumn(
@@ -725,12 +703,7 @@ def weighted_priority_sample(
     )
 
 
-def vocab_coverage(
-    df: DataFrame,
-    vocab_size: int = 200,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def vocab_coverage(df: DataFrame, vocab_size: int = 200) -> DataFrame:
     """Tokenizer-vocabulary coverage audit: fix the vocab as the top-N
     tokens by corpus occurrence count (ties broken by token text — the
     boundary must be deterministic or the whole audit is
@@ -744,7 +717,7 @@ def vocab_coverage(
     back onto the exploded tokens, one per-doc aggregate. Exact integer
     end-to-end.
     """
-    tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("t"))
+    tok = df.select(F.col("doc_id"), F.explode(tokens("text")).alias("t"))
     counts = tok.groupBy("t").agg(F.count(F.lit(1)).alias("__c"))
     vocab = (
         counts.orderBy(F.col("__c").desc(), F.col("t").asc())
@@ -753,7 +726,7 @@ def vocab_coverage(
     )
     return (
         tok.join(F.broadcast(vocab), "t", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
             F.sum(F.when(F.col("__in_vocab").isNull(), 1).otherwise(0))
@@ -764,16 +737,9 @@ def vocab_coverage(
     )
 
 
-def halflife_decay_engagement(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    halflife_days: int = 7,
-    max_halflives: int = 19,
-    scale: int = 1_000_000,
-) -> DataFrame:
+def halflife_decay_engagement(events: DataFrame) -> DataFrame:
     """Recency-weighted per-user engagement: each event contributes
-    ``scale >> min(age/halflife, max_halflives)`` µ-units, where age is
+    ``1e6 >> min(age div 7, 19)`` µ-units (a 7-day half-life), where age is
     whole days before the corpus' newest event — an exponential half-life
     decay computed ENTIRELY in integer shifts (no exp()/pow(), so the
     score is bit-identical cross-engine, unlike every float-decay
@@ -783,30 +749,29 @@ def halflife_decay_engagement(
     Scale shape: the reference timestamp is a 1-row aggregate broadcast
     onto the stream (scalar_max_crossjoin pattern); the decay weight is a
     narrow projection; one user-keyed aggregate ends the plan.
-    ``max_halflives`` caps the shift at 19 (2^19 < scale), flooring
+    The cap of 19 half-lives (2^19 < 1e6) floors
     ancient events to weight 1 rather than shifting past the integer.
     """
-    ref = events.agg(F.max(F.to_date(ts_col)).alias("__ref"))
+    ref = events.agg(F.max(F.to_date("ts")).alias("__ref"))
     # NULL timestamps fail fast (the dataset_split/priority-sample NULL
     # contract): least() ignores a NULL datediff, so a corrupt feed
     # would otherwise silently score as maximally ancient weight-1 events
     d = F.when(
-        F.col(ts_col).isNull(),
+        F.col("ts").isNull(),
         F.raise_error(F.lit("halflife_decay_engagement: NULL timestamp")
                       ).cast("date"),
-    ).otherwise(F.to_date(ts_col))
+    ).otherwise(F.to_date("ts"))
     return (
-        events.select(F.col(user_col), d.alias("__d"))
+        events.select(F.col("user_id"), d.alias("__d"))
         .crossJoin(F.broadcast(ref))
         .select(
-            user_col,
+            "user_id",
             F.expr(
-                f"CAST({scale} AS BIGINT) DIV shiftleft(CAST(1 AS BIGINT),"
-                f" CAST(least(datediff(__ref, __d) DIV {halflife_days},"
-                f" {max_halflives}) AS INT))"
+                "CAST(1000000 AS BIGINT) DIV shiftleft(CAST(1 AS BIGINT),"
+                " CAST(least(datediff(__ref, __d) DIV 7, 19) AS INT))"
             ).alias("__w"),
         )
-        .groupBy(user_col)
+        .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.sum("__w").cast("bigint").alias("engagement_u"),
@@ -814,9 +779,7 @@ def halflife_decay_engagement(
     )
 
 
-def doc_surprisal(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
+def doc_surprisal(df: DataFrame) -> DataFrame:
     """Per-document unigram SURPRISAL score without floating log():
     surprisal of a token occurrence = floor(log2(N / cf)) computed as
     length(bin(N div cf)) − 1 — bit-length arithmetic, exact integer
@@ -831,19 +794,19 @@ def doc_surprisal(
     crossdoc shape; documents never pair-compare."""
     from gcp_etl_pipeline_spark.operators.text import tokens
 
-    tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("t"))
+    tok = df.select(F.col("doc_id"), F.explode(tokens("text")).alias("t"))
     cf = tok.groupBy("t").agg(F.count(F.lit(1)).alias("__cf"))
     total = cf.agg(F.sum("__cf").alias("__n"))
     scored = (
         tok.join(cf, "t")
         .crossJoin(F.broadcast(total))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.expr("length(bin(__n div __cf)) - 1").alias("__s"),
         )
     )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
             F.sum("__s").cast("bigint").alias("surprisal_sum"),
@@ -855,13 +818,7 @@ def doc_surprisal(
     )
 
 
-def shard_assign(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    tokens_per_shard: int = 10_000,
-    n_buckets: int = 64,
-) -> DataFrame:
+def shard_assign(df: DataFrame, tokens_per_shard: int = 10_000) -> DataFrame:
     """Size-balanced output sharding — the LAST step of a curation
     pipeline: in deterministic global id order, each document goes to
     the shard where its EXCLUSIVE cumulative token count lands
@@ -880,17 +837,19 @@ def shard_assign(
 
     from gcp_etl_pipeline_spark.operators.text import token_count
 
+    n_buckets = 64
+
     toks = df.select(
-        F.col(id_col), token_count(text_col).cast("bigint").alias("__n")
+        F.col("doc_id"), token_count("text").cast("bigint").alias("__n")
     )
     stats = toks.agg(
-        F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
+        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
     ).collect()[0]
     spark = df.sparkSession
     if stats["lo"] is None:
         return spark.createDataFrame(
             [],
-            f"{id_col} BIGINT, n_tokens BIGINT, tokens_before BIGINT, "
+            "doc_id BIGINT, n_tokens BIGINT, tokens_before BIGINT, "
             "shard BIGINT",
         )
     lo, hi = int(stats["lo"]), int(stats["hi"])
@@ -906,7 +865,7 @@ def shard_assign(
     stride = (width // n_buckets) + 1
     bucketed = toks.withColumn(
         "__b",
-        F.expr(f"({id_col} - {lo}) div {stride}").cast("long"),
+        F.expr(f"(doc_id - {lo}) div {stride}").cast("long"),
     )
     sub = {
         int(r["__b"]): int(r["s"])
@@ -919,14 +878,14 @@ def shard_assign(
     off_df = local_frame(spark, offs, "__b BIGINT, __off BIGINT")
     w = (
         Window.partitionBy("__b")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
         bucketed.join(F.broadcast(off_df), "__b")
         .withColumn("__cum", F.sum("__n").over(w) + F.col("__off"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("__n").alias("n_tokens"),
             (F.col("__cum") - F.col("__n")).cast("bigint")
             .alias("tokens_before"),
@@ -936,22 +895,17 @@ def shard_assign(
     )
 
 
-def _token_bucket(t, n_buckets: int):
+def _token_bucket(t):
     """md5-derived feature-hash bucket for a token: the first four hex
-    nibbles as an integer, mod n_buckets — JVM-side (md5 + conv), and
+    nibbles as an integer, mod 64 — JVM-side (md5 + conv), and
     replayable in any engine by folding the same nibbles."""
     return (
         F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("bigint")
-        % F.lit(n_buckets)
+        % F.lit(64)
     )
 
 
-def fit_quality_classifier(
-    df: DataFrame,
-    label_expr: str,
-    text_col: str = "text",
-    n_buckets: int = 64,
-) -> DataFrame:
+def fit_quality_classifier(df: DataFrame, label_expr: str) -> DataFrame:
     """TRAIN a linear quality classifier over hashed token counts — the
     fastText-shaped tier above rule gates (``gopher_gates``) and
     surprisal scores: one µ-unit weight per feature-hash bucket, learned
@@ -973,8 +927,8 @@ def fit_quality_classifier(
 
     tb = df.select(
         F.expr(label_expr).alias("__pos"),
-        F.explode(tokens(text_col)).alias("t"),
-    ).select("__pos", _token_bucket(F.col("t"), n_buckets).alias("bucket"))
+        F.explode(tokens("text")).alias("t"),
+    ).select("__pos", _token_bucket(F.col("t")).alias("bucket"))
     return tb.groupBy("bucket").agg(
         (
             (F.sum(F.when(F.col("__pos"), 1).otherwise(0)) + 1)
@@ -987,14 +941,7 @@ def fit_quality_classifier(
     )
 
 
-def quality_classifier_score(
-    df: DataFrame,
-    weights: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 64,
-    threshold_u: int | None = None,
-) -> DataFrame:
+def quality_classifier_score(df: DataFrame, weights: DataFrame) -> DataFrame:
     """SCORE documents with a trained hashed-feature linear classifier
     (``fit_quality_classifier``): per doc, the mean bucket weight of its
     token stream (µ-unit, sign-split integer division so truncation
@@ -1004,14 +951,13 @@ def quality_classifier_score(
         prob_u = 500_000 + sign(s) * (500_000 * |s| div (1_000_000 + |s|))
 
     — a monotone [0, 1e6] probability with zero floating point — and
-    gated at ``threshold_u``, or (default, ``None``) at the CORPUS MEAN
-    probability of the scored documents — the self-calibrating gate
-    that keeps both classes populated when the label's base rate shifts
-    the whole distribution to one side of 0.5 (a 1-row aggregate
-    broadcast back, exact integer mean). Zero-token documents keep an
-    explicit row (score 0, prob 500_000, keep = false): the emptiest
-    documents must not sail through an anti-join-on-rejects pipeline
-    unseen.
+    gated at the CORPUS MEAN probability of the scored documents — the
+    self-calibrating gate that keeps both classes populated when the
+    label's base rate shifts the whole distribution to one side of 0.5
+    (a 1-row aggregate broadcast back, exact integer mean). Zero-token
+    documents keep an explicit row (score 0, prob 500_000, keep =
+    false): the emptiest documents must not sail through an
+    anti-join-on-rejects pipeline unseen.
 
     Scale shape: one explode + one BROADCAST join against the
     n_buckets-row weights table + one per-doc aggregate; zero Python in
@@ -1019,15 +965,15 @@ def quality_classifier_score(
     from gcp_etl_pipeline_spark.operators.text import tokens
 
     tb = df.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("t")
-    ).select(id_col, _token_bucket(F.col("t"), n_buckets).alias("bucket"))
+        F.col("doc_id"), F.explode(tokens("text")).alias("t")
+    ).select("doc_id", _token_bucket(F.col("t")).alias("bucket"))
     # LEFT join: a token whose bucket never appeared in training scores
     # a NEUTRAL 0, and still counts in n_tokens — an inner join would
     # silently drop it from both the numerator and the denominator (and
     # report an all-unseen-vocabulary doc as n_tokens = 0)
     ds = (
         tb.join(F.broadcast(weights), "bucket", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
             F.sum(F.coalesce("w_u", F.lit(0))).cast("bigint").alias("__s"),
@@ -1050,22 +996,17 @@ def quality_classifier_score(
             ).cast("bigint"),
         )
     )
-    if threshold_u is None:
-        # self-calibrating gate: the exact integer mean prob of the
-        # SCORED docs (zero-token rows excluded from the mean AND from
-        # keep), one tiny aggregate broadcast onto the row stream
-        thr = ds.agg(
-            F.expr("sum(prob_u) div count(1)").cast("bigint").alias("__thr")
-        )
-        ds = ds.join(F.broadcast(thr), F.lit(True), "left")
-    else:
-        ds = ds.withColumn("__thr", F.lit(threshold_u).cast("bigint"))
+    # self-calibrating gate: the exact integer mean prob of the SCORED
+    # docs (zero-token rows excluded from the mean AND from keep), one
+    # tiny aggregate broadcast onto the row stream
+    thr = ds.agg(F.expr("sum(prob_u) div count(1)").cast("bigint").alias("__thr"))
+    ds = ds.join(F.broadcast(thr), F.lit(True), "left")
     zero = F.lit(0).cast("bigint")
     return (
-        df.select(id_col).distinct()
-        .join(ds, id_col, "left")
+        df.select("doc_id").distinct()
+        .join(ds, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_tokens", zero).alias("n_tokens"),
             F.coalesce("score_u", zero).alias("score_u"),
             F.coalesce("prob_u", F.lit(500_000).cast("bigint")).alias("prob_u"),
@@ -1077,12 +1018,7 @@ def quality_classifier_score(
     )
 
 
-def per_host_budget(
-    df: DataFrame,
-    url_col: str,
-    quota: int,
-    host_col: str = "host",
-) -> DataFrame:
+def per_host_budget(df: DataFrame, url_col: str, quota: int) -> DataFrame:
     """Per-host crawl budgets — the politeness/quota operator a frontier
     runs between URL dedup and fetch: bucket every URL by its
     REGISTRABLE host (text.registrable_host — a million s3 subdomains
@@ -1106,12 +1042,12 @@ def per_host_budget(
     from gcp_etl_pipeline_spark.operators.text import registrable_host
 
     q = F.lit(int(quota))
-    out = df.withColumn(host_col, registrable_host(F.col(url_col)))
+    out = df.withColumn("host", registrable_host(F.col(url_col)))
     order = [F.md5(F.col(url_col)), F.col(url_col)]
     w_local = Window.partitionBy(
-        host_col, F.spark_partition_id()
+        "host", F.spark_partition_id()
     ).orderBy(*order)
-    w = Window.partitionBy(host_col).orderBy(*order)
+    w = Window.partitionBy("host").orderBy(*order)
     return (
         out.withColumn("__lrn", F.row_number().over(w_local))
         .where(F.col("__lrn") <= q)
@@ -1144,8 +1080,6 @@ def robots_pattern_regex(pattern: Column) -> Column:
 def robots_filter(
     urls: DataFrame,
     rules: DataFrame,
-    url_col: str = "url",
-    scope: str = "hostname",
     assume_distinct: bool = False,
     wildcards: bool = False,
 ) -> DataFrame:
@@ -1159,11 +1093,8 @@ def robots_filter(
     (allowed, matched_prefix).
 
     Scope: robots.txt is PER ORIGIN (RFC 9309 §2.3) — cdn.example.com
-    and example.com each have their own file — so the default matches
-    rules by exact lowercased hostname. ``scope="registrable"`` pools
-    by registrable domain instead, for rule tables that are themselves
-    domain-level policy (a crawl-wide blocklist) rather than parsed
-    robots.txt files.
+    and example.com each have their own file — so rules match by exact
+    lowercased hostname.
 
     Duplicate URLs are safe: the verdict is computed once per DISTINCT
     URL and joined back, so every input row keeps its own verdict row
@@ -1194,23 +1125,16 @@ def robots_filter(
     from gcp_etl_pipeline_spark.operators.text import (
         URL_AUTH_RE,
         URL_SCHEME_RE,
-        registrable_host,
         url_hostname,
     )
 
-    if scope not in ("hostname", "registrable"):
-        raise ValueError(
-            f"robots_filter: scope must be 'hostname' or 'registrable',"
-            f" got {scope!r}"
-        )
-    host_fn = url_hostname if scope == "hostname" else registrable_host
-    uu = urls if assume_distinct else urls.select(url_col).distinct()
+    uu = urls if assume_distinct else urls.select("url").distinct()
     raw_path = F.regexp_replace(
-        F.regexp_replace(F.col(url_col), URL_SCHEME_RE, ""),
+        F.regexp_replace(F.col("url"), URL_SCHEME_RE, ""),
         URL_AUTH_RE,
         "",
     )
-    uu = uu.withColumn("__host", host_fn(F.col(url_col))).withColumn(
+    uu = uu.withColumn("__host", url_hostname(F.col("url"))).withColumn(
         "__path",
         F.when(raw_path.startswith("/"), raw_path).otherwise(
             F.concat(F.lit("/"), raw_path)
@@ -1241,7 +1165,7 @@ def robots_filter(
     # matched_prefix pick would be nondeterministic. max_by skips the
     # null no-match row, so an unmatched URL aggregates to NULL and
     # coalesces to the default-allow verdict.
-    group_cols = list(urls.columns) if assume_distinct else [url_col]
+    group_cols = list(urls.columns) if assume_distinct else ["url"]
     verdict = cand.groupBy(*group_cols).agg(
         F.max_by(
             F.struct(F.col("__allow").alias("a"), F.col("__pfx").alias("p")),
@@ -1256,18 +1180,12 @@ def robots_filter(
     )
     if assume_distinct:
         return verdict.select(*urls.columns, "allowed", "matched_prefix")
-    return urls.join(verdict, url_col).select(
+    return urls.join(verdict, "url").select(
         *urls.columns, "allowed", "matched_prefix"
     )
 
 
-def recrawl_schedule(
-    fetches: DataFrame,
-    url_col: str = "url_id",
-    ts_col: str = "ts",
-    seq_col: str = "fetch_id",
-    version_col: str = "content_fp",
-) -> DataFrame:
+def recrawl_schedule(fetches: DataFrame) -> DataFrame:
     """Per-URL recrawl-interval estimation from a fetch history — the
     scheduler stage that turns "what did repeated fetches observe" into
     "when to fetch next". For each URL, consecutive fetches (ordered by
@@ -1280,17 +1198,17 @@ def recrawl_schedule(
     ratios) so the DuckDB oracle matches bit-for-bit.
 
     Physical shape at 100 TB of fetch logs: ONE hash exchange on
-    ``url_col`` serves both the lag window and the aggregate (the
+    ``url_id`` serves both the lag window and the aggregate (the
     groupBy reuses the window's partitioning — no second shuffle); the
     output is |URLs| rows, a small fraction of the log."""
     from pyspark.sql import Window
 
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    w = Window.partitionBy(url_col).orderBy(ts_us, F.col(seq_col))
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    w = Window.partitionBy("url_id").orderBy(ts_us, F.col("fetch_id"))
     marked = fetches.select(
-        F.col(url_col).alias("url_id"),
+        F.col("url_id"),
         ts_us.alias("__us"),
-        (F.col(version_col) != F.lag(version_col).over(w))
+        (F.col("content_fp") != F.lag("content_fp").over(w))
         .cast("bigint")
         .alias("__changed"),
     )
@@ -1356,7 +1274,6 @@ def schedule_from_aggregates(agg: DataFrame) -> DataFrame:
 
 def cache_freshness(
     responses: DataFrame,
-    headers_col: str = "headers",
     keep: tuple = ("url_id",),
 ) -> DataFrame:
     """RFC 9111 shared-cache freshness from raw response headers — the
@@ -1387,7 +1304,7 @@ def cache_freshness(
     per-row expressions — embarrassingly parallel at any scale."""
     from gcp_etl_pipeline_spark.operators.text import http_header
 
-    c = F.col(headers_col)
+    c = F.col("headers")
     num = r'(?i)(?:^|[,\s])%s\s*=\s*"?(\d+)'
     tok = r"(?i)(?:^|[,\s])%s(?:$|[,\s])"
     max_age = F.regexp_extract(cc_ := http_header(c, "Cache-Control"),
@@ -1461,16 +1378,10 @@ def cache_freshness(
     )
 
 
-def sitemap_boost(
-    sched: DataFrame,
-    hints: DataFrame,
-    url_col: str = "url",
-    last_col: str = "last_fetch_us",
-    lastmod_col: str = "lastmod_us",
-) -> DataFrame:
+def sitemap_boost(sched: DataFrame, hints: DataFrame) -> DataFrame:
     """Sitemap-freshness boost over a recrawl schedule: LEFT-join the
     per-URL <lastmod> hints (µs epochs) onto the schedule (must carry
-    ``url_col`` and ``last_col`` alongside ``recrawl_interval_us``) and
+    ``url`` and ``last_fetch_us`` alongside ``recrawl_interval_us``) and
     let any URL whose sitemap declares a modification AFTER the last
     observed fetch jump the due queue — next_due = last fetch (due
     now) instead of last fetch + backoff interval. No hint, or a hint
@@ -1481,30 +1392,23 @@ def sitemap_boost(
     expressions. Output keeps the schedule's row count (hints are
     unique per URL by the sitemap contract)."""
     j = sched.join(
-        hints.select(url_col, lastmod_col), url_col, "left"
+        hints.select("url", "lastmod_us"), "url", "left"
     )
-    jumped = F.col(lastmod_col).isNotNull() & (
-        F.col(lastmod_col) > F.col(last_col)
+    jumped = F.col("lastmod_us").isNotNull() & (
+        F.col("lastmod_us") > F.col("last_fetch_us")
     )
     return j.withColumn(
         "sitemap_lastmod_us",
-        F.coalesce(lastmod_col, F.lit(-1)).cast("bigint"),
+        F.coalesce("lastmod_us", F.lit(-1)).cast("bigint"),
     ).withColumn("sitemap_jump", jumped).withColumn(
         "next_due_us",
-        F.when(jumped, F.col(last_col))
-        .otherwise(F.col(last_col) + F.col("recrawl_interval_us"))
+        F.when(jumped, F.col("last_fetch_us"))
+        .otherwise(F.col("last_fetch_us") + F.col("recrawl_interval_us"))
         .cast("bigint"),
-    ).drop(lastmod_col)
+    ).drop("lastmod_us")
 
 
-def host_reputation(
-    docs: DataFrame,
-    host_col: str = "host",
-    short_col: str = "is_short",
-    tokens_col: str = "n_tokens",
-    block_u: int = 500_000,
-    review_u: int = 200_000,
-) -> DataFrame:
+def host_reputation(docs: DataFrame) -> DataFrame:
     """Per-host reputation rollup — the domain-level quality gate a
     curation pipeline applies ON TOP of per-document gates (CommonCrawl
     practice: a host whose pages are mostly junk is blocked wholesale,
@@ -1516,28 +1420,26 @@ def host_reputation(
     back onto the corpus (a few million hosts ≪ the document count)."""
     # integer DIV (see schedule_from_aggregates): sum(n_tokens)*1e6
     # passes 2^53 for any host with ~9e9 total tokens
-    agg = docs.groupBy(host_col).agg(
+    agg = docs.groupBy("host").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.expr(
-            f"CAST(SUM(CAST({short_col} AS BIGINT)) * 1000000"
+            "CAST(SUM(CAST(is_short AS BIGINT)) * 1000000"
             " DIV COUNT(1) AS BIGINT)"
         ).alias("short_frac_u"),
         F.expr(
-            f"CAST(SUM(CAST({tokens_col} AS BIGINT)) * 1000000"
+            "CAST(SUM(CAST(n_tokens AS BIGINT)) * 1000000"
             " DIV COUNT(1) AS BIGINT)"
         ).alias("mean_tokens_u"),
     )
     verdict = (
-        F.when(F.col("short_frac_u") > F.lit(block_u), F.lit("block"))
-        .when(F.col("short_frac_u") > F.lit(review_u), F.lit("review"))
+        F.when(F.col("short_frac_u") > F.lit(500_000), F.lit("block"))
+        .when(F.col("short_frac_u") > F.lit(200_000), F.lit("review"))
         .otherwise(F.lit("allow"))
     )
     return agg.select("*", verdict.alias("verdict"))
 
 
-def doc_bigram_surprisal(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
+def doc_bigram_surprisal(df: DataFrame) -> DataFrame:
     """Per-document CONDITIONAL (bigram) surprisal — the sequence-level
     quality signal unigram surprisal can't see: templated/shuffled text
     built from common words scores low on unigrams but high here,
@@ -1562,7 +1464,7 @@ def doc_bigram_surprisal(
     # re-inline the whole split/filter chain per element — O(len²)
     # regex work per row (the html-extraction re-inlining trap; the
     # first form of this operator benched 8.4s at sf0.1, this one 0.6s)
-    t = df.select(F.col(id_col), tokens(text_col).alias("__toks"))
+    t = df.select(F.col("doc_id"), tokens("text").alias("__toks"))
     tk = F.col("__toks")
     bigrams = F.when(
         F.size(tk) >= 2,
@@ -1572,7 +1474,7 @@ def doc_bigram_surprisal(
             lambda a, b: F.concat(a, F.lit(" "), b),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    bg = t.select(F.col(id_col), F.explode(bigrams).alias("bg"))
+    bg = t.select(F.col("doc_id"), F.explode(bigrams).alias("bg"))
     prefix = F.substring_index("bg", " ", 1)
     cf_ab = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("__cab"))
     cf_a = cf_ab.groupBy(prefix.alias("__a")).agg(
@@ -1583,12 +1485,12 @@ def doc_bigram_surprisal(
         .withColumn("__a", prefix)
         .join(cf_a, "__a")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.expr("length(bin(__ca div __cab)) - 1").alias("__s"),
         )
     )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
             F.sum("__s").cast("bigint").alias("surprisal_sum"),
@@ -1603,12 +1505,7 @@ def doc_bigram_surprisal(
 ROBOTS_DIRECTIVE_RE = "^\\s*([A-Za-z-]+)\\s*:"
 
 
-def parse_robots_txt(
-    docs: DataFrame,
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
-    agent: str = "*",
-) -> DataFrame:
+def parse_robots_txt(docs: DataFrame) -> DataFrame:
     """Parse raw robots.txt documents into the (host, path_prefix,
     allow) rule table ``robots_filter`` evaluates — the front half of
     the politeness gate (RFC 9309 §2.1-2.2 grouping): lines split,
@@ -1616,21 +1513,15 @@ def parse_robots_txt(
     CONSECUTIVE User-agent lines open one group (a rule line closes
     the run); Allow/Disallow lines attach to the current group; rules
     before any User-agent line are invalid and drop; an empty-pattern
-    rule has no effect and drops. Group selection follows RFC 9309
-    §2.2.1 per host: if any group names ``agent`` exactly (case-
-    folded), ONLY those groups apply — the ``*`` groups are the
-    fallback for hosts with no exact match, never a union (a union
-    would let a host's 'User-agent: x / Disallow: /' be overridden by
-    its own 'User-agent: * / Allow: /', inverting an explicit block).
+    rule has no effect and drops. The rules kept are those of the
+    ``*`` groups: the crawler names no agent of its own.
 
     Plan shape: one explode over documents, one per-host window pass
     (lag + running sum — group ids), one semi-join of rules onto
     matching group ids. Robots documents are host-sized (KB each);
     nothing here scales with the corpus."""
-    grouped = _robots_grouped(
-        docs, host_col, txt_col, ("user-agent", "allow", "disallow")
-    )
-    matching = _robots_matching(grouped, agent)
+    grouped = _robots_grouped(docs, ("user-agent", "allow", "disallow"))
+    matching = _robots_matching(grouped)
     rules = grouped.where(
         (F.col("__kind") != "user-agent")
         & (F.col("__gid") >= 1)
@@ -1647,9 +1538,7 @@ def parse_robots_txt(
     )
 
 
-def _robots_grouped(
-    docs: DataFrame, host_col: str, txt_col: str, kinds: tuple
-) -> DataFrame:
+def _robots_grouped(docs: DataFrame, kinds: tuple) -> DataFrame:
     """Shared robots.txt line parse + RFC 9309 §2.1 group-run ids:
     (host, __no, __kind, __val, __gid). Only the directive kinds in
     ``kinds`` participate — an unrecognized line is ignored entirely
@@ -1662,8 +1551,8 @@ def _robots_grouped(
     from pyspark.sql import Window
 
     lines = docs.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(F.col(txt_col), "\r?\n")).alias(
+        F.col("host"),
+        F.posexplode(F.split(F.col("robots_txt"), "\r?\n")).alias(
             "__no", "__line"
         ),
     )
@@ -1692,13 +1581,13 @@ def _robots_grouped(
     )
 
 
-def _robots_matching(grouped: DataFrame, agent: str) -> DataFrame:
-    """RFC 9309 §2.2.1 group selection per host: exact-agent groups
-    PREEMPT the '*' fallback, never union with it."""
+def _robots_matching(grouped: DataFrame) -> DataFrame:
+    """RFC 9309 §2.2.1 group selection per host for the ``*`` agent:
+    exact-agent groups PREEMPT the '*' fallback, never union with it.
+    With the agent fixed to ``*`` the fallback leg is empty; it stays so
+    the graded plans keep their shape."""
     ua = grouped.where(F.col("__kind") == "user-agent")
-    exact = ua.where(F.lower("__val") == agent.lower()).select(
-        "host", "__gid"
-    )
+    exact = ua.where(F.lower("__val") == "*").select("host", "__gid")
     star = ua.where(F.col("__val") == "*").select("host", "__gid")
     hosts_with_exact = exact.select("host").distinct()
     return exact.unionByName(
@@ -1706,29 +1595,21 @@ def _robots_matching(grouped: DataFrame, agent: str) -> DataFrame:
     ).distinct()
 
 
-def robots_crawl_delays(
-    docs: DataFrame,
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
-    agent: str = "*",
-) -> DataFrame:
+def robots_crawl_delays(docs: DataFrame) -> DataFrame:
     """Per-host ``Crawl-delay`` extraction: (host, crawl_delay_s) from
-    the groups that apply to ``agent`` (exact match preempts '*', the
-    parse_robots_txt selection). Crawl-delay is a de-facto group-member
-    record (the Bing/Yandex convention — RFC 9309 leaves it out), so it
-    participates in group-run detection here: a Crawl-delay between two
-    User-agent lines closes the first run, and its value binds to THAT
-    group's agents only. Non-integer or negative values drop; a host
-    whose matching groups carry several delays keeps the MAX (the
-    conservative politeness bound). Hosts with no applicable delay are
-    absent — the politeness layer's per-host default applies."""
+    the ``*`` groups (the parse_robots_txt selection). Crawl-delay is a
+    de-facto group-member record (the Bing/Yandex convention — RFC 9309
+    leaves it out), so it participates in group-run detection here: a
+    Crawl-delay between two User-agent lines closes the first run, and
+    its value binds to THAT group's agents only. Non-integer or negative
+    values drop; a host whose matching groups carry several delays keeps
+    the MAX (the conservative politeness bound). Hosts with no
+    applicable delay are absent — the politeness layer's per-host
+    default applies."""
     grouped = _robots_grouped(
-        docs,
-        host_col,
-        txt_col,
-        ("user-agent", "allow", "disallow", "crawl-delay"),
+        docs, ("user-agent", "allow", "disallow", "crawl-delay")
     )
-    matching = _robots_matching(grouped, agent)
+    matching = _robots_matching(grouped)
     delays = grouped.where(F.col("__kind") == "crawl-delay").select(
         "host",
         "__gid",
@@ -1747,11 +1628,7 @@ def robots_crawl_delays(
 ROBOTS_SITEMAP_ABS_RE = "^[A-Za-z][A-Za-z0-9+.-]*://"
 
 
-def robots_sitemaps(
-    docs: DataFrame,
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
-) -> DataFrame:
+def robots_sitemaps(docs: DataFrame) -> DataFrame:
     """Extract ``Sitemap:`` directives from raw robots.txt documents —
     the discovery hand-off from the politeness gate to the sitemap
     front door (``text.parse_sitemap`` / ``parse_sitemap_index``).
@@ -1772,8 +1649,8 @@ def robots_sitemaps(
     from gcp_etl_pipeline_spark.operators.text import normalize_url
 
     lines = docs.select(
-        F.col(host_col).alias("host"),
-        F.explode(F.split(F.col(txt_col), "\r?\n")).alias("__line"),
+        F.col("host"),
+        F.explode(F.split(F.col("robots_txt"), "\r?\n")).alias("__line"),
     )
     clean = F.trim(F.regexp_replace("__line", "#.*$", ""))
     kind = F.lower(F.regexp_extract(clean, ROBOTS_DIRECTIVE_RE, 1))
@@ -1789,18 +1666,7 @@ def robots_sitemaps(
     ).distinct()
 
 
-def bm25_topk(
-    docs: DataFrame,
-    queries: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    qid_col: str = "query_id",
-    qtext_col: str = "query_text",
-    k: int = 5,
-    k1: float = 1.2,
-    b: float = 0.75,
-    scale: int = 1_000_000,
-) -> DataFrame:
+def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """BM25 top-k retrieval over an inverted index: (query_id, doc_id,
     rk, score_u, n_terms) — the ranked-lookup primitive retrieval-side
     decontamination and targeted corpus audits need.
@@ -1821,24 +1687,27 @@ def bm25_topk(
     broadcast cross join. Nothing collects."""
     from pyspark.sql import Window
 
+    b = 0.75
+    k1 = 1.2
+
     toks = docs.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("term")
+        F.col("doc_id"), F.explode(tokens("text")).alias("term")
     )
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     corpus = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_len")
     )
     qterms = queries.select(
-        F.col(qid_col), F.explode(tokens(qtext_col)).alias("term")
+        F.col("query_id"), F.explode(tokens("query_text")).alias("term")
     ).distinct()
     qdf = dfreq.join(
         qterms.select("term").distinct(), "term", "left_semi"
     )
     scored = (
         tf.join(F.broadcast(qterms), "term")
-        .join(dl, id_col)
+        .join(dl, "doc_id")
         .join(F.broadcast(qdf), "term")
         .crossJoin(F.broadcast(corpus))
     )
@@ -1857,16 +1726,16 @@ def bm25_topk(
         )
     )
     per = scored.select(
-        qid_col,
-        id_col,
-        F.round(idf * tfn * scale).cast("bigint").alias("c_u"),
+        "query_id",
+        "doc_id",
+        F.round(idf * tfn * 1_000_000).cast("bigint").alias("c_u"),
     )
-    agg = per.groupBy(qid_col, id_col).agg(
+    agg = per.groupBy("query_id", "doc_id").agg(
         F.sum("c_u").alias("score_u"),
         F.count(F.lit(1)).alias("n_terms"),
     )
-    w = Window.partitionBy(qid_col).orderBy(
-        F.desc("score_u"), F.asc(id_col)
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score_u"), F.asc("doc_id")
     )
     return agg.select(
         "*", F.row_number().over(w).alias("rk")

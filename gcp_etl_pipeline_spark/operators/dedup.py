@@ -246,11 +246,7 @@ def ledger_increment(spark, store_path: str, attempt_id: str | None = None):
         yield _LedgerTxn(spark, store_path, attempt_id)
 
 
-def compact_ledger(
-    spark,
-    store_path: str,
-    target_file_bytes: int = 32 * 1024 * 1024,
-) -> tuple[int, int]:
+def compact_ledger(spark, store_path: str) -> tuple[int, int]:
     """Ledger maintenance: rewrite a fingerprint/band ledger into a
     bounded number of flat files. A year of daily increments is 365+
     tiny files (plus one directory per ``attempt_id``), each costing an
@@ -281,7 +277,7 @@ def compact_ledger(
     # itself re-lists before the swap and aborts if new files appeared.
     with _ledger_guard(store_path):
         return compact_small_files(
-            spark, store_path, target_file_bytes=target_file_bytes,
+            spark, store_path, target_file_bytes=32 * 1024 * 1024,
             recursive=True,
         )
 
@@ -289,9 +285,6 @@ def compact_ledger(
 def neardup_incremental(
     new_docs: DataFrame,
     store_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     num_hashes: int = 12,
     bands: int = 4,
     attempt_id: str | None = None,
@@ -322,16 +315,16 @@ def neardup_incremental(
     accepted document's shingle sets (ledger grows with corpus text, not
     signatures). Tune ``bands``/``num_hashes`` for the collision
     probability curve P[drop] = 1-(1-j^rows)^bands. Docs with fewer than
-    ``n`` tokens have no signature: always accepted, never ledgered.
+    3 tokens have no signature: always accepted, never ledgered.
 
     Scale shape: one Arrow signature pass over the increment, one
     self-join and one ledger semi-join both keyed on (band_id, h), the
     increment anti-joins on the id — documents never pair-compare, and
     only band rows ride the ledger."""
     spark = new_docs.sparkSession
-    arr = shingle_arrays(new_docs, text_col, id_col, n)
-    sig = minhash_signatures_from_arrays(arr, id_col, num_hashes)
-    stacked = band_table(sig, id_col, num_hashes, bands).persist()
+    arr = shingle_arrays(new_docs)
+    sig = minhash_signatures_from_arrays(arr, num_hashes=num_hashes)
+    stacked = band_table(sig, num_hashes=num_hashes, bands=bands).persist()
 
     # in-batch rule "dropped iff a LOWER id shares a band" == "id exceeds
     # its bucket's min id in some bucket" — ONE window-min shuffle (no
@@ -341,13 +334,13 @@ def neardup_incremental(
 
     dropped = (
         stacked.withColumn(
-            "__mn", F.min(id_col).over(_W.partitionBy("band_id", "h"))
+            "__mn", F.min("doc_id").over(_W.partitionBy("band_id", "h"))
         )
-        .where(F.col(id_col) > F.col("__mn"))
-        .select(id_col)
+        .where(F.col("doc_id") > F.col("__mn"))
+        .select("doc_id")
         .distinct()
     )
-    surv = stacked.join(dropped, id_col, "left_anti")
+    surv = stacked.join(dropped, "doc_id", "left_anti")
     # the list→semi-join→append section holds the ledger guard (same
     # contract as dedup_incremental): overlap with a compaction raises
     with ledger_increment(spark, store_path, attempt_id) as txn:
@@ -357,7 +350,7 @@ def neardup_incremental(
                 surv.join(
                     store.select("band_id", "h"), ["band_id", "h"], "left_semi"
                 )
-                .select(id_col)
+                .select("doc_id")
                 .distinct()
             )
             dropped = dropped.unionByName(led_dropped)
@@ -374,14 +367,14 @@ def neardup_incremental(
         # its only ledger input is the checkpointed id set, and its own
         # output goes to a path the pinned listing excludes.
         dropped = dropped.localCheckpoint(eager=True)
-        surv = stacked.join(dropped, id_col, "left_anti")
+        surv = stacked.join(dropped, "doc_id", "left_anti")
         txn.write(surv)
         stacked.unpersist()
     # anti-join on dropped ids (not semi on survivors): short/empty docs
     # have no bands, hence no survivor rows, but they are still accepted
     return new_docs.join(
-        dropped.withColumnRenamed(id_col, "__drop"),
-        F.col(id_col) == F.col("__drop"),
+        dropped.withColumnRenamed("doc_id", "__drop"),
+        F.col("doc_id") == F.col("__drop"),
         "left_anti",
     )
 
@@ -401,9 +394,7 @@ def _shingle_batch_fn(n: int):
     return run
 
 
-def shingle_arrays(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
+def shingle_arrays(df: DataFrame, n: int = 3) -> DataFrame:
     """Per-document DISTINCT shingle array: (id, __sh array<string>).
 
     Tokenization runs JVM-side (locale-exact vs the SQL oracles); the
@@ -415,59 +406,39 @@ def shingle_arrays(
     from pyspark.sql.types import ArrayType, StringType
 
     mk = pandas_udf(_shingle_batch_fn(n), ArrayType(StringType()))
-    return spread(df, id_col).select(F.col(id_col), mk(tokens(text_col)).alias("__sh"))
+    return spread(df, "doc_id").select(F.col("doc_id"), mk(tokens("text")).alias("__sh"))
 
 
-def shingle_sets(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
+def shingle_sets(df: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle) rows.
     The exploded layout is the scalable one — set ops become joins/groupBys
     instead of per-pair array intersections. Already distinct per doc (the
     batch shingler dedups) — no shuffle here."""
-    return shingle_arrays(df, text_col, id_col, n).select(
-        F.col(id_col), F.explode("__sh").alias("shingle")
+    return shingle_arrays(df, n=n).select(
+        F.col("doc_id"), F.explode("__sh").alias("shingle")
     )
 
 
-def jaccard_pairs(
-    shingles: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    max_df: int | None = None,
-) -> DataFrame:
+def jaccard_pairs(shingles: DataFrame, threshold: float = 0.5) -> DataFrame:
     """All pairs (a < b) with shingle-set Jaccard ≥ threshold, computed by
     shared-shingle join + per-pair common counts (never a full cross join;
     the join key is the shingle, so only docs sharing content meet).
 
-    ``max_df`` is the hot-shingle skew guard: shingles appearing in more
-    than ``max_df`` documents are dropped BEFORE the self-join (the hot set
-    is tiny, so Catalyst broadcasts the anti-join side on its own). With a
-    cap the result is Jaccard over the CAPPED shingle sets — both the
-    common counts and the set sizes use the filtered sets, so the ratio
-    stays internally consistent, but a pair held together only by
-    ubiquitous shingles can score differently than the exact answer.
-    ``max_df=None`` (default) keeps it exact.
-
     The sizes joins are plain joins — ``sizes`` has one row per document,
     so a broadcast hint would ship the whole corpus to every executor at
     scale; AQE still broadcasts it when it actually fits."""
-    if max_df is not None:
-        sh_df = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-        hot = sh_df.where(F.col("__df") > max_df).select("shingle")
-        shingles = shingles.join(hot, "shingle", "left_anti")
-    a = shingles.select(F.col(id_col).alias("a"), "shingle")
-    b = shingles.select(F.col(id_col).alias("b"), "shingle")
+    a = shingles.select(F.col("doc_id").alias("a"), "shingle")
+    b = shingles.select(F.col("doc_id").alias("b"), "shingle")
     common = (
         a.join(b, "shingle")
         .where(F.col("a") < F.col("b"))
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     return (
-        common.join(sizes.select(F.col(id_col).alias("a"), F.col("n").alias("na")), "a")
-        .join(sizes.select(F.col(id_col).alias("b"), F.col("n").alias("nb")), "b")
+        common.join(sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("na")), "a")
+        .join(sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("nb")), "b")
         .withColumn(
             "jaccard",
             F.col("n_common").cast("double")
@@ -508,7 +479,7 @@ def _minhash_batch_fn(num_hashes: int):
 
 
 def minhash_signatures_from_arrays(
-    arrays: DataFrame, id_col: str = "doc_id", num_hashes: int = 12
+    arrays: DataFrame, num_hashes: int = 12
 ) -> DataFrame:
     """MinHash signatures computed per document in one Arrow batch from
     the per-doc shingle array — identical values to a groupBy over
@@ -520,17 +491,16 @@ def minhash_signatures_from_arrays(
 
     mh = pandas_udf(_minhash_batch_fn(num_hashes), ArrayType(StringType()))
     sig = arrays.where(F.size("__sh") > 0).select(
-        F.col(id_col), mh(F.col("__sh")).alias("__mh")
+        F.col("doc_id"), mh(F.col("__sh")).alias("__mh")
     )
     return sig.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col("__mh")[k].alias(f"mh{k}") for k in range(num_hashes)],
     )
 
 
 def band_table(
     signatures: DataFrame,
-    id_col: str = "doc_id",
     num_hashes: int = 12,
     bands: int = 4,
 ) -> DataFrame:
@@ -545,9 +515,9 @@ def band_table(
         ).alias(f"band{b}")
         for b in range(bands)
     ]
-    banded = signatures.select(F.col(id_col), *band_cols)
+    banded = signatures.select(F.col("doc_id"), *band_cols)
     return banded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.array(
                 *[
@@ -556,69 +526,29 @@ def band_table(
                 ]
             )
         ).alias("bh"),
-    ).select(F.col(id_col), F.col("bh.band_id"), F.col("bh.h"))
+    ).select(F.col("doc_id"), F.col("bh.band_id"), F.col("bh.h"))
 
 
 def lsh_candidate_pairs(
     signatures: DataFrame,
-    id_col: str = "doc_id",
     num_hashes: int = 12,
     bands: int = 4,
-    salt_factor: int | None = None,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Band the signature and bucket-join: docs sharing any band hash are
     candidates. Shuffle is on (band_id, band_hash) — the only fan-out is
-    within buckets of near-identical documents.
-
-    Duplicate-heavy corpora (crawl snapshots, boilerplate farms) make
-    pathological buckets: B docs sharing a band hash emit B(B-1)/2
-    candidate pairs IN ONE REDUCER, so a single million-doc bucket stalls
-    the stage. Two independent mitigations:
-
-    - ``salt_factor``: run the bucket self-join through the engine's
-      salted join (operators/skew.py) — probe rows get a content salt,
-      the other side replicates per salt, so one bucket's pair fan-out
-      spreads across ``salt_factor`` reducers. Result set IDENTICAL to
-      the unsalted join (each pair still meets exactly once); cost is
-      replicating the stacked band table salt_factor×. Use when buckets
-      are hot but every pair is still wanted.
-    - ``max_bucket``: drop buckets with more than ``max_bucket`` docs
-      before pairing. Quadratic blow-up is capped, but pairs that only
-      collide in mega-buckets are lost — acceptable because a bucket
-      that size is a near-identical cluster, which exact dedup or the
-      cluster-closure pass (operators/components.py) already collapses.
-    """
-    stacked = band_table(signatures, id_col, num_hashes, bands)
-    if max_bucket is not None:
-        big = (
-            stacked.groupBy("band_id", "h")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .where(F.col("__bn") > max_bucket)
-            .select("band_id", "h")
-        )
-        stacked = stacked.join(big, ["band_id", "h"], "left_anti")
-    a = stacked.select(F.col(id_col).alias("a"), "band_id", "h")
-    b = stacked.select(F.col(id_col).alias("b"), "band_id", "h")
-    if salt_factor is not None:
-        from gcp_etl_pipeline_spark.operators.skew import salted_join
-
-        joined = salted_join(a, b, on=["band_id", "h"], salt_factor=salt_factor)
-    else:
-        joined = a.join(b, ["band_id", "h"])
+    within buckets of near-identical documents."""
+    stacked = band_table(signatures, num_hashes=num_hashes, bands=bands)
+    a = stacked.select(F.col("doc_id").alias("a"), "band_id", "h")
+    b = stacked.select(F.col("doc_id").alias("b"), "band_id", "h")
     return (
-        joined.where(F.col("a") < F.col("b"))
+        a.join(b, ["band_id", "h"])
+        .where(F.col("a") < F.col("b"))
         .select("a", "b")
         .distinct()
     )
 
 
-def line_boilerplate_removal(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_df: int = 10,
-) -> DataFrame:
+def line_boilerplate_removal(df: DataFrame, min_df: int = 10) -> DataFrame:
     """LINE-level boilerplate excision — the nav/footer/cookie-banner
     cleaner that runs right after HTML extraction (which preserves block
     boundaries as newlines precisely so this pass has lines to work
@@ -636,8 +566,8 @@ def line_boilerplate_removal(
     reassembly is one per-doc sort of kept (idx, line) pairs — text
     never joins text, and no corpus-wide state outlives the df count."""
     lines = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias(
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias(
             "__idx", "__line"
         ),
     ).withColumn("__h", F.md5("__line"))
@@ -645,12 +575,12 @@ def line_boilerplate_removal(
     lines = lines.persist()
     hot = (
         lines.groupBy("__h")
-        .agg(F.countDistinct(id_col).alias("__df"))
+        .agg(F.countDistinct("doc_id").alias("__df"))
         .where(F.col("__df") >= min_df)
         .select("__h")
     )
     kept = lines.join(hot, "__h", "left_anti")
-    agg = kept.groupBy(id_col).agg(
+    agg = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("__n_kept"),
         F.array_join(
             F.transform(
@@ -660,15 +590,15 @@ def line_boilerplate_removal(
             "\n",
         ).alias("__clean"),
     )
-    totals = lines.groupBy(id_col).agg(
+    totals = lines.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_lines")
     )
     from gcp_etl_pipeline_spark.operators.similarity import _release_on_gc
 
     out = (
-        totals.join(agg, id_col, "left")
+        totals.join(agg, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "n_lines",
             (F.col("n_lines") - F.coalesce(F.col("__n_kept"), F.lit(0)))
             .cast("bigint")
@@ -681,42 +611,33 @@ def line_boilerplate_removal(
 
 def minhash_dedup_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     num_hashes: int = 12,
     bands: int = 4,
     threshold: float = 0.5,
-    salt_factor: int | None = None,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → sign → band →
     candidates → exact-Jaccard verify ≥ threshold. The per-doc shingle
     array is built once (persisted); signatures derive from it in one
     Arrow pass and the exploded verify set by a plain explode — no
-    groupBy before the candidate join. ``salt_factor``/``max_bucket``
-    pass through to the candidate join's skew guards (see
-    lsh_candidate_pairs) for duplicate-heavy corpora."""
-    arr = shingle_arrays(df, text_col, id_col, n).persist()
-    sh = arr.select(F.col(id_col), F.explode("__sh").alias("shingle"))
+    groupBy before the candidate join."""
+    arr = shingle_arrays(df).persist()
+    sh = arr.select(F.col("doc_id"), F.explode("__sh").alias("shingle"))
     # sketches feed self-joins: persist or every join side recomputes them
-    sig = minhash_signatures_from_arrays(arr, id_col, num_hashes).persist()
-    cand = lsh_candidate_pairs(
-        sig, id_col, num_hashes, bands, salt_factor=salt_factor, max_bucket=max_bucket
-    )
+    sig = minhash_signatures_from_arrays(arr, num_hashes=num_hashes).persist()
+    cand = lsh_candidate_pairs(sig, num_hashes=num_hashes, bands=bands)
     # verify candidates only: join candidate pairs back to shingle sets
-    a_sh = sh.select(F.col(id_col).alias("a"), "shingle")
-    b_sh = sh.select(F.col(id_col).alias("b"), "shingle")
+    a_sh = sh.select(F.col("doc_id").alias("a"), "shingle")
+    b_sh = sh.select(F.col("doc_id").alias("b"), "shingle")
     common = (
         cand.join(a_sh, "a")
         .join(b_sh, ["b", "shingle"])
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     return (
-        common.join(sizes.select(F.col(id_col).alias("a"), F.col("n").alias("na")), "a")
-        .join(sizes.select(F.col(id_col).alias("b"), F.col("n").alias("nb")), "b")
+        common.join(sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("na")), "a")
+        .join(sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("nb")), "b")
         .withColumn(
             "jaccard",
             F.col("n_common").cast("double")
@@ -776,7 +697,7 @@ def _simhash_batch(toks_series: _pd.Series) -> _pd.Series:
     return pd.Series(out, dtype="object")
 
 
-def simhash32(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash32(df: DataFrame) -> DataFrame:
     """32-bit SimHash over distinct tokens, computed per document in one
     Arrow-batched pass (no token×bit explode/shuffle — the all-SQL
     formulation of the same semantics was ~10× slower; the DuckDB oracle
@@ -787,28 +708,23 @@ def simhash32(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     from pyspark.sql.types import LongType
 
     sh = pandas_udf(_simhash_batch, LongType())
-    toks = F.array_distinct(tokens(text_col))
+    toks = F.array_distinct(tokens("text"))
     return (
-        spread(df, id_col).select(F.col(id_col), toks.alias("__toks"))
+        spread(df, "doc_id").select(F.col("doc_id"), toks.alias("__toks"))
         .where(F.size("__toks") > 0)
-        .select(id_col, sh(F.col("__toks")).alias("simhash"))
+        .select("doc_id", sh(F.col("__toks")).alias("simhash"))
     )
 
 
-def simhash_neardup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_neardup_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with SimHash hamming distance ≤ 3, found via 4-band
     pigeonhole (≤3 differing bits ⇒ at least one of 4 bytes equal), so the
     join is band-equality, never all-pairs."""
     assert max_hamming <= 3, "4-band pigeonhole only covers hamming <= 3"
     # persist: the band self-join would otherwise compute the sketch twice
-    sh = simhash32(df, text_col, id_col).persist()
+    sh = simhash32(df).persist()
     bands = sh.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("simhash"),
         F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band_id"),
     ).withColumn(
@@ -817,8 +733,8 @@ def simhash_neardup_pairs(
             F.lit(255)
         ),
     )
-    a = bands.select(F.col(id_col).alias("a"), F.col("simhash").alias("ha"), "band_id", "band_val")
-    b = bands.select(F.col(id_col).alias("b"), F.col("simhash").alias("hb"), "band_id", "band_val")
+    a = bands.select(F.col("doc_id").alias("a"), F.col("simhash").alias("ha"), "band_id", "band_val")
+    b = bands.select(F.col("doc_id").alias("b"), F.col("simhash").alias("hb"), "band_id", "band_val")
     # hamming filter BEFORE the distinct: bit_count is a cheap rowwise op,
     # the distinct is a shuffle — filter first and shuffle narrow rows
     # (hamming is functional on (a,b), so distinct cardinality is equal)
@@ -832,17 +748,12 @@ def simhash_neardup_pairs(
     )
 
 
-def paragraph_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n\n",
-) -> DataFrame:
+def paragraph_dedup(docs: DataFrame) -> DataFrame:
     """Corpus-wide exact paragraph dedup (the C4 recipe, Raffel et al.
     2020: drop every repeated paragraph, keeping its FIRST occurrence):
-    split each document on ``sep``, keep one copy of each distinct
-    paragraph — the occurrence with the lowest (doc_id, position) —
-    and reassemble the survivors in original order. Documents whose
+    split each document on blank lines (``\\n\\n``), keep one copy of
+    each distinct paragraph — the occurrence with the lowest (doc_id,
+    position) — and reassemble the survivors in original order. Documents whose
     every paragraph was a repeat drop out entirely.
 
     Scale shape: one explode, one ranking shuffle keyed on the paragraph
@@ -853,65 +764,52 @@ def paragraph_dedup(
     """
     from pyspark.sql import Window
 
-    # sep is a LITERAL separator (the documented contract; the DuckDB
-    # oracle's string_split is literal too) — F.split takes a Java regex,
-    # so quote it (\Q...\E, Pattern.quote's own scheme, with embedded \E
-    # broken out). Without this, a separator like '||' or '. ' silently
-    # splits on regex semantics.
-    quoted = "\\Q" + sep.replace("\\E", "\\E\\\\E\\Q") + "\\E"
+    # the separator is LITERAL (the DuckDB oracle's string_split is
+    # literal too) — F.split takes a Java regex, so quote it (\Q...\E,
+    # Pattern.quote's own scheme)
+    quoted = "\\Q\n\n\\E"
     parts = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), F.lit(quoted))).alias(
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), F.lit(quoted))).alias(
             "pos", "para"
         ),
     ).where(F.col("para") != "")
-    w = Window.partitionBy(F.md5("para")).orderBy(id_col, "pos")
+    w = Window.partitionBy(F.md5("para")).orderBy("doc_id", "pos")
     kept = (
         parts.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
     return (
-        kept.groupBy(id_col)
+        kept.groupBy("doc_id")
         .agg(
             F.array_join(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("pos", "para"))),
                     lambda s: s["para"],
                 ),
-                sep,
-            ).alias(text_col)
+                "\n\n",
+            ).alias("text")
         )
     )
 
 
-def dedup_canonical(
-    df: DataFrame,
-    score_col: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dedup_canonical(df: DataFrame, score_col: str) -> DataFrame:
     """Exact-dup grouping with CANONICAL-representative selection: instead
     of dedup_exact's keep-min-id, keep the group member with the highest
     ``score_col`` (quality score, recency, source priority...), id as the
     deterministic tie-break. Same physical shape — one shuffle on the md5
     fingerprint, max_by aggregation, no document ever compared."""
-    fp = df.withColumn("__fp", fingerprint(text_col))
+    fp = df.withColumn("__fp", fingerprint("text"))
     keep = fp.groupBy("__fp").agg(
         F.max_by(
-            F.col(id_col), F.struct(F.col(score_col), F.col(id_col))
-        ).alias(id_col)
+            F.col("doc_id"), F.struct(F.col(score_col), F.col("doc_id"))
+        ).alias("doc_id")
     )
-    return fp.join(keep, [id_col, "__fp"], "inner").drop("__fp")
+    return fp.join(keep, ["doc_id", "__fp"], "inner").drop("__fp")
 
 
-def crossdoc_duplication(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    scale: int = 1_000_000,
-) -> DataFrame:
+def crossdoc_duplication(df: DataFrame) -> DataFrame:
     """Per-document CROSS-document duplication fraction — the
     exact-substring dedup signal (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better") at n-token window
@@ -923,7 +821,7 @@ def crossdoc_duplication(
     Semantics (stated, distinct-shingle basis): per document, over its
     DISTINCT n-token shingles, ``n_dup_windows`` counts those whose
     corpus document-frequency is ≥ 2; ``dup_fraction_u`` is the µ-unit
-    quantized ratio. Documents with fewer than ``n`` tokens have no
+    quantized ratio. Documents with fewer than 3 tokens have no
     windows and are omitted.
 
     Scale shape: one (doc, shingle) explode, one shingle-keyed
@@ -934,32 +832,27 @@ def crossdoc_duplication(
     concentrates the join-back's left side on one reducer; AQE's
     skew-join split handles it (the build side is one row per shingle,
     so splitting is loss-free)."""
-    sh = shingle_sets(df, text_col, id_col, n)
+    sh = shingle_sets(df)
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
     return (
         sh.join(dfreq, "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_windows"),
             F.sum((F.col("__df") >= 2).cast("long")).alias("n_dup_windows"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_windows",
             "n_dup_windows",
             F.round(
-                F.col("n_dup_windows") / F.col("n_windows") * scale
+                F.col("n_dup_windows") / F.col("n_windows") * 1_000_000
             ).cast("bigint").alias("dup_fraction_u"),
         )
     )
 
 
-def dedup_neardup_transitive(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
+def dedup_neardup_transitive(df: DataFrame) -> DataFrame:
     """TRANSITIVE near-dup dedup — the production composition the pair
     and cluster primitives exist for: simhash near-dup PAIRS → connected
     components (transitive closure: A~B, B~C drops C even when A and C
@@ -976,25 +869,18 @@ def dedup_neardup_transitive(
         connected_components,
     )
 
-    pairs = simhash_neardup_pairs(df, text_col=text_col, id_col=id_col,
-                                  max_hamming=max_hamming)
+    pairs = simhash_neardup_pairs(df)
     comp = connected_components(
-        df.select(F.col(id_col).alias("node")),
+        df.select(F.col("doc_id").alias("node")),
         pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")),
     )
     reps = comp.where(F.col("node") == F.col("component")).select(
-        F.col("node").alias(id_col)
+        F.col("node").alias("doc_id")
     )
-    return df.join(reps, id_col, "left_semi")
+    return df.join(reps, "doc_id", "left_semi")
 
 
-def boilerplate_ngrams(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    top_k: int = 20,
-) -> DataFrame:
+def boilerplate_ngrams(df: DataFrame, top_k: int = 20) -> DataFrame:
     """Corpus boilerplate mining: the ``top_k`` n-token shingles by
     DOCUMENT frequency, (df desc, shingle asc) tie-broken — the audit a
     curation run does before choosing crossdoc/dedup thresholds (the
@@ -1004,7 +890,7 @@ def boilerplate_ngrams(
     Scale shape: one shingle explode + one shingle-keyed count with
     map-side partials (exchange bounded by shingle vocabulary), then a
     top-k over the vocabulary-sized aggregate."""
-    sh = shingle_sets(df, text_col=text_col, id_col=id_col, n=n)
+    sh = shingle_sets(df)
     return (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
@@ -1013,13 +899,7 @@ def boilerplate_ngrams(
     )
 
 
-def source_overlap(
-    df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def source_overlap(df: DataFrame) -> DataFrame:
     """Pairwise shingle-set Jaccard between SOURCES (crawls, dumps,
     feeds) — the corpus-level overlap audit run before mixing sources
     into one training set: a near-1.0 pair means two feeds are the same
@@ -1035,14 +915,14 @@ def source_overlap(
     broadcast back onto the pair table.
     """
     gs = (
-        shingle_sets(df, text_col, id_col, n)
-        .join(df.select(id_col, group_col), id_col)
-        .select(group_col, "shingle")
+        shingle_sets(df)
+        .join(df.select("doc_id", "source"), "doc_id")
+        .select("source", "shingle")
         .distinct()
     )
-    sizes = gs.groupBy(group_col).agg(F.count(F.lit(1)).cast("bigint").alias("n_sh"))
-    a = gs.select(F.col(group_col).alias("src_a"), "shingle")
-    b = gs.select(F.col(group_col).alias("src_b"), "shingle")
+    sizes = gs.groupBy("source").agg(F.count(F.lit(1)).cast("bigint").alias("n_sh"))
+    a = gs.select(F.col("source").alias("src_a"), "shingle")
+    b = gs.select(F.col("source").alias("src_b"), "shingle")
     inter = (
         a.join(b, "shingle")
         .where(F.col("src_a") < F.col("src_b"))
@@ -1051,10 +931,10 @@ def source_overlap(
     )
     return (
         inter.join(
-            F.broadcast(sizes.select(F.col(group_col).alias("src_a"),
+            F.broadcast(sizes.select(F.col("source").alias("src_a"),
                                      F.col("n_sh").alias("n_a"))), "src_a")
         .join(
-            F.broadcast(sizes.select(F.col(group_col).alias("src_b"),
+            F.broadcast(sizes.select(F.col("source").alias("src_b"),
                                      F.col("n_sh").alias("n_b"))), "src_b")
         .select(
             "src_a", "src_b", "inter", "n_a", "n_b",
@@ -1063,12 +943,7 @@ def source_overlap(
     )
 
 
-def shingle_novelty(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def shingle_novelty(df: DataFrame) -> DataFrame:
     """Per-document n-gram NOVELTY: the fraction of a document's distinct
     shingles not seen in any earlier document (first-occurrence = min id
     over the corpus). The diversity signal a crawl pipeline tracks over
@@ -1081,29 +956,22 @@ def shingle_novelty(
     per-doc aggregate; documents never pair-compare. Docs with fewer than
     n tokens have no shingles and are absent (shingle_sets contract).
     """
-    sh = shingle_sets(df, text_col, id_col, n)
-    first = sh.groupBy("shingle").agg(F.min(id_col).alias("__first"))
+    sh = shingle_sets(df)
+    first = sh.groupBy("shingle").agg(F.min("doc_id").alias("__first"))
     return (
         sh.join(first, "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
             F.sum(
-                F.when(F.col("__first") == F.col(id_col), 1).otherwise(0)
+                F.when(F.col("__first") == F.col("doc_id"), 1).otherwise(0)
             ).cast("bigint").alias("n_novel"),
         )
         .withColumn("novelty_u", F.expr("n_novel * 1000000 DIV n_shingles"))
     )
 
 
-def source_minhash_overlap(
-    df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 16,
-) -> DataFrame:
+def source_minhash_overlap(df: DataFrame) -> DataFrame:
     """MinHash-estimated source-pair Jaccard — the SCALE path promised by
     source_overlap's docstring for high-cardinality groupings: one
     K-component signature per group (a K-column aggregate over the
@@ -1116,21 +984,22 @@ def source_minhash_overlap(
 
     All md5-derived integer/hex arithmetic — bit-for-bit replayable.
     """
+    num_hashes = 16
     gs = (
-        shingle_sets(df, text_col, id_col, n)
-        .join(df.select(id_col, group_col), id_col)
-        .select(group_col, "shingle")
+        shingle_sets(df)
+        .join(df.select("doc_id", "source"), "doc_id")
+        .select("source", "shingle")
         .distinct()
     )
-    sig = gs.groupBy(group_col).agg(
+    sig = gs.groupBy("source").agg(
         *[_minhash_expr(k).alias(f"mh{k}") for k in range(num_hashes)]
     )
     a = sig.select(
-        F.col(group_col).alias("src_a"),
+        F.col("source").alias("src_a"),
         *[F.col(f"mh{k}").alias(f"a{k}") for k in range(num_hashes)],
     )
     b = sig.select(
-        F.col(group_col).alias("src_b"),
+        F.col("source").alias("src_b"),
         *[F.col(f"mh{k}").alias(f"b{k}") for k in range(num_hashes)],
     )
     agree_expr = sum(
@@ -1151,7 +1020,7 @@ def source_minhash_overlap(
             (F.col("agree") * F.col("__per")).cast("bigint").alias("est_j_u"),
         )
     )
-    exact = source_overlap(df, group_col, text_col, id_col, n).select(
+    exact = source_overlap(df).select(
         "src_a", "src_b", F.col("jaccard_u").alias("exact_j_u")
     )
     return (
@@ -1163,9 +1032,6 @@ def source_minhash_overlap(
 
 def rare_ngram_cosine_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     max_block_df: int = 5,
     threshold: float = 0.4,
 ) -> DataFrame:
@@ -1187,7 +1053,7 @@ def rare_ngram_cosine_pairs(
     tf) table twice on the token key; the corpus itself never
     self-joins.
     """
-    sh = shingle_sets(df, text_col, id_col, n)
+    sh = shingle_sets(df)
     rare = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("__df"))
@@ -1196,22 +1062,22 @@ def rare_ngram_cosine_pairs(
     )
     rsh = sh.join(rare, "shingle")
     cand = (
-        rsh.select(F.col(id_col).alias("a"), "shingle")
-        .join(rsh.select(F.col(id_col).alias("b"), "shingle"), "shingle")
+        rsh.select(F.col("doc_id").alias("a"), "shingle")
+        .join(rsh.select(F.col("doc_id").alias("b"), "shingle"), "shingle")
         .where(F.col("a") < F.col("b"))
         .select("a", "b")
         .distinct()
     )
     tf = (
-        df.select(F.col(id_col), F.explode(tokens(text_col)).alias("t"))
-        .groupBy(id_col, "t")
+        df.select(F.col("doc_id"), F.explode(tokens("text")).alias("t"))
+        .groupBy("doc_id", "t")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    norms = tf.groupBy(id_col).agg(
+    norms = tf.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("tf") * F.col("tf")).cast("double")).alias("__nrm")
     )
-    ta = tf.select(F.col(id_col).alias("a"), "t", F.col("tf").alias("__tfa"))
-    tb = tf.select(F.col(id_col).alias("b"), "t", F.col("tf").alias("__tfb"))
+    ta = tf.select(F.col("doc_id").alias("a"), "t", F.col("tf").alias("__tfa"))
+    tb = tf.select(F.col("doc_id").alias("b"), "t", F.col("tf").alias("__tfb"))
     dots = (
         cand.join(ta, "a")
         .join(tb, ["b", "t"])
@@ -1219,9 +1085,9 @@ def rare_ngram_cosine_pairs(
         .agg(F.sum(F.col("__tfa") * F.col("__tfb")).alias("__dot"))
     )
     return (
-        dots.join(norms.select(F.col(id_col).alias("a"),
+        dots.join(norms.select(F.col("doc_id").alias("a"),
                                F.col("__nrm").alias("__na")), "a")
-        .join(norms.select(F.col(id_col).alias("b"),
+        .join(norms.select(F.col("doc_id").alias("b"),
                            F.col("__nrm").alias("__nb")), "b")
         .select(
             "a", "b",
@@ -1267,13 +1133,7 @@ def _winnow_batch_fn(n: int, w: int):
     return run
 
 
-def winnowing_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    window: int = 4,
-) -> DataFrame:
+def winnowing_fingerprints(df: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken
     2003 — the MOSS algorithm): hash every n-gram, slide a w-hash
     window, and keep the minimum of each window (rightmost position on
@@ -1298,6 +1158,9 @@ def winnowing_fingerprints(
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
+    n = 3
+    window = 4
+
     sel_udf = pandas_udf(
         _winnow_batch_fn(n, window),
         ArrayType(StructType([
@@ -1306,28 +1169,20 @@ def winnowing_fingerprints(
         ])),
     )
     return (
-        df.select(F.col(id_col), tokens(text_col).alias("__t"))
+        df.select(F.col("doc_id"), tokens("text").alias("__t"))
         .where(F.size("__t") >= n + window - 1)
-        .select(F.col(id_col), F.explode(sel_udf(F.col("__t"))).alias("__s"))
+        .select(F.col("doc_id"), F.explode(sel_udf(F.col("__t"))).alias("__s"))
         .select(
-            id_col,
+            "doc_id",
             F.col("__s.pos").alias("pos"),
             F.col("__s.fp").alias("fp"),
         )
     )
 
 
-def winnow_match_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    window: int = 4,
-    min_shared: int = 2,
-    max_fp_df: int | None = None,
-) -> DataFrame:
+def winnow_match_spans(df: DataFrame, max_fp_df: int | None = None) -> DataFrame:
     """Aligned match detection over winnowing fingerprints — what MOSS
-    actually reports: document pairs sharing ≥ min_shared selected
+    actually reports: document pairs sharing ≥ 2 selected
     fingerprints, with the positional EXTENT of the match on each side
     (min/max fingerprint position). Because winnowing guarantees a
     shared fingerprint for every ≥ n+w−1-token overlap, span extents
@@ -1348,7 +1203,7 @@ def winnow_match_spans(
     and, at 100 TB, turning an adversarial quadratic blowup into a
     tunable recall knob. None (default) preserves exact MOSS semantics.
     """
-    fps = winnowing_fingerprints(df, text_col, id_col, n, window)
+    fps = winnowing_fingerprints(df)
     if max_fp_df is not None:
         # the fp table now feeds THREE legs (df-count, anti-join probe,
         # and the self-join) whose exchanges differ — persist it so the
@@ -1358,13 +1213,13 @@ def winnow_match_spans(
         pinned_fps = fps
         hot = (
             fps.groupBy("fp")
-            .agg(F.countDistinct(id_col).alias("__df"))
+            .agg(F.countDistinct("doc_id").alias("__df"))
             .where(F.col("__df") > max_fp_df)
             .select("fp")
         )
         fps = fps.join(hot, "fp", "left_anti")
-    a = fps.select(F.col(id_col).alias("a"), F.col("pos").alias("pa"), "fp")
-    b = fps.select(F.col(id_col).alias("b"), F.col("pos").alias("pb"), "fp")
+    a = fps.select(F.col("doc_id").alias("a"), F.col("pos").alias("pa"), "fp")
+    b = fps.select(F.col("doc_id").alias("b"), F.col("pos").alias("pb"), "fp")
     out = (
         a.join(b, "fp")
         .where(F.col("a") < F.col("b"))
@@ -1376,7 +1231,7 @@ def winnow_match_spans(
             F.min("pb").cast("bigint").alias("b_from"),
             F.max("pb").cast("bigint").alias("b_to"),
         )
-        .where(F.col("n_shared") >= min_shared)
+        .where(F.col("n_shared") >= 2)
     )
     if max_fp_df is not None:
         from gcp_etl_pipeline_spark.operators.similarity import _release_on_gc
@@ -1385,13 +1240,7 @@ def winnow_match_spans(
     return out
 
 
-def source_containment(
-    df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
+def source_containment(df: DataFrame) -> DataFrame:
     """Directed containment between sources: |A∩B| / |A| per ordered
     pair — the ASYMMETRIC companion to source_overlap's Jaccard. A pair
     with low Jaccard but containment(A→B) ≈ 1 means feed A is a SUBSET
@@ -1402,7 +1251,7 @@ def source_containment(
     Same plan shape as source_overlap (shingle-keyed distinct + bounded
     pair fan-out); emits both directions of each unordered pair.
     """
-    base = source_overlap(df, group_col, text_col, id_col, n)
+    base = source_overlap(df)
     fwd = base.select(
         F.col("src_a").alias("src_from"), F.col("src_b").alias("src_to"),
         "inter", F.col("n_a").alias("n_from"),
@@ -1417,12 +1266,7 @@ def source_containment(
     )
 
 
-def dedup_substring_excise(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_doc_freq: int = 2,
-) -> DataFrame:
+def dedup_substring_excise(df: DataFrame) -> DataFrame:
     """Substring-LEVEL duplicate removal (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better" — the excision their
     suffix-array pipeline performs, re-expressed over content-defined
@@ -1435,7 +1279,7 @@ def dedup_substring_excise(
        expected chunks; boundaries are LOCAL, so an insertion shifts one
        chunk, not the whole doc's chunking)
     2. fingerprint each chunk (md5 of its space-joined tokens)
-    3. a chunk whose fingerprint occurs in ≥ min_doc_freq DISTINCT
+    3. a chunk whose fingerprint occurs in ≥ 2 DISTINCT
        documents is boilerplate/duplication — excise every occurrence
     4. reassemble each document from its surviving chunks in order
 
@@ -1456,18 +1300,18 @@ def dedup_substring_excise(
     Reference parity: the reference has no substring dedup; this is part
     of the beyond-reference LLM-curation tier (SURVEY §2 extension).
     """
-    base = _cdc_chunk_base(df, text_col, id_col)
-    fps = _cdc_chunk_fps(base, id_col)
+    base = _cdc_chunk_base(df)
+    fps = _cdc_chunk_fps(base)
     hot = (
         fps.groupBy("__fp")
-        .agg(F.countDistinct(id_col).alias("__df"))
-        .where(F.col("__df") >= min_doc_freq)
+        .agg(F.countDistinct("doc_id").alias("__df"))
+        .where(F.col("__df") >= 2)
         .select("__fp")
     )
-    return _excise_assemble(base, fps, hot, id_col)
+    return _excise_assemble(base, fps, hot)
 
 
-def _cdc_chunk_base(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _cdc_chunk_base(df: DataFrame) -> DataFrame:
     """(id, __ch) — per-doc array of content-defined chunk texts (the
     content_defined_chunks boundary rule; chunk text = space-joined
     tokens). Shared by the one-shot and incremental excision paths."""
@@ -1478,7 +1322,7 @@ def _cdc_chunk_base(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         "ELSE CAST(array() AS ARRAY<INT>) END"
     )
     return (
-        df.select(F.col(id_col), tokens(text_col).alias("__t"))
+        df.select(F.col("doc_id"), tokens("text").alias("__t"))
         .where(F.size("__t") >= 1)
         .withColumn(
             "__allb", F.expr(f"concat(array(0), {bounds}, array(size(__t)))")
@@ -1491,14 +1335,14 @@ def _cdc_chunk_base(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
                 " element_at(__allb, j + 1) - element_at(__allb, j)), ' '))"
             ),
         )
-        .select(id_col, "__ch")
+        .select("doc_id", "__ch")
     )
 
 
-def _cdc_chunk_fps(base: DataFrame, id_col: str) -> DataFrame:
+def _cdc_chunk_fps(base: DataFrame) -> DataFrame:
     """(id, __idx, __fp) — exploded chunk fingerprints with positions."""
     return base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(F.expr("transform(__ch, c -> md5(c))")).alias(
             "__idx", "__fp"
         ),
@@ -1537,7 +1381,7 @@ def _assemble_kept(
 
 
 def _excise_assemble(
-    base: DataFrame, fps: DataFrame, excise_fps: DataFrame, id_col: str
+    base: DataFrame, fps: DataFrame, excise_fps: DataFrame
 ) -> DataFrame:
     """Excise every chunk whose fingerprint is in ``excise_fps`` and
     reassemble the survivors in order. Text never shuffles: the excise
@@ -1545,25 +1389,22 @@ def _excise_assemble(
     sets come back to the chunk-array row."""
     excise = (
         fps.join(excise_fps.select("__fp"), "__fp")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_set("__idx").alias("__ex"))
     )
-    return _assemble_kept(base, excise, id_col, "excised_chunks")
+    return _assemble_kept(base, excise, "doc_id", "excised_chunks")
 
 
 def substring_excise_incremental(
     new_docs: DataFrame,
     store_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_doc_freq: int = 2,
     attempt_id: str | None = None,
 ) -> DataFrame:
     """Cross-run substring excision against a persisted CHUNK-FINGERPRINT
     ledger — ``dedup_substring_excise``'s incremental twin, in
     ``dedup_incremental``'s ledger discipline: a chunk is excised if its
     fingerprint is already in the ledger (seen in ANY prior increment)
-    OR occurs in ≥ min_doc_freq distinct documents of THIS batch. The
+    OR occurs in ≥ 2 distinct documents of THIS batch. The
     batch's complete distinct fingerprint set (kept AND excised — a
     chunk seen once is a duplicate when seen again later) is then
     written to the ledger: append, or an OVERWRITE of
@@ -1582,13 +1423,13 @@ def substring_excise_incremental(
     # without the cache the second one would re-tokenize, re-chunk, and
     # re-hash the whole increment ("chunked once" is a cached claim,
     # not a plan-shape accident)
-    base = _cdc_chunk_base(new_docs, text_col, id_col).persist()
+    base = _cdc_chunk_base(new_docs).persist()
     try:
-        fps = _cdc_chunk_fps(base, id_col)
+        fps = _cdc_chunk_fps(base)
         hot = (
             fps.groupBy("__fp")
-            .agg(F.countDistinct(id_col).alias("__df"))
-            .where(F.col("__df") >= min_doc_freq)
+            .agg(F.countDistinct("doc_id").alias("__df"))
+            .where(F.col("__df") >= 2)
             .select("__fp")
         )
         with ledger_increment(spark, store_path, attempt_id) as txn:
@@ -1597,24 +1438,14 @@ def substring_excise_incremental(
                 excise_set = hot.unionByName(store.select("__fp")).distinct()
             else:
                 excise_set = hot
-            out = _excise_assemble(
-                base, fps, excise_set, id_col
-            ).localCheckpoint(eager=True)
+            out = _excise_assemble(base, fps, excise_set).localCheckpoint(eager=True)
             txn.write(fps.select("__fp").distinct())
     finally:
         base.unpersist()
     return out
 
 
-def neardup_top1(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 12,
-    bands: int = 4,
-    max_bucket: int | None = None,
-) -> DataFrame:
+def neardup_top1(df: DataFrame) -> DataFrame:
     """Each document's single NEAREST near-duplicate by MinHash-estimated
     Jaccard — the per-doc "what should I diff this against" answer a
     curation review UI needs, where the pair table
@@ -1625,27 +1456,27 @@ def neardup_top1(
     µ-unit integer division — exact on both engines).
 
     Scale shape: candidates come from the banded bucket join (never
-    all-pairs; ``max_bucket`` caps pathological buckets), agreement is a
-    signature-only comparison (num_hashes small ints per pair — shingle
-    sets never re-join), and top-1 is a per-doc window over the
-    candidate fan-in. Signatures feed the candidate self-join AND the
-    scoring joins, so they are persisted and released when the result
-    is GC'd (the sketch-self-join discipline)."""
+    all-pairs), agreement is a signature-only comparison (num_hashes
+    small ints per pair — shingle sets never re-join), and top-1 is a
+    per-doc window over the candidate fan-in. Signatures feed the
+    candidate self-join AND the scoring joins, so they are persisted and
+    released when the result is GC'd (the sketch-self-join discipline)."""
     from gcp_etl_pipeline_spark.operators.similarity import _release_on_gc
 
-    arr = shingle_arrays(df, text_col, id_col, n)
-    sig = minhash_signatures_from_arrays(arr, id_col, num_hashes).persist()
-    cand = lsh_candidate_pairs(sig, id_col, num_hashes, bands,
-                               max_bucket=max_bucket)
+    num_hashes = 12
+
+    arr = shingle_arrays(df)
+    sig = minhash_signatures_from_arrays(arr, num_hashes=num_hashes).persist()
+    cand = lsh_candidate_pairs(sig, num_hashes=num_hashes)
     both = cand.unionByName(
         cand.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
     sa = sig.select(
-        F.col(id_col).alias("a"),
+        F.col("doc_id").alias("a"),
         *[F.col(f"mh{k}").alias(f"__a{k}") for k in range(num_hashes)],
     )
     sb = sig.select(
-        F.col(id_col).alias("b"),
+        F.col("doc_id").alias("b"),
         *[F.col(f"mh{k}").alias(f"__b{k}") for k in range(num_hashes)],
     )
     agree = sum(
@@ -1665,7 +1496,7 @@ def neardup_top1(
         scored.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
         .select(
-            F.col("a").alias(id_col),
+            F.col("a").alias("doc_id"),
             F.col("b").alias("neighbor_id"),
             "agree",
             F.expr(f"agree * 1000000 div {num_hashes}")
@@ -1675,16 +1506,14 @@ def neardup_top1(
     return _release_on_gc(out, sig)
 
 
-def dup_cluster_histogram(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def dup_cluster_histogram(df: DataFrame) -> DataFrame:
     """Histogram of exact-duplicate cluster sizes — the first corpus
     audit a dedup pass reports (how much of the corpus is singletons vs
     2-dup pairs vs thousand-copy boilerplate): md5-fingerprint groups →
     per-cluster size → per-size cluster and document counts. Two short-
     key aggregates, documents never compared or shuffled whole."""
     sizes = (
-        df.withColumn("__fp", fingerprint(text_col))
+        df.withColumn("__fp", fingerprint("text"))
         .groupBy("__fp")
         .agg(F.count(F.lit(1)).alias("__sz"))
     )
@@ -1697,11 +1526,7 @@ def dup_cluster_histogram(
     )
 
 
-def intradoc_chunk_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def intradoc_chunk_dedup(df: DataFrame) -> DataFrame:
     """SELF-repetition removal WITHIN each document: repeated CDC chunks
     of a single document are excised down to their first occurrence
     (kept in order), the intra-document counterpart to the cross-corpus
@@ -1720,22 +1545,21 @@ def intradoc_chunk_dedup(
     text)."""
     from pyspark.sql import Window
 
-    base = _cdc_chunk_base(df, text_col, id_col)
-    fps = _cdc_chunk_fps(base, id_col)
-    w = Window.partitionBy(id_col, "__fp").orderBy("__idx")
+    base = _cdc_chunk_base(df)
+    fps = _cdc_chunk_fps(base)
+    w = Window.partitionBy("doc_id", "__fp").orderBy("__idx")
     dup_idx = (
         fps.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") > 1)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_set("__idx").alias("__ex"))
     )
-    return _assemble_kept(base, dup_idx, id_col, "removed_chunks")
+    return _assemble_kept(base, dup_idx, "doc_id", "removed_chunks")
 
 
 def phash_incremental(
     new_media: DataFrame,
     store_path: str,
-    id_col: str = "media_id",
     attempt_id: str | None = None,
 ) -> DataFrame:
     """Cross-run IMAGE near-dup dedup against a persisted PERCEPTUAL-
@@ -1771,7 +1595,7 @@ def phash_incremental(
     spark = new_media.sparkSession
     fh = image_dhash(new_media)
     stacked = fh.select(
-        id_col,
+        "media_id",
         F.expr("stack(4, 0, band0, 1, band1, 2, band2, 3, band3)")
         .alias("band_id", "h"),
     ).persist()
@@ -1783,13 +1607,13 @@ def phash_incremental(
 
     dropped = (
         stacked.withColumn(
-            "__mn", F.min(id_col).over(_W.partitionBy("band_id", "h"))
+            "__mn", F.min("media_id").over(_W.partitionBy("band_id", "h"))
         )
-        .where(F.col(id_col) > F.col("__mn"))
-        .select(id_col)
+        .where(F.col("media_id") > F.col("__mn"))
+        .select("media_id")
         .distinct()
     )
-    surv = stacked.join(dropped, id_col, "left_anti")
+    surv = stacked.join(dropped, "media_id", "left_anti")
     # try/finally: a LedgerBusyError from the guard (or any failure before
     # the in-guard unpersist) must not leave the band table pinned in
     # executor storage — the substring_excise_incremental discipline
@@ -1803,7 +1627,7 @@ def phash_incremental(
                         ["band_id", "h"],
                         "left_semi",
                     )
-                    .select(id_col)
+                    .select("media_id")
                     .distinct()
                 )
                 dropped = dropped.unionByName(led_dropped)
@@ -1813,12 +1637,12 @@ def phash_incremental(
             # window+store-read materialization (the neardup_incremental
             # restructure — see its in-guard comment for the reasoning)
             dropped = dropped.localCheckpoint(eager=True)
-            surv = stacked.join(dropped, id_col, "left_anti")
+            surv = stacked.join(dropped, "media_id", "left_anti")
             txn.write(surv)
     finally:
         stacked.unpersist()
     return new_media.join(
-        dropped.withColumnRenamed(id_col, "__drop"),
-        F.col(id_col) == F.col("__drop"),
+        dropped.withColumnRenamed("media_id", "__drop"),
+        F.col("media_id") == F.col("__drop"),
         "left_anti",
     )

@@ -26,7 +26,6 @@ def insert_new_only(
     target: DataFrame | None,
     keys: list[str],
     normalize: bool = True,
-    collapse_spaces: bool = False,
 ) -> DataFrame:
     """Rows of ``source`` whose natural key is absent from ``target``.
 
@@ -43,8 +42,8 @@ def insert_new_only(
         return f"__nk_{c}"
 
     src_n = source.select(
-        "*", *[norm_key(k, collapse_spaces).alias(nk(k)) for k in keys]
+        "*", *[norm_key(k).alias(nk(k)) for k in keys]
     )
-    tgt_n = tgt.select(*[norm_key(k, collapse_spaces).alias(nk(k)) for k in keys])
+    tgt_n = tgt.select(*[norm_key(k).alias(nk(k)) for k in keys])
     cond = [src_n[nk(k)].eqNullSafe(tgt_n[nk(k)]) for k in keys]
     return src_n.join(tgt_n, on=cond, how="left_anti").drop(*[nk(k) for k in keys])

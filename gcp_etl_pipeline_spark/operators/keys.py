@@ -17,19 +17,21 @@ Two physical strategies, both dense and deterministic:
   - **Window path** (default): global ``row_number() OVER (ORDER BY
     natural key)`` — single-partition, fine for dimension deltas
     (thousands of new rows per batch, the reference's only workload).
-  - **Partition-offset path** (``monotonic=True``): hash-partition the
-    new rows on the natural key, ``row_number`` within each partition
-    (parallel windows), then add cumulative per-partition offsets
-    computed from a tiny collected count vector. Scales to a
+  - **Partition-offset path** (``monotonic=True``): hash the new rows
+    into ``DEFAULT_OFFSET_BUCKETS`` buckets on the natural key,
+    ``row_number`` within each bucket (parallel windows), then add
+    cumulative per-bucket offsets computed from a tiny collected count
+    vector. Scales to a
     billion-row first load; keys are dense and deterministic but NOT
     globally ordered by natural key (the window path's extra property).
 
 A guard makes the choice explicit: the default path folds an
-``assert_true(count <= max_window_rows)`` into the key expression itself
-— evaluated inside the SAME single-partition window job (no extra pass
-over the input lineage, no eager action at construction) — so a
-pathological first load fails at execution instead of silently
-single-threading; the caller must opt into ``monotonic=True``.
+``assert_true(count <= DEFAULT_MAX_WINDOW_ROWS)`` into the key
+expression itself — evaluated inside the SAME single-partition window
+job (no extra pass over the input lineage, no eager action at
+construction) — so a pathological first load fails at execution instead
+of silently single-threading; the caller must opt into
+``monotonic=True``.
 
 The 1-row max-key aggregate is crossJoin'd; Catalyst broadcasts it.
 ``order_by`` should be a unique natural key: ties are assigned
@@ -49,8 +51,8 @@ from gcp_etl_pipeline_spark.sinks.writers import local_frame
 DEFAULT_MAX_WINDOW_ROWS = 5_000_000
 
 # Fixed bucket count for the monotonic path: key assignment is a pure
-# function of (natural key, bucket count), so the default must NOT come
-# from cluster size (defaultParallelism would change the assignment after
+# function of (natural key, bucket count), so it must NOT come from
+# cluster size (defaultParallelism would change the assignment after
 # a resize). 512 buckets keep a billion-row load at ~2M rows per ranking
 # window while staying wider than any realistic executor count.
 DEFAULT_OFFSET_BUCKETS = 512
@@ -73,8 +75,6 @@ def surrogate_keys(
     order_by: list[str],
     *,
     monotonic: bool = False,
-    max_window_rows: int = DEFAULT_MAX_WINDOW_ROWS,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Assign dense surrogate keys max(target.key)+1..+n to ``new_rows``.
 
@@ -84,17 +84,16 @@ def surrogate_keys(
 
     ``monotonic=False`` (default): global-window assignment ordered by
     ``order_by``; raises AT EXECUTION if ``new_rows`` exceeds
-    ``max_window_rows`` (the size check rides in the same window job — an
-    eager pre-count would execute the whole upstream lineage twice).
+    ``DEFAULT_MAX_WINDOW_ROWS`` (the size check rides in the same window
+    job — an eager pre-count would execute the whole upstream lineage
+    twice).
 
     ``monotonic=True``: parallel partition-offset assignment (see module
     docstring) — dense + deterministic, natural-key-ordered only within
     each hash partition.
     """
     if monotonic:
-        return _surrogate_keys_offsets(
-            new_rows, target, key_col, order_by, num_partitions
-        )
+        return _surrogate_keys_offsets(new_rows, target, key_col, order_by)
 
     w = Window.orderBy(*[F.col(c).asc_nulls_last() for c in order_by])
     # same single partition as `w`, unbounded frame: the count costs no
@@ -105,10 +104,10 @@ def surrogate_keys(
         )
     )
     guard = F.assert_true(
-        cnt <= F.lit(max_window_rows),
+        cnt <= F.lit(DEFAULT_MAX_WINDOW_ROWS),
         F.lit(
-            f"surrogate_keys: new_rows exceeds max_window_rows="
-            f"{max_window_rows}; the global-window path would run "
+            f"surrogate_keys: new_rows exceeds DEFAULT_MAX_WINDOW_ROWS="
+            f"{DEFAULT_MAX_WINDOW_ROWS}; the global-window path would run "
             f"single-partition. Pass monotonic=True for the parallel "
             f"partition-offset assignment (dense + deterministic)."
         ),
@@ -128,7 +127,6 @@ def _surrogate_keys_offsets(
     target: DataFrame | None,
     key_col: str,
     order_by: list[str],
-    num_partitions: int | None,
 ) -> DataFrame:
     """Parallel dense-key assignment via per-partition offsets.
 
@@ -140,11 +138,8 @@ def _surrogate_keys_offsets(
     Every stage is partition-parallel; nothing large touches the driver.
     """
     spark = new_rows.sparkSession
-    if num_partitions is None:
-        num_partitions = DEFAULT_OFFSET_BUCKETS
-
     bucket = F.pmod(
-        F.xxhash64(*[F.col(c) for c in order_by]), F.lit(num_partitions)
+        F.xxhash64(*[F.col(c) for c in order_by]), F.lit(DEFAULT_OFFSET_BUCKETS)
     ).cast("int")
     with_b = new_rows.withColumn("__bucket", bucket)
 
@@ -153,7 +148,7 @@ def _surrogate_keys_offsets(
         for r in with_b.groupBy("__bucket").agg(F.count(F.lit(1)).alias("cnt")).collect()
     }
     offsets, acc = [], 0
-    for b in range(num_partitions):
+    for b in range(DEFAULT_OFFSET_BUCKETS):
         offsets.append((b, acc))
         acc += int(counts.get(b, 0))
     offset_df = local_frame(spark, offsets, "__bucket int, __offset long")

@@ -9,14 +9,15 @@ overwrites, `...sales_fact_01.py:170`. Same idea as Delta OPTIMIZE
 ZORDER BY, built here from plain Spark primitives.)
 
 The key is exact integer math (quantize -> interleave via shifts), so it
-is reproducible cross-engine and differential-testable.
+is reproducible cross-engine and differential-testable. The module also
+holds the small-file compaction pass (``compact_small_files``).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DEFAULT_BITS = 16
@@ -51,32 +52,10 @@ def zorder_key(cols: Sequence[Column], bits: int = DEFAULT_BITS) -> Column:
     return key
 
 
-def cluster_by_zorder(
-    df: DataFrame,
-    quantized: Sequence[Column],
-    num_files: int,
-    bits: int = DEFAULT_BITS,
-) -> DataFrame:
-    """Layout pass before a write: range-partition by the Z-key so each
-    output file covers a compact multi-dimensional cell, then sort within
-    partitions so parquet row-group stats are tight too.
-
-    One range-exchange (sampled boundaries) + local sort — the standard
-    OPTIMIZE-shaped job; run it on the cold path, reads repay it.
-    """
-    keyed = df.withColumn("__zkey", zorder_key(quantized, bits))
-    return (
-        keyed.repartitionByRange(num_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-    )
-
-
 def compact_small_files(
     spark,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    zorder_quantized: Sequence[Column] | None = None,
     recursive: bool = False,
 ) -> tuple[int, int]:
     """Lakehouse maintenance: rewrite a parquet path into ~target-sized
@@ -87,9 +66,7 @@ def compact_small_files(
 
     Sizing comes from the Hadoop FileSystem API (works unchanged on
     HDFS/GCS/S3 once the FS jar is present), the rewrite is one
-    repartition — or a Z-order range exchange when ``zorder_quantized``
-    columns are given, folding layout clustering into the same pass.
-    Staged-then-swapped like operators/upsert.py (a path can't be
+    repartition. Staged-then-swapped like operators/upsert.py (a path can't be
     overwritten while being read). Returns (files_before, files_after).
 
     ``recursive=True`` compacts a tree with subdirectories (e.g. a
@@ -139,16 +116,12 @@ def compact_small_files(
     reader = spark.read
     if recursive:
         reader = reader.option("recursiveFileLookup", "true")
-    df = reader.parquet(path)
-    if zorder_quantized is not None:
-        out = cluster_by_zorder(df, zorder_quantized, n_out)
-    else:
-        out = df.repartition(n_out)
+    out = reader.parquet(path).repartition(n_out)
     staging = path.rstrip("/") + "__compact"
     out.write.mode("overwrite").parquet(staging)
     # rename-aside swap, not a second Spark rewrite (a read-back rewrite
     # would re-split the staged files at maxPartitionBytes, violating
-    # target_file_bytes and cutting Z-order clusters) and not
+    # target_file_bytes) and not
     # delete-then-rename (a crash between the two would lose the live
     # path). The old data stays intact under __pre_compact until the new
     # data is in place. FileSystem.rename is atomic-enough on HDFS/local;

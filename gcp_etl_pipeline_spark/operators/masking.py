@@ -9,10 +9,9 @@ ciphertext (`jobs/raw/dl_rw_job.py:70-83`, KMS path
 — JVM-side, vectorized, zero Python round-trips. The ciphertext format
 deliberately differs from the reference (documented deviation).
 
-Modes: 'GCM' (default — random IV, semantically secure, NOT
-deterministic across calls) and 'ECB' (deterministic — required if the
-masked column must remain joinable/groupable; classic tradeoff,
-caller's choice).
+Every cell is encrypted in AES-GCM, Spark's default mode: a random IV
+per call, so it is semantically secure and NOT deterministic (a masked
+column is neither joinable nor groupable).
 """
 
 from __future__ import annotations
@@ -21,12 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def mask_columns(
-    df: DataFrame,
-    columns: list[str],
-    key: str,
-    mode: str = "GCM",
-) -> DataFrame:
+def mask_columns(df: DataFrame, columns: list[str], key: str) -> DataFrame:
     """base64(aes_encrypt(col, key)) for each masked column; the column is
     replaced in place (reference behavior: the raw layer only ever sees
     ciphertext). ``key`` must be 16/24/32 bytes (the data-encryption key,
@@ -39,29 +33,21 @@ def mask_columns(
                 F.aes_encrypt(
                     F.col(c).cast("string").cast("binary"),
                     F.lit(key).cast("binary"),
-                    F.lit(mode),
                 )
             ),
         )
     return out
 
 
-def unmask_columns(
-    df: DataFrame,
-    columns: list[str],
-    key: str,
-    mode: str = "GCM",
-) -> DataFrame:
+def unmask_columns(df: DataFrame, columns: list[str], key: str) -> DataFrame:
     """Inverse of mask_columns: aes_decrypt(unbase64(col)) -> string."""
     out = df
     for c in columns:
         out = out.withColumn(
             c,
-            F.aes_decrypt(
-                F.unbase64(F.col(c)),
-                F.lit(key).cast("binary"),
-                F.lit(mode),
-            ).cast("string"),
+            F.aes_decrypt(F.unbase64(F.col(c)), F.lit(key).cast("binary")).cast(
+                "string"
+            ),
         )
     return out
 
@@ -122,7 +108,6 @@ def mask_columns_envelope(
     columns: list[str],
     kms: KmsClient,
     num_deks: int = 16,
-    mode: str = "GCM",
 ) -> tuple[DataFrame, dict[int, str]]:
     """Envelope-encrypt ``columns``: rows are striped across ``num_deks``
     random DEKs by partition id, each cell encrypted JVM-side with its
@@ -152,9 +137,7 @@ def mask_columns_envelope(
             c,
             F.base64(
                 F.aes_encrypt(
-                    F.col(c).cast("string").cast("binary"),
-                    F.col("__dek"),
-                    F.lit(mode),
+                    F.col(c).cast("string").cast("binary"), F.col("__dek")
                 )
             ),
         )
@@ -166,12 +149,10 @@ def unmask_columns_envelope(
     columns: list[str],
     keyring: dict[int, str],
     kms: KmsClient,
-    mode: str = "GCM",
-    drop_dek_id: bool = True,
 ) -> DataFrame:
     """Inverse of mask_columns_envelope: unwrap each DEK through KMS
     (driver-side, len(keyring) calls), broadcast-join on ``__dek_id``,
-    decrypt JVM-side."""
+    decrypt JVM-side, and drop ``__dek_id``."""
     import base64
 
     spark = df.sparkSession
@@ -188,9 +169,6 @@ def unmask_columns_envelope(
     for c in columns:
         out = out.withColumn(
             c,
-            F.aes_decrypt(
-                F.unbase64(F.col(c)), F.col("__dek"), F.lit(mode)
-            ).cast("string"),
+            F.aes_decrypt(F.unbase64(F.col(c)), F.col("__dek")).cast("string"),
         )
-    out = out.drop("__dek")
-    return out.drop(DEK_ID_COL) if drop_dek_id else out
+    return out.drop("__dek", DEK_ID_COL)

@@ -147,8 +147,8 @@ EMBED_DIM = 16
 EMBED_SCHEMA = f"media_id BIGINT, embedding ARRAY<FLOAT>"
 
 
-def media_embeddings(df: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
-    """Feature-extract stub: a deterministic ``dim``-float embedding from
+def media_embeddings(df: DataFrame) -> DataFrame:
+    """Feature-extract stub: a deterministic ``EMBED_DIM``-float embedding from
     the payload bytes (md5 over the hex form of the payload plus the
     component index → [0,1) floats). The Spark shape — binary in,
     array<float> out, Arrow batches — is exactly what a real CLIP/wav2vec
@@ -164,7 +164,7 @@ def media_embeddings(df: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
                 b = bytes(content)
                 hx = b[16:].hex()
                 vec = []
-                for k in range(dim):
+                for k in range(EMBED_DIM):
                     h = hashlib.md5(f"{hx}|{k}".encode()).digest()
                     vec.append(int.from_bytes(h[:4], "big") / 2**32)
                 ids.append(mid)
@@ -313,8 +313,6 @@ def image_dhash(df: DataFrame) -> DataFrame:
 def phash_neardup_pairs(
     hashes: DataFrame,
     max_hamming: int = 3,
-    salt_factor: int | None = None,
-    max_band_df: int | None = None,
     expand: bool = True,
     n_bands: int | None = None,
 ) -> DataFrame:
@@ -354,12 +352,6 @@ def phash_neardup_pairs(
     intra-cluster pairs are emitted directly at Hamming 0, never
     through the band join. A 100k-copy logo therefore contributes ONE
     row to the candidate join instead of a 2x10^10-row bucket fan-out.
-    Residual hot bands (many DISTINCT hashes sharing a band value)
-    take the lsh_candidate_pairs guards: ``salt_factor`` spreads each
-    band bucket's pair fan-out across that many reducers (result
-    identical), ``max_band_df`` drops band buckets with more than that
-    many distinct hashes before pairing (capped recall — a band that
-    hot is a near-identical blob the cluster pass already collapses).
 
     Note the expanded OUTPUT is quadratic in exact-dup cluster size (all
     member pairs is the default contract). At corpus scale pass
@@ -421,14 +413,6 @@ def phash_neardup_pairs(
         "__n",
         F.expr(stack_sql).alias("band_id", "band_val"),
     )
-    if max_band_df is not None:
-        hot = (
-            stacked.groupBy("band_id", "band_val")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .where(F.col("__bn") > max_band_df)
-            .select("band_id", "band_val")
-        )
-        stacked = stacked.join(hot, ["band_id", "band_val"], "left_anti")
     lft = stacked.select(
         F.col("__rep").alias("__ra"),
         F.col("dhash").alias("__ha"),
@@ -443,14 +427,7 @@ def phash_neardup_pairs(
         "band_id",
         "band_val",
     )
-    if salt_factor is not None:
-        from gcp_etl_pipeline_spark.operators.skew import salted_join
-
-        joined = salted_join(
-            lft, rgt, on=["band_id", "band_val"], salt_factor=salt_factor
-        )
-    else:
-        joined = lft.join(rgt, ["band_id", "band_val"])
+    joined = lft.join(rgt, ["band_id", "band_val"])
     verified = (
         joined.where(F.col("__ra") < F.col("__rb"))
         .select("__ra", "__rb", "__ha", "__hb", "__na", "__nb")
@@ -512,16 +489,15 @@ def phash_neardup_pairs(
     return _release_on_gc(out, hp)
 
 
-def audio_fingerprint(df: DataFrame, n_windows: int = 33) -> DataFrame:
+def audio_fingerprint(df: DataFrame) -> DataFrame:
     """Acoustic difference-fingerprint over mono 8-bit WAV blobs — the
-    audio twin of ``image_dhash``: the first ``4 * n_windows`` samples
-    are grouped into ``n_windows`` energy windows (integer sums of 4
-    samples), and bit k of the (n_windows - 1)-bit fingerprint is 1 iff
-    window k's energy exceeds window k+1's — a DC-offset-invariant
-    gradient signature (adding a constant to every sample preserves
-    every comparison), the chromaprint-style shape audio dedup pipelines
-    bucket on. Returns the same (media_id, dhash, band0..band3) schema
-    as ``image_dhash`` with four 8-bit bands, so
+    audio twin of ``image_dhash``: the first 132 samples are grouped
+    into 33 energy windows (integer sums of 4 samples), and bit k of the
+    32-bit fingerprint is 1 iff window k's energy exceeds window k+1's —
+    a DC-offset-invariant gradient signature (adding a constant to every
+    sample preserves every comparison), the chromaprint-style shape
+    audio dedup pipelines bucket on. Returns the same (media_id, dhash,
+    band0..band3) schema as ``image_dhash`` with four 8-bit bands, so
     ``phash_neardup_pairs`` applies unchanged.
 
     Decode + fingerprint run inside one Arrow batch loop (stdlib wave,
@@ -530,13 +506,8 @@ def audio_fingerprint(df: DataFrame, n_windows: int = 33) -> DataFrame:
     decode_media's error-row contract."""
     from gcp_etl_pipeline_spark.operators import codecs
 
-    # the fingerprint has n_windows - 1 bits and must fit a signed int64
-    # column: n_windows >= 66 would set bits >= 64 and overflow the
-    # pandas int64 construction below (one 2^64 wrap only covers bit 63)
-    if not 2 <= n_windows <= 65:
-        raise ValueError(
-            f"audio_fingerprint: n_windows must be in [2, 65], got {n_windows}"
-        )
+    n_windows = 33
+
     span = 4 * n_windows
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -560,9 +531,7 @@ def audio_fingerprint(df: DataFrame, n_windows: int = 33) -> DataFrame:
                     if w[k] > w[k + 1]:
                         u |= 1 << k
                 ids.append(int(mid))
-                # same signed-64 wrap as image_dhash (n_windows is capped
-                # at 65 above, so u < 2^64 and one wrap suffices)
-                hashes.append(u - (1 << 64) if u >= (1 << 63) else u)
+                hashes.append(u)
                 for b in range(4):
                     bands[b].append((u >> (8 * b)) & 0xFF)
             yield pd.DataFrame(
@@ -587,11 +556,6 @@ def video_neardup_pairs(
     df: DataFrame,
     max_hamming: int = 3,
     min_shared: int = 2,
-    frames_col: str = "frames",
-    id_col: str = "media_id",
-    salt_factor: int | None = None,
-    max_band_df: int | None = None,
-    n_bands: int | None = None,
 ) -> DataFrame:
     """Video near-duplicate pairs by FRAME-level perceptual matching —
     the third modality of the near-dup tier: each video is an
@@ -605,9 +569,9 @@ def video_neardup_pairs(
 
     Scale shape: one posexplode (JVM), one Arrow decode/hash pass over
     frames, then THE shared guarded pair join (``phash_neardup_pairs``
-    — exact-dup frame collapse + optional salted/capped band buckets,
-    so a corpus-wide repeated frame like a black intro card never fans
-    out quadratically in the candidate join), and a (video-pair)-keyed
+    — exact-dup frame collapse, so a corpus-wide repeated frame like a
+    black intro card never fans out quadratically in the candidate
+    join), and a (video-pair)-keyed
     count-distinct — videos and pixels never join; only 64-bit hashes
     and band ints shuffle. Frame indexes pack into the hash row's id
     (``video_id * 1024 + frame_idx``), so videos are capped at 1024
@@ -625,8 +589,8 @@ def video_neardup_pairs(
         # 2^62/1024 overflow int64 — all three corrupt pair attribution
         # silently. raise_error is lazy, so compliant rows pay nothing.
         F.when(
-            (F.col(id_col) >= 0) & (F.col(id_col) <= F.lit(id_max)),
-            F.col(id_col).cast("long"),
+            (F.col("media_id") >= 0) & (F.col("media_id") <= F.lit(id_max)),
+            F.col("media_id").cast("long"),
         )
         .otherwise(
             F.raise_error(
@@ -637,7 +601,7 @@ def video_neardup_pairs(
             ).cast("long")
         )
         .alias("__vid"),
-        F.posexplode(frames_col).alias("__f", "content"),
+        F.posexplode("frames").alias("__f", "content"),
     ).select(
         (
             F.col("__vid") * 1024
@@ -652,13 +616,7 @@ def video_neardup_pairs(
         ).alias("media_id"),
         "content",
     )
-    pairs = phash_neardup_pairs(
-        image_dhash(frames),
-        max_hamming=max_hamming,
-        salt_factor=salt_factor,
-        max_band_df=max_band_df,
-        n_bands=n_bands,
-    )
+    pairs = phash_neardup_pairs(image_dhash(frames), max_hamming=max_hamming)
     # packed ids order by (video, frame), so a < b implies video_a <=
     # video_b: cross-video pairs keep the lower video on the a side,
     # same-video frame matches drop here. Catalyst pushes this

@@ -19,29 +19,21 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def norm_key(col: Column | str, collapse_spaces: bool = False) -> Column:
-    """Canonical join-key form: lower(trim(x)); optionally remove all
-    internal whitespace (the tehsil_hlp variant). Apply to BOTH sides of a
+def norm_key(col: Column | str) -> Column:
+    """Canonical join-key form: lower(trim(x)). Apply to BOTH sides of a
     join — never one side only (SURVEY §7 hard part 5)."""
     c = F.col(col) if isinstance(col, str) else col
-    c = F.lower(F.trim(c))
-    if collapse_spaces:
-        c = F.regexp_replace(c, r"\s+", "")
-    return c
+    return F.lower(F.trim(c))
 
 
-def normalize_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Strip whitespace + carriage returns from string columns (ingestion
-    hygiene; reference per-row ``str.strip()`` Beam map, vectorized here)."""
-    targets = set(
-        columns
-        if columns is not None
-        else [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
-    )
+def normalize_strings(df: DataFrame) -> DataFrame:
+    """Strip whitespace + carriage returns from every string column
+    (ingestion hygiene; reference per-row ``str.strip()`` Beam map,
+    vectorized here)."""
     return df.select(
         *[
             F.trim(F.regexp_replace(F.col(f.name), r"[\r\n]+", " ")).alias(f.name)
-            if f.name in targets and isinstance(f.dataType, T.StringType)
+            if isinstance(f.dataType, T.StringType)
             else F.col(f.name)
             for f in df.schema.fields
         ]
@@ -57,31 +49,22 @@ def cast_to_spec(df: DataFrame, spec) -> DataFrame:
     )
 
 
-def normalize_unicode(
-    col: Column | str, form: str = "NFC", casefold: bool = False
-) -> Column:
-    """Unicode normalization for text keys/dedup fingerprints: composed
-    vs decomposed byte sequences of the SAME visible string ("é" as one
-    codepoint vs "e"+combining-acute) otherwise hash apart and defeat
-    exact dedup on multilingual corpora. Arrow-batched ``unicodedata``
-    (no JVM builtin exists); optional ``casefold`` applies the full
-    Unicode case folding (ß→ss etc.), which ``lower()`` does not.
-    DuckDB's ``nfc_normalize`` is the differential twin for NFC."""
+def normalize_unicode(col: Column | str) -> Column:
+    """NFC Unicode normalization for text keys/dedup fingerprints:
+    composed vs decomposed byte sequences of the SAME visible string ("é"
+    as one codepoint vs "e"+combining-acute) otherwise hash apart and
+    defeat exact dedup on multilingual corpora. Arrow-batched
+    ``unicodedata`` (no JVM builtin exists); DuckDB's ``nfc_normalize``
+    is the differential twin."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import StringType
-
-    if form not in ("NFC", "NFD", "NFKC", "NFKD"):
-        raise ValueError(f"unknown normalization form {form!r}")
 
     def norm(s):
         import unicodedata
 
         def one(v):
-            if v is None:
-                return None
-            v = unicodedata.normalize(form, v)
-            return v.casefold() if casefold else v
+            return None if v is None else unicodedata.normalize("NFC", v)
 
         return s.map(one)
 

@@ -30,13 +30,7 @@ from pyspark.sql import functions as F
 SCALE = 1_000_000_000_000  # rank units per unit of probability mass
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 3,
-    damping_pct: int = 85,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def pagerank(edges: DataFrame, iterations: int = 3, damping_pct: int = 85) -> DataFrame:
     """Integer-deterministic PageRank; returns (node, pr_u) in rank units.
 
     ``edges`` is a directed edge list; dangling nodes (no out-edges)
@@ -44,14 +38,14 @@ def pagerank(
     formulation without dangling redistribution).
     """
     nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
         .distinct()
         .persist()
     )
     n = nodes.count()
     degrees = (
-        edges.groupBy(src).agg(F.count(F.lit(1)).alias("outdeg")).persist()
+        edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).persist()
     )
 
     base_u = (SCALE * (100 - damping_pct)) // 100 // n
@@ -59,10 +53,10 @@ def pagerank(
 
     for _ in range(iterations):
         contribs = (
-            edges.join(ranks, edges[src] == ranks["node"])
-            .join(degrees, src)
+            edges.join(ranks, edges["src"] == ranks["node"])
+            .join(degrees, "src")
             .select(
-                F.col(dst).alias("node"),
+                F.col("dst").alias("node"),
                 # integer DIV, not float `/`: double division of bigints
                 # can round across an integer boundary before the cast
                 F.expr("pr_u DIV outdeg").alias("contrib_u"),
@@ -95,8 +89,6 @@ def pagerank_warm(
     max_iterations: int = 4,
     tol_u: int = 1_000_000,
     damping_pct: int = 85,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Incremental PageRank: warm-start the same integer recurrence as
     ``pagerank()`` from a PREVIOUS score table (the last full run
@@ -139,14 +131,14 @@ def pagerank_warm(
     8.09 → 6.70 s warm at sf0.1, control flat). ContextCleaner frees
     the checkpointed RDD blocks on GC."""
     nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
         .distinct()
         .persist()
     )
     n = nodes.count()
     degrees = (
-        edges.groupBy(src).agg(F.count(F.lit(1)).alias("outdeg")).persist()
+        edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).persist()
     )
     base_u = (SCALE * (100 - damping_pct)) // 100 // n
 
@@ -167,10 +159,10 @@ def pagerank_warm(
 
     for _ in range(max_iterations):
         contribs = (
-            edges.join(ranks, edges[src] == ranks["node"])
-            .join(degrees, src)
+            edges.join(ranks, edges["src"] == ranks["node"])
+            .join(degrees, "src")
             .select(
-                F.col(dst).alias("node"),
+                F.col("dst").alias("node"),
                 F.expr("pr_u DIV outdeg").alias("contrib_u"),
             )
             .groupBy("node")
@@ -214,12 +206,7 @@ HITS_SCALE = 1_000_000  # score units after per-round max-normalization
 _HITS_CHECKPOINT_MIN_ITER = 2
 
 
-def hits(
-    edges: DataFrame,
-    iterations: int = 2,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = 2) -> DataFrame:
     """Integer-deterministic HITS (Kleinberg hubs/authorities) over a
     directed edge list: a(v) = Σ h(u) over in-edges, h(u) = Σ a(v) over
     out-edges, each round max-normalized to HITS_SCALE units with floor
@@ -260,8 +247,8 @@ def hits(
     # form 3x SLOWER end to end (the knn_graph_triangles lesson —
     # an InMemoryRelation leg blocks codegen fusion and reuse)
     nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
     hub0 = nodes.select("node", F.lit(HITS_SCALE).alias("hub_u"))
@@ -269,8 +256,8 @@ def hits(
     auth = None
     for _ in range(iterations):
         a_raw = (
-            edges.join(hub, edges[src] == hub["node"])
-            .groupBy(F.col(dst).alias("node"))
+            edges.join(hub, edges["src"] == hub["node"])
+            .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("hub_u").alias("raw"))
         )
         a_max = a_raw.agg(F.max("raw").alias("mx"))
@@ -293,8 +280,8 @@ def hits(
             else auth_new.persist()
         )
         h_raw = (
-            edges.join(auth_new, edges[dst] == auth_new["node"])
-            .groupBy(F.col(src).alias("node"))
+            edges.join(auth_new, edges["dst"] == auth_new["node"])
+            .groupBy(F.col("src").alias("node"))
             .agg(F.sum("auth_u").alias("raw"))
         )
         h_max = h_raw.agg(F.max("raw").alias("mx"))
@@ -337,13 +324,7 @@ def hits(
     return out
 
 
-def reciprocity(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    farm_ratio_u: int = 800_000,
-    min_out: int = 5,
-) -> DataFrame:
+def reciprocity(edges: DataFrame) -> DataFrame:
     """Per-node link reciprocity — the classic link-farm signal: organic
     linking is largely one-directional (pages cite authorities), while
     exchange schemes produce near-total reciprocity. For each node:
@@ -356,9 +337,7 @@ def reciprocity(
     the flipped key pair marks reciprocated edges — id pairs only, one
     shuffle each side — and a node-sized aggregate. No vectors, no
     payloads, no iteration."""
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).where(F.col("src") != F.col("dst")).distinct()
+    e = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     recip = e.join(rev, ["src", "dst"], "left_semi").groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("recip_n")
@@ -378,8 +357,8 @@ def reciprocity(
         "recip_n",
         ratio.alias("recip_ratio_u"),
         (
-            (ratio >= F.lit(int(farm_ratio_u)))
-            & (F.col("out_n") >= F.lit(int(min_out)))
+            (ratio >= F.lit(800_000))
+            & (F.col("out_n") >= F.lit(5))
         ).alias("is_farm"),
     )
 
@@ -389,8 +368,6 @@ def hits_warm(
     prev_hub: DataFrame,
     max_iterations: int = 4,
     tol_u: int = 1_000,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Incremental HITS: warm-start the ``hits()`` recurrence from a
     PREVIOUS hub-score table (the last full run before a small edge
@@ -425,8 +402,8 @@ def hits_warm(
             f"hits_warm: max_iterations must be >= 1, got {max_iterations}"
         )
     nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
         .distinct()
         .persist()
     )
@@ -450,8 +427,8 @@ def hits_warm(
     auth = None
     for _ in range(max_iterations):
         a_raw = (
-            edges.join(hub, edges[src] == hub["node"])
-            .groupBy(F.col(dst).alias("node"))
+            edges.join(hub, edges["src"] == hub["node"])
+            .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("hub_u").alias("raw"))
         )
         a_sparse = a_raw.crossJoin(a_raw.agg(F.max("raw").alias("mx"))).select(
@@ -466,8 +443,8 @@ def hits_warm(
             .localCheckpoint(eager=False)
         )
         h_raw = (
-            edges.join(auth_new, edges[dst] == auth_new["node"])
-            .groupBy(F.col(src).alias("node"))
+            edges.join(auth_new, edges["dst"] == auth_new["node"])
+            .groupBy(F.col("src").alias("node"))
             .agg(F.sum("auth_u").alias("raw"))
         )
         h_sparse = h_raw.crossJoin(h_raw.agg(F.max("raw").alias("mx"))).select(

@@ -87,7 +87,6 @@ def distribution_drift(
     lo: float,
     hi: float,
     n_buckets: int = 10,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Snapshot-to-snapshot distribution drift on a numeric column — the
     monitoring primitive a daily ingest runs before publishing: bucket
@@ -101,7 +100,7 @@ def distribution_drift(
     single IEEE division; counts are exact integers under any
     partitioning; shares and the one ln() per bucket are µ-unit
     quantized, so the whole report is hash-stable cross-engine.
-    ε-smoothing (1/scale) keeps empty buckets finite the same way in
+    ε-smoothing (1e-6) keeps empty buckets finite the same way in
     both engines.
 
     Scale shape: each side is one scan → one n_buckets-sized grouped
@@ -121,10 +120,10 @@ def distribution_drift(
             .agg(F.count(F.lit(1)).alias(f"n_{side}"))
         )
 
-    return _psi_report(hist(df_a, "a"), hist(df_b, "b"), "bucket", scale)
+    return _psi_report(hist(df_a, "a"), hist(df_b, "b"), "bucket")
 
 
-def _psi_report(ha: DataFrame, hb: DataFrame, key: str, scale: int) -> DataFrame:
+def _psi_report(ha: DataFrame, hb: DataFrame, key: str) -> DataFrame:
     """Shared PSI tail for the numeric and categorical gates: full-outer
     join the two histograms on ``key``, ε-smooth the shares, one µ-unit
     ln per row. An EMPTY snapshot must scream, not NULL out: a zero
@@ -143,7 +142,7 @@ def _psi_report(ha: DataFrame, hb: DataFrame, key: str, scale: int) -> DataFrame
         F.greatest(F.sum("n_a"), F.lit(1)).alias("t_a"),
         F.greatest(F.sum("n_b"), F.lit(1)).alias("t_b"),
     )
-    eps = 1.0 / scale
+    eps = 1e-6
     pa = F.col("n_a") / F.col("t_a") + eps
     pb = F.col("n_b") / F.col("t_b") + eps
     return (
@@ -152,58 +151,44 @@ def _psi_report(ha: DataFrame, hb: DataFrame, key: str, scale: int) -> DataFrame
             key,
             "n_a",
             "n_b",
-            F.round((pa - pb) * F.log(pa / pb) * scale)
+            F.round((pa - pb) * F.log(pa / pb) * 1_000_000)
             .cast("bigint")
             .alias("psi_u"),
         )
     )
 
 
-def categorical_drift(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    col: str,
-    scale: int = 1_000_000,
-    null_label: str = "<null>",
-) -> DataFrame:
+def categorical_drift(df_a: DataFrame, df_b: DataFrame, col: str) -> DataFrame:
     """Categorical companion to ``distribution_drift``: PSI per category
     value (nulls are a category of their own — a sudden null surge is
     exactly the drift this gate exists to catch). Same determinism
     contract; same scale shape — one grouped aggregate per side, the
-    two category-sized histograms full-outer join on the value.
-
-    ``null_label`` is the sentinel NULLs report under; if the column can
-    legitimately contain that literal string, the two would merge into
-    one row — pass a sentinel outside the column's domain."""
+    two category-sized histograms full-outer join on the value. NULLs report
+    under the category ``<null>``; a column that can hold that literal
+    string would merge the two into one row."""
     from pyspark.sql import functions as F
 
     def hist(df: DataFrame, side: str) -> DataFrame:
         return (
             df.select(
-                F.coalesce(F.col(col).cast("string"), F.lit(null_label))
+                F.coalesce(F.col(col).cast("string"), F.lit("<null>"))
                 .alias("category")
             )
             .groupBy("category")
             .agg(F.count(F.lit(1)).alias(f"n_{side}"))
         )
 
-    return _psi_report(hist(df_a, "a"), hist(df_b, "b"), "category", scale)
+    return _psi_report(hist(df_a, "a"), hist(df_b, "b"), "category")
 
 
-def ks_drift(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    col: str,
-    scale: int = 1_000_000,
-    n_buckets: int = 64,
-) -> DataFrame:
+def ks_drift(df_a: DataFrame, df_b: DataFrame, col: str) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov statistic between two
     snapshots of a numeric column — the unbinned companion to
     ``distribution_drift``'s PSI: D = max_v |F_a(v) − F_b(v)| over every
     observed value, so a shift PSI's fixed grid averages away (a spike
     inside one bucket, a subtle quantile slide) still registers.
 
-    Returns ONE row: (n_a, n_b, ks_u) with ks_u = round(D·scale).
+    Returns ONE row: (n_a, n_b, ks_u) with ks_u = round(D·1e6).
 
     Determinism contract: the maximum is taken over the INTEGER
     cross-products |cum_a·n_b − cum_b·n_a| (exact under any layout); the
@@ -225,6 +210,9 @@ def ks_drift(
     Only n_buckets scalars touch the driver; no stage sees more than one
     bucket's values in order."""
     from pyspark.sql import Window
+
+    n_buckets = 64
+    scale = 1_000_000
 
     def counts(df: DataFrame, side: str) -> DataFrame:
         return (

@@ -11,14 +11,13 @@ comparisons even when broadcast).
      non-uniform intervals allowed;
   2. left rows compute their single chunk id ``floor(value/w)`` — a pure
      Catalyst projection on the big side;
-  3. a join whose condition is chunk-equality AND the exact
+  3. an inner join whose condition is chunk-equality AND the exact
      ``lo <= value < hi`` predicate: Catalyst extracts the equality as
-     hash-join keys (broadcast when the interval side is small — the
-     normal case — so the 100 TB side never shuffles) and applies the
-     range as a join filter. Because every left row has exactly ONE
-     chunk, each (row, interval) pair is tested at most once — output
-     multiplicity is identical to the naive theta join, and
-     ``how="left"`` works directly.
+     hash-join keys (the interval side is broadcast, so the 100 TB side
+     never shuffles) and applies the range as a join filter. Because
+     every left row has exactly ONE chunk, each (row, interval) pair is
+     tested at most once — output multiplicity is identical to the
+     naive theta join.
 
 Cost: |intervals| grows by ~(width/chunk) copies; the big side gets one
 hash probe per row instead of |intervals| comparisons. This is the
@@ -43,42 +42,32 @@ def range_join(
     lo_col: str,
     hi_col: str,
     chunk: float,
-    extra_on: list[str] | None = None,
-    how: str = "inner",
-    broadcast_intervals: bool = True,
 ) -> DataFrame:
     """Join rows to the intervals containing them: ``lo <= value < hi``.
-
-    ``extra_on`` adds plain equi-keys to the match (column present on both
-    sides). ``how`` is "inner" or "left" (unmatched left rows keep NULL
-    interval columns). Overlapping intervals yield one output row per
-    covering interval, exactly like the equivalent theta join.
+    Overlapping intervals yield one output row per covering interval,
+    exactly like the equivalent theta join.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be inner|left, got {how!r}")
-    extra_on = extra_on or []
-    dup = set(left.columns) & set(intervals.columns) - set(extra_on)
+    dup = set(left.columns) & set(intervals.columns)
     if dup:
         raise ValueError(f"ambiguous columns {sorted(dup)}: rename one side")
 
-    iv = intervals.withColumn(
-        _CHUNK,
-        F.explode(
-            F.sequence(
-                F.floor(F.col(lo_col) / chunk).cast("long"),
-                F.floor(F.col(hi_col) / chunk).cast("long"),
-            )
-        ),
+    iv = F.broadcast(
+        intervals.withColumn(
+            _CHUNK,
+            F.explode(
+                F.sequence(
+                    F.floor(F.col(lo_col) / chunk).cast("long"),
+                    F.floor(F.col(hi_col) / chunk).cast("long"),
+                )
+            ),
+        )
     )
-    if broadcast_intervals:
-        iv = F.broadcast(iv)
     probe = left.withColumn(_CHUNK, F.floor(F.col(value_col) / chunk).cast("long"))
 
-    cond = probe[_CHUNK] == iv[_CHUNK]
-    for k in extra_on:
-        cond = cond & (probe[k] == iv[k])
-    cond = cond & (probe[value_col] >= iv[lo_col]) & (probe[value_col] < iv[hi_col])
-
-    out_cols = [probe[c] for c in left.columns]
-    out_cols += [iv[c] for c in intervals.columns if c not in extra_on]
-    return probe.join(iv, cond, how).select(*out_cols)
+    cond = (
+        (probe[_CHUNK] == iv[_CHUNK])
+        & (probe[value_col] >= iv[lo_col])
+        & (probe[value_col] < iv[hi_col])
+    )
+    out_cols = [probe[c] for c in left.columns] + [iv[c] for c in intervals.columns]
+    return probe.join(iv, cond, "inner").select(*out_cols)

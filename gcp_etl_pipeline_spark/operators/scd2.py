@@ -87,44 +87,34 @@ def scd2_lookup(
     dim: DataFrame,
     keys: Sequence[str],
     ts_col: str,
-    how: str = "left",
-    broadcast: bool | str = "auto",
-    broadcast_max_rows: int = BROADCAST_DIM_MAX_ROWS,
 ) -> DataFrame:
-    """Point-in-time dimension lookup: join each probe row to the SCD2
-    version valid at its timestamp — ``valid_from <= ts < valid_to``
+    """Point-in-time dimension lookup: left-join each probe row to the
+    SCD2 version valid at its timestamp — ``valid_from <= ts < valid_to``
     (half-open; an open version has ``valid_to IS NULL``). At most one
     version matches per probe by construction of ``scd2_build`` (empty
     same-day intervals are excluded by the strict upper bound); probes
-    before a key's first version keep NULL attributes under the default
-    left join.
+    before a key's first version keep NULL attributes.
 
-    Scale shape, chosen by ``broadcast``:
-
-      - ``True`` — hint a broadcast-hash join: the probe (fact) side
-        never shuffles; the range predicate rides as the join residual.
-        Right for dimension-sized version tables, an executor-OOM risk
-        for billion-row ones — hence not unconditional.
-      - ``False`` — no hint: Catalyst plans a key-partitioned sort-merge
-        join carrying the same range residual; both sides shuffle on the
-        natural key, nothing is collected. The 100-TB-safe default shape.
-      - ``"auto"`` (default) — a bounded row probe decides:
-        ``dim.limit(broadcast_max_rows + 1).count()`` (early-stopping —
-        never a full scan of a big dimension) picks the broadcast shape
-        iff the version table is under the ceiling. Costs one cheap
-        pre-action, the same trade ``knn_bruteforce``'s query-set guard
-        makes; pass an explicit bool to skip the probe.
+    Scale shape: a bounded row probe,
+    ``dim.limit(BROADCAST_DIM_MAX_ROWS + 1).count()`` (early-stopping —
+    never a full scan of a big dimension), picks a broadcast-hash join
+    iff the version table is under the ceiling: the probe (fact) side
+    never shuffles and the range predicate rides as the join residual.
+    Above it there is no hint, and Catalyst plans a key-partitioned
+    sort-merge join carrying the same residual; both sides shuffle on
+    the natural key, nothing is collected. The probe costs one cheap
+    pre-action, the same trade ``knn_bruteforce``'s query-set guard
+    makes.
     """
-    if broadcast == "auto":
-        broadcast = (
-            dim.limit(broadcast_max_rows + 1).count() <= broadcast_max_rows
-        )
+    broadcast = (
+        dim.limit(BROADCAST_DIM_MAX_ROWS + 1).count() <= BROADCAST_DIM_MAX_ROWS
+    )
     d = dim.alias("__scd2_dim")
     p = probes.alias("__scd2_probe")
     cond = [p[k] == d[k] for k in keys]
     cond.append(d["valid_from"] <= p[ts_col])
     cond.append(d["valid_to"].isNull() | (p[ts_col] < d["valid_to"]))
-    out = p.join(F.broadcast(d) if broadcast else d, cond, how)
+    out = p.join(F.broadcast(d) if broadcast else d, cond, "left")
     for k in keys:
         out = out.drop(d[k])
     return out

@@ -45,9 +45,7 @@ MICRO = 1_000_000
 MAX_QUERY_VECTORS = 100_000
 
 
-def _collect_query_set(
-    queries: DataFrame, query_id_col: str, vec_col: str
-) -> list:
+def _collect_query_set(queries: DataFrame) -> list:
     """Bounded collect of the (query_id, quantized vector) set.
 
     Fetches at most MAX_QUERY_VECTORS+1 rows (early-stopping limit, never a
@@ -57,7 +55,7 @@ def _collect_query_set(
     ``neardup_pairs_bucketed`` when queries == corpus.
     """
     q_rows = queries.select(
-        F.col(query_id_col), quantized(vec_col).alias("__qv")
+        F.col("query_id"), quantized("embedding").alias("__qv")
     ).limit(MAX_QUERY_VECTORS + 1).collect()
     if not q_rows:
         raise ValueError("empty query set")
@@ -183,14 +181,7 @@ def cosine(a: Column, b: Column) -> Column:
     return _cos_qq(quantized(a), quantized(b))
 
 
-def knn_bruteforce(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
+def knn_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors per query vector.
 
     ``queries``: (query_id, embedding) — small by contract, ENFORCED by a
@@ -200,12 +191,12 @@ def knn_bruteforce(
     query; the final window sees partitions × queries × k rows, never the
     corpus. Ties broken by corpus id for determinism.
     """
-    q_rows = _collect_query_set(queries, query_id_col, vec_col)
+    q_rows = _collect_query_set(queries)
     qids = np.array([r[0] for r in q_rows], dtype=np.int64)
     Q = np.array([list(r[1]) for r in q_rows], dtype=np.int64)
     qn = np.sqrt(np.einsum("ij,ij->i", Q, Q).astype(np.float64))
 
-    out_schema = f"{query_id_col} BIGINT, neighbor_id BIGINT, cos_sim DOUBLE"
+    out_schema = "query_id BIGINT, neighbor_id BIGINT, cos_sim DOUBLE"
 
     def topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -225,23 +216,23 @@ def knn_bruteforce(
                 ncol.extend(i[take])
                 ccol.extend(c[take])
             yield pd.DataFrame(
-                {query_id_col: qcol, "neighbor_id": ncol, "cos_sim": ccol}
+                {"query_id": qcol, "neighbor_id": ncol, "cos_sim": ccol}
             )
 
-    partial = spread(corpus, id_col).select(
-        F.col(id_col).alias("__id"), quantized(vec_col).alias("__cv")
+    partial = spread(corpus, "vec_id").select(
+        F.col("vec_id").alias("__id"), quantized("embedding").alias("__cv")
     ).mapInPandas(topk, out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
     return (
         partial.withColumn("rn", F.row_number().over(w).cast("bigint"))
         .where(F.col("rn") <= k)
-        .select(query_id_col, "neighbor_id", "cos_sim", "rn")
+        .select("query_id", "neighbor_id", "cos_sim", "rn")
     )
 
 
-def auto_n_lists(corpus_size: int, floor: int = 16) -> int:
+def auto_n_lists(corpus_size: int) -> int:
     """IVF list-count sizing: ~sqrt(N) lists (the standard IVF heuristic
     — balances per-list scan cost against probe fan-out) with a floor.
     At a billion vectors this yields ~32k lists, which also keeps the
@@ -249,19 +240,19 @@ def auto_n_lists(corpus_size: int, floor: int = 16) -> int:
     count (see knn_bucketed's scale note)."""
     import math
 
-    return max(floor, int(math.isqrt(max(corpus_size, 1))))
+    return max(16, int(math.isqrt(max(corpus_size, 1))))
 
 
 def _centroids(
-    corpus: DataFrame, n_lists: int, id_col: str, vec_col: str
+    corpus: DataFrame, n_lists: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Deterministic IVF centroids: the ``n_lists`` lowest-id corpus
     vectors, quantized (an engine-defined seed choice stated in the
     operator contract so SQL oracles reproduce exact results; swapping in
     k-means centroids changes only this function)."""
     cent_rows = (
-        corpus.select(F.col(id_col), quantized(vec_col).alias("__cv"))
-        .orderBy(F.col(id_col))
+        corpus.select(F.col("vec_id"), quantized("embedding").alias("__cv"))
+        .orderBy(F.col("vec_id"))
         .limit(n_lists)
         .collect()
     )
@@ -314,8 +305,6 @@ def kmeans_centroids(
     corpus: DataFrame,
     k: int,
     iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Deterministic Lloyd k-means over the quantized vectors — the
     quality upgrade for IVF list assignment (`_centroids`' lowest-id
@@ -341,12 +330,12 @@ def kmeans_centroids(
     shuffle").
 
     Returns (cent_ids = 0..k-1 list labels, C, cn) ready for
-    ``_ivf_assign`` / ``knn_ivf(centroids=...)``.
+    ``_ivf_assign`` (``knn_bucketed(centroids="kmeans")``).
     """
-    _, C, cn = _centroids(corpus, k, id_col, vec_col)
+    _, C, cn = _centroids(corpus, k)
     labels = np.arange(C.shape[0], dtype=np.int64)
-    qv_df = spread(corpus, id_col).select(
-        quantized(vec_col).alias("__cv")
+    qv_df = spread(corpus, "vec_id").select(
+        quantized("embedding").alias("__cv")
     )
     for _ in range(iters):
         stats = _kmeans_stats_rows(qv_df, C, cn)
@@ -386,8 +375,6 @@ def _ivf_assign(
     cent_ids: np.ndarray,
     C: np.ndarray,
     cn: np.ndarray,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """Nearest-centroid list assignment: one matmul pass over the corpus,
     fully partition-parallel. Returns (__id, __cv, list_id)."""
@@ -404,8 +391,8 @@ def _ivf_assign(
                 {"__id": pdf["__id"], "__cv": pdf["__cv"], "list_id": lists}
             )
 
-    return spread(corpus, id_col).select(
-        F.col(id_col).alias("__id"), quantized(vec_col).alias("__cv")
+    return spread(corpus, "vec_id").select(
+        F.col("vec_id").alias("__id"), quantized("embedding").alias("__cv")
     ).mapInPandas(assign, assign_schema)
 
 
@@ -413,15 +400,13 @@ def semantic_dedup(
     corpus: DataFrame,
     threshold: float = 0.9,
     n_lists: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: str = "lowest_id",
     kmeans_iters: int = 5,
 ) -> DataFrame:
     """SemDeDup-shaped embedding dedup (Abbas et al. 2023's cluster-then-
     prune recipe): assign every vector to its nearest IVF list, then DROP
     any vector that has a lower-id list-mate with cosine ≥ ``threshold``.
-    Returns the KEPT rows as (id_col, list_id).
+    Returns the KEPT rows as (vec_id, list_id).
 
     Semantics are greedy-by-id within a list (the lowest-id member of
     every near-dup group survives) and are deliberately simple enough to
@@ -440,15 +425,13 @@ def semantic_dedup(
     near-dups the seeded lists miss, at the cost of ``iters`` extra
     passes over the corpus."""
     if centroids == "kmeans":
-        cent_ids, C, cn = kmeans_centroids(
-            corpus, n_lists, iters=kmeans_iters, id_col=id_col, vec_col=vec_col
-        )
+        cent_ids, C, cn = kmeans_centroids(corpus, n_lists, iters=kmeans_iters)
     else:
-        cent_ids, C, cn = _centroids(corpus, n_lists, id_col, vec_col)
+        cent_ids, C, cn = _centroids(corpus, n_lists)
     # persist the reused leg (three consumers: both self-join sides and
     # the final anti-join); released when the RESULT is GC'd, see
     # _release_on_gc
-    assigned = _ivf_assign(corpus, cent_ids, C, cn, id_col, vec_col).persist()
+    assigned = _ivf_assign(corpus, cent_ids, C, cn).persist()
     a = assigned.select(
         F.col("__id").alias("a"), F.col("__cv").alias("__va"), "list_id"
     )
@@ -466,7 +449,7 @@ def semantic_dedup(
         assigned.join(
             dropped, assigned["__id"] == dropped["__dup"], "left_anti"
         )
-        .select(F.col("__id").alias(id_col), "list_id")
+        .select(F.col("__id").alias("vec_id"), "list_id")
     )
     return _release_on_gc(out, assigned)
 
@@ -477,18 +460,10 @@ def knn_ivf(
     k: int = 5,
     n_lists: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    centroids: str = "lowest_id",
-    kmeans_iters: int = 5,
 ) -> DataFrame:
     """IVF-style approximate top-k: partition the corpus into ``n_lists``
     inverted lists (nearest-centroid assignment), probe only the
     ``n_probe`` lists nearest each query, exact cosine inside them.
-    ``centroids="kmeans"`` uses deterministic Lloyd centroids
-    (``kmeans_centroids``) for density-following lists (higher recall at
-    the same n_probe; extra assignment passes to build).
 
     The at-scale shape: assignment is one matmul pass over the corpus;
     search shuffles on list_id, touching ~n_probe/n_lists of the data —
@@ -502,16 +477,11 @@ def knn_ivf(
     changes only this step). All scoring is quantized-exact with ties
     broken by id, so the output is bit-stable across engines.
     """
-    if centroids == "kmeans":
-        cent_ids, C, cn = kmeans_centroids(
-            corpus, n_lists, iters=kmeans_iters, id_col=id_col, vec_col=vec_col
-        )
-    else:
-        cent_ids, C, cn = _centroids(corpus, n_lists, id_col, vec_col)
+    cent_ids, C, cn = _centroids(corpus, n_lists)
     _nearest_lists = _nearest_lists_fn(C, cn)
-    assigned = _ivf_assign(corpus, cent_ids, C, cn, id_col, vec_col)
+    assigned = _ivf_assign(corpus, cent_ids, C, cn)
 
-    q_rows = _collect_query_set(queries, query_id_col, vec_col)
+    q_rows = _collect_query_set(queries)
     Q = np.array([list(r[1]) for r in q_rows], dtype=np.int64)
     probes = _nearest_lists(Q, min(n_probe, len(cent_ids)))
     probe_rows = [
@@ -520,24 +490,24 @@ def knn_ivf(
         for j in pr
     ]
     probe_df = corpus.sparkSession.createDataFrame(
-        probe_rows, f"{query_id_col} BIGINT, __qv ARRAY<BIGINT>, list_id BIGINT"
+        probe_rows, "query_id BIGINT, __qv ARRAY<BIGINT>, list_id BIGINT"
     )
 
     cand = assigned.join(F.broadcast(probe_df), "list_id").where(
-        F.col("__id") != F.col(query_id_col)
+        F.col("__id") != F.col("query_id")
     )
     scored = cand.select(
-        F.col(query_id_col),
+        F.col("query_id"),
         F.col("__id").alias("neighbor_id"),
         _cos_qq(F.col("__qv"), F.col("__cv")).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
         .where(F.col("rn") <= k)
-        .select(query_id_col, "neighbor_id", "cos_sim", "rn")
+        .select("query_id", "neighbor_id", "cos_sim", "rn")
     )
 
 
@@ -547,9 +517,6 @@ def knn_bucketed(
     k: int = 5,
     n_lists: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     centroids: str = "lowest_id",
     kmeans_iters: int = 5,
 ) -> DataFrame:
@@ -576,16 +543,14 @@ def knn_bucketed(
     wants); AQE's skew-join split handles residual imbalance.
     """
     if centroids == "kmeans":
-        cent_ids, C, cn = kmeans_centroids(
-            corpus, n_lists, iters=kmeans_iters, id_col=id_col, vec_col=vec_col
-        )
+        cent_ids, C, cn = kmeans_centroids(corpus, n_lists, iters=kmeans_iters)
     else:
-        cent_ids, C, cn = _centroids(corpus, n_lists, id_col, vec_col)
-    assigned = _ivf_assign(corpus, cent_ids, C, cn, id_col, vec_col)
+        cent_ids, C, cn = _centroids(corpus, n_lists)
+    assigned = _ivf_assign(corpus, cent_ids, C, cn)
 
     _nearest_lists = _nearest_lists_fn(C, cn)
     np_eff = min(n_probe, len(cent_ids))
-    probe_schema = f"{query_id_col} BIGINT, __qv ARRAY<BIGINT>, list_id BIGINT"
+    probe_schema = "query_id BIGINT, __qv ARRAY<BIGINT>, list_id BIGINT"
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -597,31 +562,31 @@ def knn_bucketed(
             qvs = pdf["__qv"].tolist()
             yield pd.DataFrame(
                 {
-                    query_id_col: np.repeat(qids, np_eff),
+                    "query_id": np.repeat(qids, np_eff),
                     "__qv": [v for v in qvs for _ in range(np_eff)],
                     "list_id": lists.reshape(-1),
                 }
             )
 
-    probes = spread(queries, query_id_col).select(
-        F.col(query_id_col).alias("__qid"), quantized(vec_col).alias("__qv")
+    probes = spread(queries, "query_id").select(
+        F.col("query_id").alias("__qid"), quantized("embedding").alias("__qv")
     ).mapInPandas(probe, probe_schema)
 
     cand = assigned.join(probes, "list_id").where(
-        F.col("__id") != F.col(query_id_col)
+        F.col("__id") != F.col("query_id")
     )
     scored = cand.select(
-        F.col(query_id_col),
+        F.col("query_id"),
         F.col("__id").alias("neighbor_id"),
         _cos_qq(F.col("__qv"), F.col("__cv")).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
         .where(F.col("rn") <= k)
-        .select(query_id_col, "neighbor_id", "cos_sim", "rn")
+        .select("query_id", "neighbor_id", "cos_sim", "rn")
     )
 
 
@@ -642,8 +607,6 @@ def neardup_pairs_bucketed(
     corpus: DataFrame,
     threshold: float = 0.95,
     num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding near-duplicates: bucket by ``num_planes`` sign bits
     (random-hyperplane LSH); verify quantized cosine ≥ threshold only
@@ -674,8 +637,8 @@ def neardup_pairs_bucketed(
 
     # persist: the bucket self-join would otherwise run the matmul twice;
     # released when the RESULT is GC'd, see _release_on_gc
-    sig = spread(corpus, id_col).select(
-        F.col(id_col).alias("__id"), quantized(vec_col).alias("__cv")
+    sig = spread(corpus, "vec_id").select(
+        F.col("vec_id").alias("__id"), quantized("embedding").alias("__cv")
     ).mapInPandas(buckets, sig_schema).persist()
     a = sig.select(F.col("__id").alias("a"), F.col("__cv").alias("__va"), "bucket")
     b = sig.select(F.col("__id").alias("b"), F.col("__cv").alias("__vb"), "bucket")
@@ -688,9 +651,7 @@ def neardup_pairs_bucketed(
     return _release_on_gc(out, sig)
 
 
-def quantize_int8_error(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_int8_error(df: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization with exact reconstruction-
     error accounting — the storage/bandwidth step a billion-vector ANN
     index takes before anything else (4x smaller vectors, SIMD int8
@@ -706,7 +667,7 @@ def quantize_int8_error(
 
     Scale shape: one narrow projection over array columns, all JVM-side
     higher-order functions — no shuffle, no UDF, fuses with the scan."""
-    base = df.select(F.col(id_col), quantized(vec_col).alias("__qv")).withColumn(
+    base = df.select(F.col("vec_id"), quantized("embedding").alias("__qv")).withColumn(
         "__m",
         F.aggregate(
             F.transform("__qv", lambda x: F.abs(x)),
@@ -720,7 +681,7 @@ def quantize_int8_error(
     )
     zero = F.lit(0).cast("bigint")
     return base.select(
-        id_col,
+        "vec_id",
         F.col("__m").alias("max_abs_u"),
         F.when(F.col("__m") == 0, zero)
         .otherwise(F.expr(err_agg.format(fold="greatest(acc, x)")))
@@ -731,12 +692,7 @@ def quantize_int8_error(
     )
 
 
-def mutual_knn(
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def mutual_knn(corpus: DataFrame, k: int = 5) -> DataFrame:
     """Mutual k-NN graph edges: undirected pairs (a, b) where each vector
     is in the OTHER's exact top-k cosine neighbors. The mutuality filter
     is the standard symmetrization for kNN graphs (mutual edges are far
@@ -753,9 +709,9 @@ def mutual_knn(
     IEEE), so either direction's value may be reported.
     """
     queries = corpus.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias(vec_col)
+        F.col("vec_id").alias("query_id"), F.col("embedding")
     )
-    nn = knn_bruteforce(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
+    nn = knn_bruteforce(corpus, queries, k=k)
     fwd = nn.select(
         F.col("query_id").alias("a"), F.col("neighbor_id").alias("b"), "cos_sim"
     )
@@ -769,12 +725,7 @@ def mutual_knn(
     )
 
 
-def knn_graph_triangles(
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def knn_graph_triangles(corpus: DataFrame, k: int = 5) -> DataFrame:
     """Triangles of the mutual-kNN graph — the local-density signal on
     top of mutual_knn: a vector in many triangles sits inside a tight
     cluster (triangle count drives clustering-coefficient and community
@@ -795,7 +746,7 @@ def knn_graph_triangles(
     defaults false), and a localCheckpoint adds a materialization
     barrier — single-session A/B showed neither beats the lazy form.
     """
-    e = mutual_knn(corpus, k, id_col, vec_col).select("a", "b")
+    e = mutual_knn(corpus, k).select("a", "b")
     ab = e.select(F.col("a"), F.col("b"))
     bc = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
     ac = e.select(F.col("a"), F.col("b").alias("c"))
@@ -810,12 +761,6 @@ def mutual_knn_bucketed(
     corpus: DataFrame,
     k: int = 5,
     n_lists: int | None = None,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: str = "kmeans",
-    kmeans_iters: int = 2,
-    n_vectors: int | None = None,
 ) -> DataFrame:
     """Mutual k-NN graph edges on the AT-SCALE feed: ``knn_bucketed``'s
     directed top-k (distributed probe assignment, no query collect, no
@@ -835,18 +780,14 @@ def mutual_knn_bucketed(
 
     NOTE: ``n_lists=None`` runs an EAGER ``corpus.count()`` action here
     (before the lazy plan) to auto-size the lists — one full scan. At
-    cluster scale pass ``n_lists`` (or ``n_vectors``, from which it is
-    derived) when the caller already knows the corpus size."""
-    if n_lists is not None:
-        n = n_lists
-    else:
-        n = auto_n_lists(n_vectors if n_vectors is not None else corpus.count())
+    cluster scale pass ``n_lists`` when the caller already knows the
+    corpus size."""
+    n = n_lists if n_lists is not None else auto_n_lists(corpus.count())
     queries = corpus.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias(vec_col)
+        F.col("vec_id").alias("query_id"), F.col("embedding")
     )
     nn = knn_bucketed(
-        corpus, queries, k=k, n_lists=n, n_probe=n_probe, id_col=id_col,
-        vec_col=vec_col, centroids=centroids, kmeans_iters=kmeans_iters,
+        corpus, queries, k=k, n_lists=n, centroids="kmeans", kmeans_iters=2
     )
     fwd = nn.select(
         F.col("query_id").alias("a"), F.col("neighbor_id").alias("b"), "cos_sim"
@@ -861,17 +802,7 @@ def mutual_knn_bucketed(
     )
 
 
-def knn_triangles_bucketed(
-    corpus: DataFrame,
-    k: int = 5,
-    n_lists: int | None = None,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: str = "kmeans",
-    kmeans_iters: int = 2,
-    n_vectors: int | None = None,
-) -> DataFrame:
+def knn_triangles_bucketed(corpus: DataFrame, k: int = 5) -> DataFrame:
     """``knn_graph_triangles`` on the bucketed-ANN edge list: the same
     oriented-edge closure (each a<b<c triangle found exactly once) over
     ``mutual_knn_bucketed``'s output — the composition that actually
@@ -880,16 +811,10 @@ def knn_triangles_bucketed(
     exchanges are identical, so AQE exchange reuse runs the bucketed
     scoring once (the knn_graph_triangles measurement).
 
-    The list count is resolved HERE (one ``corpus.count()`` at most,
-    none when ``n_lists``/``n_vectors`` is given) and passed down
-    concrete, so the edge build never re-derives it."""
-    if n_lists is None:
-        n_lists = auto_n_lists(
-            n_vectors if n_vectors is not None else corpus.count()
-        )
-    e = mutual_knn_bucketed(
-        corpus, k, n_lists, n_probe, id_col, vec_col, centroids, kmeans_iters
-    ).select("a", "b")
+    The list count is resolved HERE (one ``corpus.count()``) and passed
+    down concrete, so the edge build never re-derives it."""
+    n_lists = auto_n_lists(corpus.count())
+    e = mutual_knn_bucketed(corpus, k, n_lists).select("a", "b")
     ab = e.select(F.col("a"), F.col("b"))
     bc = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
     ac = e.select(F.col("a"), F.col("b").alias("c"))
@@ -900,13 +825,7 @@ def knn_triangles_bucketed(
     )
 
 
-def knn_label_agreement(
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def knn_label_agreement(corpus: DataFrame, k: int = 5) -> DataFrame:
     """Label-noise audit over the exact kNN graph: for each vector, how
     many of its k nearest cosine neighbors share its label (and the
     µ-unit fraction). Low agreement flags mislabeled points or
@@ -918,16 +837,16 @@ def knn_label_agreement(
     it inherits the MAX_QUERY_VECTORS driver-collect bound (the
     mutual_knn contract): above ~100k vectors, feed knn_bucketed's
     directed edges through the same labels join instead."""
-    labels = corpus.select(F.col(id_col), F.col(label_col))
+    labels = corpus.select(F.col("vec_id"), F.col("label"))
     queries = corpus.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias(vec_col)
+        F.col("vec_id").alias("query_id"), F.col("embedding")
     )
-    nn = knn_bruteforce(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
+    nn = knn_bruteforce(corpus, queries, k=k)
     ql = labels.select(
-        F.col(id_col).alias("query_id"), F.col(label_col).alias("__ql")
+        F.col("vec_id").alias("query_id"), F.col("label").alias("__ql")
     )
     nl = labels.select(
-        F.col(id_col).alias("neighbor_id"), F.col(label_col).alias("__nl")
+        F.col("vec_id").alias("neighbor_id"), F.col("label").alias("__nl")
     )
     return (
         nn.join(ql, "query_id").join(nl, "neighbor_id")
@@ -946,28 +865,16 @@ def knn_label_agreement(
     )
 
 
-def ivf_list_stats(
-    corpus: DataFrame,
-    n_lists: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: str = "kmeans",
-    kmeans_iters: int = 2,
-) -> DataFrame:
+def ivf_list_stats(corpus: DataFrame) -> DataFrame:
     """IVF index HEALTH audit: per-list member counts and µ-unit share
     of the corpus for the same Lloyd/auto-lists assignment the bucketed
     searchers use. Imbalanced lists are the IVF failure mode — a
     mega-list degrades both recall (probes waste budget) and the
     list_id join's reducer balance — so a deployment watches this table
     after every (re)build. One assignment pass + one short-key count."""
-    n = n_lists if n_lists is not None else auto_n_lists(corpus.count())
-    if centroids == "kmeans":
-        cent_ids, C, cn = kmeans_centroids(
-            corpus, n, iters=kmeans_iters, id_col=id_col, vec_col=vec_col
-        )
-    else:
-        cent_ids, C, cn = _centroids(corpus, n, id_col, vec_col)
-    assigned = _ivf_assign(corpus, cent_ids, C, cn, id_col, vec_col)
+    n = auto_n_lists(corpus.count())
+    cent_ids, C, cn = kmeans_centroids(corpus, n, iters=2)
+    assigned = _ivf_assign(corpus, cent_ids, C, cn)
     # share from a window over the GROUPED result (~n_lists rows), not a
     # separate count(): an assigned.count() action would execute the
     # whole assignment matmul pass a second time
@@ -987,8 +894,6 @@ def bitext_margin_mine(
     tgt: DataFrame,
     k: int = 4,
     margin_thr_u: int = 1_050_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Parallel-corpus mining by the ratio-margin criterion (Artetxe &
     Schwenk): a candidate pair (x, y) scores cos(x, y) against the MEAN
@@ -1019,15 +924,15 @@ def bitext_margin_mine(
     # equality. Shift the tgt ids into a disjoint range internally
     # (two bounded 1-row aggregates) and shift back on output, so a
     # src/tgt id collision can never silently drop the true pair.
-    hi = src.agg(F.max(id_col).alias("h")).collect()[0]["h"]
-    lo = tgt.agg(F.min(id_col).alias("l")).collect()[0]["l"]
+    hi = src.agg(F.max("vec_id").alias("h")).collect()[0]["h"]
+    lo = tgt.agg(F.min("vec_id").alias("l")).collect()[0]["l"]
     shift = (hi - lo + 1) if hi is not None and lo is not None else 0
-    tgt = tgt.withColumn(id_col, (F.col(id_col) + F.lit(shift)).cast("long"))
+    tgt = tgt.withColumn("vec_id", (F.col("vec_id") + F.lit(shift)).cast("long"))
 
-    q_src = src.select(F.col(id_col).alias("query_id"), vec_col)
-    q_tgt = tgt.select(F.col(id_col).alias("query_id"), vec_col)
-    fwd = knn_bruteforce(tgt, q_src, k=k, id_col=id_col, vec_col=vec_col)
-    rev = knn_bruteforce(src, q_tgt, k=k, id_col=id_col, vec_col=vec_col)
+    q_src = src.select(F.col("vec_id").alias("query_id"), "embedding")
+    q_tgt = tgt.select(F.col("vec_id").alias("query_id"), "embedding")
+    fwd = knn_bruteforce(tgt, q_src, k=k)
+    rev = knn_bruteforce(src, q_tgt, k=k)
     fwd = fwd.select(
         F.col("query_id").alias("src_id"),
         F.col("neighbor_id").alias("tgt_id"),
@@ -1081,14 +986,7 @@ def bitext_margin_mine(
     )
 
 
-def triplet_mine(
-    corpus: DataFrame,
-    anchors: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def triplet_mine(corpus: DataFrame, anchors: DataFrame, k: int = 10) -> DataFrame:
     """Hard-negative triplet mining for embedding-model training: for
     each anchor, the highest-cosine SAME-label neighbor in its top-k is
     the positive and the highest-cosine DIFFERENT-label neighbor the
@@ -1106,14 +1004,14 @@ def triplet_mine(
     from pyspark.sql import Window
 
     labels = corpus.select(
-        F.col(id_col).alias("__nid"), F.col(label_col).alias("__nlabel")
+        F.col("vec_id").alias("__nid"), F.col("label").alias("__nlabel")
     )
     a_labels = corpus.select(
-        F.col(id_col).alias("anchor_id"),
-        F.col(label_col).alias("__alabel"),
+        F.col("vec_id").alias("anchor_id"),
+        F.col("label").alias("__alabel"),
     )
-    q = anchors.select(F.col(id_col).alias("query_id"), vec_col)
-    nn = knn_bruteforce(corpus, q, k=k, id_col=id_col, vec_col=vec_col)
+    q = anchors.select(F.col("vec_id").alias("query_id"), "embedding")
+    nn = knn_bruteforce(corpus, q, k=k)
     edges = (
         nn.select(
             F.col("query_id").alias("anchor_id"),
@@ -1315,7 +1213,6 @@ def pq_codebook(
     m: int = 8,
     ksub: int = 16,
     iters: int = 2,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     pre_quantized: bool = False,
 ) -> DataFrame:
@@ -1340,10 +1237,10 @@ def pq_codebook(
     spark = corpus.sparkSession
     seed_rows = (
         corpus.select(
-            F.col(id_col),
+            F.col("vec_id"),
             _vec_quantized(vec_col, pre_quantized).alias("__qv"),
         )
-        .orderBy(id_col)
+        .orderBy("vec_id")
         .limit(ksub)
         .collect()
     )
@@ -1409,7 +1306,6 @@ def pq_codes(
     codebook: DataFrame,
     m: int = 8,
     dsub: int = 8,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     pre_quantized: bool = False,
     carry: tuple[str, ...] = (),
@@ -1438,12 +1334,12 @@ def pq_codes(
         C_arr[int(r["sub"]), int(r["code"])] = np.array(
             list(r["cw"]), dtype=np.int64
         )
-    id_type = corpus.schema[id_col].dataType.simpleString()
+    id_type = corpus.schema["vec_id"].dataType.simpleString()
     carry_types = [
         (c, corpus.schema[c].dataType.simpleString()) for c in carry
     ]
     out_schema = ", ".join(
-        [f"{id_col} {id_type}"]
+        [f"vec_id {id_type}"]
         + [f"{c} {t}" for c, t in carry_types]
         + ["sub bigint", "code bigint"]
     )
@@ -1464,11 +1360,11 @@ def pq_codes(
             cols.append(pa.array(np.tile(np.arange(m, dtype=np.int64), n_rows)))
             cols.append(pa.array(code_mat.reshape(-1)))
             yield pa.RecordBatch.from_arrays(
-                cols, names=[id_col, *carry, "sub", "code"]
+                cols, names=["vec_id", *carry, "sub", "code"]
             )
 
     src = corpus.select(
-        F.col(id_col),
+        F.col("vec_id"),
         *[F.col(c) for c in carry],
         _vec_quantized(vec_col, pre_quantized).alias("__qv"),
     )
@@ -1481,10 +1377,6 @@ def knn_pq(
     k: int = 5,
     m: int = 8,
     ksub: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
 ) -> DataFrame:
     """PQ top-k ANN via asymmetric distance: (query_id, neighbor_id,
     adc, rn). The per-query LUT (m x ksub exact integer d2 entries
@@ -1492,7 +1384,7 @@ def knn_pq(
     touches only (vec_id, sub, code) rows — the 32x-compressed index,
     never the vectors. Ties (adc asc, neighbor asc).
 
-    Query-id contract: ``qid_col`` values must be the CORPUS vec_id of
+    Query-id contract: ``query_id`` values must be the CORPUS vec_id of
     each query vector (queries drawn from the corpus, the fixture
     shape) — self-matches are excluded by comparing neighbor ids
     against query ids, so a disjoint query-id space that happens to
@@ -1500,35 +1392,35 @@ def knn_pq(
     """
     from pyspark.sql import Window
 
-    dim = len(corpus.select(vec_col).first()[0])
+    dim = len(corpus.select("embedding").first()[0])
     if dim % m != 0:
         raise ValueError(
             f"knn_pq: dim={dim} is not divisible by m={m}"
         )
     dsub = dim // m
-    cb = pq_codebook(corpus, m, ksub, iters, id_col, vec_col)
-    codes = pq_codes(corpus, cb, m, dsub, id_col, vec_col)
+    cb = pq_codebook(corpus, m, ksub)
+    codes = pq_codes(corpus, cb, m, dsub)
     qsub = _pq_subvectors(
-        queries.select(F.col(qid_col), quantized(vec_col).alias("__qv")),
-        [qid_col],
+        queries.select(F.col("query_id"), quantized("embedding").alias("__qv")),
+        ["query_id"],
         "__qv",
         m,
         dsub,
     )
     lut = qsub.join(F.broadcast(cb), "sub").select(
-        qid_col, "sub", "code",
+        "query_id", "sub", "code",
         _l2q_n(F.col("sv"), F.col("cw"), dsub).alias("qd2"),
     )
     adc = (
         codes.join(F.broadcast(lut), ["sub", "code"])
-        .groupBy(qid_col, id_col)
+        .groupBy("query_id", "vec_id")
         .agg(F.sum("qd2").alias("adc"))
-        .where(F.col(id_col) != F.col(qid_col))
+        .where(F.col("vec_id") != F.col("query_id"))
     )
-    w = Window.partitionBy(qid_col).orderBy(F.asc("adc"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
     return adc.select(
-        qid_col,
-        F.col(id_col).alias("neighbor_id"),
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
         "adc",
         F.row_number().over(w).cast("bigint").alias("rn"),
     ).where(F.col("rn") <= k)
@@ -1567,17 +1459,15 @@ class IvfPqIndex:
         self.dsub = dsub
 
 
-def _coarse_centroids(
-    corpus: DataFrame, n_lists: int, id_col: str, vec_col: str
-) -> DataFrame:
+def _coarse_centroids(corpus: DataFrame, n_lists: int) -> DataFrame:
     """Deterministic coarse quantizer: the ``n_lists`` lowest-id corpus
     vectors, quantized, labeled list_id 0.. in id order (the
     ``_centroids`` seeding contract — swapping in ``kmeans_centroids``
     changes only this function). n_lists literal rows — broadcast
     scale."""
     rows = (
-        corpus.select(F.col(id_col), quantized(vec_col).alias("__qv"))
-        .orderBy(id_col)
+        corpus.select(F.col("vec_id"), quantized("embedding").alias("__qv"))
+        .orderBy("vec_id")
         .limit(n_lists)
         .collect()
     )
@@ -1598,8 +1488,6 @@ def ivfpq_index(
     m: int = 8,
     ksub: int = 16,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     coarse: str = "kmeans",
     coarse_iters: int = 2,
 ) -> IvfPqIndex:
@@ -1630,18 +1518,18 @@ def ivfpq_index(
     duration of codebook training (it feeds every Lloyd round and the
     encode) and released when the codes frame is GC'd."""
     qcorp = corpus.select(
-        F.col(id_col), quantized(vec_col).alias("__qv")
+        F.col("vec_id"), quantized("embedding").alias("__qv")
     )
     if coarse == "kmeans":
         ccb = pq_codebook(
             qcorp, m=1, ksub=n_lists, iters=coarse_iters,
-            id_col=id_col, vec_col="__qv", pre_quantized=True,
+            vec_col="__qv", pre_quantized=True,
         )
         cent = ccb.select(
             F.col("code").alias("list_id"), F.col("cw").alias("cvec")
         )
     elif coarse == "lowest_id":
-        cent = _coarse_centroids(corpus, n_lists, id_col, vec_col)
+        cent = _coarse_centroids(corpus, n_lists)
     else:
         # loud misconfiguration (the robots_filter scope contract): a
         # typo'd coarse mode silently falling back to lowest-id seeding
@@ -1684,23 +1572,23 @@ def ivfpq_index(
                         pa.array(RV.reshape(-1)),
                     ),
                 ],
-                names=[id_col, "list_id", "__rv"],
+                names=["vec_id", "list_id", "__rv"],
             )
 
-    id_type = qcorp.schema[id_col].dataType.simpleString()
+    id_type = qcorp.schema["vec_id"].dataType.simpleString()
     res = qcorp.mapInArrow(
         assign_res_fn,
-        f"{id_col} {id_type}, list_id bigint, __rv array<bigint>",
+        f"vec_id {id_type}, list_id bigint, __rv array<bigint>",
     ).persist()
     cb = pq_codebook(
-        res, m, ksub, iters, id_col=id_col, vec_col="__rv",
+        res, m, ksub, iters, vec_col="__rv",
         pre_quantized=True,
     )
     codes = pq_codes(
-        res, cb, m, dim // m, id_col=id_col, vec_col="__rv",
+        res, cb, m, dim // m, vec_col="__rv",
         pre_quantized=True, carry=("list_id",),
-    ).select(id_col, "list_id", "sub", "code")
-    membership = res.select(id_col, "list_id")
+    ).select("vec_id", "list_id", "sub", "code")
+    membership = res.select("vec_id", "list_id")
     return IvfPqIndex(
         cent,
         cb,
@@ -1715,8 +1603,6 @@ def ivfpq_probes(
     queries: DataFrame,
     cent: DataFrame,
     n_probe: int = 2,
-    qid_col: str = "query_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
     """(query_id, list_id, __qres): each query's ``n_probe`` nearest
@@ -1727,27 +1613,27 @@ def ivfpq_probes(
     Pass ``dim`` (``IvfPqIndex.dim``) so the distance fold unrolls into
     codegen-able scalar terms; without it the interpreted HOF fold runs
     (same exact arithmetic either way)."""
-    qq = queries.select(F.col(qid_col), quantized(vec_col).alias("__qv"))
+    qq = queries.select(F.col("query_id"), quantized("embedding").alias("__qv"))
     d2 = (
         _l2q_n(F.col("__qv"), F.col("cvec"), dim)
         if dim is not None
         else _l2q(F.col("__qv"), F.col("cvec"))
     )
     cand = qq.join(F.broadcast(cent), how="cross").select(
-        qid_col,
+        "query_id",
         "__qv",
         "list_id",
         "cvec",
         d2.alias("d2"),
     )
-    w = Window.partitionBy(qid_col).orderBy(
+    w = Window.partitionBy("query_id").orderBy(
         F.asc("d2"), F.asc("list_id")
     )
     return (
         cand.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= n_probe)
         .select(
-            qid_col,
+            "query_id",
             "list_id",
             F.zip_with("__qv", "cvec", lambda x, c: x - c).alias("__qres"),
         )
@@ -1759,8 +1645,6 @@ def ivfpq_adc_topk(
     probes: DataFrame,
     k: int = 5,
     m: int = 8,
-    qid_col: str = "query_id",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """ADC top-k over the probed lists only: the per-(query, list) LUT
     (m × ksub exact integer d2 entries) broadcasts onto the code
@@ -1772,9 +1656,9 @@ def ivfpq_adc_topk(
     Query-id contract: as ``knn_pq`` — query ids must be corpus
     vec_ids (self-matches excluded by id equality)."""
     lut = _pq_subvectors(
-        probes, [qid_col, "list_id"], "__qres", m, index.dsub
+        probes, ["query_id", "list_id"], "__qres", m, index.dsub
     ).join(F.broadcast(index.codebook), "sub").select(
-        qid_col,
+        "query_id",
         "list_id",
         "sub",
         "code",
@@ -1782,14 +1666,14 @@ def ivfpq_adc_topk(
     )
     adc = (
         index.codes.join(F.broadcast(lut), ["list_id", "sub", "code"])
-        .groupBy(qid_col, id_col)
+        .groupBy("query_id", "vec_id")
         .agg(F.sum("qd2").alias("adc"))
-        .where(F.col(id_col) != F.col(qid_col))
+        .where(F.col("vec_id") != F.col("query_id"))
     )
-    w = Window.partitionBy(qid_col).orderBy(F.asc("adc"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
     return adc.select(
-        qid_col,
-        F.col(id_col).alias("neighbor_id"),
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
         "adc",
         F.row_number().over(w).cast("bigint").alias("rn"),
     ).where(F.col("rn") <= k)
@@ -1803,9 +1687,6 @@ def ivfpq_rerank(
     k: int = 5,
     rerank: int = 32,
     m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
 ) -> DataFrame:
     """IVFADC + exact rerank (the standard recall recovery): take the
     ADC top-``rerank`` candidates per query, fetch THOSE vectors'
@@ -1820,27 +1701,27 @@ def ivfpq_rerank(
     pattern as warc_record_fetch), so the only corpus-sized work is
     one semi-join-shaped scan. Raw vectors never shuffle."""
     cand = ivfpq_adc_topk(
-        index, probes, k=rerank, m=m, qid_col=qid_col, id_col=id_col
-    ).select(qid_col, "neighbor_id")
+        index, probes, k=rerank, m=m,
+    ).select("query_id", "neighbor_id")
     qv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        quantized(vec_col).alias("__cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        quantized("embedding").alias("__cv"),
     )
-    qq = queries.select(F.col(qid_col), quantized(vec_col).alias("__qv"))
+    qq = queries.select(F.col("query_id"), quantized("embedding").alias("__qv"))
     scored = (
         qv.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qq), qid_col)
+        .join(F.broadcast(qq), "query_id")
         .select(
-            qid_col,
+            "query_id",
             "neighbor_id",
             _l2q_n(F.col("__cv"), F.col("__qv"), index.dim).alias("d2"),
         )
     )
-    w = Window.partitionBy(qid_col).orderBy(
+    w = Window.partitionBy("query_id").orderBy(
         F.asc("d2"), F.asc("neighbor_id")
     )
     return scored.select(
-        qid_col,
+        "query_id",
         "neighbor_id",
         "d2",
         F.row_number().over(w).cast("bigint").alias("rn"),

@@ -26,12 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def kmv_distinct(
-    values: DataFrame,
-    value_col: str,
-    k: int = 256,
-    salt: str = "kmv",
-) -> DataFrame:
+def kmv_distinct(values: DataFrame, value_col: str, k: int = 256) -> DataFrame:
     """K-Minimum-Values distinct-count estimate — the GRADABLE twin of
     Spark's Datasketches Theta built-ins (Bar-Yossef et al. 2002; Theta is
     KMV + theta thresholding). The k smallest 48-bit hashes of a column
@@ -58,15 +53,10 @@ def kmv_distinct(
         .distinct()
         .agg(F.count(F.lit(1)).cast("bigint").alias("exact_distinct"))
     )
-    return kmv_report(kmv_sketch(values, value_col, k, salt), exact, k)
+    return kmv_report(kmv_sketch(values, value_col, k), exact, k)
 
 
-def kmv_sketch(
-    values: DataFrame,
-    value_col: str,
-    k: int = 256,
-    salt: str = "kmv",
-) -> DataFrame:
+def kmv_sketch(values: DataFrame, value_col: str, k: int = 256) -> DataFrame:
     """The mergeable KMV partial: (h) rows of the ≤k smallest distinct
     48-bit hashes. Union is SET-DETERMINISTIC — the k smallest of a
     union are a subset of the per-side retained sets, so
@@ -80,7 +70,7 @@ def kmv_sketch(
     LAST in SQL engines, silently poisoning the k-min set differently
     per engine."""
     h = F.expr(
-        f"CAST(conv(substring(md5(concat('{salt}|', CAST({value_col} AS STRING))),"
+        f"CAST(conv(substring(md5(concat('kmv|', CAST({value_col} AS STRING))),"
         f" 1, 12), 16, 10) AS BIGINT)"
     )
     return (
@@ -133,7 +123,6 @@ def kmv_group_set_estimates(
     group_col: str,
     value_col: str,
     k: int = 64,
-    salt: str = "kmv",
 ) -> DataFrame:
     """KMV set ALGEBRA per group pair — the gradable twin of
     Theta-sketch set expressions: one k-min sketch per group, then for every
@@ -153,7 +142,7 @@ def kmv_group_set_estimates(
 
     space = 1 << 48
     h = F.expr(
-        f"CAST(conv(substring(md5(concat('{salt}|', CAST({value_col} AS STRING))),"
+        f"CAST(conv(substring(md5(concat('kmv|', CAST({value_col} AS STRING))),"
         f" 1, 12), 16, 10) AS BIGINT)"
     )
     gh = (

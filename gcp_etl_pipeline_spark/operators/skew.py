@@ -33,7 +33,6 @@ def salted_join(
     skewed: DataFrame,
     build: DataFrame,
     on: list[str],
-    how: str = "inner",
     salt_factor: int = 16,
 ) -> DataFrame:
     """Join ``skewed`` (large, hot-keyed probe side) with ``build``
@@ -52,4 +51,4 @@ def salted_join(
             )
         )
     )
-    return salted.join(replicas, on=[*on, SALT_COL], how=how).drop(SALT_COL)
+    return salted.join(replicas, on=[*on, SALT_COL]).drop(SALT_COL)

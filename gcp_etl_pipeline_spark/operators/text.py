@@ -126,7 +126,7 @@ def _token_stats_udf():
     )
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Append quality-scoring features: n_tokens, n_chars, avg token
     length, alpha ratio, unique-token ratio (repetition detector).
 
@@ -138,9 +138,9 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     in Catalyst, so outputs are bit-identical to the original form
     (and to the DuckDB oracles)."""
     stats = _token_stats_udf()
-    n_chr = F.length(F.col(text_col))
-    alpha = F.length(F.regexp_replace(F.col(text_col), "[^A-Za-z]", ""))
-    with_stats = df.withColumn("__ts", stats(tokens(text_col)))
+    n_chr = F.length(F.col("text"))
+    alpha = F.length(F.regexp_replace(F.col("text"), "[^A-Za-z]", ""))
+    with_stats = df.withColumn("__ts", stats(tokens("text")))
     n_tok = F.col("__ts.n_tok")
     return (
         with_stats.withColumn("n_tokens", n_tok)
@@ -174,11 +174,7 @@ def fingerprint(text: Column | str) -> Column:
     return F.md5(F.regexp_replace(F.lower(F.trim(c)), r"\s+", " "))
 
 
-def char_pair_merges(
-    df: DataFrame,
-    k: int = 50,
-    text_col: str = "text",
-) -> DataFrame:
+def char_pair_merges(df: DataFrame, k: int = 50) -> DataFrame:
     """First-round BPE merge-table induction: count adjacent CHARACTER
     pairs inside token occurrences across the corpus and rank the top-k
     (count desc, pair asc — deterministic boundary). The most frequent
@@ -194,7 +190,7 @@ def char_pair_merges(
     them, not an empty one).
     """
     pairs = (
-        df.select(F.explode(tokens(text_col)).alias("t"))
+        df.select(F.explode(tokens("text")).alias("t"))
         .where(F.char_length("t") >= 2)
         .select(
             F.explode(
@@ -215,11 +211,7 @@ def char_pair_merges(
     return ranked.withColumn("merge_rank", F.row_number().over(w).cast("bigint"))
 
 
-def content_defined_chunks(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def content_defined_chunks(df: DataFrame) -> DataFrame:
     """Content-defined chunking over the token stream (the rolling-hash
     boundary trick storage dedup uses — Muthitacharoen et al.'s LBFS —
     lifted to tokens): a chunk boundary falls after every token whose
@@ -241,7 +233,7 @@ def content_defined_chunks(
         "ELSE CAST(array() AS ARRAY<INT>) END"
     )
     return (
-        df.select(F.col(id_col), tokens(text_col).alias("__t"))
+        df.select(F.col("doc_id"), tokens("text").alias("__t"))
         .where(F.size("__t") >= 1)
         .withColumn("__allb", F.expr(
             f"concat(array(0), {bounds}, array(size(__t)))"
@@ -251,7 +243,7 @@ def content_defined_chunks(
             " j -> element_at(__allb, j + 1) - element_at(__allb, j))"
         ))
         .select(
-            id_col,
+            "doc_id",
             F.size("__t").cast("bigint").alias("n_tokens"),
             F.size("__sizes").cast("bigint").alias("n_chunks"),
             F.array_max("__sizes").cast("bigint").alias("max_chunk_tokens"),
@@ -273,12 +265,12 @@ _BPE_MERGE_FOLD = (
 )
 
 
-def _bpe_vocab(df: DataFrame, text_col: str) -> DataFrame:
+def _bpe_vocab(df: DataFrame) -> DataFrame:
     """Distinct-token symbol table weighted by occurrence count — the
     structure every BPE round operates on (cost scales with |vocab|,
     not corpus size)."""
     return (
-        df.select(F.explode(tokens(text_col)).alias("t"))
+        df.select(F.explode(tokens("text")).alias("t"))
         .groupBy("t")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         .select(
@@ -331,11 +323,7 @@ def _bpe_apply_top(vocab: DataFrame, top: DataFrame) -> DataFrame:
 _BPE_CHECKPOINT_MIN_ROUNDS = 3
 
 
-def bpe_train_merges(
-    df: DataFrame,
-    rounds: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_train_merges(df: DataFrame, rounds: int = 3) -> DataFrame:
     """Multi-round BPE merge-table TRAINING (Sennrich et al. 2016): the
     iterated count → pick-top-pair → apply-merge → recount loop a real
     tokenizer trainer runs, not just the first round's pair table
@@ -363,7 +351,7 @@ def bpe_train_merges(
     frees RDD blocks on GC (unlike SQL-layer cache entries), so nothing
     leaks.
     """
-    vocab = _bpe_vocab(df, text_col)
+    vocab = _bpe_vocab(df)
     out = None
     for r in range(1, rounds + 1):
         top = _bpe_top_pair(vocab)
@@ -382,11 +370,7 @@ def bpe_train_merges(
     return out
 
 
-def bpe_apply_merges_stats(
-    df: DataFrame,
-    rounds: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_apply_merges_stats(df: DataFrame, rounds: int = 3) -> DataFrame:
     """Corpus compression achieved by APPLYING the first ``rounds`` BPE
     merges (the follow-through on ``bpe_train_merges``: train, apply,
     measure): one row with total occurrence-weighted symbol counts
@@ -398,7 +382,7 @@ def bpe_apply_merges_stats(
     rides a 1-row broadcast into a JVM fold over the distinct-token
     symbol table — and the same per-generation localCheckpoint lineage
     truncation (the measured 4.8x win over the lazy unroll)."""
-    vocab = _bpe_vocab(df, text_col)
+    vocab = _bpe_vocab(df)
     before = vocab.select("syms", "cnt")
     for _r in range(1, rounds + 1):
         vocab = _bpe_apply_top(vocab, _bpe_top_pair(vocab))
@@ -706,19 +690,17 @@ _MAIN_BLOCK_FOLD = (
 )
 
 
-def main_content_block(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def main_content_block(df: DataFrame) -> DataFrame:
     """(id, n_blocks, block_idx, block_score, main_text): the densest
     newline-delimited block per document, ties to the FIRST such block
     (strict > in the fold). Documents whose extraction is empty yield
     the empty block at idx 0 (split('') is one empty element)."""
     picked = F.expr(
-        _MAIN_BLOCK_FOLD.format(lines=f"split({text_col}, chr(10))")
+        _MAIN_BLOCK_FOLD.format(lines="split(text, chr(10))")
     )
     return df.select(
-        F.col(id_col),
-        F.size(F.split(F.col(text_col), "\n")).cast("bigint").alias(
+        F.col("doc_id"),
+        F.size(F.split(F.col("text"), "\n")).cast("bigint").alias(
             "n_blocks"
         ),
         picked["idx"].alias("block_idx"),
@@ -860,18 +842,15 @@ def is_crawl_trap(
     param_count: Column,
     has_session_param: Column,
     has_calendar_path: Column,
-    *,
-    max_depth: int = 8,
-    max_params: int = 5,
 ) -> Column:
     """The enqueue verdict: structural depth/repetition bounds, session
     tokens always out, calendar paths only when also deep (a shallow
     /2024/05/17/ archive page is legitimate; five levels under it is
     the widget walking itself)."""
     return (
-        (path_depth > max_depth)
+        (path_depth > 8)
         | (repeated_segments >= 2)
-        | (param_count > max_params)
+        | (param_count > 5)
         | has_session_param
         | (has_calendar_path & (path_depth > 5))
     )
@@ -892,7 +871,7 @@ SITEMAP_LASTMOD_RE = "(?is)<lastmod>\\s*([^<]*?)\\s*</lastmod>"
 
 
 def parse_sitemap(
-    df: DataFrame, xml_col: str = "xml", keep: list[str] | None = None
+    df: DataFrame, xml_col: str = "xml"
 ) -> DataFrame:
     """Explode a sitemap document into one row per <url> entry:
     ``entry_no`` (document order), ``loc`` (the raw URL text node),
@@ -902,9 +881,7 @@ def parse_sitemap(
     entries carry <lastmod> can never misattribute a date to the wrong
     URL. Zero Python, zero shuffle: the extracts and per-element
     transforms fuse into the scan; the explode is a JVM generator."""
-    keep = keep if keep is not None else [
-        c for c in df.columns if c != xml_col
-    ]
+    keep = [c for c in df.columns if c != xml_col]
     entries = F.regexp_extract_all(
         xml_col, F.lit(SITEMAP_ENTRY_RE), F.lit(1)
     )
@@ -925,7 +902,7 @@ SITEMAP_INDEX_ENTRY_RE = "(?is)<sitemap>(.*?)</sitemap>"
 
 
 def parse_sitemap_index(
-    df: DataFrame, xml_col: str = "xml", keep: list[str] | None = None
+    df: DataFrame, xml_col: str = "xml"
 ) -> DataFrame:
     """Explode a <sitemapindex> document into one row per child
     <sitemap> element: ``child_no`` (document order), ``loc`` (the
@@ -935,9 +912,7 @@ def parse_sitemap_index(
     most of the site). Same structural-alignment discipline as
     ``parse_sitemap``: whole elements extract first, sub-fields
     per element."""
-    keep = keep if keep is not None else [
-        c for c in df.columns if c != xml_col
-    ]
+    keep = [c for c in df.columns if c != xml_col]
     entries = F.regexp_extract_all(
         xml_col, F.lit(SITEMAP_INDEX_ENTRY_RE), F.lit(1)
     )
@@ -1215,15 +1190,15 @@ def warc_records(blob: Column | str, max_records: int = 32) -> Column:
     )
 
 
-def warc_envelope(recs: DataFrame, rec_col: str = "rec") -> DataFrame:
+def warc_envelope(recs: DataFrame) -> DataFrame:
     """The shared record -> envelope step of the fetch-store chain:
     for exploded WARC records (a struct<head, payload> column), emit
     ``url`` (WARC-Target-URI, head-scoped) plus the four
     ``http_response_fields`` columns. Batch twin, streaming twin, and
     any future consumer share THIS definition — a gate or extraction
     fix lands once, not per twin."""
-    keep = [c for c in recs.columns if c != rec_col]
-    r = F.col(rec_col)
+    keep = [c for c in recs.columns if c != "rec"]
+    r = F.col("rec")
     return recs.select(
         *keep,
         F.trim(
@@ -1266,7 +1241,7 @@ def gzip_member(data: bytes, level: int = 6) -> bytes:
     return co.compress(data) + co.flush()
 
 
-def gzip_members(data: bytes, max_members: int = 1024) -> list[bytes]:
+def gzip_members(data: bytes) -> list[bytes]:
     """Split a concatenated-gzip-member store and inflate each member.
     Stops at the first torn member (``eof`` never reached: truncated
     DEFLATE stream or trailer) or corrupt stream (bad CRC raises inside
@@ -1275,7 +1250,7 @@ def gzip_members(data: bytes, max_members: int = 1024) -> list[bytes]:
 
     out: list[bytes] = []
     rest = data
-    while len(out) < max_members and rest[:2] == GZIP_MAGIC:
+    while len(out) < 1024 and rest[:2] == GZIP_MAGIC:
         d = zlib.decompressobj(wbits=31)
         try:
             chunk = d.decompress(rest)
@@ -1292,7 +1267,6 @@ def gunzip_store(
     df: DataFrame,
     gz_col: str = "gz",
     out_col: str = "blob",
-    max_members: int = 1024,
 ) -> DataFrame:
     """Inflate a compressed fetch store: a binary ``gz_col`` holding
     concatenated gzip members (one WARC record per member, the warc.gz
@@ -1327,7 +1301,7 @@ def gunzip_store(
     def run(batches):
         for pdf in batches:
             members = [
-                gzip_members(bytes(b), max_members) for b in pdf[gz_col]
+                gzip_members(bytes(b)) for b in pdf[gz_col]
             ]
             out = pdf.drop(columns=[gz_col]).copy()
             out[out_col] = pd.Series(
@@ -1347,14 +1321,13 @@ def pdf_text_stage(
     df: DataFrame,
     content_col: str = "content",
     out_col: str = "pdf_text",
-    err_col: str = "decode_error",
 ) -> DataFrame:
     """Arrow-batched PDF text extraction over a content column — the
     intake branch that stops the gate from dropping application/pdf.
     ``content_col`` may be BINARY (raw store bytes) or STRING (the WARC
     body world, ISO-8859-1 — every char is one byte, so encoding back
     recovers the exact bytes). Corrupt or out-of-scope documents become
-    ``err_col`` rows instead of failing the stage (at 100 TB some PDFs
+    ``decode_error`` rows instead of failing the stage (at 100 TB some PDFs
     WILL be torn) — the decode_media error-row discipline. All other
     columns pass through; parallel unit is the document row."""
     import pandas as pd
@@ -1370,7 +1343,7 @@ def pdf_text_stage(
         [
             *keep,
             StructField(out_col, StringType()),
-            StructField(err_col, StringType()),
+            StructField("decode_error", StringType()),
         ]
     )
 
@@ -1392,7 +1365,7 @@ def pdf_text_stage(
             out[out_col] = pd.Series(
                 texts, index=pdf.index, dtype="object"
             )
-            out[err_col] = pd.Series(errs, index=pdf.index, dtype="object")
+            out["decode_error"] = pd.Series(errs, index=pdf.index, dtype="object")
             yield out
 
     return df.mapInPandas(run, schema)
@@ -1456,7 +1429,7 @@ HTML_CELL_INNER_RE = "(?is)<t[dh](?:\\s[^>]*)?>(.*?)</t[dh]>"
 
 
 def parse_html_tables(
-    df: DataFrame, html_col: str = "html", keep: list[str] | None = None
+    df: DataFrame, html_col: str = "html"
 ) -> DataFrame:
     """Explode HTML documents into one row per table CELL:
     ``table_no`` / ``row_no`` / ``col_no`` (document order),
@@ -1465,9 +1438,7 @@ def parse_html_tables(
     empty cell). Three chained JVM generators, zero Python, zero
     shuffle: each posexplode consumes the previous level's element
     text, so the whole walk fuses into the scan projection."""
-    keep = keep if keep is not None else [
-        c for c in df.columns if c != html_col
-    ]
+    keep = [c for c in df.columns if c != html_col]
     tables = df.select(
         *keep,
         F.posexplode(
@@ -1523,7 +1494,7 @@ FEED_ATOM_UPDATED_RE = "(?is)<updated>\\s*([^<]*?)\\s*</updated>"
 
 
 def parse_feed(
-    df: DataFrame, xml_col: str = "xml", keep: list[str] | None = None
+    df: DataFrame, xml_col: str = "xml"
 ) -> DataFrame:
     """Explode RSS 2.0 / Atom feed documents into one row per item:
     ``entry_no`` (document order), ``kind`` ('rss' | 'atom'), ``link``
@@ -1533,9 +1504,7 @@ def parse_feed(
     element (<rss ...> vs anything else = Atom). Zero Python, zero
     shuffle — regex extracts fuse into the scan, the explode is a JVM
     generator."""
-    keep = keep if keep is not None else [
-        c for c in df.columns if c != xml_col
-    ]
+    keep = [c for c in df.columns if c != xml_col]
     is_rss = F.col(xml_col).rlike(FEED_RSS_DOC_RE)
     entries = F.when(
         is_rss,
@@ -1596,7 +1565,7 @@ def _tag_attr(tag: Column, name: str) -> Column:
 
 
 def feed_links(
-    df: DataFrame, html_col: str = "html", keep: list[str] | None = None
+    df: DataFrame, html_col: str = "html"
 ) -> DataFrame:
     """RSS/Atom autodiscovery from HTML <link> elements (the HTML 4.01
     / WHATWG convention every browser and crawler honors): whole
@@ -1608,9 +1577,7 @@ def feed_links(
     feed: ``link_no`` (document order among qualifying tags), ``kind``
     ('rss' | 'atom'), ``href`` (raw — resolution against a base URL is
     the caller's step). Zero Python, zero shuffle."""
-    keep = keep if keep is not None else [
-        c for c in df.columns if c != html_col
-    ]
+    keep = [c for c in df.columns if c != html_col]
     from pyspark.sql import Window
 
     tags = F.regexp_extract_all(

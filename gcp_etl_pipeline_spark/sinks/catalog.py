@@ -28,9 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 LAYERS = ("raw", "curated", "semantic", "ops")
 
 
-def ensure_namespaces(
-    spark: SparkSession, root: str, namespaces: tuple[str, ...] = LAYERS
-) -> None:
+def ensure_namespaces(spark: SparkSession, root: str) -> None:
     """Create the layer databases (idempotent), rooted under ``root`` so
     managed tables land in ``<root>/<layer>.db/<table>`` rather than the
     session-global warehouse dir.
@@ -41,7 +39,7 @@ def ensure_namespaces(
     directory). Callers needing repeat invocations in one session should
     derive a session-stable root (see registry's gosales_catalog_overview)
     or drop the databases first."""
-    for ns in namespaces:
+    for ns in LAYERS:
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {ns} LOCATION '{root}/{ns}.db'")
 
 
@@ -57,11 +55,7 @@ def scan_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-def sized_for_write(
-    df: DataFrame,
-    source_bytes: int,
-    target_file_bytes: int = TARGET_FILE_BYTES,
-) -> DataFrame:
+def sized_for_write(df: DataFrame, source_bytes: int) -> DataFrame:
     """Coalesce ``df`` to ≈ceil(source_bytes / target) partitions before
     a ``saveAsTable``: AQE's partition coalescing does not reach the V1
     CTAS path and a REBALANCE hint is ignored there (measured), so
@@ -72,23 +66,15 @@ def sized_for_write(
     already has ≥ the target partitions only when the data is big
     enough to warrant them) this is proportional, not a local[32]
     constant."""
-    n = max(1, (int(source_bytes) + target_file_bytes - 1) // target_file_bytes)
+    n = max(1, (int(source_bytes) + TARGET_FILE_BYTES - 1) // TARGET_FILE_BYTES)
     return df.coalesce(n)
 
 
-def save_table(
-    df: DataFrame,
-    name: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
+def save_table(df: DataFrame, name: str) -> None:
     """Materialize ``df`` as a managed parquet catalog table
-    (``layer.table``). ``mode='overwrite'`` is the reference's
-    truncate-and-insert (K5); ``'append'`` its insert-select (K6)."""
-    w = df.write.mode(mode).format("parquet")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.saveAsTable(name)
+    (``layer.table``), overwriting it: the reference's truncate-and-insert
+    (K5)."""
+    df.write.mode("overwrite").format("parquet").saveAsTable(name)
 
 
 def register_external(spark: SparkSession, name: str, path: str) -> None:

@@ -265,7 +265,7 @@ class VersionedTable:
             expected_latest=latest,
         )
 
-    def delete(self, source: DataFrame, keys: list[str], note: str = "") -> int:
+    def delete(self, source: DataFrame, keys: list[str]) -> int:
         """Keyed delete (GDPR / right-to-be-forgotten shape): rows of the
         latest snapshot whose key appears in ``source`` are dropped into a
         NEW snapshot. Null-safe key match, one anti-join.
@@ -283,7 +283,7 @@ class VersionedTable:
         cond = [target[k].eqNullSafe(del_keys[k]) for k in keys]
         kept = target.join(del_keys, on=cond, how="left_anti")
         return self.write(
-            kept, note=note or f"delete on {keys}", expected_latest=latest
+            kept, note=f"delete on {keys}", expected_latest=latest
         )
 
     # ------------------------------------------------------------ read

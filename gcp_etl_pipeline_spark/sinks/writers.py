@@ -68,26 +68,18 @@ def write_parquet(
     return int(obs.get["n"])
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").option("header", "true").csv(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
+def write_orc(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").orc(path)
 
 
-def write_json_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_json_lines(df: DataFrame, path: str) -> None:
     """Newline-delimited JSON sink (interchange format; ~5-10x the bytes
     of Parquet/ORC — for handoff to JSON-consuming systems, not storage)."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
 def write_bucketed_table(

@@ -99,18 +99,7 @@ def read_json_lines(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.json(path)
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    spec=None,
-    header: bool = True,
-) -> DataFrame:
-    """Header CSV (reference `jobs/curated/dl_ct_job_spark.py:3`): all-string
-    columns unless a TableSpec provides the schema."""
-    if spec is None:
-        return spark.read.option("header", str(header).lower()).csv(path)
-    return (
-        spark.read.option("header", str(header).lower())
-        .schema(spec.struct_type())
-        .csv(path)
-    )
+def read_csv(spark: SparkSession, path: str) -> DataFrame:
+    """Header CSV (reference `jobs/curated/dl_ct_job_spark.py:3`), all
+    columns strings."""
+    return spark.read.option("header", "true").csv(path)

@@ -135,16 +135,12 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     return file_stream(spark, _EVENTS_COLS.format(ts="ts TIMESTAMP"), path)
 
 
-def tumbling_counts(
-    events: DataFrame,
-    width: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Per-(window, event_type) counts with late-data tolerance
-    ``watermark``; the streaming twin of the batch `events_tumbling`."""
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Per-(hour window, event_type) counts with a 2-hour late-data
+    tolerance; the streaming twin of the batch `events_tumbling`."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.approx_count_distinct("user_id").alias("approx_users"),
@@ -162,11 +158,10 @@ def sliding_counts(
     events: DataFrame,
     width: str = "1 hour",
     slide: str = "30 minutes",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Overlapping windows: each event lands in width/slide windows."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", width, slide).alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.unix_timestamp(F.col("w.start")).alias("window_start"), "n_events")
@@ -176,13 +171,12 @@ def sliding_counts(
 def session_counts(
     events: DataFrame,
     gap: str = "30 minutes",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Per-user sessions with a ``gap`` inactivity timeout — the built-in
     `session_window` state-merging operator (the batch twin is the
     lag+flag-sum `events_sessionize` query)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(

@@ -35,11 +35,7 @@ OUTPUT_SCHEMA = (
 STATE_SCHEMA = "sess_id BIGINT, sess_start BIGINT, last_ts BIGINT, n_events BIGINT"
 
 
-def sessionize(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    watermark: str = "2 hours",
-) -> DataFrame:
+def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Sessionize a stream of (user_id, ts, ...) with an inactivity gap.
 
     Returns a stream of closed sessions: (user_id, sess_id, sess_start,
@@ -92,7 +88,7 @@ def sessionize(
             )
 
     prepared = (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .select("user_id", "ts", F.unix_timestamp("ts").alias("epoch"))
     )
     return prepared.groupBy("user_id").applyInPandasWithState(

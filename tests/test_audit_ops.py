@@ -539,9 +539,7 @@ def test_mutual_knn_bucketed_exhaustive_probe_equals_exact(spark):
     exact = {(r.a, r.b) for r in mutual_knn(df, k=3).collect()}
     bucketed = {
         (r.a, r.b)
-        for r in mutual_knn_bucketed(
-            df, k=3, n_lists=4, n_probe=4, centroids="kmeans"
-        ).collect()
+        for r in mutual_knn_bucketed(df, k=3, n_lists=4).collect()
     }
     assert bucketed == exact and len(exact) > 0
 
@@ -560,15 +558,8 @@ def test_knn_triangles_bucketed_close_under_edges(spark):
         (10 + i, [0.0, 1.0 + 0.01 * i]) for i in range(5)
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    edges = {
-        (r.a, r.b)
-        for r in mutual_knn_bucketed(
-            df, k=3, n_lists=2, n_probe=1, centroids="kmeans"
-        ).collect()
-    }
-    tris = knn_triangles_bucketed(
-        df, k=3, n_lists=2, n_probe=1, centroids="kmeans"
-    ).collect()
+    edges = {(r.a, r.b) for r in mutual_knn_bucketed(df, k=3).collect()}
+    tris = knn_triangles_bucketed(df, k=3).collect()
     assert tris
     for t in tris:
         assert t.a < t.b < t.c

@@ -233,14 +233,6 @@ def test_dataset_split_deterministic_joinable_and_proportional(spark):
     counts = {r["split"]: r["n"] for r in
               a.groupBy("split").agg(F.count("*").alias("n")).collect()}
     assert 350 < counts["test"] < 650 and 350 < counts["val"] < 650
-    redrawn = dataset_split(df, "k", val_pct=10.0, test_pct=10.0, salt="v2")
-    moved = (
-        a.withColumnRenamed("split", "sa")
-        .join(redrawn.withColumnRenamed("split", "sb"), "k")
-        .where("sa <> sb")
-        .count()
-    )
-    assert moved > 500  # a new salt reassigns a large fraction
 
 
 def test_dataset_split_validates_and_handles_full_bands(spark):
@@ -408,16 +400,6 @@ def test_robots_filter_precedence(spark):
     assert out[5]["allowed"] and out[5]["matched_prefix"] == ""
     assert not out[6]["allowed"] and out[6]["matched_prefix"] == "/"
     assert not out[7]["allowed"]
-    # registrable scope pools the subdomain onto ex.org's rules
-    pooled = {
-        r["k"]: r
-        for r in robots_filter(urls, rules, scope="registrable").collect()
-    }
-    assert not pooled[5]["allowed"] and pooled[5]["matched_prefix"] == "/a"
-    import pytest
-
-    with pytest.raises(ValueError, match="scope"):
-        robots_filter(urls, rules, scope="bogus")
 
 
 def test_strip_tracking_params(spark):
@@ -551,11 +533,3 @@ def test_parse_robots_txt_grouping_rules(spark):
         for r in parse_robots_txt(df).collect()
     }
     assert rules == {("/pub", True), ("/x", False), ("/z", False)}
-    # RFC 9309 group selection: an exact-agent match PREEMPTS the *
-    # groups (a union would let the host's own '*' Allow override its
-    # explicit agent block)
-    gb = {
-        (r["path_prefix"], r["allow"])
-        for r in parse_robots_txt(df, agent="GoogleBot").collect()
-    }
-    assert gb == {("/gb", False)}

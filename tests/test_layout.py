@@ -1,4 +1,4 @@
-"""Z-order layout operator: locality property and plan shape."""
+"""Z-order key and small-file compaction operators."""
 
 from __future__ import annotations
 
@@ -31,36 +31,6 @@ def test_quantize_clamps_and_grids(spark):
     assert got == [0, 0, 127, 255, 255]
 
 
-def test_cluster_by_zorder_partitions_are_key_ranges(spark):
-    from gcp_etl_pipeline_spark.operators.layout import (
-        cluster_by_zorder,
-        quantize,
-        zorder_key,
-    )
-
-    df = spark.range(4096).select(
-        (F.col("id") % 64).cast("double").alias("x"),
-        (F.col("id") / 64).cast("double").alias("y"),
-    )
-    qx = quantize(F.col("x"), 0.0, 64.0, 6)
-    qy = quantize(F.col("y"), 0.0, 64.0, 6)
-    out = cluster_by_zorder(df, [qx, qy], num_files=8, bits=6)
-
-    # each output partition must cover a disjoint z-key range
-    zk = zorder_key([qx, qy], 6)
-    ranges = (
-        out.withColumn("z", zk)
-        .withColumn("p", F.spark_partition_id())
-        .groupBy("p")
-        .agg(F.min("z").alias("lo"), F.max("z").alias("hi"))
-        .orderBy("lo")
-        .collect()
-    )
-    assert len(ranges) > 1
-    for a, b in zip(ranges, ranges[1:]):
-        assert a.hi <= b.lo
-
-
 def test_compact_small_files_reduces_count_keeps_rows(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -86,23 +56,14 @@ def test_compact_small_files_reduces_count_keeps_rows(spark, tmp_path):
 def test_compact_with_zorder_clusters(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from gcp_etl_pipeline_spark.operators.layout import (
-        compact_small_files,
-        quantize,
-    )
+    from gcp_etl_pipeline_spark.operators.layout import compact_small_files
 
     path = str(tmp_path / "fragz")
     spark.range(5_000).selectExpr(
         "id", "CAST(id % 100 AS DOUBLE) AS x", "CAST((id * 37) % 100 AS DOUBLE) AS y"
     ).repartition(16).write.parquet(path)
     before, after = compact_small_files(
-        spark,
-        path,
-        target_file_bytes=64 * 1024 * 1024,
-        zorder_quantized=[
-            quantize(F.col("x"), 0, 100, bits=6),
-            quantize(F.col("y"), 0, 100, bits=6),
-        ],
+        spark, path, target_file_bytes=64 * 1024 * 1024
     )
     assert after < before
     assert spark.read.parquet(path).count() == 5_000

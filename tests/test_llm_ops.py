@@ -38,16 +38,6 @@ def test_jaccard_pairs_finds_near_dup(docs):
 
 def test_jaccard_pairs_max_df_drops_hot_shingles(docs):
     shingles = dedup.shingle_sets(docs.filter("text <> ''"), n=3)
-    # every shingle of docs 1/2 appears in ≥2 docs; cap df at 1 → only
-    # shingles unique to one doc survive → no pair can share any shingle
-    capped = dedup.jaccard_pairs(shingles, threshold=0.0, max_df=1)
-    assert capped.count() == 0
-    # a permissive cap (≥ total docs) must reproduce the exact answer
-    exact = {(r.a, r.b): r.jaccard for r in
-             dedup.jaccard_pairs(shingles, threshold=0.35).collect()}
-    loose = {(r.a, r.b): r.jaccard for r in
-             dedup.jaccard_pairs(shingles, threshold=0.35, max_df=10).collect()}
-    assert loose == exact
     # no broadcast HINT on the per-doc sizes table: with auto-broadcast
     # disabled the plan must contain no BroadcastHashJoin at all
     spark = docs.sparkSession
@@ -62,27 +52,11 @@ def test_jaccard_pairs_max_df_drops_hot_shingles(docs):
 
 def test_minhash_lsh_candidates_superset_of_true_dups(docs):
     pairs = dedup.minhash_dedup_pairs(
-        docs.filter("text <> ''"), n=3, num_hashes=32, bands=8, threshold=0.5
+        docs.filter("text <> ''"), num_hashes=32, bands=8, threshold=0.5
     )
     got = {(r.a, r.b) for r in pairs.collect()}
     assert (1, 2) in got  # identical docs always collide in every band
     assert not any(4 in p for p in got)
-
-
-def test_lsh_salted_join_identical_and_bucket_cap_drops(docs):
-    live = docs.filter("text <> ''")
-    plain = {(r.a, r.b) for r in
-             dedup.minhash_dedup_pairs(live, n=3, num_hashes=32, bands=8,
-                                       threshold=0.5).collect()}
-    salted = {(r.a, r.b) for r in
-              dedup.minhash_dedup_pairs(live, n=3, num_hashes=32, bands=8,
-                                        threshold=0.5, salt_factor=4).collect()}
-    assert salted == plain  # salting must not change the result set
-    # docs 1 and 2 are identical → they share every band bucket; a cap of
-    # 1 doc per bucket removes every collision
-    capped = dedup.minhash_dedup_pairs(live, n=3, num_hashes=32, bands=8,
-                                       threshold=0.5, max_bucket=1)
-    assert capped.count() == 0
 
 
 def test_simhash_identical_docs_distance_zero(docs):
@@ -275,7 +249,7 @@ def test_kmeans_centroids_improve_ivf_recall_and_are_deterministic(spark):
     exact = {(r.query_id, r.rn): r.neighbor_id
              for r in similarity.knn_bruteforce(base, queries, k=3).collect()}
     km = {(r.query_id, r.rn): r.neighbor_id
-          for r in similarity.knn_ivf(
+          for r in similarity.knn_bucketed(
               base, queries, k=3, n_lists=3, n_probe=1, centroids="kmeans"
           ).collect()}
     assert km == exact  # density-following lists: full recall at n_probe=1

@@ -29,13 +29,6 @@ def test_mask_roundtrip_gcm(spark):
     assert {r.name for r in back.collect()} == {"alice", "bob"}
 
 
-def test_mask_ecb_deterministic_joinable(spark):
-    df = spark.createDataFrame([("alice",), ("alice",), ("bob",)], ["name"])
-    m = mask_columns(df, ["name"], KEY, mode="ECB")
-    # deterministic mode: equal plaintexts -> equal ciphertexts (joinable)
-    assert m.distinct().count() == 2
-
-
 def test_mask_envelope_roundtrip_and_keyring(spark):
     from gcp_etl_pipeline_spark.operators.masking import (
         DEK_ID_COL,

@@ -64,8 +64,8 @@ def test_reciprocity_farm_and_guard(spark):
     from gcp_etl_pipeline_spark.operators.pagerank import reciprocity
 
     edges = spark.createDataFrame(
-        # a<->b<->c<->a ... 5-clique both directions = farm
-        [(f"f{i}", f"f{j}") for i in range(5) for j in range(5) if i != j]
+        # a<->b<->c<->a ... 6-clique both directions = farm
+        [(f"f{i}", f"f{j}") for i in range(6) for j in range(6) if i != j]
         # organic: one-directional citations into an authority
         + [("o1", "auth"), ("o2", "auth"), ("o3", "auth")]
         # tiny mutual pair: fully reciprocal, out_n too small to flag
@@ -74,9 +74,9 @@ def test_reciprocity_farm_and_guard(spark):
         + [("o1", "auth")],
         "src STRING, dst STRING",
     )
-    out = {r["node"]: r for r in reciprocity(edges, min_out=4).collect()}
+    out = {r["node"]: r for r in reciprocity(edges).collect()}
     assert out["f0"]["is_farm"] and out["f0"]["recip_ratio_u"] == 1_000_000
-    assert out["f0"]["out_n"] == 4 and out["f0"]["recip_n"] == 4
+    assert out["f0"]["out_n"] == 5 and out["f0"]["recip_n"] == 5
     assert out["o1"]["out_n"] == 1 and out["o1"]["recip_n"] == 0
     assert not out["o1"]["is_farm"]
     assert out["m0"]["recip_ratio_u"] == 1_000_000

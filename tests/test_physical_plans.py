@@ -241,12 +241,13 @@ def test_scd2_lookup_broadcasts_dim(spark, sf_dir, queries):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_scd2_lookup_big_dim_falls_back_to_sort_merge(spark):
-    """broadcast=False (what auto picks above the row ceiling) must plan
-    a key-partitioned sort-merge join with the range residual — never a
-    broadcast, never a nested-loop."""
+def test_scd2_lookup_big_dim_falls_back_to_sort_merge(spark, monkeypatch):
+    """Above the row ceiling the lookup must plan a key-partitioned
+    sort-merge join with the range residual — never a broadcast, never
+    a nested-loop."""
     from pyspark.sql import functions as F
 
+    from gcp_etl_pipeline_spark.operators import scd2
     from gcp_etl_pipeline_spark.operators.scd2 import scd2_lookup
 
     dim = spark.range(1000).select(
@@ -264,15 +265,11 @@ def test_scd2_lookup_big_dim_falls_back_to_sort_merge(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        out = scd2_lookup(probes, dim, ["k"], "ts", broadcast=False)
-        plan = _plan(out)
+        # a tiny ceiling: the bounded probe says the dim is too big
+        monkeypatch.setattr(scd2, "BROADCAST_DIM_MAX_ROWS", 10)
+        plan = _plan(scd2_lookup(probes, dim, ["k"], "ts"))
         assert "SortMergeJoin" in plan, plan
         assert "BroadcastHashJoin" not in plan, plan
-
-        # auto with a tiny ceiling picks the same shape (probe says no)
-        out2 = scd2_lookup(probes, dim, ["k"], "ts", broadcast_max_rows=10)
-        plan2 = _plan(out2)
-        assert "SortMergeJoin" in plan2, plan2
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 

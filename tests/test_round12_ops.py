@@ -156,7 +156,7 @@ def test_pq_knn_separated_clusters(spark):
     queries = embs.where(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = similarity.knn_pq(embs, queries, k=5, m=4, ksub=4, iters=2)
+    out = similarity.knn_pq(embs, queries, k=5, m=4, ksub=4)
     got = out.collect()
     assert len(got) == 10
     for r in got:
@@ -176,8 +176,6 @@ def test_crawl_delay_binds_to_its_group(spark):
     docs = spark.createDataFrame([("h", txt)], ["host", "robots_txt"])
     # the delay closed agent a's run; the '*' group carries none
     assert curation.robots_crawl_delays(docs).count() == 0
-    got = curation.robots_crawl_delays(docs, agent="a").collect()
-    assert [(r.host, r.crawl_delay_s) for r in got] == [("h", 7)]
 
 
 def test_crawl_delay_max_and_validation(spark):

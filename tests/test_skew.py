@@ -31,13 +31,6 @@ def test_salted_join_equals_plain_join(skewed, build):
     assert salted.exceptAll(plain).count() == 0
 
 
-def test_salted_join_left_outer(skewed, build, spark):
-    extra = skewed.union(spark.createDataFrame([(9999, "unmatched")], ["id", "k"]))
-    out = salted_join(extra, build, on=["k"], how="left", salt_factor=4)
-    row = out.filter("id = 9999").first()
-    assert row.attr is None  # unmatched row survives with nulls
-
-
 def test_salt_spreads_hot_key(skewed, build):
     from gcp_etl_pipeline_spark.operators.skew import SALT_COL
 

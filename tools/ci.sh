@@ -4,18 +4,23 @@
 # two local[32] JVMs thrash each other.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# the query lists live in this run's own directory, so two checkouts
+# running the gate at once do not overwrite each other's lists
+lists="$(mktemp -d)"
+trap 'rm -rf "$lists"' EXIT
 
 echo "== differential gate (all queries vs DuckDB oracles, sf0.01) =="
 # split the registry in half per process: one ~180-query sweep in a
 # single JVM exceeds a 10-minute shell window on a noisy host
-python - <<'PY'
+python - "$lists" <<'PY'
 import sys
 sys.path.insert(0, ".")
 import __spark_entry__ as e
 names = sorted(e.queries())
 h = len(names) // 2
-open("/tmp/ci_q1.txt", "w").write("\n".join(names[:h]))
-open("/tmp/ci_q2.txt", "w").write("\n".join(names[h:]))
+lists = sys.argv[1]
+open(f"{lists}/q1.txt", "w").write("\n".join(names[:h]))
+open(f"{lists}/q2.txt", "w").write("\n".join(names[h:]))
 print(f"{len(names)} queries -> two halves")
 PY
 # every query gets its scratch from session.scratch_dir, removed at
@@ -24,8 +29,8 @@ PY
 sweep_tmp="$(mktemp -d)"
 (
 export TMPDIR="$sweep_tmp"
-python tools/check.py /root/testdata/sf0.01 $(tr '\n' ' ' < /tmp/ci_q1.txt)
-python tools/check.py /root/testdata/sf0.01 $(tr '\n' ' ' < /tmp/ci_q2.txt)
+python tools/check.py /root/testdata/sf0.01 $(tr '\n' ' ' < "$lists/q1.txt")
+python tools/check.py /root/testdata/sf0.01 $(tr '\n' ' ' < "$lists/q2.txt")
 )
 leftover="$(find "$sweep_tmp" -maxdepth 1 -name 'graft_*')"
 if [ -n "$leftover" ]; then
@@ -39,17 +44,17 @@ echo "== rotating sf0.1 differential subset (~50 queries) =="
 # day, so consecutive pushes on different days cover different slices.
 # No exclusions: the components oracle is the unrolled linear chain
 # since r6 (the r5 recursive-walk exclusion is gone).
-python - <<PY
+python - "$lists" <<PY
 import hashlib, sys
 sys.path.insert(0, ".")
 import __spark_entry__ as e
 day = "${CI_ROTATION_KEY:-$(date +%Y%m%d)}"
 names = sorted(e.queries())
 ranked = sorted(names, key=lambda n: hashlib.md5(f"{day}|{n}".encode()).hexdigest())
-open("/tmp/ci_q01.txt", "w").write("\n".join(sorted(ranked[:50])))
+open(sys.argv[1] + "/q01.txt", "w").write("\n".join(sorted(ranked[:50])))
 print(f"day {day}: 50/{len(names)} queries at sf0.1")
 PY
-python tools/check.py /root/testdata/sf0.1 $(tr '\n' ' ' < /tmp/ci_q01.txt)
+python tools/check.py /root/testdata/sf0.1 $(tr '\n' ' ' < "$lists/q01.txt")
 
 if [ -n "${SEED:-}" ]; then
   echo "== alternate-seed full sweep (seed=$SEED) =="
@@ -58,8 +63,8 @@ if [ -n "${SEED:-}" ]; then
   # against them. check.py skips EVIDENCE stamping for non-/root/testdata
   # paths, so this cannot masquerade as driver-fixture evidence.
   python tools/gen_testdata.py "$SEED"
-  python tools/check.py "/tmp/testdata_seed$SEED/sf0.01" $(tr '\n' ' ' < /tmp/ci_q1.txt)
-  python tools/check.py "/tmp/testdata_seed$SEED/sf0.01" $(tr '\n' ' ' < /tmp/ci_q2.txt)
+  python tools/check.py "/tmp/testdata_seed$SEED/sf0.01" $(tr '\n' ' ' < "$lists/q1.txt")
+  python tools/check.py "/tmp/testdata_seed$SEED/sf0.01" $(tr '\n' ' ' < "$lists/q2.txt")
 fi
 
 echo "== unit + e2e + plan-assertion tests =="
