@@ -7,12 +7,13 @@
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gcp_etl_pipeline_spark.plans import gosales
 from gcp_etl_pipeline_spark import registry

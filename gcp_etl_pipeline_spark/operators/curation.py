@@ -1583,16 +1583,12 @@ def _robots_grouped(docs: DataFrame, kinds: tuple) -> DataFrame:
 
 def _robots_matching(grouped: DataFrame) -> DataFrame:
     """RFC 9309 §2.2.1 group selection per host for the ``*`` agent:
-    exact-agent groups PREEMPT the '*' fallback, never union with it.
-    With the agent fixed to ``*`` the fallback leg is empty; it stays so
-    the graded plans keep their shape."""
-    ua = grouped.where(F.col("__kind") == "user-agent")
-    exact = ua.where(F.lower("__val") == "*").select("host", "__gid")
-    star = ua.where(F.col("__val") == "*").select("host", "__gid")
-    hosts_with_exact = exact.select("host").distinct()
-    return exact.unionByName(
-        star.join(hosts_with_exact, "host", "left_anti")
-    ).distinct()
+    (host, __gid) of every group with a ``User-agent: *`` line. The
+    agent is ``*`` itself, so its exact-agent groups ARE the ``*``
+    groups and no fallback is left to preempt."""
+    return grouped.where(
+        (F.col("__kind") == "user-agent") & (F.col("__val") == "*")
+    ).select("host", "__gid")
 
 
 def robots_crawl_delays(docs: DataFrame) -> DataFrame:

@@ -151,7 +151,7 @@ def dedup_incremental(
 
 
 def _ledger_files(
-    store_path: str, spark=None, exclude_attempt: str | None = None
+    store_path: str, spark, exclude_attempt: str | None = None
 ) -> list[str]:
     """Current parquet part files of a ledger tree (empty list if the
     ledger doesn't exist yet) — flat append files AND ``attempt=*``
@@ -160,34 +160,21 @@ def _ledger_files(
     ``exclude_attempt`` omits that attempt's own partition so a retried
     batch never anti-joins against its first attempt's output.
 
-    URI-schemed paths (gs://, s3a://, hdfs://, file://) list through the
-    Hadoop FileSystem API — a 100-TB deployment's ledger lives in object
-    storage, where os.walk can't go."""
-    import os
-
+    Lists through the Hadoop FileSystem API, which resolves the path the
+    way the parquet read does (gs://, s3a://, hdfs://, file:// or the
+    default file system); absence is checked, any other error
+    propagates."""
     skip = f"/attempt={exclude_attempt}/" if exclude_attempt is not None else None
-    if "://" in store_path and spark is not None:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(store_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return []
-        out, it = [], fs.listFiles(hpath, True)  # recursive
-        while it.hasNext():
-            p = str(it.next().getPath())
-            if p.endswith(".parquet") and (skip is None or skip not in p):
-                out.append(p)
-        return sorted(out)
-    try:
-        out = []
-        for root, _dirs, files in os.walk(store_path):
-            for f in files:
-                p = f"{root}/{f}"
-                if f.endswith(".parquet") and (skip is None or skip not in p):
-                    out.append(p)
-        return sorted(out)
-    except OSError:
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(store_path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(hpath):
         return []
+    out, it = [], fs.listFiles(hpath, True)  # recursive
+    while it.hasNext():
+        p = str(it.next().getPath())
+        if p.endswith(".parquet") and (skip is None or skip not in p):
+            out.append(p)
+    return sorted(out)
 
 
 class _LedgerTxn:

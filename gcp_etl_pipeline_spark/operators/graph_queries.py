@@ -1,11 +1,13 @@
-"""Graph query: integer-deterministic PageRank over the customer–supplier
-bipartite graph, differentially tested against the same algorithm
-unrolled as DuckDB CTEs (3 iterations).
+"""Graph queries: integer-deterministic PageRank over the customer–supplier
+bipartite graph and HITS over a lineitem key graph, each full and
+warm-started, differentially tested against the same algorithms
+unrolled as DuckDB CTEs.
 
 The Spark side is genuinely iterative (a Python loop over DataFrame
-joins, persist-per-generation); the oracle is the same integer
+joins in ``operators/pagerank.py``); the oracle is the same integer
 recurrence written declaratively — if any iteration's shuffle order,
-join, or division semantics diverged, the hash would catch it.
+join, division semantics or stop decision diverged, the hash would
+catch it.
 """
 
 from __future__ import annotations
@@ -13,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gcp_etl_pipeline_spark.operators.pagerank import SCALE, pagerank
+from gcp_etl_pipeline_spark.operators.pagerank import SCALE, hits, pagerank
 from gcp_etl_pipeline_spark.registry import register
 from gcp_etl_pipeline_spark.sources.files import read_parquet
 
@@ -21,14 +23,15 @@ _ITER = 3
 _DAMP = 85
 
 
-def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _pr_edges(spark: SparkSession, sf_dir: str, hi: str) -> DataFrame:
+    """Bidirected customer-supplier edges for the md5-sampled customer
+    slice below ``hi`` — the shared fixture of the full-recompute and
+    warm-start queries. The md5 sample (the hash_sample_orders recipe)
+    keeps the gate's graph small; the operator itself is size-agnostic."""
     orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
     lineitem = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
-    # deterministic 25% customer sample (same md5 recipe as
-    # hash_sample_orders) keeps the gate's graph small; the operator
-    # itself is size-agnostic
     orders = orders.filter(
-        F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 2) < "40"
+        F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 2) < hi
     )
     fwd = (
         orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
@@ -42,8 +45,15 @@ def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    return pagerank(edges, iterations=_ITER, damping_pct=_DAMP)
+    return fwd.union(
+        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
+def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return pagerank(
+        _pr_edges(spark, sf_dir, "40"), iterations=_ITER, damping_pct=_DAMP
+    )
 
 
 def _oracle() -> str:
@@ -114,32 +124,6 @@ _INC_MAX = 4
 _INC_TOL = 2_000_000_000
 
 
-def _pr_edges(spark: SparkSession, sf_dir: str, hi: str) -> DataFrame:
-    """Bidirected customer-supplier edges for the md5-sampled customer
-    slice below ``hi`` — the shared fixture of the full-recompute and
-    warm-start queries."""
-    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
-    lineitem = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
-    orders = orders.filter(
-        F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 2) < hi
-    )
-    fwd = (
-        orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "src"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "dst"
-            ),
-        )
-        .distinct()
-    )
-    return fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-
-
 def _q_pagerank_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental link-graph maintenance (the ledger twin the graph
     tier lacked): yesterday's scores (a 3-iteration full run on the
@@ -148,17 +132,15 @@ def _q_pagerank_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed round count. The oracle unrolls the SAME gated recurrence
     with a converged-flag carry-forward, so a divergence in the stop
     decision — not just in scores — breaks the hash."""
-    from gcp_etl_pipeline_spark.operators.pagerank import pagerank_warm
-
     base = _pr_edges(spark, sf_dir, "40")
     full = _pr_edges(spark, sf_dir, _INC_HI)
     prev = pagerank(base, iterations=_ITER, damping_pct=_DAMP)
-    return pagerank_warm(
+    return pagerank(
         full,
-        prev,
-        max_iterations=_INC_MAX,
-        tol_u=_INC_TOL,
+        iterations=_INC_MAX,
         damping_pct=_DAMP,
+        prior=prev,
+        tol_u=_INC_TOL,
     )
 
 
@@ -265,15 +247,11 @@ register("graph_pagerank_incremental", _q_pagerank_inc, _inc_oracle())
 _HITS_ITER = 2
 
 
-def _q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kleinberg HITS over a dense directed graph built from lineitem
-    keys (97 nodes, multi-edges deduped): per-round exact-integer
-    max-normalization, so the scores are bit-identical under any
-    partitioning — the oracle unrolls the same recurrence as CTEs."""
-    from gcp_etl_pipeline_spark.operators.pagerank import hits
-
-    lineitem = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
-    edges = (
+def _hits_edges(lineitem: DataFrame) -> DataFrame:
+    """The HITS graph over lineitem rows: order key -> part key, both
+    mod 97, self-loops and multi-edges dropped — the shared fixture of
+    the full and warm-start queries."""
+    return (
         lineitem.select(
             F.concat(F.lit("n"), (F.col("l_orderkey") % 97).cast("string"))
             .alias("src"),
@@ -283,7 +261,15 @@ def _q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    return hits(edges, iterations=_HITS_ITER)
+
+
+def _q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Kleinberg HITS over a dense directed graph built from lineitem
+    keys (97 nodes, multi-edges deduped): per-round exact-integer
+    max-normalization, so the scores are bit-identical under any
+    partitioning — the oracle unrolls the same recurrence as CTEs."""
+    lineitem = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
+    return hits(_hits_edges(lineitem), iterations=_HITS_ITER)
 
 
 def _hits_oracle() -> str:
@@ -435,42 +421,27 @@ def _hits_edges_sql(tag: str, where: str) -> str:
 
 
 def _q_hits_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental HITS — the warm-start twin pagerank_warm gave the
-    PageRank half of the graph tier: yesterday's hub scores (a full
+    """Incremental HITS — the warm start graph_pagerank_incremental gives
+    the PageRank half of the graph tier: yesterday's hub scores (a full
     2-round run on the base edge slice) warm-start the renormalized
     power iteration on the GROWN graph, gated at an integer tolerance.
     The oracle unrolls the same gated recurrence with converged-flag
     carry-forward for BOTH hub and auth, so a divergence in the stop
     decision breaks the hash."""
-    from gcp_etl_pipeline_spark.operators.pagerank import hits, hits_warm
-
     lineitem = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
-
-    def _edges(df):
-        return (
-            df.select(
-                F.concat(
-                    F.lit("n"), (F.col("l_orderkey") % 97).cast("string")
-                ).alias("src"),
-                F.concat(
-                    F.lit("n"), (F.col("l_partkey") % 97).cast("string")
-                ).alias("dst"),
-            )
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-
-    base = _edges(
+    base = _hits_edges(
         lineitem.filter(
             F.substring(
                 F.md5(F.col("l_orderkey").cast("string")), 1, 2
             ) < "40"
         )
     )
-    full = _edges(lineitem)
     prev = hits(base, iterations=_HITS_ITER).select("node", "hub_u")
-    return hits_warm(
-        full, prev, max_iterations=_HITS_INC_MAX, tol_u=_HITS_INC_TOL
+    return hits(
+        _hits_edges(lineitem),
+        iterations=_HITS_INC_MAX,
+        prior=prev,
+        tol_u=_HITS_INC_TOL,
     )
 
 
@@ -517,7 +488,7 @@ def _hits_inc_oracle() -> str:
         prev_h = f"bh{i}"
     # warm start on the full node set + converged-flag gated unroll;
     # score frames are FULL node tables (missing -> 0 / seed), the
-    # hits_warm value contract. The engine's prev is hits(base)'s FULL
+    # hits() value contract. The engine's prev is hits(base)'s FULL
     # output, where a base pure-sink node carries hub_u=0 — so the
     # seed must coalesce over the full BASE node table first (0 for
     # base nodes missing from the sparse bh{{N}} frame), and only

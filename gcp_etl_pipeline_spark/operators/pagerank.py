@@ -1,21 +1,47 @@
-"""Iterative PageRank over a DataFrame edge list, in exact integer
-arithmetic so every iteration is deterministic under any partitioning
-(and differentially testable against an unrolled SQL oracle).
+"""Link analysis over a DataFrame edge list (src, dst): PageRank and
+HITS in exact integer arithmetic, so every round is deterministic under
+any partitioning and differentially testable against an unrolled SQL
+oracle; plus per-node link reciprocity.
 
 Floating-point PageRank sums contributions in shuffle order — last-ulp
-nondeterminism that compounds per iteration. Here rank mass is held in
+nondeterminism that compounds per round. Here rank mass is held in
 integer "rank units" (scale 1e12); per-edge contributions use floor
 division by out-degree and the damping mix uses integer div by 100, so
 every operation is associative/commutative integer math. The cost is a
 sub-ulp systematic underestimate per hop (bounded by out_degree·N per
-iteration over the whole graph) — irrelevant for ranking, decisive for
+round over the whole graph) — irrelevant for ranking, decisive for
 reproducibility at 1000-executor scale.
 
-Plan shape per iteration: one shuffle (groupBy dst) + one broadcast-able
-join of ranks onto edges keyed by src. Ranks and degrees are node-sized
-(≪ edges); Spark broadcasts them when small and AQE handles the rest.
-Checkpoint/persist every few iterations in long runs to cut lineage —
-the loop below persists each rank generation and unpersists the last.
+Each algorithm is ONE recurrence with two dials:
+
+- ``prior``: a previous score table (the last run before a small edge
+  delta) to warm-start from. Both recurrences converge to the same
+  fixed point from any start, so a start near the old scores needs
+  fewer rounds; nodes absent from the prior get the cold seed, and
+  without a prior every node does.
+- ``tol_u``: an integer convergence gate — stop once max |new - old|
+  <= ``tol_u`` units, checked per round by a node-sized 1-row aggregate.
+  The stop rule is an integer compare, so the round count, and with it
+  the result, is bit-identical under any partitioning; a SQL oracle
+  reproduces it by unrolling the round budget with a converged-flag
+  carry-forward. Without ``tol_u`` the round count is fixed.
+
+Generations: an ungated loop starts no Spark job per round — it
+returns one lazy plan that the caller's action computes once, each
+generation referenced once by the next (AQE exchange reuse runs the
+repeated edge legs once). A gated loop acts once per round, so each
+generation is pinned by a LAZY ``localCheckpoint``: the logical plan is
+truncated at creation (a LogicalRDD leaf, so plan size stays constant
+per round), the checkpoint runs the generation's shuffle stages (AQE
+executes a plan stage by stage), and the round's gate aggregate
+materializes the blocks — one driver round trip per round. The node
+table every round joins, with each node's out-degree, is pinned the
+same way in both modes. The ContextCleaner frees checkpointed blocks
+when they are GC'd, so nothing here needs an unpersist. The trade: a
+local checkpoint keeps no lineage, so losing an executor that holds a
+block (a preempted worker) fails the job instead of recomputing the
+block — for the node table in an ungated run too, where a persisted
+table would have been recomputed.
 
 The reference has no graph operators; this extends the engine the same
 way operators/components.py (connected components) does, with the
@@ -28,33 +54,108 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000_000_000  # rank units per unit of probability mass
+HITS_SCALE = 1_000_000  # score units after per-round max-normalization
+
+# L∞ renormalization of a HITS half-round's raw sums to HITS_SCALE
+# units. Integer DIV, not float division: raw * HITS_SCALE passes double's
+# 2^53 exact range, so a float floor could differ from the oracle's
+# exact // in the last unit. The multiply is widened to DECIMAL(38,0)
+# (oracle twin: HUGEINT) — a raw score is <= HITS_SCALE · max_degree,
+# and in int64 the product overflows once a node's weighted in-degree
+# passes ~9.2e6 in-links; the quotient is <= HITS_SCALE (raw <= max),
+# so the BIGINT result is safe. ``{mx}`` is the half-round's max raw
+# score: in a gated loop, a cross join with a 1-row max aggregate (map-
+# side partial maxes, one row per partition moves); the half-round is
+# referenced twice, which costs nothing because it reads a checkpointed
+# generation. An ungated loop has no checkpoint to read, and there the
+# double reference doubles the lazy plan per half-round (4^8 leaves at 8
+# rounds — the analyzer ran out of driver heap before any job started),
+# so it takes the max as a window over the whole half-round, which moves
+# the node-sized frame through one partition.
+_RENORM = (
+    f"CAST(CAST(raw AS DECIMAL(38,0)) * {HITS_SCALE} DIV {{mx}} AS BIGINT)"
+)
 
 
-def pagerank(edges: DataFrame, iterations: int = 3, damping_pct: int = 85) -> DataFrame:
+def _nodes(edges: DataFrame) -> DataFrame:
+    """(node, outdeg): every endpoint once with its out-edge count, 0
+    for a pure sink — one aggregation, pinned: each round joins it."""
+    return (
+        edges.select(F.col("src").alias("node"), F.lit(1).alias("__out"))
+        .union(edges.select(F.col("dst").alias("node"), F.lit(0)))
+        .groupBy("node")
+        .agg(F.sum("__out").alias("outdeg"))
+        .localCheckpoint(eager=False)
+    )
+
+
+def _seed(
+    nodes: DataFrame, prior: DataFrame | None, col: str, cold: int
+) -> DataFrame:
+    """Round-0 scores beside the node table's columns: the prior's where
+    it has the node, else ``cold``."""
+    if prior is None:
+        return nodes.select("*", F.lit(cold).cast("bigint").alias(col))
+    return nodes.join(
+        prior.select("node", F.col(col).alias("__prev")), "node", "left"
+    ).select(
+        *nodes.columns,
+        F.coalesce("__prev", F.lit(cold)).cast("bigint").alias(col),
+    )
+
+
+def _generation(df: DataFrame, tol_u: int | None) -> DataFrame:
+    """A gated loop's generations are pinned (see the module docstring);
+    an ungated loop's stay lazy."""
+    return df if tol_u is None else df.localCheckpoint(eager=False)
+
+
+def _converged(
+    new: DataFrame, old: DataFrame, col: str, tol_u: int | None
+) -> bool:
+    """The integer gate: max |new - old| <= ``tol_u`` over the nodes both
+    hold — one node-sized 1-row aggregate, map-side combined, so the
+    edges never re-shuffle for it. Never true without a gate."""
+    if tol_u is None:
+        return False
+    diff = (
+        new.select("node", F.col(col).alias("__new"))
+        .join(old, "node")
+        .agg(F.max(F.abs(F.col("__new") - F.col(col))))
+        .collect()[0][0]
+    )
+    return diff is not None and diff <= tol_u
+
+
+def pagerank(
+    edges: DataFrame,
+    iterations: int = 3,
+    damping_pct: int = 85,
+    prior: DataFrame | None = None,
+    tol_u: int | None = None,
+) -> DataFrame:
     """Integer-deterministic PageRank; returns (node, pr_u) in rank units.
 
     ``edges`` is a directed edge list; dangling nodes (no out-edges)
     contribute nothing (their mass evaporates, as in the classic
-    formulation without dangling redistribution).
-    """
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
+    formulation without dangling redistribution). ``prior`` is a
+    (node, pr_u) table; the cold seed is SCALE/n over the CURRENT node
+    count, and base_u is computed for that n, so a warm start converges
+    to exactly the cold run's fixed point. ``iterations`` is the round
+    count, or the round budget under ``tol_u``.
+
+    Plan shape per round: one shuffle (groupBy dst) + one broadcast-able
+    join of ranks onto edges keyed by src — each generation carries its
+    nodes' out-degrees, so there is no separate degree join. Ranks are
+    node-sized (≪ edges); Spark broadcasts them when small and AQE
+    handles the rest."""
+    nodes = _nodes(edges)
     n = nodes.count()
-    degrees = (
-        edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).persist()
-    )
-
     base_u = (SCALE * (100 - damping_pct)) // 100 // n
-    ranks = nodes.select("node", F.lit(SCALE // n).alias("pr_u")).persist()
-
+    ranks = _generation(_seed(nodes, prior, "pr_u", SCALE // n), tol_u)
     for _ in range(iterations):
         contribs = (
             edges.join(ranks, edges["src"] == ranks["node"])
-            .join(degrees, "src")
             .select(
                 F.col("dst").alias("node"),
                 # integer DIV, not float `/`: double division of bigints
@@ -64,264 +165,103 @@ def pagerank(edges: DataFrame, iterations: int = 3, damping_pct: int = 85) -> Da
             .groupBy("node")
             .agg(F.sum("contrib_u").alias("in_u"))
         )
-        new_ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
+        new_ranks = _generation(
+            nodes.join(contribs, "node", "left").select(
                 "node",
+                "outdeg",
                 F.expr(
                     f"{base_u} + (coalesce(in_u, 0L) * {damping_pct}) DIV 100"
                 ).alias("pr_u"),
-            )
-            .persist()
+            ),
+            tol_u,
         )
-        new_ranks.count()  # materialize before dropping the parent
-        ranks.unpersist()
+        done = _converged(new_ranks, ranks, "pr_u", tol_u)
         ranks = new_ranks
-
-    nodes.unpersist()
-    degrees.unpersist()
-    return ranks
-
-
-def pagerank_warm(
-    edges: DataFrame,
-    prev_ranks: DataFrame,
-    max_iterations: int = 4,
-    tol_u: int = 1_000_000,
-    damping_pct: int = 85,
-) -> DataFrame:
-    """Incremental PageRank: warm-start the same integer recurrence as
-    ``pagerank()`` from a PREVIOUS score table (the last full run
-    before a small edge delta) and stop at an INTEGER convergence gate
-    — max |pr_u - prev_u| <= ``tol_u`` rank units, checked per
-    iteration via a 1-row scalar aggregate (the scalar_max_crossjoin
-    collect pattern; bounded by design).
-
-    Why warm-start works: the damped recurrence is a contraction, so
-    iteration converges to the SAME fixed point from any start — a
-    start near the old scores after a small delta needs far fewer
-    rounds than a cold SCALE/n start. New nodes (absent from
-    ``prev_ranks``) seed at SCALE/n over the NEW node count; base_u is
-    recomputed for the new n, so the fixed point is exactly
-    ``pagerank(edges_new)``'s target.
-
-    Determinism contract: every operation is the same associative
-    integer math as ``pagerank()``, and the stop rule is an integer
-    compare — so the iteration count, and therefore the result, is
-    bit-identical under any partitioning, and a SQL oracle reproduces
-    it by unrolling ``max_iterations`` rounds with a converged-flag
-    carry-forward (post-convergence rounds are explicit no-ops).
-
-    Plan shape per iteration: identical to ``pagerank()`` (one groupBy
-    shuffle + broadcast-able rank join) plus one node-sized diff join
-    for the gate. At 100 TB the gate's max-diff aggregate is node-sized
-    and map-side combined — the edges never re-shuffle for it.
-
-    Each generation is ``localCheckpoint``-pinned rather than
-    persist+count: the gate makes high iteration counts normal
-    (the fixed-round ``pagerank()`` keeps persist — A/B'd equal at 3
-    rounds), and WITHOUT lineage truncation the logical plan doubles
-    per round — by round ~20 bare analysis of the 2^20-node tree would
-    dwarf the actual jobs (the plan-census caught the warm query at
-    17k operators in persist form). The checkpoint is LAZY
-    (``eager=False``): the logical plan is truncated at creation
-    either way (LogicalRDD), but laziness lets each round's GATE
-    aggregate materialize the generation's blocks in the SAME action —
-    one driver round trip per iteration instead of two (A/B:
-    8.09 → 6.70 s warm at sf0.1, control flat). ContextCleaner frees
-    the checkpointed RDD blocks on GC."""
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    degrees = (
-        edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")).persist()
-    )
-    base_u = (SCALE * (100 - damping_pct)) // 100 // n
-
-    ranks = (
-        nodes.join(
-            prev_ranks.select("node", F.col("pr_u").alias("__prev_u")),
-            "node",
-            "left",
-        )
-        .select(
-            "node",
-            F.coalesce("__prev_u", F.lit(SCALE // n))
-            .cast("bigint")
-            .alias("pr_u"),
-        )
-        .localCheckpoint(eager=False)
-    )
-
-    for _ in range(max_iterations):
-        contribs = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .join(degrees, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("pr_u DIV outdeg").alias("contrib_u"),
-            )
-            .groupBy("node")
-            .agg(F.sum("contrib_u").alias("in_u"))
-        )
-        new_ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                F.expr(
-                    f"{base_u} + (coalesce(in_u, 0L) * {damping_pct})"
-                    " DIV 100"
-                ).alias("pr_u"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # integer convergence gate: one node-sized 1-row aggregate
-        diff = (
-            new_ranks.select("node", F.col("pr_u").alias("__new_u"))
-            .join(ranks, "node")
-            .agg(F.max(F.abs(F.col("__new_u") - F.col("pr_u"))))
-            .collect()[0][0]
-        )
-        ranks = new_ranks
-        if diff is not None and diff <= tol_u:
+        if done:
             break
-
-    nodes.unpersist()
-    degrees.unpersist()
-    return ranks
+    return ranks.select("node", "pr_u")
 
 
-HITS_SCALE = 1_000_000  # score units after per-round max-normalization
+def _half_round(
+    edges: DataFrame,
+    nodes: DataFrame,
+    scores: DataFrame,
+    frm: str,
+    to: str,
+    col: str,
+    out: str,
+    tol_u: int | None,
+) -> DataFrame:
+    """One HITS half-round: each node's ``out`` is the sum of ``col``
+    over its edges' ``frm`` ends, renormalized (``_RENORM``). An ungated
+    generation holds only the nodes some edge reaches — the others score
+    0 and add nothing to the next half-round; every node has an out-edge
+    (a hub row) or an in-edge (an auth row), so ``hits``' final full
+    join fills the zeros. A gated generation is the full node table,
+    zeros included, so the gate compares every node."""
+    raw = (
+        edges.join(scores, edges[frm] == scores["node"])
+        .groupBy(F.col(to).alias("node"))
+        .agg(F.sum(col).alias("raw"))
+    )
+    if tol_u is None:
+        mx = "max(raw) OVER ()"
+        return raw.select("node", F.expr(_RENORM.format(mx=mx)).alias(out))
+    raw = raw.crossJoin(raw.agg(F.max("raw").alias("mx"))).select(
+        "node", F.expr(_RENORM.format(mx="mx")).alias(out)
+    )
+    return nodes.join(raw, "node", "left").select(
+        "node", F.coalesce(out, F.lit(0)).cast("bigint").alias(out)
+    )
 
-# hits() pins generations with localCheckpoint only ABOVE this round
-# count: the lazy persist plan doubles per half-round (the renorm
-# cross join references its input twice), which is harmless at the
-# graded iterations=2 but detonates the analyzer by ~8 rounds; the
-# checkpoint round-trip is pure overhead at small counts (the BPE
-# _BPE_CHECKPOINT_MIN_ROUNDS lesson).
-_HITS_CHECKPOINT_MIN_ITER = 2
 
-
-def hits(edges: DataFrame, iterations: int = 2) -> DataFrame:
+def hits(
+    edges: DataFrame,
+    iterations: int = 2,
+    prior: DataFrame | None = None,
+    tol_u: int | None = None,
+) -> DataFrame:
     """Integer-deterministic HITS (Kleinberg hubs/authorities) over a
     directed edge list: a(v) = Σ h(u) over in-edges, h(u) = Σ a(v) over
-    out-edges, each round max-normalized to HITS_SCALE units with floor
-    division (the classic L∞ normalization — same ranking as the L2
-    form, but exact integer arithmetic, so every shuffle order yields
-    the same scores; the pagerank.py reproducibility argument).
+    out-edges, each half-round max-normalized to HITS_SCALE units with
+    floor division (the classic L∞ normalization — same ranking as the
+    L2 form, but exact integer arithmetic, so every shuffle order yields
+    the same scores). Returns (node, hub_u, auth_u).
 
-    Returns (node, hub_u, auth_u). Overflow headroom: a raw score is
-    ≤ HITS_SCALE · max_degree, so int64 holds `raw` itself up to
-    degree ~9.2e12; the renormalizing multiply (raw · HITS_SCALE,
-    up to ~9.2e24 at that degree) is widened to DECIMAL(38,0) before
-    the DIV — the quotient is ≤ HITS_SCALE because raw ≤ mx, so the
-    bigint result of DIV never overflows. (The earlier int64 multiply
-    failed once weighted in-degree passed ~9.2e12/HITS_SCALE ≈ 9.2e6
-    in-links — real popular pages exceed that.)
+    ``prior`` is a (node, hub_u) table; the cold seed is HITS_SCALE.
+    L∞-renormalized power iteration converges to the principal
+    hub/authority eigenvectors from any positive start. ``tol_u`` gates
+    on the hub scores after each full round.
 
     Plan shape per half-round: one groupBy shuffle over edges joined
-    with node-sized scores (broadcast-able) + a 1-row max cross join —
-    the scalar_max_crossjoin pattern.
-
-    Lineage: each generation's plan embeds ``a_raw``/``h_raw`` TWICE
-    (the renorm cross join's main leg + its 1-row max leg), so the
-    lazy logical plan doubles per half-round — persist caches blocks
-    but does NOT truncate the analyzed tree, and at iterations=8 bare
-    analysis of the 4^8-leaf tree ate 42 GB of driver heap before any
-    job ran (tests/test_round12_ops.py documents the incident). Above
-    ``_HITS_CHECKPOINT_MIN_ITER`` rounds each generation is therefore
-    ``localCheckpoint(eager=True)``-pinned (the ``hits_warm``/BPE
-    discipline — plan size stays constant per round); at the graded
-    iterations<=2 the persist form keeps its lazy single-action plan
-    (A/B'd faster there, the small-k BPE lesson)."""
+    with node-sized scores (broadcast-able) and the max (``_RENORM``);
+    a gated half-round adds one node-sized join that fills the zeros."""
     if iterations < 1:
         raise ValueError(f"hits: iterations must be >= 1, got {iterations}")
-    pin = iterations > _HITS_CHECKPOINT_MIN_ITER
-    # nodes is deliberately NOT persisted: its references (hub0's
-    # lineage, the two final joins) compile to identical exchanges that
-    # AQE reuse runs once, and a same-session A/B measured the cached
-    # form 3x SLOWER end to end (the knn_graph_triangles lesson —
-    # an InMemoryRelation leg blocks codegen fusion and reuse)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    hub0 = nodes.select("node", F.lit(HITS_SCALE).alias("hub_u"))
-    hub = hub0.localCheckpoint(eager=True) if pin else hub0.persist()
-    auth = None
+    nodes = _nodes(edges)
+    hub = _generation(_seed(nodes, prior, "hub_u", HITS_SCALE), tol_u)
     for _ in range(iterations):
-        a_raw = (
-            edges.join(hub, edges["src"] == hub["node"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub_u").alias("raw"))
+        auth = _generation(
+            _half_round(
+                edges, nodes, hub, "src", "dst", "hub_u", "auth_u", tol_u
+            ),
+            tol_u,
         )
-        a_max = a_raw.agg(F.max("raw").alias("mx"))
-        # integer DIV, not float division: raw*SCALE reaches 1e18,
-        # past double's 2^53 exact range — a float floor could differ
-        # from the oracle's exact // in the last unit. The multiply is
-        # widened to DECIMAL(38,0) (oracle twin: HUGEINT) — in int64 it
-        # overflows once a node's weighted in-degree passes ~9.2e6
-        # in-links at hub_u=HITS_SCALE; the DIV quotient itself is
-        # ≤ HITS_SCALE (raw ≤ mx), so the bigint result is safe.
-        auth_new = a_raw.crossJoin(a_max).select(
-            "node",
-            F.expr(
-                f"CAST(CAST(raw AS DECIMAL(38,0)) * {HITS_SCALE}"
-                " DIV mx AS BIGINT)"
-            ).alias("auth_u"),
+        new_hub = _generation(
+            _half_round(
+                edges, nodes, auth, "dst", "src", "auth_u", "hub_u", tol_u
+            ),
+            tol_u,
         )
-        auth_new = (
-            auth_new.localCheckpoint(eager=True) if pin
-            else auth_new.persist()
-        )
-        h_raw = (
-            edges.join(auth_new, edges["dst"] == auth_new["node"])
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("auth_u").alias("raw"))
-        )
-        h_max = h_raw.agg(F.max("raw").alias("mx"))
-        hub_new = h_raw.crossJoin(h_max).select(
-            "node",
-            F.expr(
-                f"CAST(CAST(raw AS DECIMAL(38,0)) * {HITS_SCALE}"
-                " DIV mx AS BIGINT)"
-            ).alias("hub_u"),
-        )
-        hub_new = (
-            hub_new.localCheckpoint(eager=True) if pin
-            else hub_new.persist()
-        )
-        if not pin:
-            hub.unpersist()
-            if auth is not None:
-                auth.unpersist()
-        hub, auth = hub_new, auth_new
-    out = (
-        nodes.join(hub, "node", "left")
-        .join(auth, "node", "left")
-        .select(
-            "node",
-            F.coalesce("hub_u", F.lit(0)).cast("bigint").alias("hub_u"),
-            F.coalesce("auth_u", F.lit(0)).cast("bigint").alias("auth_u"),
-        )
+        done = _converged(new_hub, hub, "hub_u", tol_u)
+        hub = new_hub
+        if done:
+            break
+    return hub.join(auth, "node", "full").select(
+        "node",
+        F.coalesce("hub_u", F.lit(0)).cast("bigint").alias("hub_u"),
+        F.coalesce("auth_u", F.lit(0)).cast("bigint").alias("auth_u"),
     )
-    # the final generation's caches must outlive this call — the result
-    # is lazy — but not the session: release on result GC (persist
-    # without unpersist leaks via the CacheManager forever). Pinned
-    # (localCheckpoint) generations need no release hook — the
-    # ContextCleaner frees checkpointed RDD blocks when they're GC'd.
-    if not pin:
-        from gcp_etl_pipeline_spark.operators.similarity import (
-            _release_on_gc,
-        )
-
-        _release_on_gc(out, hub, auth)
-    return out
 
 
 def reciprocity(edges: DataFrame) -> DataFrame:
@@ -361,112 +301,3 @@ def reciprocity(edges: DataFrame) -> DataFrame:
             & (F.col("out_n") >= F.lit(5))
         ).alias("is_farm"),
     )
-
-
-def hits_warm(
-    edges: DataFrame,
-    prev_hub: DataFrame,
-    max_iterations: int = 4,
-    tol_u: int = 1_000,
-) -> DataFrame:
-    """Incremental HITS: warm-start the ``hits()`` recurrence from a
-    PREVIOUS hub-score table (the last full run before a small edge
-    delta) and stop at an INTEGER convergence gate — max
-    |hub_u - prev_hub_u| <= ``tol_u`` score units after each full
-    round, checked via a 1-row scalar aggregate (bounded by design).
-
-    Why warm-start works: L∞-renormalized power iteration converges to
-    the principal hub/authority eigenvectors from any positive start,
-    so a start near the old scores after a small delta needs fewer
-    rounds than the cold all-HITS_SCALE start. New nodes (absent from
-    ``prev_hub``) seed at HITS_SCALE like a cold start.
-
-    Value contract: score tables here are FULL node tables (missing
-    scores coalesce to 0) rather than ``hits()``'s sparse per-round
-    frames — a zero hub contributes exactly nothing to every sum, so
-    round-for-round the scores are identical to ``hits()`` (asserted
-    in tests/test_round12_ops.py by running the gate disabled), while
-    the full frames make the convergence diff and the SQL oracle's
-    carry-forward well-defined on one node set.
-
-    Plan shape per half-round: identical to ``hits()`` (one groupBy
-    shuffle + 1-row max cross join) plus one node-sized renorm join;
-    the gate adds one node-sized diff aggregate, map-side combined —
-    edges never re-shuffle for it. Generations are LAZILY
-    localCheckpoint-pinned for the same lineage-doubling reason as
-    ``pagerank_warm`` (and its one-action-per-round rationale: the
-    gate materializes hub_new and, through it, auth_new — A/B'd flat
-    locally, one fewer driver round trip per half-round)."""
-    if max_iterations < 1:
-        raise ValueError(
-            f"hits_warm: max_iterations must be >= 1, got {max_iterations}"
-        )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    hub = (
-        nodes.join(
-            prev_hub.select("node", F.col("hub_u").alias("__prev_u")),
-            "node",
-            "left",
-        )
-        .select(
-            "node",
-            F.coalesce("__prev_u", F.lit(HITS_SCALE))
-            .cast("bigint")
-            .alias("hub_u"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    renorm = (
-        f"CAST(CAST(raw AS DECIMAL(38,0)) * {HITS_SCALE} DIV mx AS BIGINT)"
-    )
-    auth = None
-    for _ in range(max_iterations):
-        a_raw = (
-            edges.join(hub, edges["src"] == hub["node"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub_u").alias("raw"))
-        )
-        a_sparse = a_raw.crossJoin(a_raw.agg(F.max("raw").alias("mx"))).select(
-            "node", F.expr(renorm).alias("auth_u")
-        )
-        auth_new = (
-            nodes.join(a_sparse, "node", "left")
-            .select(
-                "node",
-                F.coalesce("auth_u", F.lit(0)).cast("bigint").alias("auth_u"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        h_raw = (
-            edges.join(auth_new, edges["dst"] == auth_new["node"])
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("auth_u").alias("raw"))
-        )
-        h_sparse = h_raw.crossJoin(h_raw.agg(F.max("raw").alias("mx"))).select(
-            "node", F.expr(renorm).alias("hub_u")
-        )
-        hub_new = (
-            nodes.join(h_sparse, "node", "left")
-            .select(
-                "node",
-                F.coalesce("hub_u", F.lit(0)).cast("bigint").alias("hub_u"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        diff = (
-            hub_new.select("node", F.col("hub_u").alias("__new_u"))
-            .join(hub, "node")
-            .agg(F.max(F.abs(F.col("__new_u") - F.col("hub_u"))))
-            .collect()[0][0]
-        )
-        hub, auth = hub_new, auth_new
-        if diff is not None and diff <= tol_u:
-            break
-
-    nodes.unpersist()
-    return hub.join(auth, "node").select("node", "hub_u", "auth_u")

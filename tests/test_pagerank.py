@@ -90,10 +90,7 @@ def test_pagerank_warm_gate_fires_at_fixed_point(spark):
     FROM the fixed point, round 1 reproduces it bit-exactly, the gate
     fires at diff=0 even with tol_u=0, and the result is unchanged —
     the stop rule and the recurrence agree."""
-    from gcp_etl_pipeline_spark.operators.pagerank import (
-        SCALE as PR_SCALE,
-        pagerank_warm,
-    )
+    from gcp_etl_pipeline_spark.operators.pagerank import SCALE as PR_SCALE
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "a")], "src STRING, dst STRING"
@@ -104,37 +101,31 @@ def test_pagerank_warm_gate_fires_at_fixed_point(spark):
     )
     got = {
         r["node"]: r["pr_u"]
-        for r in pagerank_warm(
-            edges, prev, max_iterations=10, tol_u=0
+        for r in pagerank(
+            edges, iterations=10, prior=prev, tol_u=0
         ).collect()
     }
     assert got == {"a": fp, "b": fp}, got
 
 
 def test_pagerank_warm_cold_start_equals_pagerank(spark):
-    """An EMPTY prev table seeds every node at SCALE/n — with the gate
-    disabled (tol 0 never fires inside max rounds) the warm loop IS
-    pagerank(): bit-identical scores round for round."""
-    from gcp_etl_pipeline_spark.operators.pagerank import pagerank_warm
-
+    """An EMPTY prior seeds every node at SCALE/n, the cold seed: the
+    warm start IS the cold run, bit-identical round for round."""
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a")],
         "src STRING, dst STRING",
     )
     empty = spark.createDataFrame([], "node STRING, pr_u BIGINT")
-    cold = pagerank_warm(edges, empty, max_iterations=3, tol_u=0)
-    full = pagerank(edges, iterations=3)
-    assert sorted(cold.collect()) == sorted(full.collect())
+    warm = pagerank(edges, iterations=3, prior=empty)
+    cold = pagerank(edges, iterations=3)
+    assert sorted(warm.collect()) == sorted(cold.collect())
 
 
 def test_pagerank_warm_new_nodes_seed_uniform(spark):
-    """Nodes absent from prev_ranks seed at SCALE/n over the NEW node
+    """Nodes absent from the prior seed at SCALE/n over the NEW node
     count; present nodes keep their old score (checked via a 1-round
     run whose input seeding is recoverable from the contributions)."""
-    from gcp_etl_pipeline_spark.operators.pagerank import (
-        SCALE as PR_SCALE,
-        pagerank_warm,
-    )
+    from gcp_etl_pipeline_spark.operators.pagerank import SCALE as PR_SCALE
 
     # two isolated pairs: a<->b (in prev), x<->y (new)
     edges = spark.createDataFrame(
@@ -147,8 +138,8 @@ def test_pagerank_warm_new_nodes_seed_uniform(spark):
     )
     got = {
         r["node"]: r["pr_u"]
-        for r in pagerank_warm(
-            edges, prev, max_iterations=1, tol_u=0
+        for r in pagerank(
+            edges, iterations=1, prior=prev, tol_u=0
         ).collect()
     }
     n = 4
@@ -157,3 +148,31 @@ def test_pagerank_warm_new_nodes_seed_uniform(spark):
     assert got["b"] == base + 7_000_000_000_000 * 85 // 100
     assert got["a"] == base + 3_000_000_000_000 * 85 // 100
     assert got["x"] == got["y"] == base + (PR_SCALE // n) * 85 // 100
+
+
+def test_ungated_rounds_start_no_spark_jobs(spark):
+    """Without a tolerance neither recurrence acts per round: building
+    pagerank, then hits, starts as many Spark jobs at 6 rounds as at 2
+    (the node and degree pins only), and the caller's action runs the
+    rounds."""
+    from gcp_etl_pipeline_spark.operators.pagerank import hits
+
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")],
+        "src STRING, dst STRING",
+    )
+
+    def jobs_to_build(fn, rounds):
+        group = f"build:{fn.__name__}:{rounds}"
+        sc.setJobGroup(group, group)
+        try:
+            fn(edges, iterations=rounds)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for fn in (pagerank, hits):
+        assert jobs_to_build(fn, 2) == jobs_to_build(fn, 6), fn.__name__

@@ -189,39 +189,29 @@ def test_crawl_delay_max_and_validation(spark):
     assert [(r.host, r.crawl_delay_s) for r in got] == [("h", 5)]
 
 
-# ------------------------------------------------------ hits_warm
+# ------------------------------------------------ hits warm start/gate
 
 def test_hits_warm_matches_full_hits_when_gate_disabled(spark):
-    from gcp_etl_pipeline_spark.operators.pagerank import hits, hits_warm
+    from gcp_etl_pipeline_spark.operators.pagerank import hits
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")],
         ["src", "dst"],
     )
-    # empty prev -> every node seeds at HITS_SCALE = the cold start;
-    # tol -1 never fires -> round-for-round identical to hits()
-    prev = spark.createDataFrame([], "node string, hub_u bigint")
-    warm = {
+    # tol -1 never fires -> round-for-round identical to no gate
+    gated = {
         (r.node): (r.hub_u, r.auth_u)
-        for r in hits_warm(
-            edges, prev, max_iterations=2, tol_u=-1
-        ).collect()
+        for r in hits(edges, iterations=2, tol_u=-1).collect()
     }
     full = {
         (r.node): (r.hub_u, r.auth_u)
         for r in hits(edges, iterations=2).collect()
     }
-    assert warm == full
+    assert gated == full
 
 
 def test_hits_warm_gate_stops_iteration(spark):
-    # NOTE: hits() re-expands its a_raw subtree twice per half-round
-    # (crossJoin with its own agg), so its lazy persist-form plan is
-    # exponential in the round count (a 42 GB analyzer incident at
-    # iterations=8 in r12). Since r13, counts above
-    # _HITS_CHECKPOINT_MIN_ITER localCheckpoint every generation like
-    # hits_warm, so any round count is bounded (test_round13_ops).
-    from gcp_etl_pipeline_spark.operators.pagerank import hits, hits_warm
+    from gcp_etl_pipeline_spark.operators.pagerank import hits
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")],
@@ -233,14 +223,12 @@ def test_hits_warm_gate_stops_iteration(spark):
     # return exactly the 1-round result (the break is real)
     gated = {
         (r.node): (r.hub_u, r.auth_u)
-        for r in hits_warm(
-            edges, prev, max_iterations=4, tol_u=1_000_000
+        for r in hits(
+            edges, iterations=4, prior=prev, tol_u=1_000_000
         ).collect()
     }
     one = {
         (r.node): (r.hub_u, r.auth_u)
-        for r in hits_warm(
-            edges, prev, max_iterations=1, tol_u=-1
-        ).collect()
+        for r in hits(edges, iterations=1, prior=prev, tol_u=-1).collect()
     }
     assert gated == one

@@ -17,6 +17,7 @@ Usage: python tools/check.py [--engine-session] [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
@@ -64,7 +65,9 @@ def main() -> int:
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     import __spark_entry__ as entrymod
 
     if engine_session:
@@ -74,8 +77,6 @@ def main() -> int:
     else:
         # stock session = the driver-harness contract: queries must carry
         # their own conf (registry._self_contained + per-query try/finally)
-        import os
-
         from pyspark.sql import SparkSession
 
         from gcp_etl_pipeline_spark.session import driver_memory
@@ -160,7 +161,6 @@ def _record_evidence(passed: list[str], sf_dir: str) -> None:
     the scale factor, or 'partitions7' for the partition-invariance
     sweep (SPARK_GRAFT_CPUS=7). Never fails the check."""
     import json
-    import os
     import time as _t
 
     if not passed:

@@ -4,10 +4,11 @@ changes: python tools/explain_report.py [sf_dir]."""
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEADLINERS = {
     "gosales_sales_fact": (
@@ -72,9 +73,10 @@ HEADLINERS = {
         "corpus-size tables broadcast back — never a sort-merge join."
     ),
     "graph_pagerank": (
-        "PageRank (3 iterations): per iteration one contribution "
-        "shuffle + node-sized rank/degree joins; integer arithmetic "
-        "keeps every iteration partitioning-invariant."
+        "PageRank (3 iterations, one lazy plan): per iteration one "
+        "contribution shuffle + node-sized rank joins (out-degrees ride "
+        "in the rank table); integer arithmetic keeps every iteration "
+        "partitioning-invariant."
     ),
     "outlier_zscore_orders": (
         "Z-score outliers: two grouped aggregates; group-sized stats "

@@ -6,10 +6,11 @@ bucket-joined. Prints one JSON line. Usage: python tools/scale_smoke.py [rows]."
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -517,8 +518,6 @@ def main() -> int:
     # replay at class level (all ~n nodes are degree-regular within
     # their layer class), so both runs are value-exact; the measured
     # claim is warm wall-time < cold wall-time off a 10x-closer start.
-    from gcp_etl_pipeline_spark.operators.pagerank import pagerank_warm
-
     IC_D = 10
     IC_SPK = 5
     ic_wc = n // (IC_SPK + IC_D)  # ring layer width; total edges ~= n
@@ -621,8 +620,8 @@ def main() -> int:
     t0 = time.time()
     got_warm = {
         r["pr_u"]: r["cnt"]
-        for r in pagerank_warm(
-            ic_edges2, ic_prev_df, max_iterations=20, tol_u=ic_tol
+        for r in pagerank(
+            ic_edges2, iterations=20, prior=ic_prev_df, tol_u=ic_tol
         )
         .groupBy("pr_u")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -631,13 +630,10 @@ def main() -> int:
     t_warm = round(time.time() - t0, 2)
     assert got_warm == _ic_hist(exp_warm), (got_warm, _ic_hist(exp_warm))
 
-    ic_empty_prev = spark.createDataFrame([], "node STRING, pr_u BIGINT")
     t0 = time.time()
     got_cold = {
         r["pr_u"]: r["cnt"]
-        for r in pagerank_warm(
-            ic_edges2, ic_empty_prev, max_iterations=20, tol_u=ic_tol
-        )
+        for r in pagerank(ic_edges2, iterations=20, tol_u=ic_tol)
         .groupBy("pr_u")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
@@ -663,7 +659,7 @@ def main() -> int:
     )
 
     # Incremental HITS: warm-start beats cold at smoke scale — the
-    # hits_warm twin of the incremental-PageRank proof above. The slow
+    # HITS twin of the incremental-PageRank proof above. The slow
     # mode here is RENORMALIZATION mixing, not damping: two clique
     # classes of widths 24 and 22 give a per-round contraction of
     # (21/23)^2 ~ 0.83 on the B/A score ratio, so the cold start needs
@@ -672,8 +668,6 @@ def main() -> int:
     # old scores untouched) re-converges in ~3. Each run is value-exact
     # against its own class-level integer replay of the full-table
     # gated recurrence, iteration counts included.
-    from gcp_etl_pipeline_spark.operators.pagerank import hits_warm
-
     IH_WA, IH_WB, IH_WC = 24, 22, 10
     ih_scale = max(1, n // (IH_WA * (IH_WA - 1) + IH_WB * (IH_WB - 1)))
     ih_nA = ih_nB = ih_scale
@@ -705,7 +699,7 @@ def main() -> int:
     )
 
     def _ih_replay(widths, start_hub, tol, max_iter):
-        """Class-level integer replay of hits_warm's full-table gated
+        """Class-level integer replay of hits()'s full-table gated
         recurrence: in a width-w clique every node has (w-1) in- and
         out-edges from/to its own class, so per-class scores ARE the
         per-node scores."""
@@ -762,9 +756,7 @@ def main() -> int:
     t0 = time.time()
     got_ih_warm = {
         (r["hub_u"], r["auth_u"]): r["cnt"]
-        for r in hits_warm(
-            ih_full, ih_prev_df, max_iterations=30, tol_u=ih_tol
-        )
+        for r in hits(ih_full, iterations=30, prior=ih_prev_df, tol_u=ih_tol)
         .groupBy("hub_u", "auth_u")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
@@ -774,13 +766,10 @@ def main() -> int:
         got_ih_warm, _ih_hist(ih_wh, ih_wa)
     )
 
-    ih_empty = spark.createDataFrame([], "node STRING, hub_u BIGINT")
     t0 = time.time()
     got_ih_cold = {
         (r["hub_u"], r["auth_u"]): r["cnt"]
-        for r in hits_warm(
-            ih_full, ih_empty, max_iterations=30, tol_u=ih_tol
-        )
+        for r in hits(ih_full, iterations=30, tol_u=ih_tol)
         .groupBy("hub_u", "auth_u")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
